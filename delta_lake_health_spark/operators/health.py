@@ -302,13 +302,14 @@ class HealthAnalyzer:
                     collect_partitions,
                 )
 
-            # The three metric families are independent jobs over the
-            # already-cached actions; overlap them from a small thread
-            # pool so the folder walk and the skew snapshot scan back-
-            # fill executors the stats aggregate leaves idle (guide
-            # §2.6). The actions cache was primed by the history
-            # aggregate above; concurrent readers of cached blocks
-            # dedupe on the block-manager lock.
+            # The history aggregate and the three metric families are
+            # independent jobs over the cached actions; overlap them from
+            # a small thread pool so the folder walk and the skew
+            # snapshot scan back-fill executors the stats aggregate
+            # leaves idle (guide §2.6). Nothing primes the cache first:
+            # the pooled jobs race to materialize it, and concurrent
+            # first computes may repeat the log scan (results are
+            # unaffected).
             from concurrent.futures import ThreadPoolExecutor
 
             # fail-fast (ADVICE r13): if one pooled action raises, don't

@@ -19,7 +19,7 @@ import time
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from delta_lake_health_spark.sources import delta_writer
+from delta_lake_health_spark.sources import delta_writer, log_replay
 from delta_lake_health_spark.sources.delta_log import DeltaLog
 
 TARGET_FILE_SIZE = 128 * 1024 * 1024
@@ -341,13 +341,20 @@ def _zvalue_column(df, cluster_cols: list[str]):
     # the repeated code subtree).
     terms = []
     for i, c in enumerate(cluster_cols):
-        lo = float(bounds[f"lo_{i}"] or 0.0)
-        hi = float(bounds[f"hi_{i}"] or 0.0)
-        span = (hi - lo) or 1.0
+        # null (all-null column) and NaN/±Inf bounds fall back to 0.0:
+        # repr() of a non-finite float is not a SQL literal
+        lo, hi = (
+            float(b) if b is not None and math.isfinite(b) else 0.0
+            for b in (bounds[f"lo_{i}"], bounds[f"hi_{i}"])
+        )
+        span = (hi - lo) if math.isfinite(hi - lo) and hi != lo else 1.0
+        # clamped in DOUBLE before the cast: a NaN/±Inf row would
+        # overflow the BIGINT cast (NaN sorts above every double, so it
+        # clamps to max_code; null rows also get max_code, as before)
         code = (
-            f"greatest(CAST(0 AS BIGINT), least(CAST({max_code} AS BIGINT), "
-            f"CAST((CAST(`{c}` AS DOUBLE) - CAST({lo!r} AS DOUBLE)) "
-            f"/ CAST({span!r} AS DOUBLE) * {max_code} AS BIGINT)))"
+            f"CAST(greatest(CAST(0 AS DOUBLE), least(CAST({max_code} AS DOUBLE), "
+            f"(CAST(`{c}` AS DOUBLE) - CAST({lo!r} AS DOUBLE)) "
+            f"/ CAST({span!r} AS DOUBLE) * {max_code})) AS BIGINT)"
         )
         for b in range(Z_BITS):
             terms.append(
@@ -818,17 +825,15 @@ def cleanup_log(
     log_dir = os.path.join(table_path, "_delta_log")
 
     deleted_json = 0
-    for f in sorted(os.listdir(log_dir)):
-        if f.endswith(".json") and f[:20].isdigit():
-            v = int(f[:20])
-            p = os.path.join(log_dir, f)
-            if v < ckpt_version and os.path.getmtime(p) <= cutoff:
-                os.remove(p)
-                deleted_json += 1
-                # the expired commit's version checksum goes with it
-                crc = os.path.join(log_dir, f"{v:020d}.crc")
-                if os.path.isfile(crc):
-                    os.remove(crc)
+    for v in log_replay.commit_versions(table_path):
+        p = log_replay.commit_path(table_path, v)
+        if v < ckpt_version and os.path.getmtime(p) <= cutoff:
+            os.remove(p)
+            deleted_json += 1
+            # the expired commit's version checksum goes with it
+            crc = os.path.join(log_dir, f"{v:020d}.crc")
+            if os.path.isfile(crc):
+                os.remove(crc)
 
     # superseded checkpoints: classic, multi-part, and V2 UUID names
     ckpt_re = re.compile(
@@ -848,18 +853,7 @@ def cleanup_log(
     sidecar_dir = os.path.join(log_dir, "_sidecars")
     deleted_sidecars = 0
     if os.path.isdir(sidecar_dir):
-        referenced: set[str] = set()
-        if info.get("format") == "v2":
-            import pyarrow.parquet as pq
-
-            t = pq.read_table(
-                os.path.join(log_dir, info["path"]), columns=["sidecar"]
-            )
-            referenced = {
-                row["path"]
-                for row in t.column("sidecar").to_pylist()
-                if row and row.get("path")
-            }
+        referenced = set(log_replay.sidecar_names(table_path, info))
         for f in sorted(os.listdir(sidecar_dir)):
             p = os.path.join(sidecar_dir, f)
             if f not in referenced and os.path.getmtime(p) <= cutoff:

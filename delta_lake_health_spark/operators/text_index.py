@@ -188,6 +188,9 @@ def _log_token(data_path: str) -> tuple:
     after every digit name, so once a checkpoint exists the lexicographic
     tail never moves and a cleanup_log + equal-count commit sequence
     would serve a stale snapshot (r12 review)."""
+    # lists the log directory itself rather than calling log_replay: a
+    # directory freshness token (entry count + newest commit's identity)
+    # is not a replay, and must stay one os.listdir that parses nothing
     d = os.path.join(data_path, "_delta_log")
     try:
         names = os.listdir(d)

@@ -1819,7 +1819,7 @@ def _ensure_update_fixture(spark: SparkSession) -> None:
 def delta_update_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Post-UPDATE snapshot aggregate + copy-on-write proof (sf_dir
     unused — the fixture is scale-independent)."""
-    from delta_lake_health_spark.sources import delta_writer
+    from delta_lake_health_spark.sources import log_replay
     from delta_lake_health_spark.sources.delta_log import DeltaLog
 
     _ensure_update_fixture(spark)
@@ -1827,7 +1827,7 @@ def delta_update_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     last = log.version()
     foreign = 0
     for v, part in ((1, "grp=2/"), (2, "grp=3/")):
-        for a in delta_writer._version_actions(_UPDATE_FIXTURE, v):
+        for a in log_replay.read_commit(_UPDATE_FIXTURE, v):
             if "remove" in a and not a["remove"]["path"].startswith(part):
                 foreign += 1
     return (

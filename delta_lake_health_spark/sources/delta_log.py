@@ -1,12 +1,21 @@
-"""Distributed Delta transaction-log reader — no delta library.
+"""Delta transaction-log reader — no delta library.
 
 The ``_delta_log`` of a Delta table is newline-delimited JSON (plus
-optional parquet checkpoints): tiny relative to the data (GBs for a 100 TB
-table), but still worth reading distributed — ``spark.read.json`` over the
-commit files with an explicit action schema, version extracted from the
-file name via ``_metadata.file_path``. Snapshot reconstruction is the
-standard add/remove reconciliation: per path, the action with the highest
-(version, add-wins) rank decides liveness — one shuffle over |files| rows.
+optional parquet checkpoints). It is read two ways, one per kind of
+question:
+
+- **Metadata-sized answers** — version, metadata, protocol, live add
+  actions, deletion-vector paths, ``txn`` and domain metadata, commit
+  timestamps — come from the driver-side replay in ``log_replay``
+  (checkpoint + JSON tail in plain Python, no Spark job).
+- **DataFrames** — health aggregates, history, tombstones, snapshot
+  joins, change feeds and checkpoint writing — come from the distributed
+  replay here: ``spark.read.json`` over the commit files with an explicit
+  action schema, version extracted from the file name via
+  ``_metadata.file_path``. Snapshot reconstruction is the standard
+  add/remove reconciliation: per path, the action with the highest
+  (version, add-wins) rank decides liveness — one shuffle over |files|
+  rows.
 
 Replaces the reference's delta-rs ``DeltaTable`` dependency
 (src/delta_lake_health/health_analyzers/delta_python_analyzer.py:17-31,
@@ -18,6 +27,7 @@ from __future__ import annotations
 
 import json
 import os
+from collections import namedtuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,7 +43,11 @@ from pyspark.sql.types import (
 )
 from pyspark.sql.window import Window
 
-LOG_DIR = "_delta_log"
+from delta_lake_health_spark.sources import log_replay
+from delta_lake_health_spark.sources.log_replay import (
+    LOG_DIR,
+    checkpoint_file_names,
+)
 
 _STR_MAP = MapType(StringType(), StringType())
 
@@ -170,28 +184,6 @@ ACTION_SCHEMA = StructType(
 )
 
 
-def checkpoint_file_names(info: dict) -> list[str]:
-    """Checkpoint file names (relative to ``_delta_log``) for a
-    ``_last_checkpoint`` record — single, multi-part, or the V2 UUID
-    top-level. Stdlib-only so the streaming source and the writer's
-    driver-side gates share ONE resolution of the layout (sidecar files
-    are indexed inside the V2 top-level, not here)."""
-    v = int(info["version"])
-    if info.get("format") == "v2":
-        return [info["path"]]
-    parts = info.get("parts")
-    # parts == 1 uses the classic single-file name (a foreign writer may
-    # record "parts": 1 explicitly) — multi-part naming only when > 1,
-    # matching DeltaLog._checkpoint_paths.
-    if parts and int(parts) > 1:
-        n = int(parts)
-        return [
-            f"{v:020d}.checkpoint.{i + 1:010d}.{n:010d}.parquet"
-            for i in range(n)
-        ]
-    return [f"{v:020d}.checkpoint.parquet"]
-
-
 def _conform_column(col, src_type, dst_type):
     """Align a checkpoint column to ACTION_SCHEMA's (possibly wider) type.
 
@@ -227,21 +219,8 @@ def _conform_column(col, src_type, dst_type):
     return col.cast(dst_type)
 
 
-# cross-instance metadata memo for DeltaLog._metadata_fast, keyed on
-# (log_dir, checkpoint version, newest json version) — every commit
-# changes the key, so a stale entry can never be served
-_META_MEMO: dict[tuple, dict] = {}
-_LIVE_MEMO: dict[tuple, list] = {}
-_COMMIT_CACHE: dict[tuple, list] = {}
-
-
-def _plainify(x):
-    """pyarrow ``to_pylist`` renders map values as (key, value) tuple
-    lists; the add-action consumers expect plain dicts (the JSON path's
-    shape). Non-map values pass through."""
-    if isinstance(x, list):
-        return dict(x)
-    return x
+# one live file as ``live_files_rows`` returns it
+LiveFile = namedtuple("LiveFile", ["path", "partitionValues"])
 
 
 class DeltaLog:
@@ -254,19 +233,13 @@ class DeltaLog:
         if not os.path.isdir(self.log_dir):
             raise FileNotFoundError(f"not a Delta table (no {LOG_DIR}): {table_path}")
         # per-instance plan cache: an instance reads the commit-file list
-        # once, so the many derived reads (version, active files,
-        # tombstones, history, stats) share one scan plan. A commit made
-        # AFTER construction is seen by a NEW DeltaLog, which is how every
-        # caller already behaves — the standard snapshot-isolation contract.
+        # once, so the many derived reads (active files, tombstones,
+        # history, stats) share one scan plan. A commit made AFTER
+        # construction is seen by a NEW DeltaLog, which is how every
+        # caller already behaves — the standard snapshot-isolation
+        # contract. Metadata-sized answers come from log_replay, which
+        # memoises them per log state across instances.
         self._actions_cache: dict[bool, DataFrame] = {}
-        # driver-side result memos under the same snapshot-isolation
-        # contract: metadata and DV-path lookups are collected repeatedly
-        # by the analyzer / writers, and each collect is a whole Spark
-        # job (~100 ms of scheduler overhead on a tiny log)
-        self._meta_cache: dict | None = None
-        self._dv_paths_cache: list[str] | None = None
-        self._live_rows_cache: list | None = None
-        self._protocol_cache: dict | None = None
 
     # -- raw actions -------------------------------------------------------
 
@@ -278,25 +251,7 @@ class DeltaLog:
     def last_checkpoint_info(self) -> dict | None:
         """The ``_last_checkpoint`` record (version, size, and — for
         multi-part checkpoints — parts), or None."""
-        lc = os.path.join(self.log_dir, "_last_checkpoint")
-        if not os.path.isfile(lc):
-            return None
-        with open(lc) as f:
-            return json.load(f)
-
-    def _checkpoint_paths(self, version: int, parts: int | None) -> list[str]:
-        """File list for a checkpoint: the classic single
-        ``<v>.checkpoint.parquet`` or the Delta-spec multi-part
-        ``<v>.checkpoint.<i>.<n>.parquet`` set."""
-        if parts and parts > 1:
-            return [
-                os.path.join(
-                    self.log_dir,
-                    f"{version:020d}.checkpoint.{i:010d}.{parts:010d}.parquet",
-                )
-                for i in range(1, parts + 1)
-            ]
-        return [os.path.join(self.log_dir, f"{version:020d}.checkpoint.parquet")]
+        return log_replay.last_checkpoint_info(self.table_path)
 
     def _read_v2_checkpoint(self, info: dict) -> DataFrame:
         """Resolve a V2 checkpoint: the UUID top-level file carries
@@ -304,12 +259,7 @@ class DeltaLog:
         sidecar parquet files under ``_sidecars/`` carry the add/remove
         state. Returns one DataFrame shaped like a V1 checkpoint."""
         top = self.spark.read.parquet(os.path.join(self.log_dir, info["path"]))
-        side_names = [
-            r.path
-            for r in top.where(F.col("sidecar").isNotNull())
-            .select("sidecar.path")
-            .collect()
-        ]
+        side_names = log_replay.sidecar_names(self.table_path, info)
         others = top.where(
             F.col("sidecar").isNull() & F.col("checkpointMetadata").isNull()
         ).drop("checkpointMetadata", "sidecar")
@@ -338,19 +288,21 @@ class DeltaLog:
             return cached
         ckpt_info = self.last_checkpoint_info() if use_checkpoint else None
         ckpt_version = None if ckpt_info is None else int(ckpt_info["version"])
-        json_files = sorted(
-            f
-            for f in os.listdir(self.log_dir)
-            if f.endswith(".json") and f[:20].isdigit()
-            and (ckpt_version is None or int(f[:20]) > ckpt_version)
-        )
+        json_files = [
+            log_replay.commit_path(self.table_path, v)
+            for v in log_replay.commit_versions(self.table_path)
+            if ckpt_version is None or v > ckpt_version
+        ]
         parts = []
         if ckpt_version is not None:
             if ckpt_info.get("format") == "v2":
                 ckpt = self._read_v2_checkpoint(ckpt_info)
             else:
                 ckpt = self.spark.read.parquet(
-                    *self._checkpoint_paths(ckpt_version, ckpt_info.get("parts"))
+                    *[
+                        os.path.join(self.log_dir, n)
+                        for n in checkpoint_file_names(ckpt_info)
+                    ]
                 )
             ver = (
                 F.col("version").cast("long")
@@ -378,7 +330,7 @@ class DeltaLog:
             df = (
                 self.spark.read.schema(ACTION_SCHEMA)
                 .option("mode", "FAILFAST")
-                .json([os.path.join(self.log_dir, f) for f in json_files])
+                .json(json_files)
             )
             parts.append(
                 df.withColumn(
@@ -559,8 +511,16 @@ class DeltaLog:
         part_files = sorted(
             f for f in os.listdir(tmp_dir) if f.endswith(".parquet")
         )
-        targets = self._checkpoint_paths(version, len(part_files))
-        for tgt in targets + self._checkpoint_paths(version, None):
+        targets = [
+            os.path.join(self.log_dir, n)
+            for n in checkpoint_file_names(
+                {"version": version, "parts": len(part_files)}
+            )
+        ]
+        single = os.path.join(
+            self.log_dir, checkpoint_file_names({"version": version})[0]
+        )
+        for tgt in targets + [single]:
             if os.path.isdir(tgt):
                 shutil.rmtree(tgt)
             elif os.path.isfile(tgt):
@@ -697,35 +657,20 @@ class DeltaLog:
     def earliest_version(self) -> int:
         """Lowest commit JSON still on disk — 0 until
         ``maintenance.cleanup_log`` expires pre-checkpoint history."""
-        vs = [
-            int(f[:20])
-            for f in os.listdir(self.log_dir)
-            if f.endswith(".json") and f[:20].isdigit()
-        ]
-        return min(vs, default=0)
+        return log_replay.Snapshot(self.table_path).earliest_version()
 
     def require_history_from(self, version: int) -> None:
         """Raise if raw-JSON replay starting at ``version`` is impossible
         because log cleanup expired earlier commits (Delta semantics:
         time travel / change feeds are bounded by log retention)."""
-        earliest = self.earliest_version()
-        if version < earliest:
-            raise ValueError(
-                f"log history before version {earliest} has been cleaned "
-                f"up (requested {version}); time travel and change feeds "
-                "are bounded by the log retention window"
-            )
+        log_replay.Snapshot(self.table_path).require_history_from(version)
 
     def _as_of_source(self, as_of: int) -> bool:
         """Whether replay to ``as_of`` may read from the checkpoint
         (state at V + JSON tail is exact for any as_of >= V — and after
         log cleanup it is the ONLY exact source). Raises if neither the
         checkpoint nor retained JSON can reconstruct ``as_of``."""
-        info = self.last_checkpoint_info()
-        if info is not None and as_of >= int(info["version"]):
-            return True
-        self.require_history_from(0)
-        return False
+        return log_replay.Snapshot(self.table_path).replays_checkpoint(as_of)
 
     def active_files(self, as_of: int | None = None) -> DataFrame:
         """One row per live data file: path, partitionValues, size,
@@ -770,66 +715,18 @@ class DeltaLog:
         )
 
     def live_files_rows(self, as_of: int | None = None) -> list:
-        """``active_files().select(path, partitionValues).collect()`` with
-        a per-instance memo for the current-version case — every snapshot
-        path needs this exact list, and each collect is a whole job."""
-        if as_of is None and self._live_rows_cache is not None:
-            return self._live_rows_cache
-        rows = None
-        if as_of is None:
-            fast = self._live_adds_fast()
-            if fast is not None:
-                from collections import namedtuple
-
-                LiveFile = namedtuple("LiveFile", ["path", "partitionValues"])
-                rows = [
-                    LiveFile(a["path"], dict(a.get("partitionValues") or {}))
-                    for a in fast
-                ]
-        if rows is None:
-            rows = (
-                self.active_files(as_of)
-                .select("path", "partitionValues")
-                .collect()
-            )
-        if as_of is None:
-            self._live_rows_cache = rows
-        return rows
+        """(path, partitionValues) of every live file at ``as_of`` — the
+        list every snapshot path feeds the parquet reader."""
+        return [
+            LiveFile(a["path"], a.get("partitionValues") or {})
+            for a in log_replay.Snapshot(self.table_path).live_add_actions(as_of)
+        ]
 
     def live_add_actions(self) -> list[dict]:
         """Full add-action dicts (path, partitionValues, size,
         modificationTime, stats) for every live file — what SHALLOW CLONE
-        copies into the new table's log. Metadata-sized collect."""
-        fast = self._live_adds_fast()
-        if fast is not None:
-            return [
-                {k: v for k, v in a.items() if k != "_v" and v is not None}
-                for a in fast
-            ]
-        acts = self.actions()
-        add_type = acts.schema["add"].dataType
-        adds = acts.where(F.col("add").isNotNull()).select(
-            F.col("add.path").alias("path"), F.col("add").alias("a"),
-            "version", F.lit(1).alias("is_add"),
-        )
-        removes = acts.where(F.col("remove").isNotNull()).select(
-            F.col("remove.path").alias("path"),
-            F.lit(None).cast(add_type).alias("a"),
-            "version", F.lit(0).alias("is_add"),
-        )
-        w = Window.partitionBy("path").orderBy(F.desc("version"), F.desc("is_add"))
-        rows = (
-            adds.unionByName(removes)
-            .withColumn("rn", F.row_number().over(w))
-            .where((F.col("rn") == 1) & (F.col("is_add") == 1))
-            .select("a")
-            .collect()
-        )
-        out = []
-        for r in rows:
-            d = r.a.asDict(recursive=True)
-            out.append({k: v for k, v in d.items() if v is not None})
-        return out
+        copies into the new table's log."""
+        return log_replay.Snapshot(self.table_path).live_add_actions()
 
     def tombstones(self) -> DataFrame:
         """Files whose latest action is a remove (vacuum candidates)."""
@@ -911,247 +808,13 @@ class DeltaLog:
         return out.limit(limit) if limit is not None else out
 
     def version(self) -> int:
-        # newest commit version straight from the log listing (every
-        # commit writes a json; after cleanup the checkpoint floor
-        # remains) — the Spark aggregate computed exactly this from the
-        # filename-derived version column (r14)
-        st = self._fast_scan_state()
-        if st is not None:
-            _, ckpt_version, versions, _ = st
-            if versions:
-                return versions[-1]
-            if ckpt_version is not None:
-                return ckpt_version
-            # empty log dir: fall through so the Spark path raises the
-            # same FileNotFoundError it always has
-        row = self.actions().agg(F.max("version").alias("v")).collect()[0]
-        return int(row.v) if row.v is not None else 0
-
-    def _metadata_fast(self):
-        """Driver-side ``metadata()`` for the current snapshot: the log
-        JSONs are small local files, so scanning them BACKWARD in Python
-        finds the newest metaData action in microseconds, where the
-        Spark path paid a whole JSON-scan job (~0.2 s of scheduler
-        overhead) — and the writer used to pay that job FIVE times per
-        commit (r14 profile: 0.95 s of a 1.1 s small append). Falls back
-        (returns None) for anything unusual — v2 / multi-part
-        checkpoints, parse errors — so the Spark path stays the source
-        of truth for the long tail. Memoized across DeltaLog instances
-        keyed on (log_dir, checkpoint version, newest json version):
-        the key changes with every commit, preserving the
-        snapshot-isolation contract documented on __init__."""
-        try:
-            st = self._fast_scan_state()
-            if st is None:
-                return None
-            ckpt_info, ckpt_version, versions, key = st
-            if not versions and ckpt_version is None:
-                return None  # empty log: Spark path raises, keep that
-            hit = _META_MEMO.get(key)
-            if hit is not None:
-                return hit
-
-            def _build(m: dict) -> dict:
-                schema_str = m.get("schemaString")
-                return {
-                    "id": m.get("id"),
-                    "name": m.get("name"),
-                    "partition_columns": list(m.get("partitionColumns") or []),
-                    "schema": json.loads(schema_str) if schema_str else None,
-                    "configuration": dict(m.get("configuration") or {}),
-                }
-
-            out = None
-            for v in reversed(versions):
-                found = None
-                for act in self._parsed_commit(v):
-                    if act.get("metaData") is not None:
-                        found = act["metaData"]  # last in the commit wins
-                if found is not None:
-                    out = _build(found)
-                    break
-            if out is None and ckpt_version is not None:
-                if ckpt_info.get("format") == "v2" or (
-                    ckpt_info.get("parts") or 1
-                ) > 1:
-                    return None  # rare shapes keep the Spark path
-                import pyarrow.parquet as pq
-
-                t = pq.read_table(
-                    self._checkpoint_paths(ckpt_version, None)[0],
-                    columns=["metaData"],
-                )
-                for m in t.column("metaData").to_pylist():
-                    if m is not None and m.get("schemaString"):
-                        out = _build(m)
-                        break
-            if out is None:
-                out = {}
-            if len(_META_MEMO) > 512:
-                _META_MEMO.clear()
-            _META_MEMO[key] = out
-            return out
-        except Exception:  # noqa: BLE001 — fast path only; Spark is truth
-            return None
-
-    def _fast_scan_state(self):
-        """(ckpt_info, ckpt_version, post-ckpt json versions, memo key)
-        for the driver-side fast paths, or None when the checkpoint has
-        a shape the fast paths don't handle (v2 / multi-part)."""
-        ckpt_info = self.last_checkpoint_info()
-        ckpt_version = None if ckpt_info is None else int(ckpt_info["version"])
-        if ckpt_info is not None and (
-            ckpt_info.get("format") == "v2" or (ckpt_info.get("parts") or 1) > 1
-        ):
-            return None
-        versions = sorted(
-            int(f[:20])
-            for f in os.listdir(self.log_dir)
-            if f.endswith(".json") and f[:20].isdigit()
-            and (ckpt_version is None or int(f[:20]) > ckpt_version)
-        )
-        # the newest log file's identity (size + mtime) joins the key:
-        # a table rmtree'd and REBUILT at the same path with the same
-        # version count must never be served the old table's memo
-        # (r14 bench caught exactly that on a force-rebuilt fixture)
-        newest = (
-            os.path.join(self.log_dir, f"{versions[-1]:020d}.json")
-            if versions
-            else (
-                self._checkpoint_paths(ckpt_version, None)[0]
-                if ckpt_version is not None
-                and (ckpt_info.get("parts") or 1) == 1
-                else None
-            )
-        )
-        stamp = None
-        if newest is not None and os.path.exists(newest):
-            st = os.stat(newest)
-            stamp = (st.st_size, st.st_mtime_ns)
-        key = (
-            self.log_dir,
-            ckpt_version,
-            versions[-1] if versions else -1,
-            stamp,
-        )
-        return ckpt_info, ckpt_version, versions, key
-
-    def _parsed_commit(self, v: int) -> list[dict]:
-        """Every action of commit ``v`` parsed with json.loads — a
-        corrupted/truncated line RAISES (the fast paths then fall back
-        to the Spark FAILFAST read, which fails loudly: silent action
-        loss is the one failure mode the log reader must never have).
-        Cached on (path, size, mtime)."""
-        p = os.path.join(self.log_dir, f"{v:020d}.json")
-        st = os.stat(p)
-        key = (p, st.st_size, st.st_mtime_ns)
-        hit = _COMMIT_CACHE.get(key)
-        if hit is None:
-            with open(p) as f:
-                hit = [json.loads(line) for line in f if line.strip()]
-            if len(_COMMIT_CACHE) > 4096:
-                _COMMIT_CACHE.clear()
-            _COMMIT_CACHE[key] = hit
-        return hit
-
-    def _live_adds_fast(self) -> list[dict] | None:
-        """Driver-side last-wins log replay: the live add-action dicts
-        (each with its commit version under ``_v``), or None to fall
-        back to the Spark path. Same reconciliation as
-        ``active_files()`` — rank (version DESC, add-before-remove),
-        live iff top action is an add; replayed here as: checkpoint
-        adds (already reconciled) -> per ascending commit, removes
-        applied before adds (add wins within a commit). The consumers
-        below (live_files_rows, live_add_actions, _active_rel_paths)
-        all COLLECT this list anyway, so driver memory is unchanged —
-        only the per-call Spark log-scan jobs disappear (r14: each was
-        ~0.2-0.7 s of scheduler overhead on small logs; delete_with_dv
-        paid three of them). Memoized like _metadata_fast."""
-        try:
-            st = self._fast_scan_state()
-            if st is None:
-                return None
-            ckpt_info, ckpt_version, versions, key = st
-            if not versions and ckpt_version is None:
-                return None  # empty log: Spark path raises, keep that
-            hit = _LIVE_MEMO.get(key)
-            if hit is not None:
-                return hit
-            live: dict[str, dict] = {}
-            if ckpt_version is not None:
-                import pyarrow.parquet as pq
-
-                t = pq.read_table(
-                    self._checkpoint_paths(ckpt_version, None)[0],
-                    columns=["add", "remove", "version"],
-                )
-                removes = t.column("remove").to_pylist()
-                vers = t.column("version").to_pylist()
-                adds = t.column("add").to_pylist()
-                for r in removes:
-                    if r is not None and r.get("path"):
-                        live.pop(r["path"], None)
-                for a, v in zip(adds, vers):
-                    if a is not None and a.get("path"):
-                        d = {k: _plainify(x) for k, x in a.items() if x is not None}
-                        d["_v"] = int(v if v is not None else ckpt_version)
-                        live[d["path"]] = d
-            for v in versions:
-                adds_j, removes_j = [], []
-                for act in self._parsed_commit(v):
-                    if act.get("add") is not None:
-                        adds_j.append(act["add"])
-                    elif act.get("remove") is not None:
-                        removes_j.append(act["remove"])
-                for r in removes_j:
-                    if r.get("path"):
-                        live.pop(r["path"], None)
-                for a in adds_j:
-                    if a.get("path"):
-                        d = {k: x for k, x in a.items() if x is not None}
-                        d["_v"] = v
-                        live[d["path"]] = d
-            out = sorted(live.values(), key=lambda d: d["path"])
-            if len(_LIVE_MEMO) > 256:
-                _LIVE_MEMO.clear()
-            _LIVE_MEMO[key] = out
-            return out
-        except Exception:  # noqa: BLE001 — fast path only; Spark is truth
-            return None
+        v = log_replay.Snapshot(self.table_path).version()
+        if v < 0:
+            raise FileNotFoundError(f"empty delta log: {self.log_dir}")
+        return v
 
     def metadata(self, as_of: int | None = None) -> dict:
-        if as_of is None and self._meta_cache is not None:
-            return self._meta_cache
-        if as_of is None:
-            fast = self._metadata_fast()
-            if fast is not None:
-                self._meta_cache = fast
-                return fast
-        use_ckpt = True if as_of is None else self._as_of_source(as_of)
-        acts = self.actions(use_checkpoint=use_ckpt)
-        if as_of is not None:
-            acts = acts.where(F.col("version") <= as_of)
-        rows = (
-            acts
-            .where(F.col("metaData").isNotNull())
-            .orderBy(F.desc("version"))
-            .limit(1)
-            .collect()
-        )
-        if not rows:
-            out = {}
-        else:
-            m = rows[0].metaData
-            out = {
-                "id": m.id,
-                "name": m.name,
-                "partition_columns": list(m.partitionColumns or []),
-                "schema": json.loads(m.schemaString) if m.schemaString else None,
-                "configuration": dict(m.configuration or {}),
-            }
-        if as_of is None:
-            self._meta_cache = out
-        return out
+        return log_replay.Snapshot(self.table_path).metadata(as_of)
 
     def partition_columns(self) -> list[str]:
         return self.metadata().get("partition_columns", [])
@@ -1200,76 +863,11 @@ class DeltaLog:
          "variantType"}
     )
 
-    def _protocol_fast(self) -> dict | None:
-        """Driver-side ``protocol()`` — same backward json scan (then
-        checkpoint) as _metadata_fast; None falls back to Spark."""
-        try:
-            st = self._fast_scan_state()
-            if st is None:
-                return None
-            ckpt_info, ckpt_version, versions, _ = st
-            if not versions and ckpt_version is None:
-                return None  # empty log: Spark path raises, keep that
-            found = None
-            for v in reversed(versions):
-                for act in self._parsed_commit(v):
-                    if act.get("protocol") is not None:
-                        found = act["protocol"]
-                if found is not None:
-                    break
-            if found is None and ckpt_version is not None:
-                import pyarrow.parquet as pq
-
-                t = pq.read_table(
-                    self._checkpoint_paths(ckpt_version, None)[0],
-                    columns=["protocol"],
-                )
-                for p in t.column("protocol").to_pylist():
-                    if p is not None and p.get("minReaderVersion") is not None:
-                        found = p
-                        break
-            if found is None:
-                return {"minReaderVersion": 1, "minWriterVersion": 2,
-                        "readerFeatures": [], "writerFeatures": []}
-            return {
-                "minReaderVersion": int(found["minReaderVersion"]),
-                "minWriterVersion": int(found["minWriterVersion"]),
-                "readerFeatures": list(found.get("readerFeatures") or []),
-                "writerFeatures": list(found.get("writerFeatures") or []),
-            }
-        except Exception:  # noqa: BLE001 — fast path only; Spark is truth
-            return None
-
     def protocol(self) -> dict:
         """Latest protocol action: {minReaderVersion, minWriterVersion,
         readerFeatures, writerFeatures} (feature lists empty for legacy
         version-only protocols)."""
-        if getattr(self, "_protocol_cache", None) is not None:
-            return self._protocol_cache
-        fast = self._protocol_fast()
-        if fast is not None:
-            self._protocol_cache = fast
-            return fast
-        rows = (
-            self.actions()
-            .where(F.col("protocol").isNotNull())
-            .orderBy(F.desc("version"))
-            .limit(1)
-            .collect()
-        )
-        if not rows:
-            out = {"minReaderVersion": 1, "minWriterVersion": 2,
-                   "readerFeatures": [], "writerFeatures": []}
-        else:
-            p = rows[0].protocol
-            out = {
-                "minReaderVersion": int(p.minReaderVersion),
-                "minWriterVersion": int(p.minWriterVersion),
-                "readerFeatures": list(getattr(p, "readerFeatures", None) or []),
-                "writerFeatures": list(getattr(p, "writerFeatures", None) or []),
-            }
-        self._protocol_cache = out
-        return out
+        return log_replay.Snapshot(self.table_path).protocol()
 
     def require_readable(self) -> None:
         """Protocol gate (Delta spec): refuse to read a table whose
@@ -1369,30 +967,14 @@ class DeltaLog:
     def last_txn_version(self, app_id: str) -> int | None:
         """Highest ``txn.version`` recorded for ``app_id``, or None —
         the idempotent-writer replay guard (Delta spec txn action)."""
-        row = (
-            self.actions()
-            .where(F.col("txn").isNotNull() & (F.col("txn.appId") == app_id))
-            .agg(F.max("txn.version").alias("v"))
-            .collect()[0]
-        )
-        return int(row.v) if row.v is not None else None
+        return log_replay.Snapshot(self.table_path).txn_version(app_id)
 
     # -- row tracking ------------------------------------------------------
 
     def domain_metadata(self, domain: str) -> dict | None:
         """Latest configuration for a ``domainMetadata`` domain (Delta
         spec), or None if never set / tombstoned (``removed=true``)."""
-        rows = (
-            self.actions()
-            .where(F.col("domainMetadata.domain") == domain)
-            .orderBy(F.desc("version"))
-            .select("domainMetadata.configuration", "domainMetadata.removed")
-            .limit(1)
-            .collect()
-        )
-        if not rows or rows[0].removed:
-            return None
-        return json.loads(rows[0].configuration or "{}")
+        return log_replay.Snapshot(self.table_path).domain_metadata(domain)
 
     def row_id_high_water_mark(self) -> int:
         """Highest assigned fresh row id (``delta.rowTracking`` domain),
@@ -1438,60 +1020,8 @@ class DeltaLog:
 
     # -- deletion vectors --------------------------------------------------
 
-    def _dv_paths_fast(self) -> list[str] | None:
-        """Driver-side ``deletion_vector_paths()`` — checkpoint dv rows
-        (pyarrow) then ascending post-checkpoint json dv actions, the
-        same order the Spark union collects; None falls back."""
-        try:
-            st = self._fast_scan_state()
-            if st is None:
-                return None
-            _, ckpt_version, versions, _ = st
-            if not versions and ckpt_version is None:
-                return None
-            out: list[str] = []
-            if ckpt_version is not None:
-                import pyarrow.parquet as pq
-
-                t = pq.read_table(
-                    self._checkpoint_paths(ckpt_version, None)[0],
-                    columns=["dv"],
-                )
-                out.extend(
-                    d["path"]
-                    for d in t.column("dv").to_pylist()
-                    if d is not None and d.get("path")
-                )
-            for v in versions:
-                for act in self._parsed_commit(v):
-                    dv = act.get("dv")
-                    if dv is not None and dv.get("path"):
-                        out.append(dv["path"])
-            return out
-        except Exception:  # noqa: BLE001 — fast path only; Spark is truth
-            return None
-
     def deletion_vector_paths(self, as_of: int | None = None) -> list[str]:
-        if as_of is None and self._dv_paths_cache is not None:
-            return self._dv_paths_cache
-        if as_of is None:
-            fast = self._dv_paths_fast()
-            if fast is not None:
-                self._dv_paths_cache = fast
-                return fast
-        use_ckpt = True if as_of is None else self._as_of_source(as_of)
-        acts = self.actions(use_checkpoint=use_ckpt)
-        if as_of is not None:
-            acts = acts.where(F.col("version") <= as_of)
-        out = [
-            r.path
-            for r in acts.where(F.col("dv").isNotNull())
-            .select(F.col("dv.path").alias("path"))
-            .collect()
-        ]
-        if as_of is None:
-            self._dv_paths_cache = out
-        return out
+        return log_replay.Snapshot(self.table_path).deletion_vector_paths(as_of)
 
     def deletion_vectors(self, as_of: int | None = None) -> DataFrame | None:
         """(rel_path, row_index) of every soft-deleted row, or None when
@@ -1655,44 +1185,7 @@ class DeltaLog:
         earlier than its predecessor (clock skew) reads as
         predecessor + 1 ms, so timestamp -> version is well-defined
         either way."""
-        acts = self.actions(use_checkpoint=False)
-        ci_fields = {
-            f.name
-            for f in acts.schema["commitInfo"].dataType.fields  # type: ignore[union-attr]
-        }
-        ts_col = (
-            F.coalesce(
-                F.col("commitInfo.inCommitTimestamp"),
-                F.col("commitInfo.timestamp"),
-            )
-            if "inCommitTimestamp" in ci_fields
-            else F.col("commitInfo.timestamp")
-        )
-        rows = (
-            acts.groupBy("version")
-            .agg(F.max(ts_col).alias("ts"))
-            .orderBy("version")
-            .collect()
-        )
-        out: list[tuple[int, int]] = []
-        prev = -1
-        for r in rows:
-            ts = r.ts
-            if ts is None:
-                # commitInfo is OPTIONAL per the Delta spec: a foreign
-                # commit without one falls back to the commit FILE's
-                # mtime (the same chain Delta and the delta_tail
-                # timestamp resolution use) instead of becoming
-                # invisible to timestamp addressing
-                p = os.path.join(self.log_dir, f"{int(r.version):020d}.json")
-                try:
-                    ts = int(os.path.getmtime(p) * 1000)
-                except OSError:
-                    continue  # checkpoint-folded version without info
-            ts = max(int(ts), prev + 1)
-            out.append((int(r.version), ts))
-            prev = ts
-        return out
+        return log_replay.Snapshot(self.table_path).commit_timestamps()
 
     @staticmethod
     def _to_millis(ts) -> int:

@@ -32,24 +32,13 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-LOG_DIR = "_delta_log"
-
-
-def _log_path(table_path: str, version: int) -> str:
-    return os.path.join(table_path, LOG_DIR, f"{version:020d}.json")
+from delta_lake_health_spark.sources import log_replay
+from delta_lake_health_spark.sources.log_replay import LOG_DIR
 
 
 def current_version(table_path: str) -> int:
     """Highest committed version, or -1 for a fresh table."""
-    log = os.path.join(table_path, LOG_DIR)
-    if not os.path.isdir(log):
-        return -1
-    versions = [
-        int(f[:20])
-        for f in os.listdir(log)
-        if f.endswith(".json") and f[:20].isdigit()
-    ]
-    return max(versions, default=-1)
+    return max(log_replay.commit_versions(table_path), default=-1)
 
 
 def _list_parquet_rel(table_path: str) -> set[str]:
@@ -373,104 +362,6 @@ _LEGACY_WRITER_FEATURES = {
 _LEGACY_READER_FEATURES = {1: frozenset(), 2: frozenset({"columnMapping"})}
 
 
-_SCAN_MISS = object()
-
-
-def _scan_log_then_checkpoint(
-    table_path: str,
-    screen: str,
-    json_handler,
-    ckpt_column: str,
-    ckpt_handler,
-    default,
-):
-    """Shared driver-side action lookup (no Spark job): scan commit
-    JSONs newest-first — lines substring-screened by ``screen`` before
-    json.loads — stopping at the last checkpoint (a checkpoint always
-    folds the latest of every scanned action), then fall back to the
-    checkpoint parquet's ``ckpt_column`` via pyarrow. Handlers return
-    ``_SCAN_MISS`` to keep scanning. One implementation for every
-    per-commit driver gate (protocol check, row-id high-water mark), so
-    the tail-walk/boundary/fallback rules can never diverge."""
-    log_dir = os.path.join(table_path, LOG_DIR)
-    try:
-        files = sorted(
-            (f for f in os.listdir(log_dir)
-             if f.endswith(".json") and f[:20].isdigit()),
-            reverse=True,
-        )
-    except FileNotFoundError:
-        return default
-    ckpt_version = -1
-    try:
-        with open(os.path.join(log_dir, "_last_checkpoint")) as fh:
-            ckpt_version = int(json.loads(fh.read())["version"])
-    except (FileNotFoundError, KeyError, ValueError):
-        pass
-    for f in files:
-        if int(f[:20]) < ckpt_version:
-            break  # the checkpoint (read below) folds anything older
-        with open(os.path.join(log_dir, f)) as fh:
-            for line in fh:
-                if screen not in line:
-                    continue
-                out = json_handler(json.loads(line))
-                if out is not _SCAN_MISS:
-                    return out
-    try:
-        import pyarrow.parquet as pq
-
-        from delta_lake_health_spark.sources.delta_log import (
-            checkpoint_file_names,
-        )
-
-        with open(os.path.join(log_dir, "_last_checkpoint")) as fh:
-            info = json.loads(fh.read())
-        # V2: non-file actions live in the UUID top-level file
-        for name in checkpoint_file_names(info):
-            fp = os.path.join(log_dir, name)
-            if ckpt_column not in pq.read_schema(fp).names:
-                continue
-            t = pq.read_table(fp, columns=[ckpt_column])
-            for row in t.column(ckpt_column).to_pylist():
-                out = ckpt_handler(row)
-                if out is not _SCAN_MISS:
-                    return out
-    except (FileNotFoundError, KeyError, ValueError):
-        pass
-    return default
-
-
-def _latest_protocol_fs(table_path: str) -> dict:
-    """Driver-side protocol lookup (the write gate runs on EVERY
-    commit) via the shared tail-then-checkpoint scan."""
-    default = {"minReaderVersion": 1, "minWriterVersion": 2,
-               "readerFeatures": [], "writerFeatures": []}
-
-    def norm(p: dict) -> dict:
-        return {
-            "minReaderVersion": int(p.get("minReaderVersion", 1)),
-            "minWriterVersion": int(p.get("minWriterVersion", 2)),
-            "readerFeatures": list(p.get("readerFeatures") or []),
-            "writerFeatures": list(p.get("writerFeatures") or []),
-        }
-
-    return _scan_log_then_checkpoint(
-        table_path,
-        screen='"protocol"',
-        json_handler=lambda a: (
-            norm(a["protocol"]) if "protocol" in a else _SCAN_MISS
-        ),
-        ckpt_column="protocol",
-        ckpt_handler=lambda row: (
-            norm(row)
-            if row and row.get("minReaderVersion") is not None
-            else _SCAN_MISS
-        ),
-        default=default,
-    )
-
-
 def _refuse_append_only(spark: SparkSession, table_path: str, op: str) -> None:
     """`delta.appendOnly=true` tables refuse data-removing operations
     (Delta's enforcement for the appendOnly writer feature): DELETE,
@@ -497,7 +388,7 @@ def _require_writable(spark: SparkSession, table_path: str) -> None:
     row tracking, ...) corrupts the table for conforming writers."""
     if current_version(table_path) < 0:
         return
-    p = _latest_protocol_fs(table_path)
+    p = log_replay.Snapshot(table_path).protocol()
     w = p["minWriterVersion"]
     feats = (
         set(p["writerFeatures"])
@@ -522,7 +413,7 @@ def _protocol_upgrade_action(
     table-features protocol (3, 7), which must enumerate every feature
     the table already relies on (the spec's legacy-to-features
     migration)."""
-    p = _latest_protocol_fs(table_path)
+    p = log_replay.Snapshot(table_path).protocol()
     r, w = p["minReaderVersion"], p["minWriterVersion"]
     if feature == "columnMapping":
         if (r, w) >= (2, 5) and (
@@ -627,101 +518,34 @@ def _protocol_upgrade_action(
 
 
 def _prev_in_commit_ts(table_path: str, version: int) -> int:
-    """The predecessor commit's inCommitTimestamp (or its commitInfo
-    timestamp as the pre-ICT fallback), -1 for version 0. One small
-    driver-side JSON read — the same cost class as the put-if-absent
-    itself."""
+    """The predecessor commit's own timestamp (in-commit timestamp, else
+    commitInfo.timestamp), -1 for version 0 or when it has none."""
     if version <= 0:
         return -1
-    prev = _log_path(table_path, version - 1)
     try:
-        with open(prev) as f:
-            for line in f:
-                a = json.loads(line)
-                if "commitInfo" in a:
-                    ci = a["commitInfo"]
-                    ts = ci.get("inCommitTimestamp")
-                    if ts is None:  # foreign writer may emit null
-                        ts = ci.get("timestamp")
-                    return int(ts) if ts is not None else -1
-    except (FileNotFoundError, TypeError, ValueError):
-        pass  # predecessor cleaned up / malformed — fall back to clock
-    return -1
+        ts = log_replay.commit_timestamp(table_path, version - 1)
+    except FileNotFoundError:
+        return -1  # predecessor cleaned up: fall back to the clock
+    return -1 if ts is None else ts
 
 
-def _row_tracking_enabled(table_path: str) -> bool:
-    p = _latest_protocol_fs(table_path)
-    return (
-        p["minWriterVersion"] >= 7
-        and "rowTracking" in p["writerFeatures"]
-    )
-
-
-def _latest_row_id_hwm(table_path: str) -> int:
-    """Driver-side row-id high-water-mark lookup via the shared
-    tail-then-checkpoint scan. -1 when the ``delta.rowTracking`` domain
-    was never written."""
-
-    def hwm_of(dm: dict) -> int:
-        if dm.get("domain") != "delta.rowTracking" or dm.get("removed"):
-            return -1
-        cfg = json.loads(dm.get("configuration") or "{}")
-        return int(cfg.get("rowIdHighWaterMark", -1))
-
-    return _scan_log_then_checkpoint(
-        table_path,
-        screen='"delta.rowTracking"',
-        json_handler=lambda a: (
-            hwm_of(a["domainMetadata"])
-            if "domainMetadata" in a
-            else _SCAN_MISS
-        ),
-        ckpt_column="domainMetadata",
-        ckpt_handler=lambda row: (
-            hwm_of(row)
-            if row and row.get("domain") == "delta.rowTracking"
-            else _SCAN_MISS
-        ),
-        default=-1,
-    )
-
-
+ROW_TRACKING_DOMAIN = "delta.rowTracking"
 CLUSTERING_DOMAIN = "delta.clustering"
 
 
 def clustering_columns(table_path: str) -> list[str]:
     """The table's declared liquid-clustering columns (latest
     ``delta.clustering`` domainMetadata), [] when never declared or
-    cleared. Driver-side via the shared tail-then-checkpoint scan — no
-    Spark job, so the per-write default lookup stays commit-cost; a
-    table whose protocol never enabled the feature short-circuits
-    without scanning the log at all (every write calls this)."""
-    p = _latest_protocol_fs(table_path)
+    cleared. Driver-side — no Spark job, so the per-write default lookup
+    stays commit-cost; a table whose protocol never enabled the feature
+    short-circuits without looking for the domain (every write calls
+    this)."""
+    snap = log_replay.Snapshot(table_path)
+    p = snap.protocol()
     if p["minWriterVersion"] < 7 or "clustering" not in p["writerFeatures"]:
         return []
-
-    def cols_of(dm: dict) -> list[str]:
-        if dm.get("removed"):
-            return []
-        cfg = json.loads(dm.get("configuration") or "{}")
-        return list(cfg.get("clusteringColumns", []))
-
-    return _scan_log_then_checkpoint(
-        table_path,
-        screen=f'"{CLUSTERING_DOMAIN}"',
-        json_handler=lambda a: (
-            cols_of(a["domainMetadata"])
-            if a.get("domainMetadata", {}).get("domain") == CLUSTERING_DOMAIN
-            else _SCAN_MISS
-        ),
-        ckpt_column="domainMetadata",
-        ckpt_handler=lambda row: (
-            cols_of(row)
-            if row and row.get("domain") == CLUSTERING_DOMAIN
-            else _SCAN_MISS
-        ),
-        default=[],
-    )
+    cfg = snap.domain_metadata(CLUSTERING_DOMAIN) or {}
+    return list(cfg.get("clusteringColumns", []))
 
 
 def set_cluster_columns(
@@ -786,9 +610,14 @@ def _assign_row_ids(table_path: str, version: int, actions: list[dict]) -> None:
     baseRowId — reassigning would break the spec's id stability for
     rows that never moved. The flag is stripped before serialization."""
     adds = [a["add"] for a in actions if "add" in a]
-    if not adds or not _row_tracking_enabled(table_path):
+    if not adds:
         return
-    hwm = _latest_row_id_hwm(table_path)
+    snap = log_replay.Snapshot(table_path)
+    p = snap.protocol()
+    if p["minWriterVersion"] < 7 or "rowTracking" not in p["writerFeatures"]:
+        return
+    cfg = snap.domain_metadata(ROW_TRACKING_DOMAIN) or {}
+    hwm = int(cfg.get("rowIdHighWaterMark", -1))
     assigned = False
     for add in adds:
         # the flag is READ, never popped: a retried commit re-enters
@@ -806,12 +635,12 @@ def _assign_row_ids(table_path: str, version: int, actions: list[dict]) -> None:
     # replace any stale domainMetadata from a previous attempt
     actions[:] = [
         a for a in actions
-        if a.get("domainMetadata", {}).get("domain") != "delta.rowTracking"
+        if a.get("domainMetadata", {}).get("domain") != ROW_TRACKING_DOMAIN
     ]
     actions.append(
         {
             "domainMetadata": {
-                "domain": "delta.rowTracking",
+                "domain": ROW_TRACKING_DOMAIN,
                 "configuration": json.dumps({"rowIdHighWaterMark": hwm}),
                 "removed": False,
             }
@@ -834,7 +663,7 @@ def _commit(table_path: str, version: int, actions: list[dict]) -> None:
             a["commitInfo"]["inCommitTimestamp"] = max(
                 int(time.time() * 1000), _prev_in_commit_ts(table_path, version) + 1
             )
-    path = _log_path(table_path, version)
+    path = log_replay.commit_path(table_path, version)
     os.makedirs(os.path.dirname(path), exist_ok=True)
     tmp = path + f".tmp-{uuid.uuid4().hex}"
 
@@ -2206,11 +2035,23 @@ def write(
                 constraint_obs.get, checks, not_null, gens
             )
         except Exception:
-            for rel in new_files:  # violating batch leaves no debris
-                try:
-                    os.remove(os.path.join(table_path, rel))
-                except OSError:
-                    pass
+            # a violating batch leaves no debris: its files with their
+            # hidden Hadoop checksums, then the partition directories it
+            # created and emptied
+            for rel in new_files:
+                head, name = os.path.split(os.path.join(table_path, rel))
+                for n in (name, f".{name}.crc"):
+                    try:
+                        os.remove(os.path.join(head, n))
+                    except OSError:
+                        pass
+            for d in {os.path.dirname(rel) for rel in new_files}:
+                while d:
+                    try:
+                        os.rmdir(os.path.join(table_path, d))
+                    except OSError:
+                        break  # not empty: it holds committed files
+                    d = os.path.dirname(d)
             raise
     adds = [_add_action(table_path, rel) for rel in new_files]
     n_records = sum(json.loads(a["add"]["stats"])["numRecords"] for a in adds)
@@ -3356,11 +3197,6 @@ class ConcurrentDeleteDeleteException(ConcurrentWriteConflict):
     pass
 
 
-def _version_actions(table_path: str, version: int) -> list[dict]:
-    with open(_log_path(table_path, version)) as fh:
-        return [json.loads(line) for line in fh if line.strip()]
-
-
 def check_commit_conflicts(
     table_path: str,
     base_version: int,
@@ -3373,7 +3209,7 @@ def check_commit_conflicts(
     matching conflict exception."""
     current = current_version(table_path)
     for v in range(base_version + 1, current + 1):
-        for act in _version_actions(table_path, v):
+        for act in log_replay.read_commit(table_path, v):
             if "metaData" in act or "protocol" in act:
                 raise MetadataChangedException(
                     f"version {v} changed table metadata/protocol"

@@ -1,0 +1,472 @@
+"""Driver-side Delta log replay — stdlib + pyarrow, no SparkSession.
+
+Every metadata-sized answer about a table's ``_delta_log`` is resolved
+here: the version, metaData, protocol, live add actions, deletion-vector
+sidecars, the ``txn`` version per appId, domain metadata per domain and
+commit timestamps. A snapshot is the newest checkpoint (v1 single,
+multi-part, or v2 with ``_sidecars/``) plus the commit JSONs after it,
+reconciled last-wins per path (the Delta protocol's definition, PAPER.md
+D1). The distributed replay in ``delta_log.DeltaLog.actions`` stays for
+consumers that need a DataFrame.
+
+Nothing here imports pyspark: the ``delta_tail`` streaming source calls
+it from a Python worker.
+
+- Parsed commits are cached on (path, size, mtime).
+- Answers are memoised per snapshot key — (log dir, checkpoint version,
+  oldest and newest retained commit, the newest commit file's size and
+  mtime) — so any commit, checkpoint, cleanup or rebuild at the same path
+  changes the key. Callers get copies: mutating an answer never changes
+  what the next caller sees.
+- A malformed commit raises ``ValueError("corrupt Delta commit ...")``.
+"""
+
+from __future__ import annotations
+
+import json
+import os
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+
+LOG_DIR = "_delta_log"
+
+DEFAULT_PROTOCOL = {
+    "minReaderVersion": 1,
+    "minWriterVersion": 2,
+    "readerFeatures": [],
+    "writerFeatures": [],
+}
+
+_COMMITS: dict[tuple, list[dict]] = {}
+_MEMO: dict[tuple, dict] = {}
+
+
+def commit_path(table_path: str, version: int) -> str:
+    return os.path.join(table_path, LOG_DIR, f"{version:020d}.json")
+
+
+def commit_versions(table_path: str) -> list[int]:
+    """Sorted versions of the retained commit files (20-digit ``.json``
+    names); [] when the log does not exist."""
+    try:
+        names = os.listdir(os.path.join(table_path, LOG_DIR))
+    except FileNotFoundError:
+        return []
+    return sorted(
+        int(n[:20])
+        for n in names
+        if len(n) == 25 and n.endswith(".json") and n[:20].isdigit()
+    )
+
+
+def _parsed(table_path: str, version: int) -> list[dict]:
+    """Every action of commit ``version`` — the shared cached list, never
+    handed to callers. FileNotFoundError once log cleanup expired it."""
+    p = commit_path(table_path, version)
+    st = os.stat(p)
+    key = (p, st.st_size, st.st_mtime_ns)
+    hit = _COMMITS.get(key)
+    if hit is None:
+        with open(p) as f:
+            lines = [line for line in f if line.strip()]
+        try:
+            hit = [json.loads(line) for line in lines]
+        except ValueError as exc:
+            raise ValueError(f"corrupt Delta commit {p}: {exc}") from None
+        if not all(isinstance(a, dict) for a in hit):
+            raise ValueError(
+                f"corrupt Delta commit {p}: an action is not a JSON object"
+            )
+        if len(_COMMITS) > 4096:
+            _COMMITS.clear()
+        _COMMITS[key] = hit
+    return hit
+
+
+def _copy(x):
+    """Copy JSON-shaped data deep enough that no caller reaches a cache."""
+    if isinstance(x, dict):
+        return {k: _copy(v) for k, v in x.items()}
+    if isinstance(x, list):
+        return [_copy(v) for v in x]
+    return x
+
+
+def read_commit(table_path: str, version: int) -> list[dict]:
+    """The actions of commit ``version``, in file order."""
+    return _copy(_parsed(table_path, version))
+
+
+def commit_timestamp(table_path: str, version: int) -> int | None:
+    """Commit ``version``'s own timestamp: its inCommitTimestamp, else
+    ``commitInfo.timestamp``; None when it carries no commitInfo."""
+    stamps = []
+    for a in _parsed(table_path, version):
+        ci = a.get("commitInfo")
+        if ci is not None:
+            ts = ci.get("inCommitTimestamp")
+            if ts is None:  # a foreign writer may emit null
+                ts = ci.get("timestamp")
+            if ts is not None:
+                stamps.append(int(ts))
+    return max(stamps, default=None)
+
+
+def last_checkpoint_info(table_path: str) -> dict | None:
+    """The ``_last_checkpoint`` record (version, size, and ``parts`` for
+    multi-part or ``format``/``path`` for v2 checkpoints), or None."""
+    try:
+        with open(os.path.join(table_path, LOG_DIR, "_last_checkpoint")) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        return None
+
+
+def checkpoint_file_names(info: dict) -> list[str]:
+    """Checkpoint file names (relative to ``_delta_log``) for a
+    ``_last_checkpoint`` record — single, multi-part, or the V2 UUID
+    top-level (sidecar files are indexed inside the V2 top-level, see
+    ``sidecar_names``)."""
+    v = int(info["version"])
+    if info.get("format") == "v2":
+        return [info["path"]]
+    parts = info.get("parts")
+    # parts == 1 uses the classic single-file name (a foreign writer may
+    # record "parts": 1 explicitly) — multi-part naming only when > 1
+    if parts and int(parts) > 1:
+        n = int(parts)
+        return [
+            f"{v:020d}.checkpoint.{i + 1:010d}.{n:010d}.parquet"
+            for i in range(n)
+        ]
+    return [f"{v:020d}.checkpoint.parquet"]
+
+
+def sidecar_names(table_path: str, info: dict) -> list[str]:
+    """File names under ``_delta_log/_sidecars`` that a V2 checkpoint's
+    top-level file indexes ([] for a V1 checkpoint)."""
+    if info.get("format") != "v2":
+        return []
+    with pq.ParquetFile(os.path.join(table_path, LOG_DIR, info["path"])) as top:
+        if "sidecar" not in top.schema_arrow.names:
+            return []
+        col = top.read(columns=["sidecar"]).column("sidecar")
+    return [r["path"] for r in col.to_pylist() if r and r.get("path")]
+
+
+def _has_map(t) -> bool:
+    if pa.types.is_map(t):
+        return True
+    if pa.types.is_struct(t):
+        return any(_has_map(f.type) for f in t)
+    if pa.types.is_list(t) or pa.types.is_large_list(t):
+        return _has_map(t.value_type)
+    return False
+
+
+def _plain(v, t):
+    """One pyarrow value with its map values turned into dicts (the
+    shape a commit JSON parses to; ``to_pylist`` yields tuple lists)."""
+    if v is None:
+        return None
+    if pa.types.is_map(t):
+        return {k: _plain(x, t.item_type) for k, x in v}
+    if pa.types.is_struct(t):
+        return {f.name: _plain(v.get(f.name), f.type) for f in t}
+    if pa.types.is_list(t) or pa.types.is_large_list(t):
+        return [_plain(x, t.value_type) for x in v]
+    return v
+
+
+def _checkpoint_rows(
+    table_path: str, info: dict, columns: list[str]
+) -> list[tuple[int, dict]]:
+    """(version, {column: value}) for every checkpoint row with a
+    non-null value in one of ``columns``. Reads only those columns (plus
+    ``version``) of the top-level files and — for add/remove on a V2
+    checkpoint — of its sidecars. Rows without a ``version`` column (a
+    foreign checkpoint) carry the checkpoint's version."""
+    log_dir = os.path.join(table_path, LOG_DIR)
+    base = int(info["version"])
+    files = [os.path.join(log_dir, n) for n in checkpoint_file_names(info)]
+    if {"add", "remove"} & set(columns):
+        files += [
+            os.path.join(log_dir, "_sidecars", n)
+            for n in sidecar_names(table_path, info)
+        ]
+    out: list[tuple[int, dict]] = []
+    for fp in files:
+        with pq.ParquetFile(fp) as pf:
+            names = pf.schema_arrow.names
+            want = [c for c in columns if c in names]
+            if not want:
+                continue
+            t = pf.read(columns=want + (["version"] if "version" in names else []))
+        vals = []
+        for c in want:
+            typ, col = t.schema.field(c).type, t.column(c).to_pylist()
+            vals.append([_plain(v, typ) for v in col] if _has_map(typ) else col)
+        vers = (
+            t.column("version").to_pylist()
+            if "version" in names
+            else [base] * t.num_rows
+        )
+        for i, v in enumerate(vers):
+            row = {c: col[i] for c, col in zip(want, vals) if col[i] is not None}
+            if row:
+                out.append((base if v is None else int(v), row))
+    return out
+
+
+class Snapshot:
+    """One listing of a table's log — the ``_last_checkpoint`` record and
+    the retained commit versions — and the answers replayed from it. A
+    missing or empty log is an empty table: no metadata, the default
+    protocol, no files, version -1."""
+
+    def __init__(self, table_path: str):
+        self.table_path = table_path
+        self.info = last_checkpoint_info(table_path)
+        self.checkpoint = None if self.info is None else int(self.info["version"])
+        self.versions = commit_versions(table_path)
+        newest = (
+            commit_path(table_path, self.versions[-1])
+            if self.versions
+            else os.path.join(table_path, LOG_DIR, "_last_checkpoint")
+        )
+        try:
+            st = os.stat(newest)
+            stamp = (st.st_size, st.st_mtime_ns)
+        except FileNotFoundError:
+            stamp = None
+        self.key = (
+            os.path.join(table_path, LOG_DIR),
+            self.checkpoint,
+            self.versions[0] if self.versions else -1,
+            self.versions[-1] if self.versions else -1,
+            stamp,
+        )
+
+    def _memo(self, name, build):
+        slot = _MEMO.get(self.key)
+        if slot is None:
+            if len(_MEMO) > 256:
+                _MEMO.clear()
+            slot = _MEMO.setdefault(self.key, {})
+        if name not in slot:
+            slot[name] = build()
+        return slot[name]
+
+    # -- replay range ------------------------------------------------------
+
+    def earliest_version(self) -> int:
+        """Lowest retained commit — 0 until log cleanup expires history."""
+        return self.versions[0] if self.versions else 0
+
+    def require_history_from(self, version: int) -> None:
+        """Raise if raw-JSON replay from ``version`` is impossible because
+        log cleanup expired earlier commits."""
+        earliest = self.earliest_version()
+        if version < earliest:
+            raise ValueError(
+                f"log history before version {earliest} has been cleaned "
+                f"up (requested {version}); time travel and change feeds "
+                "are bounded by the log retention window"
+            )
+
+    def replays_checkpoint(self, as_of: int | None) -> bool:
+        """Whether the state at ``as_of`` (None = newest) starts from the
+        checkpoint: exact for any ``as_of`` at or above it, and after log
+        cleanup the only exact source. Otherwise every commit from
+        version 0 is replayed, which raises if cleanup expired any."""
+        if self.checkpoint is not None and (
+            as_of is None or as_of >= self.checkpoint
+        ):
+            return True
+        self.require_history_from(0)
+        return False
+
+    def _commits_to(self, as_of: int | None) -> tuple[dict | None, list[int]]:
+        """(checkpoint record or None, commit versions to replay after it)
+        for the state at ``as_of``."""
+        if self.replays_checkpoint(as_of):
+            info, lo = self.info, self.checkpoint
+        else:
+            info, lo = None, -1
+        return info, [
+            v for v in self.versions
+            if v > lo and (as_of is None or v <= as_of)
+        ]
+
+    def _newest(self, column: str, as_of: int | None, pick) -> dict | None:
+        """The newest ``column`` action accepted by ``pick``: commits
+        newest-first (the last in a commit wins), then the checkpoint's
+        highest-version row."""
+        info, versions = self._commits_to(as_of)
+        for v in reversed(versions):
+            found = None
+            for a in _parsed(self.table_path, v):
+                x = a.get(column)
+                if x is not None and pick(x):
+                    found = x
+            if found is not None:
+                return found
+        if info is not None:
+            rows = [
+                (v, r[column])
+                for v, r in _checkpoint_rows(self.table_path, info, [column])
+                if pick(r[column])
+            ]
+            if rows:
+                return max(rows, key=lambda vr: vr[0])[1]
+        return None
+
+    def _every(self, column: str, as_of: int | None) -> list[dict]:
+        """Every ``column`` action at ``as_of``: the checkpoint's rows,
+        then each later commit's in version order."""
+        info, versions = self._commits_to(as_of)
+        out = [] if info is None else [
+            r[column] for _, r in _checkpoint_rows(self.table_path, info, [column])
+        ]
+        for v in versions:
+            out += [a[column] for a in _parsed(self.table_path, v)
+                    if a.get(column) is not None]
+        return out
+
+    # -- answers -----------------------------------------------------------
+
+    def version(self) -> int:
+        """Newest committed version, -1 for an empty log. The newest
+        commit is parsed, so a truncated head fails like every read."""
+        if self.versions:
+            _parsed(self.table_path, self.versions[-1])
+            return max(self.versions[-1], self.checkpoint or -1)
+        return -1 if self.checkpoint is None else self.checkpoint
+
+    def metadata(self, as_of: int | None = None) -> dict:
+        """Newest metaData as {id, name, partition_columns, schema (parsed
+        schemaString), configuration}; {} when none was committed."""
+
+        def build():
+            m = self._newest("metaData", as_of, lambda m: True)
+            if m is None:
+                return {}
+            schema = m.get("schemaString")
+            return {
+                "id": m.get("id"),
+                "name": m.get("name"),
+                "partition_columns": list(m.get("partitionColumns") or []),
+                "schema": json.loads(schema) if schema else None,
+                "configuration": dict(m.get("configuration") or {}),
+            }
+
+        return _copy(self._memo(("metadata", as_of), build))
+
+    def protocol(self) -> dict:
+        """Newest protocol as {minReaderVersion, minWriterVersion,
+        readerFeatures, writerFeatures}; the legacy (1, 2) default when
+        none was committed."""
+
+        def build():
+            p = self._newest(
+                "protocol", None, lambda p: p.get("minReaderVersion") is not None
+            )
+            if p is None:
+                return DEFAULT_PROTOCOL
+            return {
+                "minReaderVersion": int(p["minReaderVersion"]),
+                "minWriterVersion": int(p.get("minWriterVersion") or 2),
+                "readerFeatures": list(p.get("readerFeatures") or []),
+                "writerFeatures": list(p.get("writerFeatures") or []),
+            }
+
+        return _copy(self._memo("protocol", build))
+
+    def live_add_actions(self, as_of: int | None = None) -> list[dict]:
+        """The add action of every live file at ``as_of``, sorted by path,
+        null fields dropped. Per path the newest action decides; within
+        one commit removes apply before adds, so an add wins."""
+
+        def build():
+            info, versions = self._commits_to(as_of)
+            steps: list[tuple[int, list[dict]]] = []
+            if info is not None:
+                by_version: dict[int, list[dict]] = {}
+                for v, row in _checkpoint_rows(
+                    self.table_path, info, ["add", "remove"]
+                ):
+                    by_version.setdefault(v, []).append(row)
+                steps += sorted(by_version.items(), key=lambda s: s[0])
+            steps += [(v, _parsed(self.table_path, v)) for v in versions]
+            live: dict[str, dict] = {}
+            for _, acts in steps:
+                for a in acts:
+                    r = a.get("remove")
+                    if r is not None and r.get("path"):
+                        live.pop(r["path"], None)
+                for a in acts:
+                    add = a.get("add")
+                    if add is not None and add.get("path"):
+                        live[add["path"]] = add
+            return [
+                {k: x for k, x in live[p].items() if x is not None}
+                for p in sorted(live)
+            ]
+
+        return _copy(self._memo(("live_add_actions", as_of), build))
+
+    def deletion_vector_paths(self, as_of: int | None = None) -> list[str]:
+        """Sidecar paths of every dv action at ``as_of``: the checkpoint's,
+        then each later commit's in version order."""
+
+        def build():
+            return [d["path"] for d in self._every("dv", as_of) if d.get("path")]
+
+        return list(self._memo(("dv_paths", as_of), build))
+
+    def txn_version(self, app_id: str) -> int | None:
+        """Highest ``txn.version`` recorded for ``app_id``, or None."""
+
+        def build():
+            found = [
+                int(t["version"]) for t in self._every("txn", None)
+                if t.get("appId") == app_id and t.get("version") is not None
+            ]
+            return max(found, default=None)
+
+        return self._memo(("txn", app_id), build)
+
+    def domain_metadata(self, domain: str) -> dict | None:
+        """Newest configuration of a ``domainMetadata`` domain, or None
+        when never set or removed."""
+
+        def build():
+            d = self._newest(
+                "domainMetadata", None, lambda d: d.get("domain") == domain
+            )
+            if d is None or d.get("removed"):
+                return None
+            return json.loads(d.get("configuration") or "{}")
+
+        return _copy(self._memo(("domain", domain), build))
+
+    def commit_timestamps(self) -> list[tuple[int, int]]:
+        """(version, adjusted_ts_millis) for every retained commit. The
+        timestamp is ``commit_timestamp``, else the commit file's mtime;
+        a commit stamped at or before its predecessor reads as
+        predecessor + 1 ms, so timestamp -> version is well-defined."""
+
+        def build():
+            out, prev = [], -1
+            for v in self.versions:
+                ts = commit_timestamp(self.table_path, v)
+                if ts is None:
+                    mtime = os.path.getmtime(commit_path(self.table_path, v))
+                    ts = int(mtime * 1000)
+                ts = max(ts, prev + 1)
+                out.append((v, ts))
+                prev = ts
+            return out
+
+        return list(self._memo("commit_timestamps", build))

@@ -20,12 +20,13 @@ Semantics match Delta's own streaming source:
 - ``startingVersion`` begins the tail mid-log (default: version 0,
   i.e. the full history replay).
 
-Everything here runs OUTSIDE the JVM session: the driver half parses log
-JSON with the stdlib, the executor half reads parquet with pyarrow and
-yields Arrow record batches (zero row-at-a-time Python). Hive-style
-partition directory values are re-attached and cast from the path, and
-column-mapped tables (RENAME/DROP) are decoded physical->logical with
-the same mapping rules as ``sources/delta_log.py:534``.
+Everything here runs OUTSIDE the JVM session: the driver half reads the
+log through ``sources/log_replay.py`` (stdlib + pyarrow), the executor
+half reads parquet with pyarrow and yields Arrow record batches (zero
+row-at-a-time Python). Hive-style partition directory values are
+re-attached and cast from the path, and column-mapped tables
+(RENAME/DROP) are decoded physical->logical with the same mapping rules
+as ``DeltaLog.column_mapping``.
 
 The reference (alvaromoureupm/delta-lake-health) is batch-only over
 delta-rs; this is the streaming ingest path its tables would need.
@@ -44,146 +45,14 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from delta_lake_health_spark.sources import log_replay
+
 SOURCE_NAME = "delta_tail"
-
-
-def _log_versions(table_path: str) -> list[int]:
-    log_dir = os.path.join(table_path, "_delta_log")
-    out = []
-    try:
-        for f in os.listdir(log_dir):
-            if f.endswith(".json") and f[:-5].isdigit():
-                out.append(int(f[:-5]))
-    except FileNotFoundError:
-        pass
-    return sorted(out)
-
-
-def _actions(table_path: str, version: int) -> list[dict]:
-    p = os.path.join(table_path, "_delta_log", f"{version:020d}.json")
-    with open(p) as fh:
-        return [json.loads(line) for line in fh if line.strip()]
-
-
-def _latest_schema(table_path: str) -> dict | None:
-    """Last metaData action's schema (parsed schemaString), scanning the
-    log newest-first, falling back to the checkpoint parquet when log
-    cleanup expired the metaData-bearing commits — stdlib + pyarrow,
-    runs on the driver."""
-    for v in reversed(_log_versions(table_path)):
-        for act in _actions(table_path, v):
-            if "metaData" in act:
-                return json.loads(act["metaData"]["schemaString"])
-    log_dir = os.path.join(table_path, "_delta_log")
-    try:
-        import pyarrow.parquet as pq
-
-        from delta_lake_health_spark.sources.delta_log import (
-            checkpoint_file_names,
-        )
-
-        with open(os.path.join(log_dir, "_last_checkpoint")) as fh:
-            info = json.loads(fh.read())
-        for name in checkpoint_file_names(info):
-            t = pq.read_table(
-                os.path.join(log_dir, name), columns=["metaData"]
-            )
-            for row in t.column("metaData").to_pylist():
-                if row and row.get("schemaString"):
-                    return json.loads(row["schemaString"])
-    except (FileNotFoundError, KeyError, ValueError):
-        pass
-    return None
 
 
 def _physical_name(fld: dict) -> str:
     meta = fld.get("metadata") or {}
     return meta.get("delta.columnMapping.physicalName", fld["name"])
-
-
-def _checkpoint_rows(table_path: str) -> tuple[int, list[dict]]:
-    """(checkpoint_version, action rows with their 'version') read
-    driver-side via pyarrow — v1 single/multi-part and v2 layouts."""
-    log_dir = os.path.join(table_path, "_delta_log")
-    import pyarrow.parquet as pq
-
-    from delta_lake_health_spark.sources.delta_log import (
-        checkpoint_file_names,
-    )
-
-    with open(os.path.join(log_dir, "_last_checkpoint")) as fh:
-        info = json.loads(fh.read())
-    v = int(info["version"])
-    rows: list[dict] = []
-    sidecars: list[str] = []
-    for name in checkpoint_file_names(info):
-        t = pq.read_table(os.path.join(log_dir, name))
-        rows.extend(t.to_pylist())
-        if "sidecar" in t.column_names:
-            sidecars.extend(
-                os.path.join("_sidecars", row["path"])
-                for row in t.column("sidecar").to_pylist()
-                if row and row.get("path")
-            )
-    for name in sidecars:
-        t = pq.read_table(os.path.join(log_dir, name))
-        rows.extend(t.to_pylist())
-    return v, rows
-
-
-def _live_adds_at(table_path: str, version: int, ignore_deletes: bool) -> list[dict]:
-    """Driver-side snapshot reconstruction at ``version`` (pure
-    python/pyarrow — the same last-wins-per-path reconciliation the
-    Spark-side DeltaLog runs, add beating remove at equal version):
-    checkpoint base + JSON tail. Used by the snapshot-bootstrap batch,
-    which cannot assume any commit JSON below the checkpoint survives
-    log cleanup."""
-    log_dir = os.path.join(table_path, "_delta_log")
-    state: dict[str, tuple[int, int, dict | None]] = {}
-    live_dvs: list[tuple[int, dict]] = []
-    base = -1
-    if os.path.isfile(os.path.join(log_dir, "_last_checkpoint")):
-        base, rows = _checkpoint_rows(table_path)
-        if base > version:
-            raise RuntimeError(
-                f"delta_tail: cannot bootstrap a snapshot at version "
-                f"{version}: the checkpoint is already at {base}"
-            )
-        for r in rows:
-            _rv = r.get("version")
-            rv = base if _rv is None else int(_rv)
-            if r.get("add"):
-                a = r["add"]
-                state[a["path"]] = max(
-                    state.get(a["path"], (-1, -1, None)), (rv, 1, a)
-                )
-            elif r.get("remove"):
-                p = r["remove"]["path"]
-                state[p] = max(state.get(p, (-1, -1, None)), (rv, 0, None))
-            elif r.get("dv") and r["dv"].get("path"):
-                live_dvs.append((rv, r["dv"]))
-    for v in _log_versions(table_path):
-        if v <= base or v > version:
-            continue
-        for act in _actions(table_path, v):
-            if "add" in act:
-                a = act["add"]
-                state[a["path"]] = max(
-                    state.get(a["path"], (-1, -1, None)), (v, 1, a)
-                )
-            elif "remove" in act:
-                p = act["remove"]["path"]
-                state[p] = max(state.get(p, (-1, -1, None)), (v, 0, None))
-            elif "dv" in act and act["dv"].get("path"):
-                live_dvs.append((v, act["dv"]))
-    adds = [a for (_v, is_add, a) in state.values() if is_add and a]
-    if live_dvs and not ignore_deletes:
-        raise RuntimeError(
-            "delta_tail: the snapshot has deletion-vector commits; a "
-            "whole-file bootstrap would resurrect soft-deleted rows — "
-            "apply_deletion_vectors first or set ignoreDeletes"
-        )
-    return adds
 
 
 def _parse_ts_ms(s: str) -> int:
@@ -198,41 +67,17 @@ def _parse_ts_ms(s: str) -> int:
     return int(dt.replace(tzinfo=timezone.utc).timestamp() * 1000)
 
 
-def _commit_ts_ms(table_path: str, version: int) -> int:
-    """Commit timestamp: inCommitTimestamp, then commitInfo.timestamp,
-    then the commit FILE's mtime — the same fallback chain Delta uses,
-    so a foreign log without commitInfo never makes a commit invisible
-    to timestamp resolution."""
-    for act in _actions(table_path, version):
-        if "commitInfo" in act:
-            ci = act["commitInfo"]
-            ts = ci.get("inCommitTimestamp")
-            if ts is None:
-                ts = ci.get("timestamp")
-            if ts is not None:
-                return int(ts)
-    p = os.path.join(table_path, "_delta_log", f"{version:020d}.json")
-    return int(os.path.getmtime(p) * 1000)
-
-
 def _version_at_or_after(table_path: str, ts_ms: int) -> int:
     """Earliest retained version whose ADJUSTED commit timestamp >=
-    ts_ms (the same reader-side monotonicity rule as
-    ``DeltaLog.commit_timestamps`` — each commit reads as at least its
-    predecessor + 1 ms — so this surface and ``table_changes`` resolve
-    a timestamp to the same version); one past the head when every
-    commit predates it (an empty tail — the stream starts with the
-    NEXT write)."""
-    versions = _log_versions(table_path)
-    if not versions:
-        return 0
-    prev = -1
-    for v in versions:
-        t = max(_commit_ts_ms(table_path, v), prev + 1)
-        prev = t
-        if t >= ts_ms:
-            return v
-    return versions[-1] + 1
+    ts_ms (``DeltaLog.commit_timestamps``, so this surface and
+    ``table_changes`` resolve a timestamp to the same version); one past
+    the head when every commit predates it (an empty tail — the stream
+    starts with the NEXT write)."""
+    pairs = log_replay.Snapshot(table_path).commit_timestamps()
+    return next(
+        (v for v, t in pairs if t >= ts_ms),
+        pairs[-1][0] + 1 if pairs else 0,
+    )
 
 
 @dataclass
@@ -327,33 +172,12 @@ class DeltaTailStreamReader(DataSourceStreamReader):
         # paced. Steady-state and growing backlogs pace exactly; only a
         # cold restart's catch-up batch bypasses the cap.
         self._floor: int | None = None
-        # per-version action memo: commit files are immutable once
-        # written, and with byte pacing the same version's JSON would
-        # otherwise be parsed twice per batch (admission + planning);
-        # commit() prunes entries at or below the completed offset
-        self._acts_memo: dict[int, list] = {}
         self.schema_struct = schema
-
-    def _acts(self, version: int) -> list:
-        out = self._acts_memo.get(version)
-        if out is None:
-            out = _actions(self.table_path, version)
-            self._acts_memo[version] = out
-        return out
 
     def _head_version(self) -> int:
         """Newest table version visible to the planner: the JSON head,
         or the checkpoint version when cleanup left no newer JSONs."""
-        vs = _log_versions(self.table_path)
-        head = vs[-1] if vs else -1
-        try:
-            with open(
-                os.path.join(self.table_path, "_delta_log", "_last_checkpoint")
-            ) as fh:
-                head = max(head, int(json.loads(fh.read())["version"]))
-        except (FileNotFoundError, KeyError, ValueError):
-            pass
-        return head
+        return log_replay.Snapshot(self.table_path).version()
 
     def initialOffset(self) -> dict:
         if self.bootstrap:
@@ -381,7 +205,7 @@ class DeltaTailStreamReader(DataSourceStreamReader):
         admitted, total = floor, 0
         for v in range(floor + 1, newest + 1):
             try:
-                acts = self._acts(v)
+                acts = log_replay.read_commit(self.table_path, v)
             except FileNotFoundError:
                 return newest  # cleaned-up gap: let partitions() report it
             total += sum(
@@ -401,7 +225,7 @@ class DeltaTailStreamReader(DataSourceStreamReader):
         admitted, total = floor, 0
         for v in range(floor + 1, newest + 1):
             try:
-                acts = self._acts(v)
+                acts = log_replay.read_commit(self.table_path, v)
             except FileNotFoundError:
                 return newest  # cleaned-up gap: let partitions() report it
             total += sum(
@@ -415,7 +239,7 @@ class DeltaTailStreamReader(DataSourceStreamReader):
         return admitted
 
     def latestOffset(self) -> dict:
-        vs = _log_versions(self.table_path)
+        vs = log_replay.commit_versions(self.table_path)
         newest = vs[-1] if vs else self.starting_version - 1
         if self.bootstrap:
             newest = max(newest, self._head_version())
@@ -443,25 +267,30 @@ class DeltaTailStreamReader(DataSourceStreamReader):
         v = int(end["version"])
         if self._floor is None or v > self._floor:
             self._floor = v
-        for k in [k for k in self._acts_memo if k <= v]:
-            del self._acts_memo[k]
 
     def partitions(self, start: dict, end: dict):
         hi = max(int(start["version"]), int(end["version"]))
         if self._floor is None or hi > self._floor:
             self._floor = hi
-        schema = _latest_schema(self.table_path) or {"fields": []}
+        snap = log_replay.Snapshot(self.table_path)
+        schema = snap.metadata().get("schema") or {"fields": []}
         fields = [
             (f["name"], _physical_name(f), json.dumps(f["type"]))
             for f in schema["fields"]
         ]
         parts: list[DeltaFilePartition] = []
         if start.get("snap", 1) == 0:
-            # the bootstrap batch: full snapshot at start.version, then
-            # the tail below picks up from there
-            for a in _live_adds_at(
-                self.table_path, int(start["version"]), self.ignore_deletes
-            ):
+            # the bootstrap batch: full snapshot at start.version
+            # (checkpoint + JSON tail, so it works after log cleanup),
+            # then the tail below picks up from there
+            boot = int(start["version"])
+            if snap.deletion_vector_paths(boot) and not self.ignore_deletes:
+                raise RuntimeError(
+                    "delta_tail: the snapshot has deletion-vector commits; a "
+                    "whole-file bootstrap would resurrect soft-deleted rows — "
+                    "apply_deletion_vectors first or set ignoreDeletes"
+                )
+            for a in snap.live_add_actions(boot):
                 rel = a["path"]
                 parts.append(
                     DeltaFilePartition(
@@ -469,7 +298,7 @@ class DeltaTailStreamReader(DataSourceStreamReader):
                             rel if os.path.isabs(rel)
                             else os.path.join(self.table_path, rel)
                         ),
-                        version=int(start["version"]),
+                        version=boot,
                         fields=fields,
                         partition_values=dict(a.get("partitionValues") or {}),
                         cdf=self.cdf,
@@ -477,9 +306,9 @@ class DeltaTailStreamReader(DataSourceStreamReader):
                 )
         for v in range(start["version"] + 1, end["version"] + 1):
             try:
-                acts = self._acts(v)
+                acts = log_replay.read_commit(self.table_path, v)
             except FileNotFoundError:
-                retained = _log_versions(self.table_path)
+                retained = log_replay.commit_versions(self.table_path)
                 raise RuntimeError(
                     f"delta_tail: commit version {v} has been cleaned up "
                     "(log retention); earliest retained version is "
@@ -605,7 +434,7 @@ class DeltaTailDataSource(DataSource):
         path = self.options.get("path")
         if not path:
             raise ValueError("delta_tail requires .option('path', ...)")
-        schema = _latest_schema(path)
+        schema = log_replay.Snapshot(path).metadata().get("schema")
         if schema is None:
             raise ValueError(f"no Delta log at {path}")
         out = StructType.fromJson(schema)

@@ -205,7 +205,7 @@ def test_persisted_probe_prunes_files(spark, tmp_path):
 
 
 def test_upsert_append_only_and_converges(spark, tmp_path):
-    from delta_lake_health_spark.sources import delta_writer
+    from delta_lake_health_spark.sources import delta_writer, log_replay
 
     corpus = _wav_df(spark, list(range(1, 9))).localCheckpoint()
     inc = str(tmp_path / "inc")
@@ -221,11 +221,11 @@ def test_upsert_append_only_and_converges(spark, tmp_path):
     v1 = delta_writer.current_version(inc)
     # the upsert itself is ONE pure append at v0+1; since r13 the build
     # stamps autoCompact, so a dataChange=false OPTIMIZE may follow it
-    acts = delta_writer._version_actions(inc, v0 + 1)
+    acts = log_replay.read_commit(inc, v0 + 1)
     kinds = {k for a in acts for k in a}
     assert "add" in kinds and "remove" not in kinds
     for v in range(v0 + 2, v1 + 1):
-        extra = delta_writer._version_actions(inc, v)
+        extra = log_replay.read_commit(inc, v)
         ops = [
             a["commitInfo"]["operation"]
             for a in extra
@@ -285,14 +285,14 @@ def test_params_stamped_in_one_commit(spark, tmp_path):
     property commit — a reader can never observe a half-stamped
     configuration. Build = data write (v0) + clustering (v1) + ONE
     properties commit (v2)."""
-    from delta_lake_health_spark.sources import delta_writer
+    from delta_lake_health_spark.sources import delta_writer, log_replay
 
     corpus = _wav_df(spark, [1, 2]).localCheckpoint()
     path = str(tmp_path / "fpidx")
     audio_fp.build_fp_index(spark, corpus, path, frame=128, hop=64, fan_out=2)
     v = delta_writer.current_version(path)
     assert v == 2
-    acts = delta_writer._version_actions(path, v)
+    acts = log_replay.read_commit(path, v)
     cfg = next(a["metaData"]["configuration"] for a in acts if "metaData" in a)
     assert {k: cfg[k] for k in audio_fp._FP_PROPS} == {
         "fp.frame": "128", "fp.hop": "64", "fp.fanOut": "2",
@@ -324,7 +324,7 @@ def test_auto_compaction_after_track_upserts(spark, tmp_path):
     params, so a run of small track upserts triggers an automatic
     OPTIMIZE commit (dataChange=false adds) once minNumFiles is
     crossed — and probes stay bit-identical through it."""
-    from delta_lake_health_spark.sources import delta_writer
+    from delta_lake_health_spark.sources import delta_writer, log_replay
     from delta_lake_health_spark.sources.delta_log import DeltaLog
 
     corpus = _wav_df(spark, list(range(1, 17))).localCheckpoint()
@@ -355,7 +355,7 @@ def test_auto_compaction_after_track_upserts(spark, tmp_path):
     opt_v = next(
         r.version for r in hist if r.operation == "OPTIMIZE"
     )
-    acts = delta_writer._version_actions(path, int(opt_v))
+    acts = log_replay.read_commit(path, int(opt_v))
     adds = [a["add"] for a in acts if "add" in a]
     removed = [a["remove"] for a in acts if "remove" in a]
     assert adds and all(a.get("dataChange") is False for a in adds)

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from delta_lake_health_spark.operators import text_index
 from delta_lake_health_spark.plans.text import _BM25_QUERY, QUERIES
-from delta_lake_health_spark.sources import delta_writer
+from delta_lake_health_spark.sources import delta_writer, log_replay
 from delta_lake_health_spark.sources.delta_log import DeltaLog
 from tests.conftest import SF_DIR
 
@@ -86,7 +86,7 @@ def test_upsert_is_one_append_only_commit(spark, tmp_path):
     )
     v1 = delta_writer.current_version(post)
     assert v1 == v0 + 1
-    acts = delta_writer._version_actions(post, v1)
+    acts = log_replay.read_commit(post, v1)
     kinds = {k for a in acts for k in a}
     assert "add" in kinds and "remove" not in kinds, kinds
     # the one commit carries BOTH partitions' files

@@ -12,7 +12,7 @@ import os
 
 import pytest
 
-from delta_lake_health_spark.sources import delta_writer
+from delta_lake_health_spark.sources import delta_writer, log_replay
 from delta_lake_health_spark.sources.delta_log import DeltaLog
 
 
@@ -71,7 +71,7 @@ def test_copy_into_single_atomic_commit(spark, tmp_path, table):
     v_before = delta_writer.current_version(table)
     m = delta_writer.copy_into(spark, table, src)
     assert m["version"] == v_before + 1  # adds + loaded-set in ONE commit
-    acts = delta_writer._version_actions(table, m["version"])
+    acts = log_replay.read_commit(table, m["version"])
     kinds = {k for a in acts for k in a}
     assert "add" in kinds and "domainMetadata" in kinds and "commitInfo" in kinds
 

@@ -190,6 +190,26 @@ def test_zorder_preserves_data(spark):
     shutil.rmtree(tmp)
 
 
+
+def test_zorder_survives_nan_inf_and_all_null_columns(spark, tmp_path):
+    """Non-finite cluster bounds (a NaN row makes max() NaN, an Inf row
+    makes it Inf) and an all-null column (null bounds) fall back to 0.0
+    instead of rendering an unparseable SQL literal."""
+    path = str(tmp_path / "t")
+    df = spark.createDataFrame(
+        [(i, float(i), None) for i in range(40)]
+        + [(40, float("nan"), None), (41, float("inf"), None),
+           (42, float("-inf"), None)],
+        "id long, x double, y double",
+    )
+    delta_writer.write(spark, df.repartition(3), path)
+    res = maintenance.zorder_cluster(spark, path, ["x", "y"])
+    assert res["numAddedFiles"] >= 1
+    snap = DeltaLog(spark, path).snapshot()
+    assert sorted(r.id for r in snap.collect()) == list(range(43))
+    assert snap.where("isnan(x)").count() == 1
+
+
 # --- golden health-score tests (hand-computed from the reference formula) --
 
 def test_health_score_golden_healthy():
@@ -915,6 +935,31 @@ def test_check_constraints_enforced_on_write_and_merge(spark):
     got = sorted(r.v for r in DeltaLog(spark, path).snapshot().collect())
     assert got == [-1, 0, 10, 20, 90]
     shutil.rmtree(tmp)
+
+
+
+def test_constraint_violation_leaves_directory_tree_unchanged(spark, tmp_path):
+    """A violating partitioned write removes its files and the partition
+    directories it created: the table's tree is exactly as before."""
+    path = str(tmp_path / "t")
+    df = spark.createDataFrame([(0, 1, "a"), (1, 2, "b")], "id long, v long, p string")
+    delta_writer.write(spark, df, path, partition_by=["p"])
+    delta_writer.set_constraint(spark, path, "v_pos", "v > 0")
+
+    def tree():
+        return sorted(
+            os.path.relpath(os.path.join(root, n), path)
+            for root, dirs, files in os.walk(path)
+            for n in dirs + files
+        )
+
+    before = tree()
+    bad = spark.createDataFrame(
+        [(2, -1, "a"), (3, 5, "new"), (4, 6, "x/y")], "id long, v long, p string"
+    )
+    with pytest.raises(ValueError, match="v_pos"):
+        delta_writer.write(spark, bad, path, mode="append", partition_by=["p"])
+    assert tree() == before
 
 
 def test_not_null_enforced_from_logged_schema(spark):
@@ -1801,7 +1846,9 @@ def test_protocol_feature_gating_and_upgrades(spark, tmp_path):
 
     DeltaLog(spark, t).checkpoint()
     maintenance.cleanup_log(spark, t, retention_hours=0.0)
-    p = delta_writer._latest_protocol_fs(t)
+    from delta_lake_health_spark.sources import log_replay
+
+    p = log_replay.Snapshot(t).protocol()
     assert (p["minReaderVersion"], p["minWriterVersion"]) == (3, 7)
     assert "deletionVectors" in p["writerFeatures"]
 
@@ -2181,8 +2228,8 @@ def test_narrow_struct_checkpoint_still_readable(spark):
 
 def test_checkpoint_file_names_parts_one_is_classic():
     """Round-5 advisor: "parts": 1 from a foreign writer names the classic
-    single checkpoint file, matching _checkpoint_paths — not a nonexistent
-    .0000000001.0000000001. multi-part name."""
+    single checkpoint file (the name DeltaLog.checkpoint writes) — not a
+    nonexistent .0000000001.0000000001. multi-part name."""
     from delta_lake_health_spark.sources.delta_log import checkpoint_file_names
 
     assert checkpoint_file_names({"version": 7, "parts": 1}) == [

@@ -13,7 +13,7 @@ from __future__ import annotations
 import pytest
 
 from delta_lake_health_spark.operators import maintenance
-from delta_lake_health_spark.sources import delta_writer
+from delta_lake_health_spark.sources import delta_writer, log_replay
 from delta_lake_health_spark.sources.delta_log import DeltaLog
 
 
@@ -104,7 +104,7 @@ def test_drop_change_data_feed_clears_property(spark, tmp_path):
     log = DeltaLog(spark, path)
     assert "delta.enableChangeDataFeed" not in log.metadata()["configuration"]
     # protocol downgrade and property-clear landed in ONE commit
-    acts = delta_writer._version_actions(path, v)
+    acts = log_replay.read_commit(path, v)
     assert any("protocol" in a for a in acts)
     assert any("metaData" in a for a in acts)
     assert log.snapshot().count() == 50
@@ -134,7 +134,7 @@ def test_drop_v2_checkpoint_rewrites_classic(spark, tmp_path):
 def _n_files_in_last_commit(path):
     v = delta_writer.current_version(path)
     return sum(
-        1 for a in delta_writer._version_actions(path, v) if "add" in a
+        1 for a in log_replay.read_commit(path, v) if "add" in a
     )
 
 

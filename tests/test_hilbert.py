@@ -22,7 +22,7 @@ from delta_lake_health_spark.operators.hilbert import (
     hilbert_index,
     hilbert_index_reference,
 )
-from delta_lake_health_spark.sources import delta_writer
+from delta_lake_health_spark.sources import delta_writer, log_replay
 from delta_lake_health_spark.sources.delta_log import DeltaLog
 
 
@@ -97,7 +97,7 @@ def test_hilbert_cluster_rewrite(spark, grid_table):
     assert snap.count() == 4096
     assert snap.agg(F.sum("payload")).collect()[0][0] == sum_before
     # maintenance commit: every add/remove carries dataChange=false
-    acts = delta_writer._version_actions(grid_table, log.version())
+    acts = log_replay.read_commit(grid_table, log.version())
     for a in acts:
         if "add" in a:
             assert a["add"]["dataChange"] is False

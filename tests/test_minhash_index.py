@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from delta_lake_health_spark.operators import minhash_index as mi
 from delta_lake_health_spark.plans.dedup import QUERIES
-from delta_lake_health_spark.sources import delta_writer
+from delta_lake_health_spark.sources import delta_writer, log_replay
 from delta_lake_health_spark.sources.catalog import load
 from tests.conftest import SF_DIR
 
@@ -52,7 +52,7 @@ def test_upsert_converges_and_is_append_only(spark, built, tmp_path):
     assert m["numDocsAdded"] == docs.where("doc_id % 3 = 0").count()
     v1 = delta_writer.current_version(mi._data_path(inc))
     assert v1 == v0 + 1
-    acts = delta_writer._version_actions(mi._data_path(inc), v1)
+    acts = log_replay.read_commit(mi._data_path(inc), v1)
     kinds = {k for a in acts for k in a}
     assert "add" in kinds and "remove" not in kinds
     assert _pairs(mi.serve_candidate_pairs(spark, inc)) == _pairs(
@@ -201,7 +201,7 @@ def test_auto_compaction_after_small_upserts(spark, tmp_path):
         for r in log.history().collect()
         if r.operation == "OPTIMIZE"
     )
-    acts = delta_writer._version_actions(data, int(opt_v))
+    acts = log_replay.read_commit(data, int(opt_v))
     adds = [a["add"] for a in acts if "add" in a]
     assert adds and all(a.get("dataChange") is False for a in adds)
     # compaction actually shrank the small-file population vs the

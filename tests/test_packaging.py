@@ -101,3 +101,47 @@ def test_lockfile_pins_reproduce_this_env():
             f"lock pin {name}=={ver} does not match the installed "
             f"{version(name)} — regenerate requirements.lock"
         )
+
+
+def test_only_log_replay_reads_the_delta_log():
+    """Structure guard: ``sources/log_replay.py`` is the one driver-side
+    reader of ``_delta_log``. No other package function lists commit
+    files (a ``.json`` name test plus ``isdigit``) or reads a log parquet
+    (checkpoint or sidecar) with pyarrow — a second copy of the replay
+    is how the copies came to disagree."""
+    import ast
+    import re
+
+    lists_commits = (re.compile(r"""['"]\.json['"]"""), re.compile(r"\.isdigit\("))
+    reads_log_parquet = (
+        re.compile(r"\bpq\.(read_table|read_schema|read_metadata|ParquetFile)\b"),
+        re.compile(r"_delta_log|LOG_DIR|log_dir|_sidecars|checkpoint"),
+    )
+    # _log_token is a directory freshness token (entry count + newest
+    # commit's identity from one os.listdir), not a replay: it must not
+    # parse anything, so it does not go through log_replay
+    exempt = {("operators/text_index.py", "_log_token")}
+    pkg = os.path.join(REPO, "delta_lake_health_spark")
+    offenders = []
+    for root, _, files in os.walk(pkg):
+        for name in files:
+            rel = os.path.relpath(os.path.join(root, name), pkg)
+            if not name.endswith(".py") or rel == os.path.join(
+                "sources", "log_replay.py"
+            ):
+                continue
+            with open(os.path.join(root, name)) as fh:
+                src = fh.read()
+            for node in ast.walk(ast.parse(src)):
+                if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    continue
+                body = ast.get_source_segment(src, node) or ""
+                for what, (a, b) in (
+                    ("lists commit files", lists_commits),
+                    ("reads a log parquet", reads_log_parquet),
+                ):
+                    if a.search(body) and b.search(body) and (
+                        (rel.replace(os.sep, "/"), node.name) not in exempt
+                    ):
+                        offenders.append(f"{rel}:{node.lineno} {node.name} {what}")
+    assert not offenders, offenders

@@ -18,7 +18,7 @@ from delta_lake_health_spark.plans.media import (
     _PHASH_N,
     _phash_media_df,
 )
-from delta_lake_health_spark.sources import delta_writer
+from delta_lake_health_spark.sources import delta_writer, log_replay
 
 
 def _pairs(df):
@@ -61,7 +61,7 @@ def test_upsert_converges_and_is_append_only(spark, built, tmp_path):
     assert m["numImagesAdded"] == media.where("media_id % 3 = 0").count()
     v1 = delta_writer.current_version(pi._data_path(inc))
     assert v1 == v0 + 1
-    acts = delta_writer._version_actions(pi._data_path(inc), v1)
+    acts = log_replay.read_commit(pi._data_path(inc), v1)
     kinds = {k for a in acts for k in a}
     assert "add" in kinds and "remove" not in kinds
     assert _pairs(

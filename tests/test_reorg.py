@@ -17,7 +17,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from delta_lake_health_spark.operators import maintenance
-from delta_lake_health_spark.sources import delta_writer
+from delta_lake_health_spark.sources import delta_writer, log_replay
 from delta_lake_health_spark.sources.delta_log import DeltaLog
 
 
@@ -78,7 +78,7 @@ def test_reorg_idempotent_and_data_change_false(spark, table):
     maintenance.reorg_purge(spark, table)
     v = delta_writer.current_version(table)
     # the REORG commit marks its adds/removes dataChange=false
-    acts = delta_writer._version_actions(table, v)
+    acts = log_replay.read_commit(table, v)
     for a in acts:
         if "add" in a:
             assert a["add"]["dataChange"] is False

@@ -18,7 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from delta_lake_health_spark.operators import maintenance
-from delta_lake_health_spark.sources import delta_writer
+from delta_lake_health_spark.sources import delta_writer, log_replay
 from delta_lake_health_spark.sources.delta_log import DeltaLog
 
 
@@ -112,7 +112,8 @@ def test_hwm_and_ids_survive_checkpoint(spark, table):
     assert _ids(spark, table) == before
     assert log2.row_id_high_water_mark() == 79
     # the driver-side hwm gate also reads through the checkpoint
-    assert delta_writer._latest_row_id_hwm(table) == 79
+    hwm = log_replay.Snapshot(table).domain_metadata("delta.rowTracking")
+    assert hwm["rowIdHighWaterMark"] == 79
     # and a post-checkpoint append continues above it
     delta_writer.write(spark, _df(spark, 80, 90).repartition(1), table)
     assert DeltaLog(spark, table).row_id_high_water_mark() == 89

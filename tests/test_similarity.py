@@ -312,12 +312,9 @@ def test_ivf_index_incremental_upsert(spark, tmp_path):
     assert loaded.lists.select("vec_id").distinct().count() == 450
     # the upsert was a pure append (no rebucketing -> add-only commit)
     log = DeltaLog(spark, path + "/lists")
-    acts = [
-        a for a in __import__(
-            "delta_lake_health_spark.sources.delta_writer",
-            fromlist=["_version_actions"],
-        )._version_actions(path + "/lists", log.version())
-    ]
+    from delta_lake_health_spark.sources import log_replay
+
+    acts = log_replay.read_commit(path + "/lists", log.version())
     assert any("add" in a for a in acts)
     assert not any("remove" in a for a in acts)
     assert log.version() > v_lists

@@ -19,7 +19,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from delta_lake_health_spark.sources import delta_writer
+from delta_lake_health_spark.sources import delta_writer, log_replay
 from delta_lake_health_spark.sources.delta_log import DeltaLog
 
 
@@ -104,7 +104,7 @@ def test_variant_append_upgrades_existing_table(spark, tmp_path):
     assert "variantType" in p["readerFeatures"]
     assert "variantType" in p["writerFeatures"]
     # the upgrade landed IN the append commit, not a separate one
-    acts = delta_writer._version_actions(path, v)
+    acts = log_replay.read_commit(path, v)
     kinds = {k for a in acts for k in a}
     assert "protocol" in kinds and "add" in kinds
     snap = log.snapshot()
