@@ -1,30 +1,36 @@
-"""Delta-table health metrics + score — Spark-native analyzer.
+"""Delta-table health metrics + score.
 
 Same metric surface and scoring formula as the reference
 (src/delta_lake_health/health_analyzers/base_analyzer.py:17-101,
 src/delta_lake_health/health_analyzers/delta_python_analyzer.py:136-280),
-re-expressed over our distributed log reader:
+resolved on the driver the way the reference's delta-rs analyzer does:
 
-- every log-derived metric (ops counts, version, file sizes, record count)
-  is an aggregate over the ``_delta_log`` — NO data scan; for a 100 TB
-  table the log is GBs, so `analyze_table` costs seconds, not hours;
-- skewness runs on the snapshot as one groupBy + one tiny agg
-  (operators/skew.py) instead of the reference's to-pandas collect;
-- folder listing (orphan detection, folder size) is parallelized over
-  first-level subtrees — on object stores each executor lists its prefix.
+- version, op counts, live-file sizes and record counts come from the
+  driver-side log replay (``sources/log_replay.py``): no data scan and
+  no Spark job — for a 100 TB table the log is GBs, not the data;
+- orphan files and folder size come from one driver-side listing of the
+  table folder (``delta_writer._list_parquet_rel``);
+- partition skew groups each live file's record count by its logged
+  ``partitionValues`` and applies ``skew.skew_metrics``.
+
+Only when a live add carries no ``stats.numRecords`` (or a partition
+value cannot be keyed from the log, see ``_logged_counts``) does the
+report scan the data: ``snapshot().count()`` and the snapshot's
+per-partition counts.
 """
 
 from __future__ import annotations
 
-import os
+import re
 from dataclasses import dataclass, field
+from datetime import date
 from enum import Enum
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 
 from delta_lake_health_spark.operators import skew as skew_ops
-from delta_lake_health_spark.sources.delta_log import LOG_DIR, DeltaLog
+from delta_lake_health_spark.sources import delta_writer, log_replay
+from delta_lake_health_spark.sources.delta_log import DeltaLog
 
 
 class HealthStatus(str, Enum):
@@ -161,50 +167,66 @@ def health_score(m: HealthMetrics) -> tuple[float, HealthStatus]:
     return overall, status
 
 
-def _list_folder_files(spark: SparkSession, table_path: str) -> DataFrame:
-    """(rel_path, size) of every .parquet under the table root, excluding
-    the log — the recursive walk of each first-level subtree runs on
-    executors, so a million-file table lists in parallel."""
-    table_path = os.path.abspath(table_path)
-    roots: list[str] = [table_path]
-    subdirs = [
-        os.path.join(table_path, d)
-        for d in os.listdir(table_path)
-        # hive convention: _-prefixed dirs are metadata (_delta_log, _deletes)
-        if os.path.isdir(os.path.join(table_path, d)) and not d.startswith("_")
-    ]
-    roots = subdirs or roots
+# partition column types whose logged value reads back, cast to string,
+# as the same text once normalised by ``_typed``; any other type takes
+# the data scan for its skew keys
+_INTEGRAL_TYPES = {"byte", "short", "integer", "long"}
+_LOGGED_KEY_TYPES = _INTEGRAL_TYPES | {"string", "date", "boolean"}
 
-    def walk(root: str):
-        for dirpath, dirs, files in os.walk(root):
-            dirs[:] = [d for d in dirs if not d.startswith("_")]
-            for f in files:
-                if f.endswith(".parquet"):
-                    fp = os.path.join(dirpath, f)
-                    yield (
-                        os.path.relpath(fp, table_path).replace(os.sep, "/"),
-                        os.path.getsize(fp),
-                    )
 
-    def walk_top(root: str):
-        # top-level files (non-recursive) for the root itself
-        for f in os.listdir(root):
-            fp = os.path.join(root, f)
-            if f.endswith(".parquet") and os.path.isfile(fp):
-                yield (os.path.relpath(fp, table_path).replace(os.sep, "/"),
-                       os.path.getsize(fp))
+def _typed(value: str | None, typ: str) -> str | None:
+    """``cast(cast(value AS typ) AS string)`` for a partition value;
+    ValueError when the text is not in its type's plain form."""
+    if value is None or typ == "string":
+        return value
+    if typ in _INTEGRAL_TYPES and re.fullmatch(r"[+-]?[0-9]+", value):
+        return str(int(value))
+    if typ == "date" and date.fromisoformat(value).isoformat() == value:
+        return value
+    if typ == "boolean" and value.lower() in ("true", "false"):
+        return value.lower()
+    raise ValueError(f"partition value {value!r} is not a plain {typ}")
 
-    sc = spark.sparkContext
-    rdd = sc.parallelize(roots, max(1, len(roots))).flatMap(walk)
-    if subdirs:
-        rdd = rdd.union(sc.parallelize([table_path], 1).flatMap(walk_top))
-    return spark.createDataFrame(rdd, "rel_path: string, size: long")
+
+def _logged_counts(
+    snap: log_replay.Snapshot, cols: list[str], per_file: dict[str, int]
+) -> dict | None:
+    """{``records_per_partition`` key: rows}: each live file's record
+    count grouped by its logged ``partitionValues``, zero-count
+    partitions dropped. None when a value cannot be keyed from the log
+    (a partition column of another type, or a value not in its type's
+    plain form); the data scan keys those."""
+    fields = (snap.metadata().get("schema") or {}).get("fields", [])
+    types = [next((f["type"] for f in fields if f["name"] == c), None) for c in cols]
+    if not all(t in _LOGGED_KEY_TYPES for t in types):
+        return None
+    counts: dict = {}
+    for a in snap._live_adds():
+        pv = a.get("partitionValues") or {}
+        segs = dict(s.split("=", 1) for s in a["path"].split("/")[:-1] if "=" in s)
+        vals = []
+        for c, t in zip(cols, types):
+            v = pv.get(c)
+            # older writers logged the escaped directory segment itself
+            # ("x%25y", "__HIVE_DEFAULT_PARTITION__"): decode it the way
+            # the hive reader decodes the directory
+            if v is not None and (
+                v == segs.get(c) or v == delta_writer.HIVE_DEFAULT_PARTITION
+            ):
+                v = delta_writer.hive_value(v)
+            try:
+                vals.append(_typed(v, t))
+            except ValueError:
+                return None
+        k = skew_ops.partition_key(vals)
+        counts[k] = counts.get(k, 0) + per_file[a["path"]]
+    return {k: n for k, n in counts.items() if n}
 
 
 class HealthAnalyzer:
     """``HealthAnalyzer(spark).analyze_table(path)`` — the reference's
-    ``DeltaAnalyzer`` facade (delta_analyzer.py), single Spark-native
-    implementation."""
+    ``DeltaAnalyzer`` facade (delta_analyzer.py), one implementation over
+    one snapshot of the log (see the module docstring)."""
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
@@ -220,157 +242,42 @@ class HealthAnalyzer:
         collect_partitions: bool = True,
     ) -> HealthMetrics:
         log = DeltaLog(self.spark, table_path)
-        m = HealthMetrics(table_path=os.path.abspath(table_path))
-        with log.cached_actions():
-            return self._analyze(
-                log, m, skew_threshold, vacuum_size_ratio_threshold,
-                orphan_file_ratio_threshold, small_file_size_mb,
-                small_file_ratio_threshold, collect_partitions,
-            )
+        snap = log_replay.Snapshot(log.table_path)
+        m = HealthMetrics(table_path=log.table_path)
 
-    def _analyze(
-        self,
-        log: DeltaLog,
-        m: HealthMetrics,
-        skew_threshold: float,
-        vacuum_size_ratio_threshold: float,
-        orphan_file_ratio_threshold: float,
-        small_file_size_mb: float,
-        small_file_ratio_threshold: float,
-        collect_partitions: bool,
-    ) -> HealthMetrics:
-        """Metric computation proper, over one materialized actions scan
-        (every log-derived metric below re-references it)."""
-        table_path = log.table_path
+        # --- history: version and op counts ------------------------------
+        m.version_count = snap.version()
+        if m.version_count < 0:
+            raise FileNotFoundError(f"empty delta log: {log.log_dir}")
+        ops = log.operation_counts()
+        m.number_of_writes = ops.get("WRITE", 0)
+        m.number_of_deletes = ops.get("DELETE", 0)
+        m.number_of_optimizes = ops.get("OPTIMIZE", 0)
 
-        # --- history (log-only): op counts + max version in ONE job ------
-        # independent of the three pooled families below — runs from the
-        # same pool (r14) so all four jobs overlap; concurrent readers
-        # of the cached actions dedupe on the block-manager lock
-        hist_agg = log.actions().agg(
-            F.max("version").alias("v"),
-            *[
-                F.sum(
-                    F.when(F.col("commitInfo.operation") == op, 1).otherwise(0)
-                ).alias(f"n_{op}")
-                for op in ("WRITE", "DELETE", "OPTIMIZE")
-            ],
+        # --- live-file stats ----------------------------------------------
+        stats = log.file_stats()
+        m.data_file_count = stats["data_file_count"]
+        m.table_size_bytes = stats["table_size_bytes"]
+        m.avg_file_size_bytes = stats["avg_file_size_bytes"]
+        adds = snap._live_adds()
+        small = int(small_file_size_mb * 1024 * 1024)
+        m.small_files_count = sum(
+            1 for a in adds if a.get("size") is not None and a["size"] < small
         )
+        m.needs_optimize = (
+            m.data_file_count > 0
+            and m.small_files_count
+            > m.data_file_count * small_file_ratio_threshold
+        )
+        m.is_compacted = not m.needs_optimize
+        m.record_count = log.record_count()
 
-        # --- live-file stats (log-only) ----------------------------------
-        active = log.active_files().cache()
-        try:
-            stats_agg = active.agg(
-                F.count(F.lit(1)).alias("n_files"),
-                F.sum("size").alias("total_size"),
-                F.avg("size").alias("avg_size"),
-                F.sum("num_records").alias("n_records"),
-                F.sum(
-                    F.when(F.col("num_records").isNull(), 1).otherwise(0)
-                ).alias("missing_stats"),
-                F.sum(
-                    F.when(
-                        F.col("size") < int(small_file_size_mb * 1024 * 1024), 1
-                    ).otherwise(0)
-                ).alias("small_files"),
-            )
-
-            # folder listing: orphan files + folder size (distributed).
-            # One job: the count/size/orphan aggregates share a single
-            # walk (the listing is an RDD; a separate anti-join count
-            # would re-run it).
-            folder = _list_folder_files(self.spark, table_path)
-            live_paths = active.select(
-                F.col("path").alias("rel_path"), F.lit(1).alias("_live")
-            )
-            folder_agg = folder.join(
-                F.broadcast(live_paths), "rel_path", "left"
-            ).agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum("size").alias("total"),
-                F.sum(
-                    F.when(F.col("_live").isNull(), 1).otherwise(0)
-                ).alias("orphans"),
-            )
-
-            def run_skew():
-                partition_cols = log.partition_columns()
-                if not partition_cols:
-                    return None
-                return skew_ops.skew_metrics(
-                    log.snapshot(), partition_cols, skew_threshold,
-                    collect_partitions,
-                )
-
-            # The history aggregate and the three metric families are
-            # independent jobs over the cached actions; overlap them from
-            # a small thread pool so the folder walk and the skew
-            # snapshot scan back-fill executors the stats aggregate
-            # leaves idle (guide §2.6). Nothing primes the cache first:
-            # the pooled jobs race to materialize it, and concurrent
-            # first computes may repeat the log scan (results are
-            # unaffected).
-            from concurrent.futures import ThreadPoolExecutor
-
-            # fail-fast (ADVICE r13): if one pooled action raises, don't
-            # block the with-exit on the still-running siblings —
-            # cancel_futures drops queued work and wait=False lets the
-            # error propagate immediately (an in-flight Spark job may
-            # finish in the background; correctness is unaffected, and
-            # the unpersist below only disables recompute-from-cache)
-            pool = ThreadPoolExecutor(max_workers=4)
-            try:
-                f_hist = pool.submit(lambda: hist_agg.collect()[0])
-                f_stats = pool.submit(lambda: stats_agg.collect()[0])
-                f_folder = pool.submit(lambda: folder_agg.collect()[0])
-                f_skew = pool.submit(run_skew)
-                hist = f_hist.result()
-                stats_row = f_stats.result()
-                folder_row = f_folder.result()
-                skew_result = f_skew.result()
-            finally:
-                pool.shutdown(wait=False, cancel_futures=True)
-            m.number_of_writes = int(hist.n_WRITE or 0)
-            m.number_of_deletes = int(hist.n_DELETE or 0)
-            m.number_of_optimizes = int(hist.n_OPTIMIZE or 0)
-            m.version_count = int(hist.v or 0)
-
-            m.data_file_count = int(stats_row.n_files or 0)
-            m.table_size_bytes = int(stats_row.total_size or 0)
-            m.avg_file_size_bytes = int(stats_row.avg_size or 0)
-            m.small_files_count = int(stats_row.small_files or 0)
-            m.record_count = (
-                int(stats_row.n_records or 0)
-                if not stats_row.missing_stats
-                else log.snapshot().count()
-            )
-            dv = log.deletion_vectors()
-            if dv is not None:
-                # soft-deleted positions in still-live files make raw add
-                # stats an overcount; subtract directly from the already-
-                # computed total instead of re-running the stats aggregate
-                if stats_row.missing_stats:
-                    m.record_count = log.record_count()
-                else:
-                    m.record_count -= dv.join(
-                        F.broadcast(
-                            active.select(F.col("path").alias("rel_path"))
-                        ),
-                        "rel_path",
-                        "left_semi",
-                    ).count()
-            m.needs_optimize = (
-                m.data_file_count > 0
-                and m.small_files_count
-                > m.data_file_count * small_file_ratio_threshold
-            )
-            m.is_compacted = not m.needs_optimize
-
-            m.total_file_count = int(folder_row.n or 0)
-            m.folder_size_bytes = int(folder_row.total or 0)
-            m.orphan_files_count = int(folder_row.orphans or 0)
-        finally:
-            active.unpersist()
+        # --- folder listing: orphan files + folder size --------------------
+        listing = delta_writer._list_parquet_rel(log.table_path)
+        live = {a["path"] for a in adds}
+        m.total_file_count = len(listing)
+        m.folder_size_bytes = sum(listing.values())
+        m.orphan_files_count = sum(1 for p in listing if p not in live)
 
         size_ratio = (
             m.table_size_bytes / m.folder_size_bytes if m.folder_size_bytes else 1.0
@@ -388,18 +295,27 @@ class HealthAnalyzer:
                 1.0, m.avg_file_size_bytes / (128 * 1024 * 1024)
             )
 
-        # --- skewness on the snapshot (one shuffle; computed in the
-        # overlapped pool above) ------------------------------------------
-        if skew_result is not None:
-            m.skew_metrics = skew_result
+        # --- partition skew -------------------------------------------------
+        cols = snap.metadata().get("partition_columns") or []
+        if cols:
+            per_file = snap.record_counts()
+            counts = None if per_file is None else _logged_counts(snap, cols, per_file)
+            if counts is None:
+                counts = {
+                    r.partition_key: r.cnt
+                    for r in skew_ops.records_per_partition(
+                        log.snapshot(), cols
+                    ).collect()
+                }
+            m.skew_metrics = skew_ops.skew_metrics(
+                counts, cols, skew_threshold, collect_partitions
+            )
             m.skewness_max = m.skew_metrics["skewness_max"]
             m.skewness_average = m.skew_metrics["skewness_average"]
             m.is_skewed = m.skew_metrics["is_skewed"]
             m.partition_skewness = m.skewness_max
             if collect_partitions:
-                m.partition_count = len(
-                    m.skew_metrics["records_per_partition_dict"]
-                )
+                m.partition_count = len(counts)
 
         health_score(m)
         return m

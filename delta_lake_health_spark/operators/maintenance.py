@@ -7,7 +7,9 @@ operators against our own log format.
 Scale notes: compaction reads only the small files (never the whole
 table), bin-packs by total size, and writes with a partition count sized
 to the target file size — the rewrite is a distributed job; the commit is
-one JSON append. Vacuum deletes are parallelized over the candidate list.
+one JSON append. Vacuum plans on the driver: its candidates come from the
+log replay's live set and tombstones plus one listing of the table folder,
+with no Spark job.
 """
 
 from __future__ import annotations
@@ -102,7 +104,7 @@ def compact(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(table_path)
-    new_files = sorted(delta_writer._list_parquet_rel(table_path) - before)
+    new_files = sorted(delta_writer._list_parquet_rel(table_path).keys() - before)
 
     now = int(time.time() * 1000)
     actions = [
@@ -173,10 +175,8 @@ def vacuum(
     delta_writer._require_writable(spark, table_path)
     cutoff_ms = int((time.time() - retention_hours * 3600) * 1000)
 
-    tomb = log.tombstones().select(
-        F.col("path").alias("rel_path"),
-        F.col("deletionTimestamp").alias("del_ts"),
-    )
+    snap = log_replay.Snapshot(log.table_path)
+    tombs = snap.tombstones()
     if mode == "lite":
         # log-only: tombstoned paths past retention that still exist
         # (same aging rule as full mode: deletionTimestamp, mtime
@@ -187,41 +187,37 @@ def vacuum(
         # clone's own folder listing, and lite must match that contract.
         root = os.path.abspath(table_path)
         candidates = []
-        for r in tomb.collect():
-            fp = os.path.abspath(os.path.join(table_path, r.rel_path))
+        for rel, del_ts in tombs.items():
+            fp = os.path.abspath(os.path.join(table_path, rel))
             if os.path.commonpath([root, fp]) != root:
                 continue
             if not os.path.isfile(fp):
                 continue
-            aged = (r.del_ts if r.del_ts is not None
+            aged = (del_ts if del_ts is not None
                     else int(os.path.getmtime(fp) * 1000))
             if aged <= cutoff_ms:
-                candidates.append(r.rel_path)
+                candidates.append(rel)
     else:
-        from delta_lake_health_spark.operators.health import (
-            _list_folder_files,
-        )
-
-        folder = _list_folder_files(spark, table_path)
-        live = log.active_files().select(F.col("path").alias("rel_path"))
-        dead = (
-            folder.join(F.broadcast(live), "rel_path", "left_anti")
-            .join(F.broadcast(tomb), "rel_path", "left")
-        )
+        live = {a["path"] for a in snap._live_adds()}
+        dead = [
+            (rel, tombs.get(rel))
+            for rel in delta_writer._list_parquet_rel(table_path)
+            if rel not in live
+        ]
         # inclusive cutoff: a tombstone stamped in the same millisecond as
         # a zero-retention cutoff is already "past retention" (write
         # always precedes the vacuum call)
         candidates = [
-            r.rel_path
-            for r in dead.collect()
-            if (r.del_ts if r.del_ts is not None
+            rel
+            for rel, del_ts in dead
+            if (del_ts if del_ts is not None
                 else int(os.path.getmtime(
-                    os.path.join(table_path, r.rel_path)) * 1000))
+                    os.path.join(table_path, rel)) * 1000))
             <= cutoff_ms
         ]
     # DV sidecar dirs referenced by no retained dv action (dropped at
     # checkpoint time) are dead weight once past the retention window
-    referenced = set(log.deletion_vector_paths())
+    referenced = set(snap.deletion_vector_paths())
     deletes_root = os.path.join(table_path, delta_writer.DELETES_DIR)
     dead_sidecars = []
     if os.path.isdir(deletes_root):
@@ -293,7 +289,7 @@ def apply_deletion_vectors(spark: SparkSession, table_path: str) -> dict:
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(table_path)
-    new_files = sorted(delta_writer._list_parquet_rel(table_path) - before)
+    new_files = sorted(delta_writer._list_parquet_rel(table_path).keys() - before)
 
     now = int(time.time() * 1000)
     actions = [
@@ -436,7 +432,7 @@ def zorder_cluster(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(table_path)
-    new_files = sorted(delta_writer._list_parquet_rel(table_path) - before)
+    new_files = sorted(delta_writer._list_parquet_rel(table_path).keys() - before)
 
     now = int(time.time() * 1000)
     import json as _json
@@ -490,14 +486,12 @@ def hilbert_cluster(
     ``partition_filter``), remove+add with dataChange=false so CDF and
     streaming readers skip it. Each cluster column min/max-scales to a
     ``bits``-wide grid coordinate (one tiny agg — a maintenance op);
-    the key itself computes inside Arrow-batched ``mapInPandas``
+    the key itself computes inside ``mapInArrow``
     (vectorized Skilling transform, operators/hilbert.py) because the
     curve's data-dependent per-bit exchanges have no Column-expression
     form; the rewrite is IO-bound so the Arrow hop is noise.
     ``bits`` defaults to the largest budget that fits the 63-bit key
     (floor(63 / n_cols), capped at Z_BITS)."""
-    import pandas as _pd
-
     from delta_lake_health_spark.operators.hilbert import hilbert_index
 
     if not cluster_cols or len(cluster_cols) < 2:
@@ -532,40 +526,52 @@ def hilbert_cluster(
     max_code = (1 << bits) - 1
     coded = df
     for i, c in enumerate(cluster_cols):
-        lo = float(bounds[f"lo_{i}"] or 0.0)
-        hi = float(bounds[f"hi_{i}"] or 0.0)
-        span = (hi - lo) or 1.0
+        # as in _zvalue_column: null and NaN/±Inf bounds fall back to
+        # 0.0, and the code is clamped in DOUBLE before the BIGINT cast
+        # (a NaN/±Inf row would overflow the cast; NaN clamps to max)
+        lo, hi = (
+            float(b) if b is not None and math.isfinite(b) else 0.0
+            for b in (bounds[f"lo_{i}"], bounds[f"hi_{i}"])
+        )
+        span = (hi - lo) if math.isfinite(hi - lo) and hi != lo else 1.0
         coded = coded.withColumn(
             f"_hc_{i}",
             F.greatest(
-                F.lit(0).cast("long"),
+                F.lit(0.0),
                 F.least(
-                    F.lit(max_code),
-                    ((F.col(c).cast("double") - lo) / span * max_code)
-                    .cast("long"),
+                    F.lit(float(max_code)),
+                    (F.col(c).cast("double") - F.lit(lo)) / F.lit(span)
+                    * max_code,
                 ),
-            ),
+            ).cast("long"),
         )
     code_cols = [f"_hc_{i}" for i in range(ncols)]
     out_schema = coded.drop(*code_cols).schema.add("_hkey", "long")
 
     def keyed(batches):
+        # Arrow batches, not pandas: the pandas hop would turn a NaN
+        # cluster value into null
         import numpy as np
+        import pyarrow as pa
 
-        for pdf in batches:
+        for batch in batches:
             codes = np.stack(
-                [pdf[c].to_numpy(dtype="int64") for c in code_cols], axis=1
+                [batch.column(c).to_numpy().astype("int64") for c in code_cols],
+                axis=1,
             )
-            out = pdf.drop(columns=code_cols)
-            out["_hkey"] = (
+            keep = [n for n in batch.schema.names if n not in code_cols]
+            key = (
                 hilbert_index(codes, bits).astype("int64")
-                if len(pdf)
-                else _pd.Series([], dtype="int64")
+                if batch.num_rows
+                else np.empty(0, dtype="int64")
             )
-            yield out
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(n) for n in keep] + [pa.array(key)],
+                names=keep + ["_hkey"],
+            )
 
     clustered = (
-        coded.mapInPandas(keyed, out_schema)
+        coded.mapInArrow(keyed, out_schema)
         .repartitionByRange(n_out, "_hkey")
         .sortWithinPartitions("_hkey")
         .drop("_hkey")
@@ -576,7 +582,7 @@ def hilbert_cluster(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(table_path)
-    new_files = sorted(delta_writer._list_parquet_rel(table_path) - before)
+    new_files = sorted(delta_writer._list_parquet_rel(table_path).keys() - before)
 
     now = int(time.time() * 1000)
     actions = [
@@ -761,7 +767,7 @@ def restore(spark: SparkSession, table_path: str, to_version: int) -> dict:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(table_path)
-        new_files = sorted(delta_writer._list_parquet_rel(table_path) - before)
+        new_files = sorted(delta_writer._list_parquet_rel(table_path).keys() - before)
 
     now = int(time.time() * 1000)
     readds = sorted((old_live - cur_live) - tainted)
@@ -909,7 +915,7 @@ def generate_symlink_manifest(spark: SparkSession, table_path: str) -> dict:
         # the spec's source of truth for partition membership
         vals = dict(r.partitionValues or {})
         part_dir = "/".join(
-            f"{c}={vals.get(c, '')}" for c in part_cols
+            delta_writer._partition_dir(c, vals.get(c)) for c in part_cols
         ) if part_cols else ""
         by_partition.setdefault(part_dir, []).append(os.path.abspath(abs_path))
 
@@ -1049,7 +1055,7 @@ def reorg_purge(spark: SparkSession, table_path: str) -> dict:
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(table_path)
-    new_files = sorted(delta_writer._list_parquet_rel(table_path) - before)
+    new_files = sorted(delta_writer._list_parquet_rel(table_path).keys() - before)
 
     now = int(time.time() * 1000)
     actions = [

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from delta_lake_health_spark.sources import delta_writer
 from delta_lake_health_spark.sources.delta_log import DeltaLog
 
 
@@ -87,9 +88,16 @@ def partition_records(spark: SparkSession, table_path: str) -> DataFrame:
     if not cols:
         key = F.lit("<unpartitioned>")
     else:
+        # a null value is labelled like its hive directory
         key = F.concat_ws(
             "/", *[
-                F.concat(F.lit(f"{c}="), F.element_at("partitionValues", c))
+                F.concat(
+                    F.lit(f"{c}="),
+                    F.coalesce(
+                        F.element_at("partitionValues", c),
+                        F.lit(delta_writer.HIVE_DEFAULT_PARTITION),
+                    ),
+                )
                 for c in cols
             ]
         )

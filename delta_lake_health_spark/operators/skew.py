@@ -13,9 +13,15 @@ normalised skew is ONE tiny second-stage aggregate over the per-partition
 counts — the only thing that ever reaches the driver is the final scalar
 row. That works unchanged at 100 TB: stage 1 shuffles |partitions| rows,
 stage 2 reduces them to one.
+
+``skew_metrics`` is the same formula in plain Python over a
+{partition_key: count} dict, for callers that already hold the counts
+(the health report derives them from the log's per-file record counts).
 """
 
 from __future__ import annotations
+
+from decimal import ROUND_HALF_UP, Decimal
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -79,35 +85,47 @@ def skewness_agg(counts: DataFrame) -> DataFrame:
     )
 
 
-def skewness(df: DataFrame, partition_cols: list[str], method: str = "max") -> float:
-    """Scalar skewness, reference-compatible entry point."""
-    row = skewness_agg(records_per_partition(df, partition_cols)).collect()[0]
-    if method == "max":
-        return float(row.skewness_max)
-    if method == "average":
-        return float(row.skewness_average)
-    raise ValueError(f"Unknown skewness method: {method}")
+def partition_key(values: list[str | None]) -> str | None:
+    """The ``records_per_partition`` key of one partition's values, in
+    Python: single column → the value, multi column → ``('a', 'b')``
+    with nulls skipped (``concat_ws`` drops them)."""
+    if len(values) == 1:
+        return values[0]
+    return "(" + ", ".join(f"'{v}'" for v in values if v is not None) + ")"
+
+
+def _round6(x: float) -> float:
+    """Spark's ``round(x, 6)`` on a double: HALF_UP on the decimal
+    string of ``x``."""
+    return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
 
 
 def skew_metrics(
-    df: DataFrame,
+    counts: dict,
     partition_cols: list[str],
     threshold: float = SKEW_THRESHOLD_DEFAULT,
     collect_partitions: bool = True,
 ) -> dict:
-    """Reference-shaped dict (delta_python_analyzer.py:80-86). The
-    records-per-partition dict is only collected when asked — at high
-    partition cardinality callers should keep it as a DataFrame."""
-    counts = records_per_partition(df, partition_cols)
-    row = skewness_agg(counts).collect()[0]
+    """Reference-shaped dict (delta_python_analyzer.py:80-86) from
+    {partition_key: count} — ``skewness_agg``'s formulas on the driver:
+    the counts are one entry per partition, never data rows."""
+    vals = list(counts.values())
+    n = len(vals)
+    skew_max = skew_avg = 0.0
+    if n > 1:
+        mx, mn = max(vals), min(vals)
+        mean = float(sum(vals)) / n
+        if mx != 0:
+            skew_max = (mx - mn) / mx
+        if mean != 0:
+            skew_avg = sum(abs(c - mean) for c in vals) / n / mean
+    skew_max, skew_avg = _round6(skew_max), _round6(skew_avg)
     out = {
         "partition_columns": list(partition_cols),
-        "skewness_max": float(row.skewness_max),
-        "skewness_average": float(row.skewness_average),
-        "is_skewed": float(row.skewness_max) > threshold,
+        "skewness_max": skew_max,
+        "skewness_average": skew_avg,
+        "is_skewed": skew_max > threshold,
     }
     if collect_partitions:
-        out["records_per_partition_dict"] = {
-            r.partition_key: r.cnt for r in counts.collect()
-        }
+        out["records_per_partition_dict"] = dict(counts)
     return out

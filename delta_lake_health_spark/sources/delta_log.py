@@ -5,11 +5,12 @@ optional parquet checkpoints). It is read two ways, one per kind of
 question:
 
 - **Metadata-sized answers** — version, metadata, protocol, live add
-  actions, deletion-vector paths, ``txn`` and domain metadata, commit
-  timestamps — come from the driver-side replay in ``log_replay``
+  actions, deletion-vector paths, record counts, file stats, operation
+  counts, ``txn`` and domain metadata, commit timestamps, DESCRIBE
+  DETAIL — come from the driver-side replay in ``log_replay``
   (checkpoint + JSON tail in plain Python, no Spark job).
-- **DataFrames** — health aggregates, history, tombstones, snapshot
-  joins, change feeds and checkpoint writing — come from the distributed
+- **DataFrames** — history, tombstones, active files, snapshot joins,
+  change feeds and checkpoint writing — come from the distributed
   replay here: ``spark.read.json`` over the commit files with an explicit
   action schema, version extracted from the file name via
   ``_metadata.file_path``. Snapshot reconstruction is the standard
@@ -20,14 +21,15 @@ question:
 Replaces the reference's delta-rs ``DeltaTable`` dependency
 (src/delta_lake_health/health_analyzers/delta_python_analyzer.py:17-31,
 109-133): same observable surface (active files, history, metadata,
-record counts from add-file stats) re-expressed as DataFrame plans.
+record counts from add-file stats) re-expressed as a driver-side replay
+plus DataFrame plans.
 """
 
 from __future__ import annotations
 
 import json
 import os
-from collections import namedtuple
+from collections import Counter, namedtuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -234,7 +236,7 @@ class DeltaLog:
             raise FileNotFoundError(f"not a Delta table (no {LOG_DIR}): {table_path}")
         # per-instance plan cache: an instance reads the commit-file list
         # once, so the many derived reads (active files, tombstones,
-        # history, stats) share one scan plan. A commit made AFTER
+        # history) share one scan plan. A commit made AFTER
         # construction is seen by a NEW DeltaLog, which is how every
         # caller already behaves — the standard snapshot-isolation
         # contract. Metadata-sized answers come from log_replay, which
@@ -347,26 +349,6 @@ class DeltaLog:
             out = out.unionByName(p)
         self._actions_cache[use_checkpoint] = out
         return out
-
-    def cached_actions(self):
-        """Context manager that MATERIALIZES the actions DataFrame
-        (``.cache()``) for its scope and unpersists on exit — for
-        multi-metric consumers like the health analyzer, which otherwise
-        launch a dozen jobs that each rescan the commit JSON. Bounded
-        lifetime, so cached log blocks never accumulate across tables."""
-        from contextlib import contextmanager
-
-        @contextmanager
-        def scope():
-            df = self.actions().cache()
-            self._actions_cache[True] = df
-            try:
-                yield self
-            finally:
-                df.unpersist()
-                self._actions_cache.pop(True, None)
-
-        return scope()
 
     def checkpoint(
         self,
@@ -922,7 +904,8 @@ class DeltaLog:
         rest of Delta's detail row). Log-only aggregates, no data scan;
         size/count come from the version checksum when one exists (two
         numbers from one tiny file), replay otherwise."""
-        meta = self.metadata()
+        snap = log_replay.Snapshot(self.table_path)
+        meta = snap.metadata()
         crc = self.version_checksum()
         stats = (
             {
@@ -932,36 +915,24 @@ class DeltaLog:
             if crc is not None
             else self.file_stats()
         )
-        proto_rows = (
-            self.actions()
-            .where(F.col("protocol").isNotNull())
-            .orderBy(F.desc("version"))
-            .limit(1)
-            .collect()
-        )
-        proto = proto_rows[0].protocol if proto_rows else None
-        commit_ts = (
-            self.actions()
-            .where(F.col("commitInfo").isNotNull())
-            .agg(
-                F.min("commitInfo.timestamp").alias("created"),
-                F.max("commitInfo.timestamp").alias("modified"),
-            )
-            .collect()[0]
-        )
+        proto = snap.protocol()
+        stamps = [
+            ci["timestamp"] for ci in snap.commit_infos().values()
+            if ci.get("timestamp") is not None
+        ]
         return {
             "format": "delta",
             "id": meta.get("id"),
             "name": meta.get("name"),
             "location": self.table_path,
-            "createdAt": commit_ts.created,
-            "lastModified": commit_ts.modified,
+            "createdAt": min(stamps, default=None),
+            "lastModified": max(stamps, default=None),
             "partitionColumns": meta.get("partition_columns", []),
             "numFiles": stats["data_file_count"],
             "sizeInBytes": stats["table_size_bytes"],
             "properties": meta.get("configuration", {}),
-            "minReaderVersion": getattr(proto, "minReaderVersion", None),
-            "minWriterVersion": getattr(proto, "minWriterVersion", None),
+            "minReaderVersion": proto["minReaderVersion"],
+            "minWriterVersion": proto["minWriterVersion"],
         }
 
     def last_txn_version(self, app_id: str) -> int | None:
@@ -1619,51 +1590,29 @@ class DeltaLog:
 
     def record_count(self) -> int:
         """Sum of add-file stats.numRecords minus soft-deleted positions
-        in still-live files; falls back to a scan only if any live file
-        lacks stats."""
-        active = self.active_files()
-        row = active.agg(
-            F.sum("num_records").alias("n"),
-            F.sum(F.when(F.col("num_records").isNull(), 1).otherwise(0)).alias(
-                "missing"
-            ),
-        ).collect()[0]
-        if row.missing and row.missing > 0:
+        in still-live files, from the log replay; falls back to a scan
+        only if any live file lacks stats."""
+        counts = log_replay.Snapshot(self.table_path).record_counts()
+        if counts is None:
             return self.snapshot().count()
-        total = int(row.n or 0)
-        dv = self.deletion_vectors()
-        if dv is not None:
-            # DV entries whose target file was since rewritten are no-ops
-            total -= (
-                dv.join(
-                    F.broadcast(active.select(F.col("path").alias("rel_path"))),
-                    "rel_path",
-                    "left_semi",
-                ).count()
-            )
-        return total
+        return sum(counts.values())
 
     def file_stats(self) -> dict:
-        """data_file_count, table_size_bytes, avg_file_size_bytes — one
-        tiny aggregate over the live file list."""
-        row = self.active_files().agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("size").alias("total"),
-            F.avg("size").alias("avg"),
-        ).collect()[0]
+        """data_file_count, table_size_bytes, avg_file_size_bytes over
+        the live file list."""
+        adds = log_replay.Snapshot(self.table_path)._live_adds()
+        sizes = [a["size"] for a in adds if a.get("size") is not None]
         return {
-            "data_file_count": int(row.n or 0),
-            "table_size_bytes": int(row.total or 0),
-            "avg_file_size_bytes": int(row.avg or 0),
+            "data_file_count": len(adds),
+            "table_size_bytes": sum(sizes),
+            "avg_file_size_bytes": int(sum(sizes) / len(sizes)) if sizes else 0,
         }
 
     def operation_counts(self) -> dict:
         """{'WRITE': n, 'DELETE': n, 'OPTIMIZE': n, 'MERGE': n} from
         commitInfo history."""
-        rows = (
-            self.history()
-            .groupBy("operation")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
-        return {r.operation: r.n for r in rows if r.operation}
+        return dict(Counter(
+            ci["operation"]
+            for ci in log_replay.Snapshot(self.table_path).commit_infos().values()
+            if ci.get("operation")
+        ))

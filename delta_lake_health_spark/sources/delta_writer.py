@@ -41,26 +41,60 @@ def current_version(table_path: str) -> int:
     return max(log_replay.commit_versions(table_path), default=-1)
 
 
-def _list_parquet_rel(table_path: str) -> set[str]:
-    out = set()
+def _list_parquet_rel(table_path: str) -> dict[str, int]:
+    """{relative path: size} of every ``.parquet`` under the table root —
+    the one listing of a table folder (writes diff it, the health report
+    and full VACUUM compare it with the live set)."""
+    out = {}
     for dirpath, dirnames, filenames in os.walk(table_path):
         # hive convention: underscore-prefixed dirs are metadata, not data
         # (_delta_log, _deletes sidecars)
         dirnames[:] = [d for d in dirnames if not d.startswith("_")]
         for f in filenames:
             if f.endswith(".parquet"):
-                rel = os.path.relpath(os.path.join(dirpath, f), table_path)
-                out.add(rel)
+                fp = os.path.join(dirpath, f)
+                out[os.path.relpath(fp, table_path)] = os.path.getsize(fp)
     return out
 
 
-def _partition_values(rel_path: str) -> dict[str, str]:
-    vals: dict[str, str] = {}
+# Spark's hive partition-directory encoding (ExternalCatalogUtils): a null
+# value is this marker, and these characters are written as %XX
+HIVE_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+_HIVE_ESCAPED = set('"#%\'*/:=?\\\x7f{[]^') | {chr(c) for c in range(1, 32)}
+
+
+def _hive_unescape(x: str) -> str:
+    return re.sub("%([0-9A-Fa-f]{2})", lambda m: chr(int(m[1], 16)), x)
+
+
+def hive_value(segment_value: str) -> str | None:
+    """The partition value a hive directory ``key=<segment_value>``
+    encodes: ``%XX`` decoded, the default-partition marker as null."""
+    if segment_value == HIVE_DEFAULT_PARTITION:
+        return None
+    return _hive_unescape(segment_value)
+
+
+def _partition_values(rel_path: str) -> dict[str, str | None]:
+    """The partitionValues of a file at ``rel_path``: its ``key=value``
+    directory segments decoded by ``hive_value`` (the Delta spec's
+    form)."""
+    vals: dict[str, str | None] = {}
     for seg in rel_path.split(os.sep)[:-1]:
         if "=" in seg:
             k, v = seg.split("=", 1)
-            vals[k] = v
+            vals[_hive_unescape(k)] = hive_value(v)
     return vals
+
+
+def _partition_dir(key: str, value: str | None) -> str:
+    """The hive directory segment of one logged partition value — the
+    inverse of ``_partition_values``."""
+
+    def escape(x: str) -> str:
+        return "".join(f"%{ord(ch):02X}" if ch in _HIVE_ESCAPED else ch for ch in x)
+
+    return f"{escape(key)}={HIVE_DEFAULT_PARTITION if value is None else escape(value)}"
 
 
 STATS_STRING_PREFIX = 32  # truncation length for string stats
@@ -2027,7 +2061,7 @@ def write(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(table_path)
-    new_files = sorted(_list_parquet_rel(table_path) - before)
+    new_files = sorted(_list_parquet_rel(table_path).keys() - before)
     if constraint_obs is not None:
         _, checks, not_null, gens = constraint_check
         try:
@@ -2239,7 +2273,7 @@ def delete(spark: SparkSession, table_path: str, predicate: str) -> int:
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(table_path)
-    new_files = sorted(_list_parquet_rel(table_path) - before)
+    new_files = sorted(_list_parquet_rel(table_path).keys() - before)
 
     now = int(time.time() * 1000)
     actions = [_add_action(table_path, rel) for rel in new_files]
@@ -2437,7 +2471,7 @@ def merge(
     if partition_by:
         src_writer = src_writer.partitionBy(*partition_by)
     src_writer.parquet(table_path)
-    new_files = sorted(_list_parquet_rel(table_path) - before)
+    new_files = sorted(_list_parquet_rel(table_path).keys() - before)
 
     now = int(_time.time() * 1000)
     actions = [_add_action(table_path, rel) for rel in new_files]
@@ -2591,10 +2625,9 @@ def clone_deep(spark: SparkSession, source_path: str, target_path: str) -> int:
             return p[len(root):]
         # foreign absolute reference (source is a shallow clone):
         # re-root under the hive layout its partitionValues imply
+        pv = a.get("partitionValues") or {}
         parts = [
-            f"{k}={a.get('partitionValues', {})[k]}"
-            for k in meta.get("partition_columns", [])
-            if (a.get("partitionValues") or {}).get(k) is not None
+            _partition_dir(k, pv.get(k)) for k in meta.get("partition_columns", [])
         ]
         return "/".join(parts + [os.path.basename(p)])
 
@@ -3132,7 +3165,7 @@ def update(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(table_path)
-    new_files = sorted(_list_parquet_rel(table_path) - before)
+    new_files = sorted(_list_parquet_rel(table_path).keys() - before)
 
     now = int(time.time() * 1000)
     actions = [_add_action(table_path, rel) for rel in new_files]
@@ -3396,7 +3429,7 @@ def copy_into(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(table_path)
-    new_files = sorted(_list_parquet_rel(table_path) - before)
+    new_files = sorted(_list_parquet_rel(table_path).keys() - before)
 
     for _, name, ident in new_paths:
         loaded[name] = ident

@@ -1,13 +1,15 @@
 """Driver-side Delta log replay — stdlib + pyarrow, no SparkSession.
 
 Every metadata-sized answer about a table's ``_delta_log`` is resolved
-here: the version, metaData, protocol, live add actions, deletion-vector
-sidecars, the ``txn`` version per appId, domain metadata per domain and
-commit timestamps. A snapshot is the newest checkpoint (v1 single,
-multi-part, or v2 with ``_sidecars/``) plus the commit JSONs after it,
-reconciled last-wins per path (the Delta protocol's definition, PAPER.md
-D1). The distributed replay in ``delta_log.DeltaLog.actions`` stays for
-consumers that need a DataFrame.
+here: the version, metaData, protocol, live add actions, tombstones,
+deletion-vector sidecars and the rows they delete per live file, record
+counts per live file, the ``txn`` version per appId, domain metadata per
+domain, commitInfo per version and commit timestamps. A snapshot is the
+newest checkpoint (v1 single, multi-part, or v2 with ``_sidecars/``) plus
+the commit JSONs after it, reconciled last-wins per path (the Delta
+protocol's definition, PAPER.md D1). The distributed replay in
+``delta_log.DeltaLog.actions`` stays for consumers that need a
+DataFrame.
 
 Nothing here imports pyspark: the ``delta_tail`` streaming source calls
 it from a Python worker.
@@ -219,6 +221,16 @@ def _checkpoint_rows(
     return out
 
 
+def _num_records(stats) -> int | None:
+    """``numRecords`` of an add's stats JSON string; None when absent
+    or unreadable."""
+    try:
+        n = json.loads(stats).get("numRecords") if stats else None
+        return None if n is None else int(n)
+    except (ValueError, TypeError, AttributeError):
+        return None
+
+
 class Snapshot:
     """One listing of a table's log — the ``_last_checkpoint`` record and
     the retained commit versions — and the answers replayed from it. A
@@ -383,10 +395,11 @@ class Snapshot:
 
         return _copy(self._memo("protocol", build))
 
-    def live_add_actions(self, as_of: int | None = None) -> list[dict]:
-        """The add action of every live file at ``as_of``, sorted by path,
-        null fields dropped. Per path the newest action decides; within
-        one commit removes apply before adds, so an add wins."""
+    def _reconciled(self, as_of: int | None) -> tuple[dict, dict]:
+        """({path: add}, {path: remove}) at ``as_of`` — the shared memo,
+        never handed to callers. Per path the newest action decides;
+        within one commit removes apply before adds, so an add wins. A
+        path whose newest action is a remove is a tombstone."""
 
         def build():
             info, versions = self._commits_to(as_of)
@@ -400,21 +413,49 @@ class Snapshot:
                 steps += sorted(by_version.items(), key=lambda s: s[0])
             steps += [(v, _parsed(self.table_path, v)) for v in versions]
             live: dict[str, dict] = {}
+            tombs: dict[str, dict] = {}
             for _, acts in steps:
                 for a in acts:
                     r = a.get("remove")
                     if r is not None and r.get("path"):
                         live.pop(r["path"], None)
+                        tombs[r["path"]] = r
                 for a in acts:
                     add = a.get("add")
                     if add is not None and add.get("path"):
                         live[add["path"]] = add
+                        tombs.pop(add["path"], None)
+            return live, tombs
+
+        return self._memo(("reconciled", as_of), build)
+
+    def _live_adds(self, as_of: int | None = None) -> list[dict]:
+        """``live_add_actions`` without the per-caller copy: the shared
+        memo, for package readers that only read it."""
+
+        def build():
+            live = self._reconciled(as_of)[0]
             return [
                 {k: x for k, x in live[p].items() if x is not None}
                 for p in sorted(live)
             ]
 
-        return _copy(self._memo(("live_add_actions", as_of), build))
+        return self._memo(("live_add_actions", as_of), build)
+
+    def live_add_actions(self, as_of: int | None = None) -> list[dict]:
+        """The add action of every live file at ``as_of``, sorted by path,
+        null fields dropped."""
+        return _copy(self._live_adds(as_of))
+
+    def tombstones(self) -> dict[str, int | None]:
+        """{path: deletionTimestamp} of every file whose newest action is
+        a remove (None when the remove carries no timestamp), by path."""
+
+        def build():
+            tombs = self._reconciled(None)[1]
+            return {p: tombs[p].get("deletionTimestamp") for p in sorted(tombs)}
+
+        return dict(self._memo("tombstones", build))
 
     def deletion_vector_paths(self, as_of: int | None = None) -> list[str]:
         """Sidecar paths of every dv action at ``as_of``: the checkpoint's,
@@ -470,3 +511,71 @@ class Snapshot:
             return out
 
         return list(self._memo("commit_timestamps", build))
+
+    def commit_infos(self) -> dict[int, dict]:
+        """{version: commitInfo} from the checkpoint's rows plus every
+        retained commit JSON, one per version — DESCRIBE HISTORY's
+        source. A version the checkpoint carries keeps its row (the
+        commit file holds the same one), so only the tail and commits a
+        foreign checkpoint left out are parsed; a commit with several
+        commitInfo actions keeps the first."""
+
+        def build():
+            out: dict[int, dict] = {}
+            if self.info is not None:
+                for v, row in _checkpoint_rows(
+                    self.table_path, self.info, ["commitInfo"]
+                ):
+                    out.setdefault(v, row["commitInfo"])
+            for v in self.versions:
+                if v in out:
+                    continue
+                ci = next(
+                    (a["commitInfo"] for a in _parsed(self.table_path, v)
+                     if a.get("commitInfo") is not None),
+                    None,
+                )
+                if ci is not None:
+                    out[v] = ci
+            return {v: out[v] for v in sorted(out)}
+
+        return _copy(self._memo("commit_infos", build))
+
+    def dv_deleted_rows(self) -> dict[str, int]:
+        """{live path: rows its deletion vectors soft-delete}, counted
+        from the sidecars' ``rel_path`` column. Entries for files since
+        rewritten are dropped: their vectors are no-ops."""
+
+        def build():
+            live = self._reconciled(None)[0]
+            out: dict[str, int] = {}
+            for rel in self.deletion_vector_paths():
+                col = pq.read_table(
+                    os.path.join(self.table_path, rel), columns=["rel_path"]
+                ).column("rel_path")
+                for hit in col.value_counts().to_pylist():
+                    p = hit["values"]
+                    if p in live:
+                        out[p] = out.get(p, 0) + hit["counts"]
+            return out
+
+        return dict(self._memo("dv_deleted_rows", build))
+
+    def record_counts(self) -> dict[str, int] | None:
+        """{live path: rows visible in it} — the add's ``stats.numRecords``
+        minus its deletion-vector rows — or None when a live add carries
+        no numRecords (then only a data scan can count)."""
+
+        def build():
+            dv = self.dv_deleted_rows()
+            out: dict[str, int] = {}
+            for a in self._live_adds():
+                n = _num_records(a.get("stats"))
+                if n is None:
+                    return None
+                out[a["path"]] = n - dv.get(a["path"], 0)
+            return out
+
+        counts = self._memo("record_counts", build)
+        return None if counts is None else dict(counts)
+

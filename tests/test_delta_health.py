@@ -996,7 +996,7 @@ def test_shallow_clone_reads_and_evolves_independently(spark):
     assert sorted(map(tuple, got.select(*DeltaLog(spark, src).snapshot().columns)
                       .collect())) == src_rows
     # no data files copied into the clone
-    assert delta_writer._list_parquet_rel(dst) == set()
+    assert delta_writer._list_parquet_rel(dst) == {}
 
     # clone evolves independently: append + delete
     delta_writer.write(spark, _tips_df(spark, 2, 2, 2, offset=500), dst,
@@ -2271,12 +2271,10 @@ def test_vacuum_lite_collects_tombstones_without_listing(spark, monkeypatch):
     with open(orphan, "wb") as fh:
         fh.write(b"not really parquet")
 
-    from delta_lake_health_spark.operators import health as health_mod
-
     def boom(*a, **k):
         raise AssertionError("lite vacuum must not list the table folder")
 
-    monkeypatch.setattr(health_mod, "_list_folder_files", boom)
+    monkeypatch.setattr(delta_writer, "_list_parquet_rel", boom)
     out = maintenance.vacuum(spark, path, retention_hours=0.0, mode="lite")
     assert out["mode"] == "lite"
     assert out["numDeletedFiles"] >= 1

@@ -134,3 +134,23 @@ def test_hilbert_tighter_than_zorder(spark, grid_table, tmp_path):
 def test_hilbert_refuses_one_column(spark, grid_table):
     with pytest.raises(ValueError, match=">= 2"):
         maintenance.hilbert_cluster(spark, grid_table, ["x"])
+
+
+def test_hilbert_survives_nan_inf_and_all_null_columns(spark, tmp_path):
+    """A NaN/±Inf row makes the column's bounds non-finite and an
+    all-null column has null bounds: the bounds fall back to 0.0 and the
+    grid code is clamped before the BIGINT cast, so the rewrite neither
+    overflows the cast nor loses a row."""
+    path = str(tmp_path / "t")
+    df = spark.createDataFrame(
+        [(i, float(i), None) for i in range(40)]
+        + [(40, float("nan"), None), (41, float("inf"), None),
+           (42, float("-inf"), None)],
+        "id long, x double, y double",
+    )
+    delta_writer.write(spark, df.repartition(3), path)
+    res = maintenance.hilbert_cluster(spark, path, ["x", "y"])
+    assert res["numAddedFiles"] >= 1
+    snap = DeltaLog(spark, path).snapshot()
+    assert sorted(r.id for r in snap.collect()) == list(range(43))
+    assert snap.where("isnan(x)").count() == 1

@@ -7,7 +7,11 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from delta_lake_health_spark.operators.health import HealthMetrics, health_score
-from delta_lake_health_spark.operators.skew import records_per_partition, skewness_agg
+from delta_lake_health_spark.operators.skew import (
+    records_per_partition,
+    skew_metrics,
+    skewness_agg,
+)
 
 metrics_strategy = st.builds(
     HealthMetrics,
@@ -63,6 +67,11 @@ def test_skewness_matches_python_reference(spark, sizes):
     assert abs(got.skewness_average - round(want_avg, 6)) < 1e-9
     assert 0.0 <= got.skewness_max <= 1.0
     assert got.n_partitions == len(sizes)
+    # the driver-side formula the health report uses gives the same doubles
+    py = skew_metrics({f"p{i}": n for i, n in enumerate(sizes)}, ["k"])
+    assert (py["skewness_max"], py["skewness_average"]) == (
+        got.skewness_max, got.skewness_average,
+    )
 
 
 # --- as-of / range join vs naive pure-Python references --------------------

@@ -10,6 +10,7 @@ import pytest
 from delta_lake_health_spark import demos
 from delta_lake_health_spark.operators import report
 from delta_lake_health_spark.operators.health import HealthAnalyzer
+from delta_lake_health_spark.sources import delta_writer
 from delta_lake_health_spark.sources.delta_log import DeltaLog
 
 
@@ -49,11 +50,25 @@ def test_file_size_histogram(spark, sample_tables):
     assert all(r.bin_end_mb > r.bin_start_mb for r in h)
 
 
-def test_partition_records(spark, sample_tables):
+def test_partition_records(spark, sample_tables, tmp_path):
     pr = report.partition_records(spark, sample_tables["simple"]).collect()
     assert len(pr) == 5  # five day partitions
     assert sum(r.n_records for r in pr) == 1500
     assert all(r.partition_key.startswith("day=") for r in pr)
+
+    # a null partition value is labelled like its hive directory
+    path = str(tmp_path / "t")
+    df = spark.createDataFrame(
+        [(i, [None, "a"][i % 2], [None, 3][i % 2 if i < 6 else 1]) for i in range(10)],
+        "id long, p string, k int",
+    )
+    delta_writer.write(spark, df.coalesce(1), path, partition_by=["p", "k"])
+    pr = {r.partition_key: r.n_records for r in report.partition_records(spark, path).collect()}
+    assert pr == {
+        "p=__HIVE_DEFAULT_PARTITION__/k=__HIVE_DEFAULT_PARTITION__": 3,
+        "p=__HIVE_DEFAULT_PARTITION__/k=3": 2,
+        "p=a/k=3": 5,
+    }
 
 
 def test_historical_trends(spark, sample_tables):
