@@ -202,20 +202,13 @@ def _logged_counts(
         return None
     counts: dict = {}
     for a in snap._live_adds():
-        pv = a.get("partitionValues") or {}
-        segs = dict(s.split("=", 1) for s in a["path"].split("/")[:-1] if "=" in s)
+        pv = delta_writer.logged_partition_values(
+            a["path"], a.get("partitionValues") or {}
+        )
         vals = []
         for c, t in zip(cols, types):
-            v = pv.get(c)
-            # older writers logged the escaped directory segment itself
-            # ("x%25y", "__HIVE_DEFAULT_PARTITION__"): decode it the way
-            # the hive reader decodes the directory
-            if v is not None and (
-                v == segs.get(c) or v == delta_writer.HIVE_DEFAULT_PARTITION
-            ):
-                v = delta_writer.hive_value(v)
             try:
-                vals.append(_typed(v, t))
+                vals.append(_typed(pv.get(c), t))
             except ValueError:
                 return None
         k = skew_ops.partition_key(vals)

@@ -450,6 +450,7 @@ def generate_iceberg_metadata(spark, table_path: str) -> dict:
     actions (driver-side |files| rows, the same class as checkpoint
     writes), no data files read or copied — the manifests point at the
     Delta parquet in place."""
+    from delta_lake_health_spark.sources import log_replay
     from delta_lake_health_spark.sources.delta_log import DeltaLog
 
     log = DeltaLog(spark, table_path)
@@ -482,7 +483,7 @@ def generate_iceberg_metadata(spark, table_path: str) -> dict:
     # snapshot exports as Iceberg FORMAT-VERSION 2 with position-delete
     # files (D77); a DV-free one stays v1 (the minimal version the
     # snapshot needs, UniForm-style).
-    has_live_dvs = bool(log._live_dv_paths(log.active_files()))
+    has_live_dvs = bool(log_replay.Snapshot(log.table_path).live_dv_paths())
     meta = log.metadata()
     if any(
         logical != physical

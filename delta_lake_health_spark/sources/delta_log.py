@@ -7,16 +7,16 @@ question:
 - **Metadata-sized answers** — version, metadata, protocol, live add
   actions, deletion-vector paths, record counts, file stats, operation
   counts, ``txn`` and domain metadata, commit timestamps, DESCRIBE
-  DETAIL — come from the driver-side replay in ``log_replay``
+  DETAIL, DESCRIBE HISTORY (an arrow LocalRelation) and checkpoint
+  writing (pyarrow) — come from the driver-side replay in ``log_replay``
   (checkpoint + JSON tail in plain Python, no Spark job).
-- **DataFrames** — history, tombstones, active files, snapshot joins,
-  change feeds and checkpoint writing — come from the distributed
-  replay here: ``spark.read.json`` over the commit files with an explicit
-  action schema, version extracted from the file name via
-  ``_metadata.file_path``. Snapshot reconstruction is the standard
-  add/remove reconciliation: per path, the action with the highest
-  (version, add-wins) rank decides liveness — one shuffle over |files|
-  rows.
+- **DataFrames** — tombstones, active files, snapshot joins and change
+  feeds — come from the distributed replay here: ``spark.read.json``
+  over the commit files with an explicit action schema, version
+  extracted from the file name via ``_metadata.file_path``. Snapshot
+  reconstruction is the standard add/remove reconciliation: per path,
+  the action with the highest (version, add-wins) rank decides liveness
+  — one shuffle over |files| rows.
 
 Replaces the reference's delta-rs ``DeltaTable`` dependency
 (src/delta_lake_health/health_analyzers/delta_python_analyzer.py:17-31,
@@ -221,6 +221,23 @@ def _conform_column(col, src_type, dst_type):
     return col.cast(dst_type)
 
 
+# checkpoint state rows: every action column plus the commit version
+_STATE_SCHEMA = log_replay.arrow_schema(
+    StructType([*ACTION_SCHEMA.fields, StructField("version", LongType())]).jsonValue()
+)
+
+_HISTORY_SCHEMA = StructType(
+    [
+        StructField("version", LongType()),
+        StructField("timestamp", LongType()),
+        StructField("operation", StringType()),
+        StructField("operationParameters", _STR_MAP),
+        StructField("operationMetrics", _STR_MAP),
+    ]
+)
+_HISTORY_ARROW = log_replay.arrow_schema(_HISTORY_SCHEMA.jsonValue())
+
+
 # one live file as ``live_files_rows`` returns it
 LiveFile = namedtuple("LiveFile", ["path", "partitionValues"])
 
@@ -356,283 +373,64 @@ class DeltaLog:
         rows_per_part: int = 500_000,
         format: str = "v1",
     ) -> int:
-        """Write a checkpoint parquet of the CURRENT reconciled state and
-        update ``_last_checkpoint``; returns the checkpointed version.
-
-        ``format="v2"`` writes the Delta V2-checkpoint layout instead:
-        FILE actions (add/remove) land in sidecar parquet files under
-        ``_delta_log/_sidecars/``, and a UUID-named top-level
-        ``<v>.checkpoint.<uuid>.parquet`` holds the non-file actions plus
-        one ``checkpointMetadata`` row and one ``sidecar`` row per
-        sidecar file — the layout that lets a 100 TB table's checkpoint
-        be INCREMENTALLY rewritten (a future checkpoint can reuse
-        unchanged sidecars) and its state read selectively. Writing v2
-        upgrades the table protocol to table features with
-        ``v2Checkpoint`` in the same breath (readers without the feature
-        must refuse, per the spec).
-
-        Checkpoints with more than ``rows_per_part`` state rows are
-        written MULTI-PART (``<v>.checkpoint.<i>.<n>.parquet`` per the
-        Delta spec, recorded as ``parts`` in ``_last_checkpoint``) — a
-        100 TB table's multi-million-file state is produced by N parallel
-        writers instead of one coalesced task, and read back as a normal
-        multi-file parquet scan. Small states stay a classic single
-        ``<v>.checkpoint.parquet``.
+        """Write a checkpoint of the CURRENT reconciled state and update
+        ``_last_checkpoint``; returns the checkpointed version. The state
+        comes from the driver-side replay and is written with pyarrow
+        (``log_replay.Snapshot.write_checkpoint``), so no Spark job runs.
 
         State = live adds + UNEXPIRED remove tombstones (as the Delta spec
         requires — dropping them would make a later ``vacuum`` age
         recently-removed files by file mtime and delete them inside the
         retention window) + latest metaData/protocol + all commitInfo
         entries (an extension over the Delta spec so history/op-count
-        metrics survive checkpoint truncation), each row keeping its
-        original ``version``. Tombstones older than
+        metrics survive checkpoint truncation) + live deletion vectors +
+        the latest txn per appId and domainMetadata per domain, each row
+        keeping its original ``version``. Tombstones older than
         ``tombstone_retention_hours`` are compacted away; keep this >= the
         vacuum retention you intend to use (same coupling as Delta's
         ``deletedFileRetentionDuration``).
+
+        A state of more than ``rows_per_part`` rows is written MULTI-PART
+        (``<v>.checkpoint.<i>.<n>.parquet`` per the Delta spec, recorded
+        as ``parts`` in ``_last_checkpoint``); a small one stays a single
+        ``<v>.checkpoint.parquet``. ``format="v2"`` writes the Delta
+        V2-checkpoint layout instead: the file actions (add/remove) in
+        sidecars of at most ``rows_per_part`` rows under
+        ``_delta_log/_sidecars/``, and a UUID-named top-level
+        ``<v>.checkpoint.<uuid>.parquet`` with the other actions plus one
+        ``checkpointMetadata`` row and one ``sidecar`` row per sidecar.
+        Writing v2 first upgrades the table protocol to table features
+        with ``v2Checkpoint`` in its own commit (readers without the
+        feature must refuse, per the spec).
         """
-        import time as _time
+        import time
 
-        version = self.version()
-        acts = self.actions()
-        cols = [*ACTION_SCHEMA.fieldNames(), "version"]
-        live = self.active_files()
-        add_rows = acts.where(F.col("add").isNotNull()).join(
-            live.select("path", F.col("version").alias("add_version")),
-            (F.col("add.path") == F.col("path"))
-            & (F.col("version") == F.col("add_version")),
-            "left_semi",
-        )
-        tomb_cutoff_ms = int(
-            (_time.time() - tombstone_retention_hours * 3600) * 1000
-        )
-        tomb_rows = (
-            acts.where(F.col("remove").isNotNull())
-            .join(
-                self.tombstones().select(
-                    "path", F.col("version").alias("rm_version")
-                ),
-                (F.col("remove.path") == F.col("path"))
-                & (F.col("version") == F.col("rm_version")),
-                "left_semi",
-            )
-            .where(
-                F.col("remove.deletionTimestamp").isNull()
-                | (F.col("remove.deletionTimestamp") >= tomb_cutoff_ms)
-            )
-        )
-        meta = (
-            acts.where(F.col("metaData").isNotNull())
-            .orderBy(F.desc("version"))
-            .limit(1)
-        )
-        proto = (
-            acts.where(F.col("protocol").isNotNull())
-            .orderBy(F.desc("version"))
-            .limit(1)
-        )
-        infos = acts.where(F.col("commitInfo").isNotNull())
-        # dv actions whose target files were all since rewritten (by
-        # apply_deletion_vectors / compact / merge) are semantic no-ops;
-        # carrying them forever would grow the broadcast anti-join set on
-        # every snapshot read unboundedly over table lifetime. Keep only
-        # vectors that still soft-delete at least one live file — like
-        # expired tombstones, they compact away here (and vacuum may then
-        # physically delete their sidecars).
-        live_dv_paths = self._live_dv_paths(live)
-        dvs = acts.where(
-            F.col("dv").isNotNull() & F.col("dv.path").isin(live_dv_paths)
-            if live_dv_paths
-            else F.lit(False)
-        )
-        # latest txn per appId (per the Delta spec) so idempotent writers
-        # keep their replay guard across checkpoint truncation
-        w_txn = Window.partitionBy(F.col("txn.appId")).orderBy(
-            F.desc("txn.version"), F.desc("version")
-        )
-        txns = (
-            acts.where(F.col("txn").isNotNull())
-            .withColumn("rn", F.row_number().over(w_txn))
-            .where(F.col("rn") == 1)
-            .drop("rn")
-        )
-        # latest domainMetadata per domain (Delta spec): the row-tracking
-        # high-water mark must survive checkpoint truncation
-        w_dom = Window.partitionBy(F.col("domainMetadata.domain")).orderBy(
-            F.desc("version")
-        )
-        domains = (
-            acts.where(F.col("domainMetadata").isNotNull())
-            .withColumn("rn", F.row_number().over(w_dom))
-            .where(F.col("rn") == 1)
-            .drop("rn")
-        )
-        state = (
-            add_rows.select(*cols)
-            .unionByName(tomb_rows.select(*cols))
-            .unionByName(meta.select(*cols))
-            .unionByName(proto.select(*cols))
-            .unionByName(infos.select(*cols))
-            .unionByName(dvs.select(*cols))
-            .unionByName(txns.select(*cols))
-            .unionByName(domains.select(*cols))
-        )
-        import math
-        import shutil
-        import uuid
-
-        if format == "v2":
-            return self._checkpoint_v2(
-                state, version, rows_per_part, tombstone_retention_hours
-            )
-        if format != "v1":
+        if format not in ("v1", "v2"):
             raise ValueError(f"unknown checkpoint format {format!r}")
-        n_rows = state.count()
-        n_parts = max(1, math.ceil(n_rows / rows_per_part))
-        tmp_dir = os.path.join(self.log_dir, f".ckpt-tmp-{uuid.uuid4().hex}")
-        state.repartition(n_parts).write.parquet(tmp_dir)
-        part_files = sorted(
-            f for f in os.listdir(tmp_dir) if f.endswith(".parquet")
-        )
-        targets = [
-            os.path.join(self.log_dir, n)
-            for n in checkpoint_file_names(
-                {"version": version, "parts": len(part_files)}
-            )
-        ]
-        single = os.path.join(
-            self.log_dir, checkpoint_file_names({"version": version})[0]
-        )
-        for tgt in targets + [single]:
-            if os.path.isdir(tgt):
-                shutil.rmtree(tgt)
-            elif os.path.isfile(tgt):
-                os.remove(tgt)
-        for src, tgt in zip(part_files, targets):
-            os.rename(os.path.join(tmp_dir, src), tgt)
-        shutil.rmtree(tmp_dir)
-        info = {"version": version, "size": n_rows}
-        if len(part_files) > 1:
-            info["parts"] = len(part_files)
-        with open(os.path.join(self.log_dir, "_last_checkpoint"), "w") as f:
-            json.dump(info, f)
-        return version
+        if format == "v2":
+            from delta_lake_health_spark.sources import delta_writer
 
-    def _checkpoint_v2(
-        self,
-        state: DataFrame,
-        version: int,
-        rows_per_part: int,
-        tombstone_retention_hours: float,
-    ) -> int:
-        """The V2 layout half of ``checkpoint``: sidecar files carry the
-        file actions (written by N parallel tasks), the UUID-named
-        top-level file carries everything else plus the
-        checkpointMetadata/sidecar index rows."""
-        import math
-        import shutil
-        import uuid
-
-        from delta_lake_health_spark.sources import delta_writer
-
-        # same-commit protocol upgrade rule doesn't apply (a checkpoint
-        # isn't a commit), so the upgrade is its own tiny commit FIRST —
-        # a reader must never find a v2 checkpoint on a table whose
-        # protocol doesn't announce it
-        upgrade = delta_writer._protocol_upgrade_action(
-            self.spark, self.table_path, "v2Checkpoint"
-        )
-        if upgrade is not None:
-            version = delta_writer.current_version(self.table_path) + 1
-            delta_writer._commit(
-                self.table_path,
-                version,
-                [
-                    upgrade,
-                    delta_writer._commit_info(
-                        "UPGRADE PROTOCOL", {"feature": "v2Checkpoint"}, {}
-                    ),
-                ],
+            # a checkpoint is not a commit, so the protocol upgrade is its
+            # own tiny commit FIRST: a reader must never find a v2
+            # checkpoint on a table whose protocol does not announce it
+            upgrade = delta_writer._protocol_upgrade_action(
+                self.spark, self.table_path, "v2Checkpoint"
             )
-            # the upgrade commit must be part of the checkpointed state
-            fresh = DeltaLog(self.spark, self.table_path)
-            return fresh.checkpoint(
-                tombstone_retention_hours=tombstone_retention_hours,
-                rows_per_part=rows_per_part,
-                format="v2",
-            )
-
-        sidecar_dir = os.path.join(self.log_dir, "_sidecars")
-        os.makedirs(sidecar_dir, exist_ok=True)
-        file_actions = state.where(
-            F.col("add").isNotNull() | F.col("remove").isNotNull()
+            if upgrade is not None:
+                delta_writer._commit(
+                    self.table_path,
+                    delta_writer.current_version(self.table_path) + 1,
+                    [
+                        upgrade,
+                        delta_writer._commit_info(
+                            "UPGRADE PROTOCOL", {"feature": "v2Checkpoint"}, {}
+                        ),
+                    ],
+                )
+        cutoff_ms = int((time.time() - tombstone_retention_hours * 3600) * 1000)
+        return log_replay.Snapshot(self.table_path).write_checkpoint(
+            _STATE_SCHEMA, cutoff_ms, rows_per_part, v2=format == "v2"
         )
-        other = state.where(
-            F.col("add").isNull() & F.col("remove").isNull()
-        )
-        n_files = file_actions.count()
-        n_parts = max(1, math.ceil(n_files / rows_per_part))
-        tmp_dir = os.path.join(self.log_dir, f".ckpt-tmp-{uuid.uuid4().hex}")
-        file_actions.repartition(n_parts).write.parquet(tmp_dir)
-        sidecars = []
-        for src in sorted(
-            f for f in os.listdir(tmp_dir) if f.endswith(".parquet")
-        ):
-            name = f"{uuid.uuid4().hex}.parquet"
-            os.rename(
-                os.path.join(tmp_dir, src), os.path.join(sidecar_dir, name)
-            )
-            sidecars.append(name)
-        shutil.rmtree(tmp_dir)
-
-        now = int(__import__("time").time() * 1000)
-        # index rows are tiny (1 + |sidecars|); the non-file actions stay
-        # a DataFrame end to end — a long-lived table's full commitInfo
-        # history never materializes on the driver
-        index_schema = StructType(
-            [
-                StructField(
-                    "checkpointMetadata",
-                    StructType([StructField("version", LongType())]),
-                ),
-                StructField(
-                    "sidecar",
-                    StructType(
-                        [
-                            StructField("path", StringType()),
-                            StructField("sizeInBytes", LongType()),
-                            StructField("modificationTime", LongType()),
-                        ]
-                    ),
-                ),
-            ]
-        )
-        index_rows = [((version,), None)]
-        for name in sidecars:
-            fp = os.path.join(sidecar_dir, name)
-            index_rows.append(
-                (None, (name, os.path.getsize(fp), now))
-            )
-        index_df = self.spark.createDataFrame(index_rows, index_schema)
-        top = other.unionByName(index_df, allowMissingColumns=True)
-        top_name = f"{version:020d}.checkpoint.{uuid.uuid4().hex}.parquet"
-        top_tmp = os.path.join(self.log_dir, f".ckpt-tmp-{uuid.uuid4().hex}")
-        top.coalesce(1).write.parquet(top_tmp)
-        part = next(
-            f for f in os.listdir(top_tmp) if f.endswith(".parquet")
-        )
-        os.rename(
-            os.path.join(top_tmp, part), os.path.join(self.log_dir, top_name)
-        )
-        shutil.rmtree(top_tmp)
-        info = {
-            "version": version,
-            "size": n_files + other.count() + len(index_rows),
-            "format": "v2",
-            "path": top_name,
-        }
-        with open(os.path.join(self.log_dir, "_last_checkpoint"), "w") as f:
-            json.dump(info, f)
-        return version
 
     # -- snapshot ----------------------------------------------------------
 
@@ -740,54 +538,30 @@ class DeltaLog:
         operationParameters, operationMetrics — newest first; ``limit``
         keeps only the most recent N commits (`DESCRIBE HISTORY ... LIMIT`).
 
-        Sources BOTH the checkpoint-merged view and the retained commit
-        JSONs, deduplicated by version. Spec-compliant foreign
-        checkpoints carry NO commitInfo, so the checkpoint-merged view
-        alone would lose every pre-checkpoint commit even though its
-        JSON is still on disk — Delta's DeltaHistoryManager walks the
-        commit files directly for the same reason (cost ∝ retained log
-        window). Our own checkpoints RETAIN commitInfo rows, so after
-        log cleanup (D49) expires pre-checkpoint JSONs the checkpoint
-        side still serves the full operation history — strictly more
-        than Delta preserves. Where both sources have a version, the
-        rows are identical and the dedup picks either."""
-        src = self.actions()
-        if self.last_checkpoint() is not None:
-            try:
-                src = src.unionByName(self.actions(use_checkpoint=False))
-            except FileNotFoundError:
-                pass  # checkpoint-only log: no commit JSONs retained
-        ci_fields = {
-            f.name
-            for f in src.schema["commitInfo"].dataType.fields  # type: ignore[union-attr]
-        }
-        # report the inCommitTimestamp when present (Delta's DESCRIBE
-        # HISTORY does the same once ICT is enabled): the ICT is the
-        # timestamp `timestampAsOf` resolution uses, so a history row's
-        # timestamp must address ITS OWN version — the wall-clock
-        # commitInfo.timestamp can trail the ICT by a millisecond and
-        # then resolves to the predecessor
-        ts_col = (
-            F.coalesce(
-                F.col("commitInfo.inCommitTimestamp"),
-                F.col("commitInfo.timestamp"),
+        Built on the driver from ``log_replay.Snapshot.commit_infos``: the
+        checkpoint's commitInfo rows plus every retained commit JSON, one
+        per version. Spec-compliant foreign checkpoints carry NO
+        commitInfo, so the JSONs still on disk fill in (as Delta's
+        DeltaHistoryManager walks the commit files); our own checkpoints
+        RETAIN commitInfo, so after log cleanup (D49) the full operation
+        history survives. The rows reach Spark as an arrow table (a
+        LocalRelation): collecting them runs no job. The timestamp is the
+        inCommitTimestamp when present, as Delta's DESCRIBE HISTORY
+        reports it once ICT is enabled: the timestamp ``timestampAsOf``
+        resolves, so a row's timestamp addresses ITS OWN version."""
+        snap = log_replay.Snapshot(self.table_path)
+        if snap.version() < 0:
+            raise FileNotFoundError(f"empty delta log: {self.log_dir}")
+        infos = snap.commit_infos()
+        rows = []
+        for v in sorted(infos, reverse=True)[:limit]:
+            ts = infos[v].get("inCommitTimestamp")
+            rows.append(
+                {**infos[v], "version": v, "timestamp": infos[v].get("timestamp") if ts is None else ts}
             )
-            if "inCommitTimestamp" in ci_fields
-            else F.col("commitInfo.timestamp")
+        return self.spark.createDataFrame(
+            log_replay.arrow_table(rows, _HISTORY_ARROW), _HISTORY_SCHEMA
         )
-        out = (
-            src.where(F.col("commitInfo").isNotNull())
-            .dropDuplicates(["version"])
-            .select(
-                "version",
-                ts_col.alias("timestamp"),
-                F.col("commitInfo.operation").alias("operation"),
-                F.col("commitInfo.operationParameters").alias("operationParameters"),
-                F.col("commitInfo.operationMetrics").alias("operationMetrics"),
-            )
-            .orderBy(F.desc("version"))
-        )
-        return out.limit(limit) if limit is not None else out
 
     def version(self) -> int:
         v = log_replay.Snapshot(self.table_path).version()
@@ -877,15 +651,10 @@ class DeltaLog:
         numFiles) written incrementally at commit time, or None when
         absent (foreign log / unresolvable commit) — see
         delta_writer._write_version_checksum."""
-        import json as _json
-        import os as _os
-
-        p = _os.path.join(
-            self.table_path, "_delta_log", f"{self.version():020d}.crc"
-        )
+        p = os.path.join(self.log_dir, f"{self.version():020d}.crc")
         try:
             with open(p) as f:
-                c = _json.loads(f.read())
+                c = json.loads(f.read())
             if int(c.get("version", -1)) != self.version():
                 return None
             return {
@@ -1004,36 +773,6 @@ class DeltaLog:
         abs_paths = [os.path.join(self.table_path, p) for p in paths]
         return self.spark.read.parquet(*abs_paths)
 
-    def _live_dv_paths(self, live: DataFrame) -> list[str]:
-        """Sidecar rel paths of dv actions that still soft-delete at least
-        one live file (``live`` = ``active_files()`` output). One scan over
-        the tiny sidecars semi-joined with the live list; sidecar identity
-        is recovered from the scan's file metadata."""
-        from urllib.parse import unquote, urlparse
-
-        paths = self.deletion_vector_paths()
-        if not paths:
-            return []
-        abs_paths = [os.path.join(self.table_path, p) for p in paths]
-        hits = (
-            self.spark.read.parquet(*abs_paths)
-            .withColumn("_sc_file", F.col("_metadata.file_path"))
-            .join(
-                live.select(F.col("path").alias("rel_path")),
-                "rel_path",
-                "left_semi",
-            )
-            .select("_sc_file")
-            .distinct()
-            .collect()
-        )
-        keep = set()
-        for r in hits:
-            fp = unquote(urlparse(r._sc_file).path)
-            rel_dir = os.path.relpath(os.path.dirname(fp), self.table_path)
-            keep.add(rel_dir.replace(os.sep, "/"))
-        return sorted(keep)
-
     # -- data access -------------------------------------------------------
 
     def _read_with_logged_partitions(
@@ -1047,6 +786,8 @@ class DeltaLog:
         rows of (path, partitionValues). The per-file partition map is
         metadata-sized and broadcasts."""
         from pyspark.sql.types import StringType, StructField as SF
+
+        from delta_lake_health_spark.sources import delta_writer
 
         part_cols = self.metadata(as_of).get("partition_columns", [])
         abs_of = lambda p: p if os.path.isabs(p) else os.path.join(self.table_path, p)  # noqa: E731
@@ -1076,9 +817,7 @@ class DeltaLog:
         normalized = F.regexp_replace(decoded, r"^file:/+", "/")
         rows = []
         for r in live:
-            pv = r.partitionValues
-            # struct (raw JSON inference) or map (checkpoint cast) — both
-            pv = {} if pv is None else (pv.asDict() if hasattr(pv, "asDict") else dict(pv))
+            pv = delta_writer.logged_partition_values(r.path, r.partitionValues)
             rows.append(tuple([abs_of(r.path)] + [pv.get(c) for c in part_cols]))
         pv_schema = StructType(
             [SF("_abs_path", StringType())]

@@ -75,6 +75,21 @@ def hive_value(segment_value: str) -> str | None:
     return _hive_unescape(segment_value)
 
 
+def logged_partition_values(path: str, values: dict) -> dict:
+    """A live file's logged ``partitionValues`` as the table holds them.
+    Older writers logged the escaped directory segment itself ("x%25y",
+    "__HIVE_DEFAULT_PARTITION__"): a value equal to the file's own
+    ``key=value`` segment, or the default-partition marker, is decoded
+    the way the hive reader decodes the directory."""
+    segs = dict(s.split("=", 1) for s in path.split("/")[:-1] if "=" in s)
+    return {
+        k: hive_value(v)
+        if v is not None and v in (segs.get(k), HIVE_DEFAULT_PARTITION)
+        else v
+        for k, v in values.items()
+    }
+
+
 def _partition_values(rel_path: str) -> dict[str, str | None]:
     """The partitionValues of a file at ``rel_path``: its ``key=value``
     directory segments decoded by ``hive_value`` (the Delta spec's
@@ -2530,7 +2545,7 @@ def clone_shallow(spark: SparkSession, source_path: str, target_path: str) -> in
     src = DeltaLog(spark, source_path)
     if os.path.isdir(os.path.join(target_path, LOG_DIR)):
         raise ValueError(f"target is already a Delta table: {target_path}")
-    if src._live_dv_paths(src.active_files()):
+    if log_replay.Snapshot(src.table_path).live_dv_paths():
         raise ValueError(
             "shallow clone of a table with live deletion vectors is "
             "unsupported; run apply_deletion_vectors on the source first"
@@ -2608,7 +2623,7 @@ def clone_deep(spark: SparkSession, source_path: str, target_path: str) -> int:
     if not meta.get("schema"):
         raise ValueError("source table has no logged schema")
     adds = src.live_add_actions()
-    live_dvs = src._live_dv_paths(src.active_files())
+    live_dvs = log_replay.Snapshot(src.table_path).live_dv_paths()
     if live_dvs and any(os.path.isabs(a["path"]) for a in adds):
         raise ValueError(
             "deep clone of a table mixing live deletion vectors with "

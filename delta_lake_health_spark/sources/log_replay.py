@@ -11,6 +11,12 @@ protocol's definition, PAPER.md D1). The distributed replay in
 ``delta_log.DeltaLog.actions`` stays for consumers that need a
 DataFrame.
 
+Checkpoints are written here too, next to the reader:
+``Snapshot.write_checkpoint`` turns the reconciled state into arrow
+tables (``arrow_table``, typed by ``arrow_schema`` the way Spark's JSON
+reader and parquet writer type them) and publishes the parquet files
+with ``pyarrow.parquet``.
+
 Nothing here imports pyspark: the ``delta_tail`` streaming source calls
 it from a Python worker.
 
@@ -27,8 +33,11 @@ from __future__ import annotations
 
 import json
 import os
+import time
+import uuid
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 LOG_DIR = "_delta_log"
@@ -205,6 +214,12 @@ def _checkpoint_rows(
             if not want:
                 continue
             t = pf.read(columns=want + (["version"] if "version" in names else []))
+        # drop the rows holding none of the requested actions in arrow,
+        # before any value becomes a Python object
+        mask = pc.is_valid(t.column(want[0]))
+        for c in want[1:]:
+            mask = pc.or_(mask, pc.is_valid(t.column(c)))
+        t = t.filter(mask)
         vals = []
         for c in want:
             typ, col = t.schema.field(c).type, t.column(c).to_pylist()
@@ -219,6 +234,109 @@ def _checkpoint_rows(
             if row:
                 out.append((base if v is None else int(v), row))
     return out
+
+
+_ARROW_PRIMITIVES = {
+    "string": pa.string(),
+    "long": pa.int64(),
+    "integer": pa.int32(),
+    "boolean": pa.bool_(),
+}
+
+
+def _arrow_type(t) -> pa.DataType:
+    if isinstance(t, str):
+        return _ARROW_PRIMITIVES[t]
+    if t["type"] == "struct":
+        return pa.struct(
+            [pa.field(f["name"], _arrow_type(f["type"]), f["nullable"]) for f in t["fields"]]
+        )
+    if t["type"] == "map":
+        value = pa.field("value", _arrow_type(t["valueType"]), t["valueContainsNull"])
+        return pa.map_(_arrow_type(t["keyType"]), value)
+    if t["type"] == "array":
+        elem = pa.field("element", _arrow_type(t["elementType"]), t["containsNull"])
+        return pa.list_(elem)
+    raise TypeError(f"no arrow type for Spark type {t!r}")
+
+
+def arrow_schema(spark_schema: dict) -> pa.Schema:
+    """The arrow schema of a Spark ``StructType`` given in its JSON form
+    (``StructType.jsonValue()``), typed as Spark's parquet writer stores
+    it: non-null map keys, ``list<element>``, Spark's nullability."""
+    return pa.schema(list(_arrow_type(spark_schema)))
+
+
+def _spark_string(v) -> str | None:
+    """A JSON value as Spark's JSON reader yields it for a STRING field:
+    a string as-is, anything else as its compact JSON text (3 -> "3")."""
+    if v is None or isinstance(v, str):
+        return v
+    return json.dumps(v, separators=(",", ":"), ensure_ascii=False)
+
+
+def _conformer(t: pa.DataType):
+    """A function casting one JSON-shaped value to arrow type ``t`` the
+    way Spark's JSON reader reads it under that schema: struct fields the
+    type lacks are dropped, and a string field or map value goes through
+    ``_spark_string``."""
+    if pa.types.is_string(t):
+        return _spark_string
+    if pa.types.is_struct(t):
+        fields = [(f.name, _conformer(f.type)) for f in t]
+        return lambda v: None if v is None else {n: c(v.get(n)) for n, c in fields}
+    if pa.types.is_map(t):
+        item = _conformer(t.item_type)
+        return lambda v: None if v is None else {k: item(x) for k, x in v.items()}
+    if pa.types.is_list(t):
+        elem = _conformer(t.value_type)
+        return lambda v: None if v is None else [elem(x) for x in v]
+    return lambda v: v
+
+
+def arrow_table(rows: list[dict], schema: pa.Schema) -> pa.Table:
+    """``rows`` (dicts of JSON-shaped values) as an arrow table of
+    ``schema``, every value conformed by the one Spark-JSON rule above —
+    shared by the checkpoint writer and ``DeltaLog.history``."""
+    row = _conformer(pa.struct(list(schema)))
+    return pa.Table.from_pylist([row(r) for r in rows], schema=schema)
+
+
+# the V2 checkpoint's index columns (Delta spec checkpointMetadata/sidecar)
+_V2_INDEX_FIELDS = [
+    pa.field("checkpointMetadata", pa.struct([("version", pa.int64())])),
+    pa.field(
+        "sidecar",
+        pa.struct([("path", pa.string()), ("sizeInBytes", pa.int64()), ("modificationTime", pa.int64())]),
+    ),
+]
+
+
+def _publish(path: str, content: pa.Table | dict) -> None:
+    """Write a log file — a parquet table or a JSON record — under a
+    temporary name, then rename it into place so no reader ever sees it
+    half-written."""
+    tmp = os.path.join(os.path.dirname(path), f".ckpt-tmp-{uuid.uuid4().hex}")
+    try:
+        if isinstance(content, pa.Table):
+            pq.write_table(content, tmp)
+        else:
+            with open(tmp, "w") as f:
+                json.dump(content, f)
+        os.replace(tmp, path)
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+
+
+def _chunks(rows: list, size: int) -> list[list]:
+    """``rows`` in pieces of at most ``size``; one (maybe empty) piece at
+    least, so every checkpoint layout has a file to name."""
+    return [rows[i:i + size] for i in range(0, len(rows), size)] or [[]]
+
+
+def _valid_protocol(p: dict) -> bool:
+    return p.get("minReaderVersion") is not None
 
 
 def _num_records(stats) -> int | None:
@@ -311,10 +429,12 @@ class Snapshot:
             if v > lo and (as_of is None or v <= as_of)
         ]
 
-    def _newest(self, column: str, as_of: int | None, pick) -> dict | None:
-        """The newest ``column`` action accepted by ``pick``: commits
-        newest-first (the last in a commit wins), then the checkpoint's
-        highest-version row."""
+    def _newest(
+        self, column: str, as_of: int | None, pick
+    ) -> tuple[int, dict] | None:
+        """(version, action) of the newest ``column`` action accepted by
+        ``pick``: commits newest-first (the last in a commit wins), then
+        the checkpoint's highest-version row."""
         info, versions = self._commits_to(as_of)
         for v in reversed(versions):
             found = None
@@ -323,7 +443,7 @@ class Snapshot:
                 if x is not None and pick(x):
                     found = x
             if found is not None:
-                return found
+                return v, found
         if info is not None:
             rows = [
                 (v, r[column])
@@ -331,18 +451,19 @@ class Snapshot:
                 if pick(r[column])
             ]
             if rows:
-                return max(rows, key=lambda vr: vr[0])[1]
+                return max(rows, key=lambda vr: vr[0])
         return None
 
-    def _every(self, column: str, as_of: int | None) -> list[dict]:
-        """Every ``column`` action at ``as_of``: the checkpoint's rows,
-        then each later commit's in version order."""
+    def _every(self, column: str, as_of: int | None) -> list[tuple[int, dict]]:
+        """(version, action) of every ``column`` action at ``as_of``: the
+        checkpoint's rows, then each later commit's in version order."""
         info, versions = self._commits_to(as_of)
         out = [] if info is None else [
-            r[column] for _, r in _checkpoint_rows(self.table_path, info, [column])
+            (v, r[column])
+            for v, r in _checkpoint_rows(self.table_path, info, [column])
         ]
         for v in versions:
-            out += [a[column] for a in _parsed(self.table_path, v)
+            out += [(v, a[column]) for a in _parsed(self.table_path, v)
                     if a.get(column) is not None]
         return out
 
@@ -361,9 +482,10 @@ class Snapshot:
         schemaString), configuration}; {} when none was committed."""
 
         def build():
-            m = self._newest("metaData", as_of, lambda m: True)
-            if m is None:
+            found = self._newest("metaData", as_of, lambda m: True)
+            if found is None:
                 return {}
+            m = found[1]
             schema = m.get("schemaString")
             return {
                 "id": m.get("id"),
@@ -381,11 +503,10 @@ class Snapshot:
         none was committed."""
 
         def build():
-            p = self._newest(
-                "protocol", None, lambda p: p.get("minReaderVersion") is not None
-            )
-            if p is None:
+            found = self._newest("protocol", None, _valid_protocol)
+            if found is None:
                 return DEFAULT_PROTOCOL
+            p = found[1]
             return {
                 "minReaderVersion": int(p["minReaderVersion"]),
                 "minWriterVersion": int(p.get("minWriterVersion") or 2),
@@ -395,11 +516,12 @@ class Snapshot:
 
         return _copy(self._memo("protocol", build))
 
-    def _reconciled(self, as_of: int | None) -> tuple[dict, dict]:
-        """({path: add}, {path: remove}) at ``as_of`` — the shared memo,
-        never handed to callers. Per path the newest action decides;
-        within one commit removes apply before adds, so an add wins. A
-        path whose newest action is a remove is a tombstone."""
+    def _reconciled(self, as_of: int | None) -> tuple[dict, dict, dict]:
+        """({path: add}, {path: remove}, {path: version of that action})
+        at ``as_of`` — the shared memo, never handed to callers. Per path
+        the newest action decides; within one commit removes apply before
+        adds, so an add wins. A path whose newest action is a remove is a
+        tombstone."""
 
         def build():
             info, versions = self._commits_to(as_of)
@@ -414,18 +536,21 @@ class Snapshot:
             steps += [(v, _parsed(self.table_path, v)) for v in versions]
             live: dict[str, dict] = {}
             tombs: dict[str, dict] = {}
-            for _, acts in steps:
+            at: dict[str, int] = {}
+            for v, acts in steps:
                 for a in acts:
                     r = a.get("remove")
                     if r is not None and r.get("path"):
                         live.pop(r["path"], None)
                         tombs[r["path"]] = r
+                        at[r["path"]] = v
                 for a in acts:
                     add = a.get("add")
                     if add is not None and add.get("path"):
                         live[add["path"]] = add
                         tombs.pop(add["path"], None)
-            return live, tombs
+                        at[add["path"]] = v
+            return live, tombs, at
 
         return self._memo(("reconciled", as_of), build)
 
@@ -462,7 +587,7 @@ class Snapshot:
         then each later commit's in version order."""
 
         def build():
-            return [d["path"] for d in self._every("dv", as_of) if d.get("path")]
+            return [d["path"] for _, d in self._every("dv", as_of) if d.get("path")]
 
         return list(self._memo(("dv_paths", as_of), build))
 
@@ -471,7 +596,7 @@ class Snapshot:
 
         def build():
             found = [
-                int(t["version"]) for t in self._every("txn", None)
+                int(t["version"]) for _, t in self._every("txn", None)
                 if t.get("appId") == app_id and t.get("version") is not None
             ]
             return max(found, default=None)
@@ -483,12 +608,12 @@ class Snapshot:
         when never set or removed."""
 
         def build():
-            d = self._newest(
+            found = self._newest(
                 "domainMetadata", None, lambda d: d.get("domain") == domain
             )
-            if d is None or d.get("removed"):
+            if found is None or found[1].get("removed"):
                 return None
-            return json.loads(d.get("configuration") or "{}")
+            return json.loads(found[1].get("configuration") or "{}")
 
         return _copy(self._memo(("domain", domain), build))
 
@@ -541,22 +666,43 @@ class Snapshot:
 
         return _copy(self._memo("commit_infos", build))
 
+    def _dv_hits(self) -> dict[str, dict[str, int]]:
+        """{sidecar path: {live path: rows it soft-deletes there}} for every
+        dv action's sidecar, each read once (its ``rel_path`` column).
+        Files since rewritten are left out: their vectors are no-ops."""
+
+        def build():
+            live = self._reconciled(None)[0]
+            out: dict[str, dict[str, int]] = {}
+            for rel in dict.fromkeys(self.deletion_vector_paths()):
+                col = pq.read_table(
+                    os.path.join(self.table_path, rel), columns=["rel_path"]
+                ).column("rel_path")
+                out[rel] = {
+                    hit["values"]: hit["counts"]
+                    for hit in col.value_counts().to_pylist()
+                    if hit["values"] in live
+                }
+            return out
+
+        return self._memo("dv_hits", build)
+
+    def live_dv_paths(self) -> list[str]:
+        """Sorted sidecar paths of the dv actions that still soft-delete
+        at least one live file — the vectors a checkpoint keeps."""
+        return sorted(rel for rel, hits in self._dv_hits().items() if hits)
+
     def dv_deleted_rows(self) -> dict[str, int]:
         """{live path: rows its deletion vectors soft-delete}, counted
         from the sidecars' ``rel_path`` column. Entries for files since
         rewritten are dropped: their vectors are no-ops."""
 
         def build():
-            live = self._reconciled(None)[0]
+            hits = self._dv_hits()
             out: dict[str, int] = {}
             for rel in self.deletion_vector_paths():
-                col = pq.read_table(
-                    os.path.join(self.table_path, rel), columns=["rel_path"]
-                ).column("rel_path")
-                for hit in col.value_counts().to_pylist():
-                    p = hit["values"]
-                    if p in live:
-                        out[p] = out.get(p, 0) + hit["counts"]
+                for p, n in hits[rel].items():
+                    out[p] = out.get(p, 0) + n
             return out
 
         return dict(self._memo("dv_deleted_rows", build))
@@ -579,3 +725,95 @@ class Snapshot:
         counts = self._memo("record_counts", build)
         return None if counts is None else dict(counts)
 
+    # -- checkpoint writing --------------------------------------------------
+
+    def _checkpoint_state(self, tombstone_cutoff_ms: int) -> tuple[list, list]:
+        """(file rows, other rows) a checkpoint records, each row
+        ``{action column: action, "version": its commit}``: the live adds
+        and the newest removes whose ``deletionTimestamp`` is null or at
+        or after ``tombstone_cutoff_ms`` (file rows); the newest metaData
+        and protocol, every commitInfo of the checkpoint and the tail, the
+        dv actions that still hit a live file, the latest txn per appId by
+        (``txn.version``, version) and the latest domainMetadata per
+        domain (other rows)."""
+        live, tombs, at = self._reconciled(None)
+        files = [{"add": live[p], "version": at[p]} for p in sorted(live)]
+        files += [
+            {"remove": tombs[p], "version": at[p]}
+            for p in sorted(tombs)
+            if tombs[p].get("deletionTimestamp") is None
+            or tombs[p]["deletionTimestamp"] >= tombstone_cutoff_ms
+        ]
+        other = []
+        for column, pick in (("protocol", _valid_protocol), ("metaData", lambda m: True)):
+            found = self._newest(column, None, pick)
+            if found is not None:
+                other.append({column: found[1], "version": found[0]})
+        latest: dict = {}  # (column, appId or domain) -> (rank, row)
+        for column, key, rank in (
+            ("txn", "appId", lambda v, t: (t.get("version") is not None, t.get("version") or 0, v)),
+            ("domainMetadata", "domain", lambda v, d: v),
+        ):
+            for v, a in self._every(column, None):
+                k, r = (column, a.get(key)), rank(v, a)
+                if k not in latest or r >= latest[k][0]:
+                    latest[k] = (r, {column: a, "version": v})
+        other += [row for _, row in latest.values()]
+        other += [{"commitInfo": c, "version": v} for v, c in self._every("commitInfo", None)]
+        keep = set(self.live_dv_paths())
+        other += [{"dv": d, "version": v} for v, d in self._every("dv", None) if d.get("path") in keep]
+        return files, other
+
+    def write_checkpoint(
+        self,
+        schema: pa.Schema,
+        tombstone_cutoff_ms: int,
+        rows_per_part: int,
+        v2: bool = False,
+    ) -> int:
+        """Write ``_checkpoint_state`` at the newest version, typed by
+        ``schema`` (the action columns plus ``version``), and point
+        ``_last_checkpoint`` at it; returns that version. v1 writes one
+        file or parts of at most ``rows_per_part`` rows; v2 writes the
+        file rows as ``_sidecars/`` of at most ``rows_per_part`` rows and
+        a top-level file with the other rows plus its index rows. Every
+        file is published by rename; ``_last_checkpoint`` moves last."""
+        version = self.version()
+        if version < 0:
+            raise FileNotFoundError(f"empty delta log: {self.key[0]}")
+        log_dir = os.path.join(self.table_path, LOG_DIR)
+        files, other = self._checkpoint_state(tombstone_cutoff_ms)
+        if not v2:
+            parts = _chunks(other + files, rows_per_part)
+            names = checkpoint_file_names({"version": version, "parts": len(parts)})
+            for rows, name in zip(parts, names):
+                _publish(os.path.join(log_dir, name), arrow_table(rows, schema))
+            info = {"version": version, "size": len(other) + len(files)}
+            if len(parts) > 1:
+                info["parts"] = len(parts)
+        else:
+            os.makedirs(os.path.join(log_dir, "_sidecars"), exist_ok=True)
+            now = int(time.time() * 1000)
+            index = [{"checkpointMetadata": {"version": version}}]
+            for rows in _chunks(files, rows_per_part):
+                name = f"{uuid.uuid4().hex}.parquet"
+                fp = os.path.join(log_dir, "_sidecars", name)
+                _publish(fp, arrow_table(rows, schema))
+                size = os.path.getsize(fp)
+                index.append({"sidecar": {"path": name, "sizeInBytes": size, "modificationTime": now}})
+            top_schema = pa.schema(list(schema) + _V2_INDEX_FIELDS)
+            top_name = f"{version:020d}.checkpoint.{uuid.uuid4().hex}.parquet"
+            _publish(os.path.join(log_dir, top_name), arrow_table(other + index, top_schema))
+            info = {
+                "version": version,
+                "size": len(files) + len(other) + len(index),
+                "format": "v2",
+                "path": top_name,
+            }
+        _publish(os.path.join(log_dir, "_last_checkpoint"), info)
+        if info.get("parts"):
+            # a single-file checkpoint at this version is superseded
+            single = os.path.join(log_dir, checkpoint_file_names({"version": version})[0])
+            if os.path.isfile(single):
+                os.remove(single)
+        return version

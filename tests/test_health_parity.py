@@ -190,7 +190,7 @@ def _multi_column_int(spark, path):
     delta_writer.delete_with_dv(spark, path, "v > 30")
 
 
-def _legacy_escaped(spark, path):
+def _legacy_escaped_log(spark, path):
     """Older writers logged each partition value as its escaped hive
     directory segment ("x%25y", "__HIVE_DEFAULT_PARTITION__"); such
     tables are read as they were written, never rewritten."""
@@ -211,6 +211,10 @@ def _legacy_escaped(spark, path):
     }
     with open(log_file, "w") as fh:
         fh.write("\n".join(json.dumps(a) for a in acts) + "\n")
+
+
+def _legacy_escaped(spark, path):
+    _legacy_escaped_log(spark, path)
     delta_writer.delete_with_dv(spark, path, "v > 40")
 
 
@@ -316,6 +320,20 @@ def test_partition_values_are_logged_unescaped(spark, tmp_path):
     assert sorted(os.listdir(manifest)) == sorted(
         ["p=__HIVE_DEFAULT_PARTITION__", "p=x%25y", "p=plain"]
     )
+
+
+def test_shallow_clone_of_legacy_escaped_table_reads_source_rows(spark, tmp_path):
+    """A shallow clone reads partition values from the log; escaped
+    values an older writer logged decode like the source's directories."""
+    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
+    _legacy_escaped_log(spark, src)
+    delta_writer.clone_shallow(spark, src, dst)
+
+    def rows(t):
+        return sorted(((r.id, r.p, r.k) for r in DeltaLog(spark, t).snapshot().collect()), key=lambda r: r[0])
+
+    assert rows(dst) == rows(src)
+    assert {p for _, p, _ in rows(dst)} == {None, "x%y", "plain"}
 
 
 def test_driver_side_answers_launch_no_spark_job(spark, tmp_path):
