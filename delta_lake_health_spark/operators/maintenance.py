@@ -14,9 +14,11 @@ with no Spark job.
 
 from __future__ import annotations
 
+import json
 import math
 import os
 import time
+import uuid
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -49,6 +51,61 @@ def _table_target_file_size(log: DeltaLog) -> int:
         return TARGET_FILE_SIZE
 
 
+def _live_in_scope(
+    table_path: str, partition_filter: dict | None
+) -> tuple[int, list[dict]]:
+    """(snapshot version, live add actions whose logged partitionValues
+    match ``partition_filter``) — the files an ``OPTIMIZE ... WHERE``
+    may rewrite, from the driver-side log replay."""
+    version, live = delta_writer._snapshot_live(table_path)
+    want = {k: str(v) for k, v in (partition_filter or {}).items()}
+    return version, [
+        a for a in live
+        if all((a.get("partitionValues") or {}).get(k) == v
+               for k, v in want.items())
+    ]
+
+
+def _rewrite_files(
+    log: DeltaLog,
+    version: int,
+    paths: list[str],
+    df,
+    operation: str,
+    parameters: dict,
+    removed_key: str = "numRemovedFiles",
+    metrics: dict | None = None,
+    tags: dict | None = None,
+) -> dict:
+    """Replace the live files ``paths``, read at ``version``, by the rows
+    of ``df``: one write through ``delta_writer._write_files``
+    (dataChange=false; the rows are the table's own, so they are not
+    re-validated), the removes of ``paths`` and a ``commit_mutation``
+    commit, which raises if a commit since ``version`` removed or
+    soft-deleted a file it read or changed the metadata, and rebases
+    over appends. ``tags`` go on every new add. Returns the commit's
+    metrics."""
+    adds, _ = delta_writer._write_files(
+        log.spark, log.table_path, df, log.partition_columns(),
+        data_change=False, validate=False,
+    )
+    if tags:
+        for a in adds:
+            a["add"]["tags"] = tags
+    metrics = {removed_key: len(paths), "numAddedFiles": len(adds),
+               **(metrics or {})}
+    delta_writer.commit_mutation(
+        log.table_path,
+        version,
+        adds
+        + delta_writer._remove_actions(paths, data_change=False)
+        + [delta_writer._commit_info(operation, parameters, metrics)],
+        read_files=set(paths),
+        removed_files=set(paths),
+    )
+    return metrics
+
+
 def compact(
     spark: SparkSession,
     table_path: str,
@@ -69,75 +126,35 @@ def compact(
     log = DeltaLog(spark, table_path)
     if target_file_size is None:
         target_file_size = _table_target_file_size(log)
-    active = log.active_files()
-    if partition_filter:
-        for k, v in partition_filter.items():
-            active = active.where(F.col("partitionValues")[k] == str(v))
-    small = active.where(F.col("size") < small_file_size).collect()
+    version, live = _live_in_scope(table_path, partition_filter)
+    small = [a for a in live if a["size"] < small_file_size]
     if len(small) < 2:
         return {"numRemovedFiles": 0, "numAddedFiles": 0, "skipped": True}
 
-    partition_by = log.partition_columns()
-    total_size = sum(r.size for r in small)
+    total_size = sum(a["size"] for a in small)
     n_out = max(1, math.ceil(total_size / target_file_size))
+    paths = [a["path"] for a in small]
 
     # DV-aware read: compacting raw parquet would resurrect soft-deleted rows
-    df = log.read_data_files([r.path for r in small])
+    df = log.read_data_files(paths)
     cluster_cols = delta_writer.clustering_columns(table_path)
     if cluster_cols:
         # liquid-clustered table (r13): a blind repartition would merge
         # narrow key ranges into wide ones and erase the file pruning
         # the clustering exists for — range-sort the compacted subset by
-        # the declared columns instead (same cost class, one range
-        # shuffle of the small files only). Repartition BEFORE the
-        # physical-name mapping: a column-mapped table's declared
-        # (logical) names would not resolve afterwards (same ordering
-        # rule as delta_writer.write's clustered-ingest path).
+        # the declared (logical) columns instead (same cost class, one
+        # range shuffle of the small files only)
         df = df.repartitionByRange(n_out, *cluster_cols).sortWithinPartitions(
             *cluster_cols
         )
     else:
         df = df.repartition(n_out)
-    df = delta_writer._to_physical(spark, df, table_path)
-    before = delta_writer._list_parquet_rel(table_path)
-    writer = df.write.mode("append")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(table_path)
-    new_files = sorted(delta_writer._list_parquet_rel(table_path).keys() - before)
-
-    now = int(time.time() * 1000)
-    actions = [
-        delta_writer._add_action(table_path, rel, data_change=False)
-        for rel in new_files
-    ]
-    actions += [
-        {
-            "remove": {
-                "path": r.path,
-                "deletionTimestamp": now,
-                "dataChange": False,
-            }
-        }
-        for r in small
-    ]
-    metrics = {
-        "numRemovedFiles": len(small),
-        "numAddedFiles": len(new_files),
-        "numRemovedBytes": total_size,
-    }
-    actions.append(
-        delta_writer._commit_info(
-            "OPTIMIZE",
-            {"targetSize": target_file_size,
-             **({"predicate": str(partition_filter)} if partition_filter else {})},
-            metrics,
-        )
+    return _rewrite_files(
+        log, version, paths, df, "OPTIMIZE",
+        {"targetSize": target_file_size,
+         **({"predicate": str(partition_filter)} if partition_filter else {})},
+        metrics={"numRemovedBytes": total_size},
     )
-    delta_writer._commit(
-        table_path, delta_writer.current_version(table_path) + 1, actions
-    )
-    return metrics
 
 
 def vacuum(
@@ -238,9 +255,12 @@ def vacuum(
                 os.remove(fp)
         for rel in dead_sidecars:
             shutil.rmtree(os.path.join(table_path, rel), ignore_errors=True)
-        delta_writer._commit(
+        # a history record of deletions already made: it reads nothing
+        # a later commit could invalidate, so its base is the newest
+        # version and only a simultaneous commit is checked
+        delta_writer.commit_mutation(
             table_path,
-            delta_writer.current_version(table_path) + 1,
+            delta_writer.current_version(table_path),
             [
                 delta_writer._commit_info(
                     "VACUUM END",
@@ -262,52 +282,15 @@ def apply_deletion_vectors(spark: SparkSession, table_path: str) -> dict:
     remove+add. Retired vectors then reference dead files and become
     no-ops for every reader. The rewrite cost is |affected files|, not
     table size — the purge half of the DV bargain."""
-    from pyspark.sql import functions as F
-
-    log = DeltaLog(spark, table_path)
-    dv = log.deletion_vectors()
-    if dv is None:
-        return {"numRewrittenFiles": 0, "numAddedFiles": 0, "skipped": True}
-    live = log.active_files().select(F.col("path").alias("rel_path"))
-    affected = sorted(
-        r.rel_path
-        for r in dv.join(F.broadcast(live), "rel_path", "left_semi")
-        .select("rel_path")
-        .distinct()
-        .collect()
-    )
+    snap = log_replay.Snapshot(table_path)
+    version, affected = snap.version(), sorted(snap.dv_deleted_rows())
     if not affected:
         return {"numRewrittenFiles": 0, "numAddedFiles": 0, "skipped": True}
-
-    survivors = delta_writer._to_physical(
-        spark, log.read_data_files(affected), table_path
+    log = DeltaLog(spark, table_path)
+    return _rewrite_files(
+        log, version, affected, log.read_data_files(affected),
+        "APPLY DELETION VECTORS", {}, removed_key="numRewrittenFiles",
     )
-
-    partition_by = log.partition_columns()
-    before = delta_writer._list_parquet_rel(table_path)
-    writer = survivors.write.mode("append")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(table_path)
-    new_files = sorted(delta_writer._list_parquet_rel(table_path).keys() - before)
-
-    now = int(time.time() * 1000)
-    actions = [
-        delta_writer._add_action(table_path, rel, data_change=False)
-        for rel in new_files
-    ]
-    actions += [
-        {"remove": {"path": rel, "deletionTimestamp": now, "dataChange": False}}
-        for rel in affected
-    ]
-    metrics = {"numRewrittenFiles": len(affected), "numAddedFiles": len(new_files)}
-    actions.append(
-        delta_writer._commit_info("APPLY DELETION VECTORS", {}, metrics)
-    )
-    delta_writer._commit(
-        table_path, delta_writer.current_version(table_path) + 1, actions
-    )
-    return metrics
 
 
 Z_BITS = 16  # per-column bit budget for the interleaved z-value
@@ -397,24 +380,24 @@ def zorder_cluster(
     log = DeltaLog(spark, table_path)
     if target_file_size is None:
         target_file_size = _table_target_file_size(log)
-    active = log.active_files()
-    if partition_filter:
-        for k, v in partition_filter.items():
-            active = active.where(F.col("partitionValues")[k] == str(v))
-    live = active.collect()
+    version, live = _live_in_scope(table_path, partition_filter)
+    zorder_by = json.dumps(sorted(cluster_cols))
     if incremental and live:
-        clustered_paths = _zcube_member_paths(log, cluster_cols)
-        live = [r for r in live if r.path not in clustered_paths]
-        if len(live) < 1:
+        # ZCUBE members: live files whose add carries a tag for the same
+        # column set
+        n_live = len(live)
+        live = [a for a in live
+                if (a.get("tags") or {}).get("ZCUBE_ZORDER_BY") != zorder_by]
+        if not live:
             return {"numRemovedFiles": 0, "numAddedFiles": 0,
-                    "skipped": True, "alreadyClustered": len(clustered_paths)}
+                    "skipped": True, "alreadyClustered": n_live}
     if not live:
         return {"numRemovedFiles": 0, "numAddedFiles": 0, "skipped": True}
-    partition_by = log.partition_columns()
-    total_size = sum(r.size for r in live)
+    total_size = sum(a["size"] for a in live)
     n_out = max(1, math.ceil(total_size / target_file_size))
+    paths = [a["path"] for a in live]
 
-    df = log.read_data_files([r.path for r in live])
+    df = log.read_data_files(paths)
     if interleaved and len(cluster_cols) > 1:
         zed = df.withColumn("_zval", _zvalue_column(df, cluster_cols))
         clustered = (
@@ -426,44 +409,13 @@ def zorder_cluster(
         clustered = df.repartitionByRange(n_out, *cluster_cols).sortWithinPartitions(
             *cluster_cols
         )
-    clustered = delta_writer._to_physical(spark, clustered, table_path)
-    before = delta_writer._list_parquet_rel(table_path)
-    writer = clustered.write.mode("append")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(table_path)
-    new_files = sorted(delta_writer._list_parquet_rel(table_path).keys() - before)
-
-    now = int(time.time() * 1000)
-    import json as _json
-    import uuid as _uuid
-
-    zcube_tags = {
-        "ZCUBE_ID": _uuid.uuid4().hex,
-        "ZCUBE_ZORDER_BY": _json.dumps(sorted(cluster_cols)),
-    }
-    actions = []
-    for rel in new_files:
-        a = delta_writer._add_action(table_path, rel, data_change=False)
-        a["add"]["tags"] = zcube_tags  # membership for incremental runs
-        actions.append(a)
-    actions += [
-        {"remove": {"path": r.path, "deletionTimestamp": now, "dataChange": False}}
-        for r in live
-    ]
-    metrics = {"numRemovedFiles": len(live), "numAddedFiles": len(new_files)}
-    actions.append(
-        delta_writer._commit_info(
-            "OPTIMIZE",
-            {"zOrderBy": ",".join(cluster_cols),
-             **({"incremental": True} if incremental else {})},
-            metrics,
-        )
+    return _rewrite_files(
+        log, version, paths, clustered, "OPTIMIZE",
+        {"zOrderBy": ",".join(cluster_cols),
+         **({"incremental": True} if incremental else {})},
+        # membership for incremental runs
+        tags={"ZCUBE_ID": uuid.uuid4().hex, "ZCUBE_ZORDER_BY": zorder_by},
     )
-    delta_writer._commit(
-        table_path, delta_writer.current_version(table_path) + 1, actions
-    )
-    return metrics
 
 
 def hilbert_cluster(
@@ -505,18 +457,14 @@ def hilbert_cluster(
     log = DeltaLog(spark, table_path)
     if target_file_size is None:
         target_file_size = _table_target_file_size(log)
-    active = log.active_files()
-    if partition_filter:
-        for k, v in partition_filter.items():
-            active = active.where(F.col("partitionValues")[k] == str(v))
-    live = active.collect()
+    version, live = _live_in_scope(table_path, partition_filter)
     if not live:
         return {"numRemovedFiles": 0, "numAddedFiles": 0, "skipped": True}
-    partition_by = log.partition_columns()
-    total_size = sum(r.size for r in live)
+    total_size = sum(a["size"] for a in live)
     n_out = max(1, math.ceil(total_size / target_file_size))
+    paths = [a["path"] for a in live]
 
-    df = log.read_data_files([r.path for r in live])
+    df = log.read_data_files(paths)
     bounds = df.agg(
         *[F.min(F.col(c).cast("double")).alias(f"lo_{i}")
           for i, c in enumerate(cluster_cols)],
@@ -576,58 +524,10 @@ def hilbert_cluster(
         .sortWithinPartitions("_hkey")
         .drop("_hkey")
     )
-    clustered = delta_writer._to_physical(spark, clustered, table_path)
-    before = delta_writer._list_parquet_rel(table_path)
-    writer = clustered.write.mode("append")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(table_path)
-    new_files = sorted(delta_writer._list_parquet_rel(table_path).keys() - before)
-
-    now = int(time.time() * 1000)
-    actions = [
-        delta_writer._add_action(table_path, rel, data_change=False)
-        for rel in new_files
-    ]
-    actions += [
-        {"remove": {"path": r.path, "deletionTimestamp": now,
-                    "dataChange": False}}
-        for r in live
-    ]
-    metrics = {"numRemovedFiles": len(live), "numAddedFiles": len(new_files)}
-    actions.append(
-        delta_writer._commit_info(
-            "OPTIMIZE",
-            {"hilbertBy": ",".join(cluster_cols), "bits": str(bits)},
-            metrics,
-        )
+    return _rewrite_files(
+        log, version, paths, clustered, "OPTIMIZE",
+        {"hilbertBy": ",".join(cluster_cols), "bits": str(bits)},
     )
-    delta_writer._commit(
-        table_path, delta_writer.current_version(table_path) + 1, actions
-    )
-    return metrics
-
-
-def _zcube_member_paths(log: DeltaLog, cluster_cols: list[str]) -> set[str]:
-    """Live paths whose latest add carries a ZCUBE tag for the same
-    column set — one |files| log pass, no data read."""
-    import json as _json
-
-    from pyspark.sql.window import Window
-
-    want = _json.dumps(sorted(cluster_cols))
-    acts = log.actions()
-    adds = acts.where(F.col("add").isNotNull()).select(
-        F.col("add.path").alias("path"),
-        F.col("add.tags")["ZCUBE_ZORDER_BY"].alias("zby"),
-        "version",
-    )
-    w = Window.partitionBy("path").orderBy(F.desc("version"))
-    latest = (
-        adds.withColumn("rn", F.row_number().over(w))
-        .where((F.col("rn") == 1) & (F.col("zby") == want))
-    )
-    return {r.path for r in latest.select("path").collect()}
 
 
 def compute_stats(spark: SparkSession, table_path: str) -> dict:
@@ -636,48 +536,24 @@ def compute_stats(spark: SparkSession, table_path: str) -> dict:
     ``stats`` are missing or empty — e.g. a table written by a
     stats-less foreign writer, where every scan plan falls back to
     conservative keep-everything skipping. Metadata-only: reads parquet
-    FOOTERS, never data; the re-adds pair with same-version removes so
-    the incremental .crc checksum stays exact (same trick as the
-    row-tracking backfill). Returns ``{"numFilesBackfilled": n}``."""
+    FOOTERS, never data; the re-adds pair with same-version removes and
+    keep the files' tags and row ids (``delta_writer._readd_actions``,
+    shared with the row-tracking backfill). Returns
+    ``{"numFilesBackfilled": n}``."""
     delta_writer._require_writable(spark, table_path)
-    log = DeltaLog(spark, table_path)
-    need = [
-        r.path
-        for r in log.active_files().collect()
-        if r.num_records is None
-    ]
+    version, live = delta_writer._snapshot_live(table_path)
+    need = [a for a in live if log_replay._num_records(a.get("stats")) is None]
     if not need:
         return {"numFilesBackfilled": 0}
-    now = int(time.time() * 1000)
-    # metadata-only re-adds carry forward the previous add's tags and
-    # row-tracking ids — the file's rows did not move, so reassigning
-    # ids (or dropping ZCUBE membership) would be silent corruption
-    carried = delta_writer._latest_add_fields(log, set(need))
-    actions = []
-    for rel in sorted(need):
-        a = delta_writer._add_action(table_path, rel, data_change=False)
-        keep = carried.get(rel, {})
-        if keep.get("tags"):
-            a["add"]["tags"] = keep["tags"]
-        if "baseRowId" in keep:
-            a["add"]["baseRowId"] = keep["baseRowId"]
-            a["add"]["defaultRowCommitVersion"] = keep.get(
-                "defaultRowCommitVersion"
-            )
-            a["add"][delta_writer.PRESERVE_ROW_ID_FLAG] = True
-        actions.append(a)
-    actions += [
-        {"remove": {"path": rel.replace(os.sep, "/"),
-                    "deletionTimestamp": now, "dataChange": False}}
-        for rel in sorted(need)
-    ]
-    actions.append(
-        delta_writer._commit_info(
+    delta_writer.commit_mutation(
+        table_path,
+        version,
+        delta_writer._readd_actions(table_path, need)
+        + [delta_writer._commit_info(
             "COMPUTE STATISTICS", {}, {"numFilesBackfilled": len(need)}
-        )
-    )
-    delta_writer._commit(
-        table_path, delta_writer.current_version(table_path) + 1, actions
+        )],
+        read_files={a["path"] for a in need},
+        removed_files={a["path"] for a in need},
     )
     return {"numFilesBackfilled": len(need)}
 
@@ -702,15 +578,14 @@ def restore(spark: SparkSession, table_path: str, to_version: int) -> dict:
     """
     log = DeltaLog(spark, table_path)
     delta_writer._refuse_append_only(spark, table_path, "RESTORE")
-    cur_version = delta_writer.current_version(table_path)
+    snap = log_replay.Snapshot(table_path)
+    cur_version = snap.version()
     if to_version < 0 or to_version > cur_version:
         raise ValueError(
             f"cannot restore to version {to_version}: table is at {cur_version}"
         )
-    old_live = {
-        r.path for r in log.active_files(as_of=to_version).select("path").collect()
-    }
-    cur_live = {r.path for r in log.active_files().select("path").collect()}
+    old_live = {a["path"] for a in snap._live_adds(to_version)}
+    cur_live = {a["path"] for a in snap._live_adds()}
     missing = [
         p for p in sorted(old_live)
         if not os.path.isfile(os.path.join(table_path, p))
@@ -753,8 +628,10 @@ def restore(spark: SparkSession, table_path: str, to_version: int) -> dict:
 
     old_meta = log.metadata(as_of=to_version)
     partition_by = old_meta.get("partition_columns", [])
-    new_files: list[str] = []
+    rewritten: list[dict] = []
     if tainted:
+        # the files' own (physical) columns, as of ``to_version``: a
+        # copy of committed rows, not re-validated
         df = spark.read.option("basePath", table_path).parquet(
             *[os.path.join(table_path, p) for p in sorted(tainted)]
         )
@@ -762,12 +639,9 @@ def restore(spark: SparkSession, table_path: str, to_version: int) -> dict:
         if early_dv is not None:
             out_cols = df.columns
             df = log._apply_dv(df, early_dv).select(*out_cols)
-        before = delta_writer._list_parquet_rel(table_path)
-        writer = df.write.mode("append")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(table_path)
-        new_files = sorted(delta_writer._list_parquet_rel(table_path).keys() - before)
+        rewritten, _ = delta_writer._write_files(
+            spark, table_path, df, partition_by, validate=False, physical=False
+        )
 
     now = int(time.time() * 1000)
     readds = sorted((old_live - cur_live) - tainted)
@@ -788,13 +662,8 @@ def restore(spark: SparkSession, table_path: str, to_version: int) -> dict:
                 }
             }
         )
-    actions += [
-        delta_writer._add_action(table_path, rel) for rel in readds + new_files
-    ]
-    actions += [
-        {"remove": {"path": rel, "deletionTimestamp": now, "dataChange": True}}
-        for rel in removes
-    ]
+    actions += [delta_writer._add_action(table_path, rel) for rel in readds]
+    actions += rewritten + delta_writer._remove_actions(removes)
     metrics = {
         "numRestoredFiles": len(readds),
         "numRemovedFiles": len(removes),
@@ -803,7 +672,10 @@ def restore(spark: SparkSession, table_path: str, to_version: int) -> dict:
     actions.append(
         delta_writer._commit_info("RESTORE", {"version": to_version}, metrics)
     )
-    delta_writer._commit(table_path, cur_version + 1, actions)
+    delta_writer.commit_mutation(
+        table_path, cur_version, actions,
+        read_files=cur_live, removed_files=set(removes),
+    )
     return metrics
 
 
@@ -945,8 +817,8 @@ def fsck_repair(
     ``dry_run`` reports without committing. Returns
     ``{"numMissingFiles": n, "repaired": bool}``."""
     delta_writer._require_writable(spark, table_path)
-    log = DeltaLog(spark, table_path)
-    live = [r.path for r in log.active_files().select("path").collect()]
+    version, adds = delta_writer._snapshot_live(table_path)
+    live = [a["path"] for a in adds]
     missing = [
         p
         for p in live
@@ -956,19 +828,15 @@ def fsck_repair(
     ]
     if dry_run or not missing:
         return {"numMissingFiles": len(missing), "repaired": False}
-    now = int(time.time() * 1000)
-    actions = [
-        {"remove": {"path": p.replace(os.sep, "/"),
-                    "deletionTimestamp": now, "dataChange": True}}
-        for p in sorted(missing)
-    ]
-    actions.append(
-        delta_writer._commit_info(
+    delta_writer.commit_mutation(
+        table_path,
+        version,
+        delta_writer._remove_actions(missing)
+        + [delta_writer._commit_info(
             "FSCK", {"dryRun": "false"}, {"numRemovedFiles": len(missing)}
-        )
-    )
-    delta_writer._commit(
-        table_path, delta_writer.current_version(table_path) + 1, actions
+        )],
+        read_files=set(live),
+        removed_files=set(missing),
     )
     return {"numMissingFiles": len(missing), "repaired": True}
 
@@ -1001,6 +869,7 @@ def reorg_purge(spark: SparkSession, table_path: str) -> dict:
     dv_metrics = apply_deletion_vectors(spark, table_path)
 
     log = DeltaLog(spark, table_path)
+    version, live = delta_writer._snapshot_live(table_path)
     schema = log.metadata().get("schema") or {}
     physical = {
         (f.get("metadata") or {}).get(
@@ -1010,7 +879,7 @@ def reorg_purge(spark: SparkSession, table_path: str) -> dict:
     }
     part_cols = set(log.partition_columns())
     keep = physical | part_cols
-    live_rel = [a["path"] for a in log.live_add_actions()]
+    live_rel = [a["path"] for a in live]
 
     def _probe(batches):
         # One parquet FOOTER read per file, executed as distributed
@@ -1046,35 +915,12 @@ def reorg_purge(spark: SparkSession, table_path: str) -> dict:
     if not stale:
         return out
 
-    survivors = delta_writer._to_physical(
-        spark, log.read_data_files(sorted(stale)), table_path
+    stale = sorted(stale)
+    metrics = _rewrite_files(
+        log, version, stale, log.read_data_files(stale), "REORG",
+        {"applyPurge": "true"}, removed_key="numPurgedFiles",
     )
-    partition_by = log.partition_columns()
-    before = delta_writer._list_parquet_rel(table_path)
-    writer = survivors.write.mode("append")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(table_path)
-    new_files = sorted(delta_writer._list_parquet_rel(table_path).keys() - before)
-
-    now = int(time.time() * 1000)
-    actions = [
-        delta_writer._add_action(table_path, rel, data_change=False)
-        for rel in new_files
-    ]
-    actions += [
-        {"remove": {"path": rel, "deletionTimestamp": now,
-                    "dataChange": False}}
-        for rel in sorted(stale)
-    ]
-    metrics = {"numPurgedFiles": len(stale), "numAddedFiles": len(new_files)}
-    actions.append(
-        delta_writer._commit_info("REORG", {"applyPurge": "true"}, metrics)
-    )
-    delta_writer._commit(
-        table_path, delta_writer.current_version(table_path) + 1, actions
-    )
-    out["numAddedFiles"] += len(new_files)
+    out["numAddedFiles"] += metrics["numAddedFiles"]
     return out
 
 

@@ -20,8 +20,13 @@ no ``_change_data`` folder ("CDF without CDF"):
   positions (each sidecar carries only the positions newly deleted at
   its commit, see ``delta_writer.delete_with_dv``).
 
-Rewrite commits (MERGE) therefore surface as delete+insert pairs —
-the same granularity Delta reports for merges without CDF enabled.
+A copy-on-write DELETE or UPDATE rewrites whole files, so most rows of
+its removed files come back unchanged in its added files. Those pairs
+are netted within the commit (multiset ``EXCEPT ALL`` both ways): the
+feed reports the rows the commit deleted, and an UPDATE's changed rows
+as delete+insert pairs. MERGE rewrites surface as whole-file
+delete+insert pairs — the same granularity Delta reports for merges
+without CDF enabled.
 Compaction / z-order / checkpointing emit ``dataChange = false`` actions
 and produce no rows here, which is what makes the feed safe to drive
 incremental aggregates: maintenance never perturbs them.
@@ -45,12 +50,15 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import MapType, StructType, VariantType
 
 from delta_lake_health_spark.sources.delta_log import DeltaLog
+from delta_lake_health_spark.sources.delta_writer import schema_has
 
 CHANGE_TYPE = "_change_type"
 COMMIT_VERSION = "_commit_version"
+# copy-on-write operations whose rewritten survivors are netted out
+NETTED_OPERATIONS = ("DELETE", "UPDATE")
 
 
 def _read_raw(
@@ -85,7 +93,8 @@ def changed_actions(
     log: DeltaLog, from_version: int, to_version: int
 ) -> list[dict]:
     """Per-version data-changing action lists in [from, to], driver-side:
-    ``[{"version", "adds", "removes", "dvs"}, ...]`` (paths only)."""
+    ``[{"version", "operation", "adds", "removes", "dvs", "cdcs"}, ...]``
+    (paths only; ``operation`` from the commitInfo, None without one)."""
     log.require_history_from(from_version)
     acts = log.actions(use_checkpoint=False).where(
         (F.col("version") >= from_version) & (F.col("version") <= to_version)
@@ -98,14 +107,17 @@ def changed_actions(
         ),
         F.col("dv.path").alias("dv_path"),
         F.col("cdc.path").alias("cdc_path"),
+        F.col("commitInfo.operation").alias("operation"),
     ).collect()
     by_v: dict[int, dict] = {}
     for r in rows:
         slot = by_v.setdefault(
             r.version,
-            {"version": r.version, "adds": [], "removes": [], "dvs": [],
-             "cdcs": []},
+            {"version": r.version, "operation": None, "adds": [],
+             "removes": [], "dvs": [], "cdcs": []},
         )
+        if r.operation is not None:
+            slot["operation"] = r.operation
         if r.add_path is not None:
             slot["adds"].append(r.add_path)
         if r.remove_path is not None:
@@ -172,8 +184,9 @@ def row_changes(
                 cdc.withColumn(COMMIT_VERSION, F.lit(v).cast("long"))
             )
             continue
+        inserts = deletes = None
         if slot["adds"]:
-            parts.append(_tag(_read_raw(log, slot["adds"], v, False), "insert", v))
+            inserts = _read_raw(log, slot["adds"], v, False)
         if slot["removes"]:
             # correctness of the prior-DV exclusion below needs the FULL
             # dv history; after log cleanup it can't be proven complete
@@ -193,9 +206,21 @@ def row_changes(
                     ["_rel_path", "_row_index"],
                     "left_anti",
                 )
-            parts.append(
-                _tag(df.drop("_rel_path", "_row_index"), "delete", v)
+            deletes = df.drop("_rel_path", "_row_index")
+        if (
+            inserts is not None
+            and deletes is not None
+            and slot["operation"] in NETTED_OPERATIONS
+            # Spark's set operations refuse to compare these types
+            and not schema_has(inserts.schema, (MapType, VariantType))
+        ):
+            inserts, deletes = (
+                inserts.exceptAll(deletes), deletes.exceptAll(inserts)
             )
+        if inserts is not None:
+            parts.append(_tag(inserts, "insert", v))
+        if deletes is not None:
+            parts.append(_tag(deletes, "delete", v))
         if slot["dvs"]:
             pos = _dv_positions(log, slot["dvs"])
             touched = sorted({r.rel_path for r in pos.select("rel_path").distinct().collect()})

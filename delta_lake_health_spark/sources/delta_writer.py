@@ -31,6 +31,7 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import VariantType
 
 from delta_lake_health_spark.sources import log_replay
 from delta_lake_health_spark.sources.log_replay import LOG_DIR
@@ -1469,7 +1470,7 @@ def set_generated_column(
 
 def _fill_generated_columns(spark: SparkSession, df: DataFrame, table_path: str):
     """Compute generated columns the batch omitted (Delta writer
-    behavior); provided values are checked in ``_validate_constraints``."""
+    behavior); provided values are checked by ``_write_files``."""
     from pyspark.sql import functions as F
 
     from delta_lake_health_spark.sources.delta_log import DeltaLog
@@ -1844,37 +1845,109 @@ def _raise_constraint_violations(row, checks, not_null, gens) -> None:
             )
 
 
-def _validate_constraints(spark: SparkSession, df: DataFrame, table_path: str):
-    """One pass over the batch being written (NOT the table): every CHECK
-    constraint and every non-nullable logged column is folded into a
-    single aggregate of violation counts — map-side partials, one tiny
-    shuffle, regardless of how many constraints exist. (``write()`` fuses
-    this into the data-write job via Observation instead — r14; the
-    standalone pass remains for the update/merge/copy-into rewrites.)"""
-    agg = _constraint_aggs(spark, df, table_path)
-    if agg is None:
-        return
-    aggs, checks, not_null, gens = agg
-    row = df.agg(*aggs).collect()[0]
-    _raise_constraint_violations(row, checks, not_null, gens)
+# A boolean column a rewrite may carry for its own observed aggregates
+# (UPDATE: the row matched; MERGE: the row comes from the source).
+# _write_files drops it after the observation, before the write.
+REWRITE_MARK = "__rewrite_mark__"
 
 
-def _schema_has_variant(dt) -> bool:
-    """True when ``dt`` (a DataType or StructType) contains a
-    VariantType anywhere — top-level, nested in structs, or inside
-    array/map element types."""
+def _write_files(
+    spark: SparkSession,
+    table_path: str,
+    df: DataFrame,
+    partition_by: list[str],
+    data_change: bool = True,
+    validate: bool = True,
+    aggs: list | None = None,
+    physical: bool = True,
+) -> tuple[list[dict], dict]:
+    """Write ``df`` as new data files of the table; returns (their add
+    actions, the observed values). The one file-writing path of every
+    operation that adds data files — write, DML and the maintenance
+    rewrites. In order:
+
+    1. one ``Observation`` rides on the write job: the caller's named
+       ``aggs`` plus, when ``validate``, the table's CHECK / NOT NULL /
+       generated-column violation counts (``_constraint_aggs``) — no
+       separate validation pass over the batch;
+    2. ``df`` (minus ``REWRITE_MARK``, in physical column names unless
+       ``physical`` is False) is written with ``partition_by``;
+    3. the new files are the table folder's listing minus the one taken
+       before the write;
+    4. on a violation those files, their hidden Hadoop checksums and the
+       partition directories they emptied are deleted before raising,
+       so a refused batch leaves no debris;
+    5. their add actions carry ``dataChange = data_change``.
+
+    The observation is read only after the write job that computes it,
+    so ``Observation.get`` never waits on a plan that is not run."""
+    aggs = list(aggs or [])
+    check = _constraint_aggs(spark, df, table_path) if validate else None
+    if check is not None:
+        aggs += check[0]
+    obs = None
+    if aggs:
+        from pyspark.sql import Observation
+
+        obs = Observation()
+        df = df.observe(obs, *aggs)
+    if REWRITE_MARK in df.columns:
+        df = df.drop(REWRITE_MARK)
+    if physical:
+        df = _to_physical(spark, df, table_path)
+    before = _list_parquet_rel(table_path)
+    writer = df.write.mode("append")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(table_path)
+    new_files = sorted(_list_parquet_rel(table_path).keys() - before)
+    try:
+        observed = obs.get if obs is not None else {}
+        if check is not None:
+            _raise_constraint_violations(observed, *check[1:])
+    except Exception:
+        for rel in new_files:
+            head, name = os.path.split(os.path.join(table_path, rel))
+            for n in (name, f".{name}.crc"):
+                try:
+                    os.remove(os.path.join(head, n))
+                except OSError:
+                    pass
+        for d in {os.path.dirname(rel) for rel in new_files}:
+            while d:
+                try:
+                    os.rmdir(os.path.join(table_path, d))
+                except OSError:
+                    break  # not empty: it holds committed files
+                d = os.path.dirname(d)
+        raise
+    return [_add_action(table_path, rel, data_change) for rel in new_files], observed
+
+
+def _remove_actions(paths, data_change: bool = True) -> list[dict]:
+    """One remove action per path, sorted, stamped now."""
+    now = int(time.time() * 1000)
+    return [
+        {"remove": {"path": p.replace(os.sep, "/"), "deletionTimestamp": now,
+                    "dataChange": data_change}}
+        for p in sorted(paths)
+    ]
+
+
+def schema_has(dt, types: tuple) -> bool:
+    """True when ``dt`` (a DataType or StructType) contains an instance
+    of one of ``types`` anywhere — top-level, nested in structs, or
+    inside array/map element types."""
     from pyspark.sql import types as T
 
-    if isinstance(dt, T.VariantType):
+    if isinstance(dt, types):
         return True
     if isinstance(dt, T.StructType):
-        return any(_schema_has_variant(f.dataType) for f in dt.fields)
+        return any(schema_has(f.dataType, types) for f in dt.fields)
     if isinstance(dt, T.ArrayType):
-        return _schema_has_variant(dt.elementType)
+        return schema_has(dt.elementType, types)
     if isinstance(dt, T.MapType):
-        return _schema_has_variant(dt.keyType) or _schema_has_variant(
-            dt.valueType
-        )
+        return schema_has(dt.keyType, types) or schema_has(dt.valueType, types)
     return False
 
 
@@ -1990,20 +2063,6 @@ def write(
                 # partitionColumns or readers keep injecting the old ones
                 schema_changed = True
 
-    # constraint validation FUSED into the data-write job (r14, guide
-    # §2.4: remove a whole batch pass): the violation-count aggregates
-    # ride as an Observation on the plan that the parquet write
-    # executes; the counts are checked after the write and BEFORE the
-    # commit, so a violating batch still never commits (its uncommitted
-    # files are unlinked below — same no-debris outcome as the old
-    # standalone pre-pass, one batch scan cheaper).
-    constraint_check = _constraint_aggs(spark, df, table_path)
-    constraint_obs = None
-    if constraint_check is not None:
-        from pyspark.sql import Observation
-
-        constraint_obs = Observation()
-        df = df.observe(constraint_obs, *constraint_check[0])
     if cluster_by is None and version >= 0:
         # liquid clustering: a clustered table's declared columns apply
         # to every ingest that doesn't choose its own layout (skipped
@@ -2012,18 +2071,14 @@ def write(
         if declared and all(c in df.columns for c in declared):
             cluster_by = declared
     if cluster_by:
-        # BEFORE _to_physical: cluster columns are LOGICAL names (a
-        # renamed table's physical names would not resolve). Partition
-        # count follows the incoming batch, not the shuffle default —
-        # inheriting 200 would shred a small batch into tiny files.
+        # on LOGICAL names (a renamed table's physical names would not
+        # resolve). Partition count follows the incoming batch, not the
+        # shuffle default — inheriting 200 would shred a small batch
+        # into tiny files.
         n_out = max(1, df.rdd.getNumPartitions())
         df = df.repartitionByRange(n_out, *cluster_by).sortWithinPartitions(
             *cluster_by
         )
-    if not (mode == "overwrite" and schema_changed):
-        # files carry physical names; a schema-REPLACING overwrite resets
-        # the mapping (its metaData is re-emitted from the new df schema)
-        df = _to_physical(spark, df, table_path)
     if version >= 0 and cluster_by is None:
         # delta.autoOptimize.optimizeWrite: size the batch's output
         # partition count to the target file size BEFORE writing, so
@@ -2069,40 +2124,15 @@ def write(
     # the shredded parquet encoding is unreadable without it). A real
     # type walk, not a schema-JSON substring test — a plain column
     # NAMED "variant" must not gate anything.
-    needs_variant = _schema_has_variant(df.schema)
+    needs_variant = schema_has(df.schema, (VariantType,))
 
-    before = _list_parquet_rel(table_path)
-    writer = df.write.mode("append")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(table_path)
-    new_files = sorted(_list_parquet_rel(table_path).keys() - before)
-    if constraint_obs is not None:
-        _, checks, not_null, gens = constraint_check
-        try:
-            _raise_constraint_violations(
-                constraint_obs.get, checks, not_null, gens
-            )
-        except Exception:
-            # a violating batch leaves no debris: its files with their
-            # hidden Hadoop checksums, then the partition directories it
-            # created and emptied
-            for rel in new_files:
-                head, name = os.path.split(os.path.join(table_path, rel))
-                for n in (name, f".{name}.crc"):
-                    try:
-                        os.remove(os.path.join(head, n))
-                    except OSError:
-                        pass
-            for d in {os.path.dirname(rel) for rel in new_files}:
-                while d:
-                    try:
-                        os.rmdir(os.path.join(table_path, d))
-                    except OSError:
-                        break  # not empty: it holds committed files
-                    d = os.path.dirname(d)
-            raise
-    adds = [_add_action(table_path, rel) for rel in new_files]
+    # files carry physical names; a schema-REPLACING overwrite resets the
+    # mapping (its metaData is re-emitted from the new df schema)
+    adds, _ = _write_files(
+        spark, table_path, df, partition_by,
+        physical=not (mode == "overwrite" and schema_changed),
+    )
+    new_files = {a["add"]["path"] for a in adds}
     n_records = sum(json.loads(a["add"]["stats"])["numRecords"] for a in adds)
 
     for attempt in range(max_commit_retries + 1):
@@ -2111,7 +2141,7 @@ def write(
             _refuse_append_only(spark, table_path, "OVERWRITE")
             removed = [
                 p for p in _active_rel_paths(spark, table_path)
-                if p not in set(new_files)
+                if p not in new_files
             ]
         actions: list[dict] = []
         next_version = version + 1
@@ -2173,17 +2203,11 @@ def write(
                         _identity_fields(meta_at_validation, hwm_updates),
                     )
                 )
-        actions.extend(adds)
-        now = int(time.time() * 1000)
-        for rel in removed:
-            actions.append(
-                {"remove": {"path": rel, "deletionTimestamp": now,
-                            "dataChange": True}}
-            )
+        actions += adds + _remove_actions(removed)
         if txn_app_id is not None:
             actions.append(
                 {"txn": {"appId": txn_app_id, "version": txn_version,
-                         "lastUpdated": now}}
+                         "lastUpdated": int(time.time() * 1000)}}
             )
         actions.append(
             _commit_info(
@@ -2234,82 +2258,108 @@ def write(
     raise AssertionError("unreachable")
 
 
-def delete(spark: SparkSession, table_path: str, predicate: str) -> int:
-    """Delete rows matching ``predicate`` (SQL string). Rewrites only the
-    files that contain matching rows (file-pruned via a per-file match
-    count), commits remove+add with operation DELETE."""
-    _require_writable(spark, table_path)
-    _refuse_append_only(spark, table_path, "DELETE")
+def _snapshot_live(table_path: str) -> tuple[int, list[dict]]:
+    """(version, live add actions — shared, read-only) of one log
+    listing: the snapshot a read-modify-write operation reads and later
+    commits against (``commit_mutation``'s base version; its read set
+    is drawn from these files)."""
+    snap = log_replay.Snapshot(table_path)
+    return snap.version(), snap._live_adds()
 
+
+def _readd_actions(table_path: str, live: list[dict]) -> list[dict]:
+    """Metadata-only re-adds of unchanged live files (dataChange=false,
+    fresh footer stats), each paired with a same-version remove: the
+    add outranks it, so the file stays live and the incremental .crc
+    checksum nets to zero. A re-add carries the file's ``tags`` (ZCUBE
+    membership) and keeps its row-tracking ids — its rows did not move,
+    so reassigning them would be silent corruption."""
+    out = []
+    for old in sorted(live, key=lambda a: a["path"]):
+        a = _add_action(table_path, old["path"], data_change=False)
+        if old.get("tags"):
+            a["add"]["tags"] = dict(old["tags"])
+        if old.get("baseRowId") is not None:
+            a["add"]["baseRowId"] = int(old["baseRowId"])
+            a["add"]["defaultRowCommitVersion"] = old.get(
+                "defaultRowCommitVersion"
+            )
+            a["add"][PRESERVE_ROW_ID_FLAG] = True
+        out.append(a)
+    return out + _remove_actions([a["path"] for a in live], data_change=False)
+
+
+def _rel_paths(df: DataFrame) -> set[str]:
+    """The distinct ``_rel_path`` of a lineage-tagged snapshot's rows."""
+    return {r._rel_path for r in df.select("_rel_path").distinct().collect()}
+
+
+def _rewrite_matching(
+    spark: SparkSession,
+    table_path: str,
+    predicate: str,
+    operation: str,
+    count_metric: str,
+    rewrite,
+) -> int:
+    """DELETE and UPDATE: find the live files holding a row that matches
+    ``predicate`` (the DV-aware lineage scan), have
+    ``rewrite(log, hit_files)`` write their replacement rows through
+    ``_write_files`` — it returns (add actions, extra actions, extra
+    metrics) — and commit them with the removes of the hit files through
+    ``commit_mutation``. No match commits the bare operation with
+    ``count_metric`` 0."""
     from pyspark.sql import functions as F
 
     from delta_lake_health_spark.sources.delta_log import DeltaLog
 
     log = DeltaLog(spark, table_path)
-    base_version = current_version(table_path)
-    read_files = {p.replace(os.sep, "/") for p in _active_rel_paths(spark, table_path)}
-    snap = log.snapshot_with_positions()
-    hit_files = {
-        r._rel_path
-        for r in snap.where(F.expr(predicate))
-        .select("_rel_path")
-        .distinct()
-        .collect()
-    }
-    version = base_version
-    if not hit_files:
-        _commit(
-            table_path,
-            version + 1,
-            [_commit_info("DELETE", {"predicate": predicate},
-                          {"numRemovedFiles": 0, "numDeletedRows": 0})],
-        )
-        return version + 1
-
-    cdc_rel: str | None = None
-    if _cdf_enabled(log.metadata()):
-        # read only the HIT files (DV-aware, like the survivor rewrite) —
-        # filtering the full snapshot would make the change-data write
-        # scan the table instead of ∝ |changed rows|
-        change = (
-            log.read_data_files(sorted(hit_files))
-            .where(F.expr(predicate))
-            .withColumn("_change_type", F.lit("delete"))
-        )
-        cdc_rel = _write_change_data(spark, table_path, change)
-
-    # rewrite survivors of the hit files only, preserving partitioning;
-    # DV-aware read so soft-deleted positions don't resurrect
-    survivors = log.read_data_files(sorted(hit_files)).where(~F.expr(predicate))
-    survivors = _to_physical(spark, survivors, table_path)
-    partition_by = log.partition_columns()
-    before = _list_parquet_rel(table_path)
-    writer = survivors.write.mode("append")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(table_path)
-    new_files = sorted(_list_parquet_rel(table_path).keys() - before)
-
-    now = int(time.time() * 1000)
-    actions = [_add_action(table_path, rel) for rel in new_files]
-    actions += [
-        {"remove": {"path": rel.replace(os.sep, "/"), "deletionTimestamp": now,
-                    "dataChange": True}}
-        for rel in sorted(hit_files)
-    ]
-    if cdc_rel is not None:
-        actions.append(_cdc_action(table_path, cdc_rel))
-    actions.append(
-        _commit_info("DELETE", {"predicate": predicate},
-                     {"numRemovedFiles": len(hit_files),
-                      "numAddedFiles": len(new_files)})
-    )
+    version, live = _snapshot_live(table_path)
+    read_files = {a["path"] for a in live}
+    hits = _rel_paths(log.snapshot_with_positions().where(F.expr(predicate)))
+    params = {"predicate": predicate}
+    if not hits:
+        actions = [_commit_info(operation, params,
+                                {"numRemovedFiles": 0, count_metric: 0})]
+    else:
+        adds, extra, metrics = rewrite(log, sorted(hits))
+        actions = adds + _remove_actions(hits) + extra + [
+            _commit_info(operation, params,
+                         {"numRemovedFiles": len(hits),
+                          "numAddedFiles": len(adds), **metrics})
+        ]
     return commit_mutation(
-        table_path,
-        version,
-        actions,
-        read_files=read_files,
-        removed_files={p.replace(os.sep, "/") for p in hit_files},
+        table_path, version, actions, read_files=read_files, removed_files=hits
+    )
+
+
+def delete(spark: SparkSession, table_path: str, predicate: str) -> int:
+    """Delete rows matching ``predicate`` (SQL string). Rewrites only the
+    files that contain matching rows, keeping every row the predicate
+    does not hold for (NULL included), and commits remove+add with
+    operation DELETE."""
+    _require_writable(spark, table_path)
+    _refuse_append_only(spark, table_path, "DELETE")
+
+    from pyspark.sql import functions as F
+
+    matches = F.coalesce(F.expr(predicate), F.lit(False))
+
+    def rewrite(log, hit_files):
+        # DV-aware read of the hit files only: soft-deleted positions
+        # don't resurrect, and the change data is ∝ |changed rows|
+        rows = log.read_data_files(hit_files)
+        adds, _ = _write_files(
+            spark, table_path, rows.where(~matches), log.partition_columns()
+        )
+        cdc = []
+        if _cdf_enabled(log.metadata()):
+            change = rows.where(matches).withColumn("_change_type", F.lit("delete"))
+            cdc = [_cdc_action(table_path, _write_change_data(spark, table_path, change))]
+        return adds, cdc, {}
+
+    return _rewrite_matching(
+        spark, table_path, predicate, "DELETE", "numDeletedRows", rewrite
     )
 
 
@@ -2334,19 +2384,19 @@ def merge(
     = the source's partition range). Only files actually containing such
     rows are rewritten, same pruning as the match side.
 
-    Implementation: rewrite only the files containing matched keys (same
-    file pruning as delete) or condition-qualified unmatched rows,
-    dropping their matched/deleted rows, then append the full source.
-    One distributed semi-join to find hit files, one rewrite job, one
-    commit. Hit-file detection and the survivor read both go through the
-    DV-aware log reader (``snapshot_with_positions`` /
-    ``read_data_files``) — a plain ``snapshot()`` scan cannot resolve
-    ``_metadata.file_path`` after its DV anti-join, and a raw parquet
-    survivor read would resurrect soft-deleted rows into rewritten files.
+    Implementation: find the files containing matched keys (one
+    distributed semi-join; one more for the not-matched-by-source
+    clause), then write their survivors (matched and deleted rows
+    dropped) together with the full source in ONE job through
+    ``_write_files`` — its observation carries the constraint check and
+    the identity high-water marks — and make one commit. Hit-file
+    detection and the survivor read both go through the DV-aware log
+    reader (``snapshot_with_positions`` / ``read_data_files``) — a plain
+    ``snapshot()`` scan cannot resolve ``_metadata.file_path`` after its
+    DV anti-join, and a raw parquet survivor read would resurrect
+    soft-deleted rows into rewritten files.
     """
     _require_writable(spark, table_path)
-
-    import time as _time
 
     from pyspark.sql import functions as F
 
@@ -2359,13 +2409,10 @@ def merge(
         last = log.last_txn_version(txn_app_id)
         if last is not None and txn_version <= last:
             return current_version(table_path)  # replay of a committed batch
-    base_version = current_version(table_path)
-    read_files = {
-        p.replace(os.sep, "/") for p in _active_rel_paths(spark, table_path)
-    }
+    base_version, live = _snapshot_live(table_path)
+    read_files = {a["path"] for a in live}
     source = _fill_generated_columns(spark, source, table_path)
     merge_meta = log.metadata()
-    identity_updates: dict[str, int] = {}
     id_specs = _identity_specs(merge_meta.get("schema"))
     if id_specs:
         # MERGE is a whole-row upsert here: the source must carry every
@@ -2385,53 +2432,61 @@ def merge(
                 "MERGE is a whole-row upsert: the source must provide "
                 f"the identity column(s) {missing}"
             )
-        row = source.agg(
-            *[
-                (F.max(c) if s["step"] > 0 else F.min(c)).alias(c)
-                for c, s in id_specs.items()
-            ]
-        ).collect()[0]
-        for c, s in id_specs.items():
-            if row[c] is None:
-                continue
-            seen = int(row[c])
-            hwm = s["hwm"] if s["hwm"] is not None else s["start"] - s["step"]
-            if (s["step"] > 0 and seen > hwm) or (s["step"] < 0 and seen < hwm):
-                identity_updates[c] = seen
-    _validate_constraints(spark, source, table_path)
-    partition_by = log.partition_columns()
     keys = source.select(*key_cols).distinct()
     snap = log.snapshot_with_positions()
-    hit_files = {
-        r._rel_path
-        for r in snap.join(F.broadcast(keys), key_cols, "left_semi")
-        .select("_rel_path")
-        .distinct()
-        .collect()
-    }
-    if not_matched_by_source_delete is not None:
+    hit_files = _rel_paths(snap.join(F.broadcast(keys), key_cols, "left_semi"))
+    # delete only when the condition is TRUE: a NULL condition keeps the
+    # row (Delta's clause semantics) — bare ~expr would turn NULL into
+    # filtered-out, i.e. silent data loss
+    deletes = (
+        None if not_matched_by_source_delete is None
+        else F.coalesce(F.expr(not_matched_by_source_delete), F.lit(False))
+    )
+    if deletes is not None:
         # files holding unmatched rows the delete condition qualifies
-        hit_files |= {
-            r._rel_path
-            for r in snap.join(F.broadcast(keys), key_cols, "left_anti")
-            .where(F.expr(not_matched_by_source_delete))
-            .select("_rel_path")
-            .distinct()
-            .collect()
-        }
+        hit_files |= _rel_paths(
+            snap.join(F.broadcast(keys), key_cols, "left_anti").where(deletes)
+        )
 
+    rows = source.withColumn(REWRITE_MARK, F.lit(True))
     if hit_files:
         # insert-only merges append; a file-removing merge is a data
         # removal and falls under the append-only refusal like UPDATE
         _refuse_append_only(spark, table_path, "MERGE (file-rewriting)")
+        survivors = log.read_data_files(sorted(hit_files)).join(
+            F.broadcast(keys), key_cols, "left_anti"
+        )
+        if deletes is not None:
+            survivors = survivors.where(~deletes)
+        rows = survivors.withColumn(REWRITE_MARK, F.lit(False)).unionByName(
+            rows, allowMissingColumns=True
+        )
+    # identity marks advance past the SOURCE rows' values only
+    adds, seen = _write_files(
+        spark, table_path, rows, log.partition_columns(),
+        aggs=[
+            (F.max if s["step"] > 0 else F.min)(
+                F.when(F.col(REWRITE_MARK), F.col(c))
+            ).alias(f"identity_{c}")
+            for c, s in id_specs.items()
+        ],
+    )
+    identity_updates: dict[str, int] = {}
+    for c, s in id_specs.items():
+        if seen.get(f"identity_{c}") is None:
+            continue
+        value = int(seen[f"identity_{c}"])
+        hwm = s["hwm"] if s["hwm"] is not None else s["start"] - s["step"]
+        if (s["step"] > 0 and value > hwm) or (s["step"] < 0 and value < hwm):
+            identity_updates[c] = value
 
-    cdc_rel: str | None = None
-    if _cdf_enabled(log.metadata()):
+    extra: list[dict] = []
+    if _cdf_enabled(merge_meta):
         # change rows, whole-row-update semantics: matched target rows
         # are preimages, their source rows postimages; unmatched source
         # rows are inserts; condition-qualified unmatched target rows
-        # are deletes. All derived from frames already computed — one
-        # extra narrow write ∝ |changed rows|.
+        # are deletes. Written only once the data write has passed its
+        # checks — one extra narrow write ∝ |changed rows|.
         out_cols = [c for c in source.columns]
         tgt = snap.drop("_rel_path", "_row_index").select(*out_cols)
         matched_tgt = tgt.join(F.broadcast(keys), key_cols, "left_semi")
@@ -2449,79 +2504,39 @@ def merge(
             )
             .unionByName(src_ins.withColumn("_change_type", F.lit("insert")))
         )
-        if not_matched_by_source_delete is not None:
-            deleted = (
+        if deletes is not None:
+            change = change.unionByName(
                 tgt.join(F.broadcast(keys), key_cols, "left_anti")
-                .where(
-                    F.coalesce(
-                        F.expr(not_matched_by_source_delete), F.lit(False)
-                    )
-                )
+                .where(deletes)
                 .withColumn("_change_type", F.lit("delete"))
             )
-            change = change.unionByName(deleted)
-        cdc_rel = _write_change_data(spark, table_path, change)
-
-    before = _list_parquet_rel(table_path)
-    if hit_files:
-        survivors = log.read_data_files(sorted(hit_files)).join(
-            F.broadcast(keys), key_cols, "left_anti"
+        extra.append(
+            _cdc_action(table_path, _write_change_data(spark, table_path, change))
         )
-        if not_matched_by_source_delete is not None:
-            # delete only when the condition is TRUE: a NULL condition
-            # must keep the row (matching the hit-file detection above
-            # and Delta's clause semantics) — bare ~expr would turn
-            # NULL into filtered-out, i.e. silent data loss
-            survivors = survivors.where(
-                ~F.coalesce(
-                    F.expr(not_matched_by_source_delete), F.lit(False)
-                )
-            )
-        survivors = _to_physical(spark, survivors, table_path)
-        writer = survivors.write.mode("append")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(table_path)
-    src_writer = _to_physical(spark, source, table_path).write.mode("append")
-    if partition_by:
-        src_writer = src_writer.partitionBy(*partition_by)
-    src_writer.parquet(table_path)
-    new_files = sorted(_list_parquet_rel(table_path).keys() - before)
-
-    now = int(_time.time() * 1000)
-    actions = [_add_action(table_path, rel) for rel in new_files]
-    actions += [
-        {"remove": {"path": rel.replace(os.sep, "/"), "deletionTimestamp": now,
-                    "dataChange": True}}
-        for rel in sorted(hit_files)
-    ]
-    if cdc_rel is not None:
-        actions.append(_cdc_action(table_path, cdc_rel))
     if identity_updates:
-        actions.append(
+        extra.append(
             _identity_metadata_action(
                 merge_meta, _identity_fields(merge_meta, identity_updates)
             )
         )
     if txn_app_id is not None:
-        actions.append(
+        extra.append(
             {"txn": {"appId": txn_app_id, "version": txn_version,
-                     "lastUpdated": now}}
+                     "lastUpdated": int(time.time() * 1000)}}
         )
-    actions.append(
-        _commit_info(
-            "MERGE",
-            {"matchedPredicate": json.dumps(key_cols)},
-            {"numTargetFilesRemoved": len(hit_files),
-             "numTargetFilesAdded": len(new_files)},
-        )
-    )
     return commit_mutation(
         table_path,
         base_version,
-        actions,
+        adds + _remove_actions(hit_files) + extra + [
+            _commit_info(
+                "MERGE",
+                {"matchedPredicate": json.dumps(key_cols)},
+                {"numTargetFilesRemoved": len(hit_files),
+                 "numTargetFilesAdded": len(adds)},
+            )
+        ],
         read_files=read_files,
-        removed_files={p.replace(os.sep, "/") for p in hit_files},
+        removed_files=hit_files,
     )
 
 
@@ -2777,7 +2792,7 @@ def convert_to_delta(
                 {"appendOnly", "invariants", "variantType"}
             ),
         }
-        if _schema_has_variant(schema)
+        if schema_has(schema, (VariantType,))
         else {"minReaderVersion": 1, "minWriterVersion": 2}
     )
     actions: list[dict] = [
@@ -2851,45 +2866,6 @@ def _write_change_data(spark: SparkSession, table_path: str, change) -> str:
     return rel
 
 
-def _latest_add_fields(log, paths: set[str]) -> dict[str, dict]:
-    """Per path, the preserved fields of its latest add action (tags,
-    baseRowId, defaultRowCommitVersion) — what a metadata-only re-add
-    must carry forward so backfills can't silently destroy ZCUBE
-    membership or row-id stability."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    if not paths:
-        return {}
-    adds = (
-        log.actions()
-        .where(F.col("add").isNotNull() & F.col("add.path").isin(list(paths)))
-        .select(
-            F.col("add.path").alias("p"),
-            F.col("add.tags").alias("tags"),
-            F.col("add.baseRowId").alias("base"),
-            F.col("add.defaultRowCommitVersion").alias("dcv"),
-            "version",
-        )
-    )
-    w = Window.partitionBy("p").orderBy(F.desc("version"))
-    out: dict[str, dict] = {}
-    for r in (
-        adds.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .collect()
-    ):
-        keep: dict = {}
-        if r.tags:
-            keep["tags"] = dict(r.tags)
-        if r.base is not None:
-            keep["baseRowId"] = int(r.base)
-            if r.dcv is not None:
-                keep["defaultRowCommitVersion"] = int(r.dcv)
-        out[r.p] = keep
-    return out
-
-
 def enable_row_tracking(spark: SparkSession, table_path: str) -> int:
     """Enable Delta row tracking (writer feature ``rowTracking``): every
     subsequent commit's add actions carry ``baseRowId`` /
@@ -2905,11 +2881,6 @@ def enable_row_tracking(spark: SparkSession, table_path: str) -> int:
     stable-id materialization into a physical column is not implemented.
     Returns the version of the backfill (or upgrade) commit."""
     _require_writable(spark, table_path)
-
-    from pyspark.sql import functions as F
-
-    from delta_lake_health_spark.sources.delta_log import DeltaLog
-
     upgrade = _protocol_upgrade_action(spark, table_path, "rowTracking")
     if upgrade is not None:
         _commit(
@@ -2926,62 +2897,19 @@ def enable_row_tracking(spark: SparkSession, table_path: str) -> int:
         )
     # backfill: re-add live files that predate row tracking so every
     # current row resolves an id (assignment happens inside _commit)
-    log = DeltaLog(spark, table_path)
-    adds = (
-        log.actions()
-        .where(F.col("add").isNotNull())
-        .select(
-            F.col("add.path").alias("_p"),
-            F.col("add.baseRowId").alias("_base"),
-            "version",
-        )
-    )
-    live = log.active_files().select(
-        F.col("path").alias("_p"), F.col("version").alias("_v")
-    )
-    need = [
-        r._p
-        for r in adds.join(
-            live,
-            (adds["_p"] == live["_p"]) & (F.col("version") == F.col("_v")),
-            "left_semi",
-        )
-        .where(F.col("_base").isNull())
-        .select("_p")
-        .collect()
-    ]
-    version = current_version(table_path)
+    version, live = _snapshot_live(table_path)
+    need = [a for a in live if a.get("baseRowId") is None]
     if not need:
         return version
-    # re-add paired with a same-version remove: add outranks remove at
-    # the same version (the documented add-wins rule), so the file stays
-    # live while the incremental .crc checksum nets to zero instead of
-    # double-counting the re-added bytes
-    now = int(time.time() * 1000)
-    carried = _latest_add_fields(log, set(need))
-    actions: list[dict] = []
-    for rel in sorted(need):
-        a = _add_action(table_path, rel, data_change=False)
-        # the re-add must not destroy the file's existing tags (ZCUBE
-        # membership for incremental z-order rides there)
-        tags = carried.get(rel, {}).get("tags")
-        if tags:
-            a["add"]["tags"] = tags
-        actions.append(a)
-    actions += [
-        {"remove": {"path": rel.replace(os.sep, "/"),
-                    "deletionTimestamp": now, "dataChange": False}}
-        for rel in sorted(need)
-    ]
-    actions.append(
-        _commit_info(
-            "ROW TRACKING BACKFILL",
-            {},
-            {"numBackfilledFiles": len(need)},
-        )
+    return commit_mutation(
+        table_path,
+        version,
+        _readd_actions(table_path, need)
+        + [_commit_info("ROW TRACKING BACKFILL", {},
+                        {"numBackfilledFiles": len(need)})],
+        read_files={a["path"] for a in need},
+        removed_files={a["path"] for a in need},
     )
-    _commit(table_path, version + 1, actions)
-    return version + 1
 
 
 def delete_with_dv(spark: SparkSession, table_path: str, predicate: str) -> int:
@@ -3075,11 +3003,13 @@ def update(
     remove+add with operation UPDATE, mirroring Delta's copy-on-write
     UPDATE. Generated columns are recomputed from their expressions after
     the assignment (updating one directly is refused), and CHECK / NOT
-    NULL constraints validate the rewritten batch. With
+    NULL constraints validate the rewritten batch inside its write job,
+    which also counts ``numUpdatedRows``. With
     ``delta.enableChangeDataFeed`` set the commit carries a change-data
-    file (true update_preimage/postimage rows); without it the feed
-    reconstructs the commit as delete+insert pairs for the touched
-    files, same as Delta's UPDATE without CDF."""
+    file (true update_preimage/postimage rows), written once the
+    rewrite has passed its checks; without it the feed reconstructs the
+    commit as delete+insert pairs for the touched files, same as Delta's
+    UPDATE without CDF."""
     _require_writable(spark, table_path)
     _refuse_append_only(spark, table_path, "UPDATE")
 
@@ -3087,8 +3017,7 @@ def update(
 
     from delta_lake_health_spark.sources.delta_log import DeltaLog
 
-    log = DeltaLog(spark, table_path)
-    meta = log.metadata()
+    meta = DeltaLog(spark, table_path).metadata()
     gens = _generated_columns(meta.get("schema"))
     idents = _identity_specs(meta.get("schema"))
     for col in set_exprs:
@@ -3102,116 +3031,61 @@ def update(
                 f"column {col!r} is an identity column and cannot be "
                 "assigned by UPDATE (Delta identity semantics)"
             )
-    version = current_version(table_path)
-    read_files = {
-        p.replace(os.sep, "/") for p in _active_rel_paths(spark, table_path)
-    }
-    snap = log.snapshot_with_positions()
-    hit_files = {
-        r._rel_path
-        for r in snap.where(F.expr(predicate))
-        .select("_rel_path")
-        .distinct()
-        .collect()
-    }
-    if not hit_files:
-        _commit(
-            table_path,
-            version + 1,
-            [_commit_info("UPDATE", {"predicate": predicate},
-                          {"numRemovedFiles": 0, "numUpdatedRows": 0})],
-        )
-        return version + 1
-
-    df = log.read_data_files(sorted(hit_files))
-    for col in set_exprs:
-        if col not in df.columns:
-            raise ValueError(f"unknown column {col!r}")
     cond = F.expr(predicate)
-    dtypes = dict(df.dtypes)
-    rewritten = df.select(
-        *[
-            (
-                F.when(cond, F.expr(set_exprs[c]).cast(dtypes[c]))
-                .otherwise(F.col(c))
-                .alias(c)
-                if c in set_exprs
-                else F.col(c)
+
+    def rewrite(log, hit_files):
+        df = log.read_data_files(hit_files)
+        for col in set_exprs:
+            if col not in df.columns:
+                raise ValueError(f"unknown column {col!r}")
+        dtypes = dict(df.dtypes)
+
+        def assigned(value):
+            # every row of ``df`` with the assigned columns set to
+            # value(c), generated columns recomputed, REWRITE_MARK = matched
+            out = df.select(
+                *[value(c).alias(c) if c in set_exprs else F.col(c)
+                  for c in df.columns],
+                F.coalesce(cond, F.lit(False)).alias(REWRITE_MARK),
             )
-            for c in df.columns
-        ]
-    )
-    for gcol, gexpr in gens.items():
-        rewritten = rewritten.withColumn(
-            gcol, F.expr(gexpr).cast(dtypes[gcol])
+            for gcol, gexpr in gens.items():
+                out = out.withColumn(gcol, F.expr(gexpr).cast(dtypes[gcol]))
+            return out
+
+        def new(c):
+            return F.expr(set_exprs[c]).cast(dtypes[c])
+
+        adds, seen = _write_files(
+            spark, table_path,
+            assigned(lambda c: F.when(cond, new(c)).otherwise(F.col(c))),
+            log.partition_columns(),
+            aggs=[F.sum(F.col(REWRITE_MARK).cast("long")).alias("numUpdatedRows")],
         )
-    _validate_constraints(spark, rewritten, table_path)
-    n_updated = df.where(cond).count()
+        # CDF (Delta spec cdc action): exactly the changed rows as
+        # update_preimage / update_postimage — the feed reports true
+        # row-level updates instead of delete+insert pairs for every row
+        # of the rewritten files. Work ∝ |matched rows|, not file size.
+        cdc = []
+        if _cdf_enabled(meta):
+            post = assigned(new).where(F.col(REWRITE_MARK)).drop(REWRITE_MARK)
+            change = df.where(cond).withColumn(
+                "_change_type", F.lit("update_preimage")
+            ).unionByName(post.withColumn("_change_type", F.lit("update_postimage")))
+            cdc = [_cdc_action(table_path, _write_change_data(spark, table_path, change))]
+        return adds, cdc, {"numUpdatedRows": int(seen.get("numUpdatedRows") or 0)}
 
-    # CDF (Delta spec cdc action): with delta.enableChangeDataFeed set,
-    # the commit carries a _change_data file holding exactly the changed
-    # rows as update_preimage / update_postimage — so the feed reports
-    # true row-level updates instead of delete+insert pairs for every
-    # row of the rewritten files. Work ∝ |matched rows|, not file size.
-    cdc_rel: str | None = None
-    if _cdf_enabled(meta):
-        matched = df.where(cond)
-        post = matched.select(
-            *[
-                (
-                    F.expr(set_exprs[c]).cast(dtypes[c]).alias(c)
-                    if c in set_exprs
-                    else F.col(c)
-                )
-                for c in df.columns
-            ]
-        )
-        for gcol, gexpr in gens.items():
-            post = post.withColumn(gcol, F.expr(gexpr).cast(dtypes[gcol]))
-        change = matched.withColumn(
-            "_change_type", F.lit("update_preimage")
-        ).unionByName(post.withColumn("_change_type", F.lit("update_postimage")))
-        cdc_rel = _write_change_data(spark, table_path, change)
-
-    rewritten = _to_physical(spark, rewritten, table_path)
-    partition_by = log.partition_columns()
-    before = _list_parquet_rel(table_path)
-    writer = rewritten.write.mode("append")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(table_path)
-    new_files = sorted(_list_parquet_rel(table_path).keys() - before)
-
-    now = int(time.time() * 1000)
-    actions = [_add_action(table_path, rel) for rel in new_files]
-    actions += [
-        {"remove": {"path": rel.replace(os.sep, "/"), "deletionTimestamp": now,
-                    "dataChange": True}}
-        for rel in sorted(hit_files)
-    ]
-    if cdc_rel is not None:
-        actions.append(_cdc_action(table_path, cdc_rel))
-    actions.append(
-        _commit_info("UPDATE", {"predicate": predicate},
-                     {"numRemovedFiles": len(hit_files),
-                      "numAddedFiles": len(new_files),
-                      "numUpdatedRows": n_updated})
-    )
-    return commit_mutation(
-        table_path,
-        version,
-        actions,
-        read_files=read_files,
-        removed_files={p.replace(os.sep, "/") for p in hit_files},
+    return _rewrite_matching(
+        spark, table_path, predicate, "UPDATE", "numUpdatedRows", rewrite
     )
 
 
 # --------------------------------------------------------------------------
 # Optimistic-concurrency conflict detection for read-modify-write commits
 # (the Delta conflict matrix). Blind appends retry freely (write() above);
-# DELETE / UPDATE / MERGE / DV-delete read a snapshot, so a commit that
-# lands between their read and their commit must be CHECKED, not blindly
-# rebased:
+# DELETE / UPDATE / MERGE / DV-delete and the maintenance rewrites
+# (OPTIMIZE, z-order, DV purge, REORG, RESTORE) read a snapshot, so a
+# commit that lands between their read and their commit must be CHECKED,
+# not blindly rebased:
 #
 #   winner action                 loser op outcome
 #   -----------------------------------------------------------------
@@ -3219,7 +3093,11 @@ def update(
 #   removed a file we removed     ConcurrentDeleteDeleteException
 #   removed a file we read        ConcurrentDeleteReadException
 #   added data files              ConcurrentAppendException (the new rows
-#                                 might match our predicate — Serializable)
+#                                 might match our predicate — Serializable),
+#                                 unless the loser changes no data (every
+#                                 add/remove dataChange=false): snapshot
+#                                 isolation, as Delta's OPTIMIZE
+#   deletion vector               ConcurrentDeleteReadException
 #   txn / commitInfo only         safe: rebase to the next version
 #
 # Exception names mirror delta-io/delta's org.apache.spark.sql.delta.
@@ -3250,11 +3128,19 @@ def check_commit_conflicts(
     base_version: int,
     read_files: set[str],
     removed_files: set[str],
+    actions: list[dict] | None = None,
 ) -> int:
     """Validate the commits that landed after ``base_version`` against
     this operation's read/remove sets (driver-side, |interleaved actions|
     work). Returns the rebased commit version to use, or raises the
-    matching conflict exception."""
+    matching conflict exception. ``actions`` is the operation's own
+    commit: when it adds or removes files and every one of those
+    actions is dataChange=false (a re-layout of rows it read), appended
+    rows cannot invalidate it, so only the append rule is skipped."""
+    files = [a[k] for a in actions or () for k in ("add", "remove") if k in a]
+    rearranges_only = bool(files) and not any(
+        f.get("dataChange", True) for f in files
+    )
     current = current_version(table_path)
     for v in range(base_version + 1, current + 1):
         for act in log_replay.read_commit(table_path, v):
@@ -3272,7 +3158,11 @@ def check_commit_conflicts(
                     raise ConcurrentDeleteReadException(
                         f"version {v} removed {p}, which this operation read"
                     )
-            if "add" in act and act["add"].get("dataChange"):
+            if (
+                "add" in act
+                and act["add"].get("dataChange")
+                and not rearranges_only
+            ):
                 raise ConcurrentAppendException(
                     f"version {v} added data files that may match this "
                     "operation's predicate"
@@ -3293,10 +3183,11 @@ def commit_mutation(
     removed_files: set[str] | None = None,
     max_retries: int = 10,
 ) -> int:
-    """Put-if-absent commit for a read-modify-write operation: on a
-    version collision, run the conflict matrix over the interleaved
-    commits and either rebase (safe winners only: txn/commitInfo-only
-    commits, e.g. replay-guard markers) or raise the typed conflict."""
+    """Put-if-absent commit for a read-modify-write operation read at
+    ``base_version``: on a version collision, run the conflict matrix
+    over the interleaved commits and either rebase (safe winners only:
+    txn/commitInfo-only commits, e.g. replay-guard markers, and appends
+    under a dataChange=false rewrite) or raise the typed conflict."""
     read_files = read_files or set()
     removed_files = removed_files or set()
     version = base_version + 1
@@ -3308,7 +3199,7 @@ def commit_mutation(
             if "concurrent commit" not in str(ex):
                 raise
             version = check_commit_conflicts(
-                table_path, base_version, read_files, removed_files
+                table_path, base_version, read_files, removed_files, actions
             )
     raise RuntimeError(f"commit contention after {max_retries} retries")
 
@@ -3343,6 +3234,7 @@ def copy_into(
     from delta_lake_health_spark.sources.delta_log import DeltaLog
 
     log = DeltaLog(spark, table_path)
+    base_version = current_version(table_path)
     meta = log.metadata()
     logical_cols = [f["name"] for f in (meta.get("schema") or {})["fields"]]
     partition_by = meta.get("partition_columns") or []
@@ -3417,9 +3309,7 @@ def copy_into(
             )
             if upgrade is not None:
                 actions.insert(0, upgrade)
-            version = commit_mutation(
-                table_path, current_version(table_path), actions
-            )
+            version = commit_mutation(table_path, base_version, actions)
         else:
             version = current_version(table_path)
         return {
@@ -3435,16 +3325,7 @@ def copy_into(
         raise ValueError(
             f"COPY INTO schema mismatch: missing={missing} extra={extra}"
         )
-    df = df.select(*logical_cols)
-    _validate_constraints(spark, df, table_path)
-    df = _to_physical(spark, df, table_path)
-
-    before = _list_parquet_rel(table_path)
-    writer = df.write.mode("append")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(table_path)
-    new_files = sorted(_list_parquet_rel(table_path).keys() - before)
+    adds, _ = _write_files(spark, table_path, df.select(*logical_cols), partition_by)
 
     for _, name, ident in new_paths:
         loaded[name] = ident
@@ -3452,7 +3333,6 @@ def copy_into(
     upgrade = _protocol_upgrade_action(spark, table_path, "domainMetadata")
     if upgrade is not None:
         actions.append(upgrade)
-    adds = [_add_action(table_path, rel) for rel in new_files]
     actions += adds
     n_records = sum(
         json.loads(a["add"]["stats"])["numRecords"] for a in adds
@@ -3471,15 +3351,15 @@ def copy_into(
             "COPY INTO",
             {"source": src_key, "pattern": pattern},
             {
-                "numFiles": len(new_files),
+                "numFiles": len(adds),
                 "numOutputRows": n_records,
                 "numSourceFiles": len(new_paths),
             },
         )
     )
-    version = commit_mutation(
-        table_path, current_version(table_path), actions
-    )
+    # read at base_version: a concurrent COPY INTO of the same files
+    # lands as an append this commit conflicts with, never a double load
+    version = commit_mutation(table_path, base_version, actions)
     return {
         "numLoadedFiles": len(new_paths),
         "numSkippedFiles": len(candidates) - len(new_paths),

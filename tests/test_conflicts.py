@@ -121,3 +121,71 @@ def test_mutations_still_work_uncontended(spark, tmp_path):
     assert 1 not in snap and 4 not in snap
     assert snap[2] == 9 and snap[3] == 7
     assert len(snap) == 28
+
+
+def _rewrite_with_commit_midway(monkeypatch, commit):
+    """Run ``commit`` once, between a rewrite's read and its commit: the
+    first add action the rewrite builds (after its data write) fires it."""
+    real, fired = dw._add_action, []
+
+    def add_action(*a, **k):
+        if not fired:
+            fired.append(True)
+            commit()
+        return real(*a, **k)
+
+    monkeypatch.setattr(dw, "_add_action", add_action)
+    return fired
+
+
+@pytest.mark.parametrize("rewrite", ["compact", "zorder_cluster"])
+def test_rewrite_refuses_dv_delete_committed_midway(
+    spark, tmp_path, monkeypatch, rewrite
+):
+    """A DV delete that commits while a maintenance rewrite runs soft-
+    deletes rows the rewrite already copied into its new files: the
+    rewrite must fail with a conflict, and the deleted rows stay
+    deleted."""
+    from delta_lake_health_spark.operators import maintenance
+
+    t = str(tmp_path / "t")
+    _build(spark, t)
+
+    def dv_deletes():
+        dw.delete_with_dv(spark, t, "id = 5")
+        dw.delete_with_dv(spark, t, "id = 7")
+
+    fired = _rewrite_with_commit_midway(monkeypatch, dv_deletes)
+    with pytest.raises(dw.ConcurrentWriteConflict):
+        if rewrite == "compact":
+            maintenance.compact(spark, t)
+        else:
+            maintenance.zorder_cluster(spark, t, ["id", "k"])
+    assert fired
+    ids = {r.id for r in DeltaLog(spark, t).snapshot().collect()}
+    assert ids == set(range(30)) - {5, 7}
+
+
+def test_compact_rebases_over_blind_append_committed_midway(
+    spark, tmp_path, monkeypatch
+):
+    """An append that lands while OPTIMIZE runs cannot change the rows
+    OPTIMIZE rewrites (every add and remove it commits is
+    dataChange=false): the compaction still commits, above the append,
+    and both the appended and the compacted rows stay live."""
+    from delta_lake_health_spark.operators import maintenance
+
+    t = str(tmp_path / "t")
+    _build(spark, t)
+    base = dw.current_version(t)
+    fired = _rewrite_with_commit_midway(
+        monkeypatch,
+        lambda: dw.write(spark, spark.range(100, 110).selectExpr(
+            "id", "CAST(id % 3 AS LONG) AS k"), t),
+    )
+    out = maintenance.compact(spark, t)
+    assert fired
+    assert out["numRemovedFiles"] == 3 and not out.get("skipped")
+    assert dw.current_version(t) == base + 2
+    ids = sorted(r.id for r in DeltaLog(spark, t).snapshot().collect())
+    assert ids == list(range(30)) + list(range(100, 110))

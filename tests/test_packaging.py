@@ -157,3 +157,44 @@ def test_only_log_replay_reads_the_delta_log():
                     ):
                         offenders.append(f"{rel}:{node.lineno} {node.name} {what}")
     assert not offenders, offenders
+
+
+def test_one_file_rewrite_path():
+    """Structure guard: every operation that writes data files goes
+    through one helper, ``delta_writer._write_files`` — the only package
+    function that diffs the table listing against the one taken before
+    its write — and no maintenance operation commits at
+    ``current_version() + 1``: such a blind commit skips the conflict
+    check, and rows deleted while it ran come back."""
+    import ast
+    import re
+
+    diffs_listing = re.compile(
+        r"_list_parquet_rel\([^()]*\)(\.keys\(\))?\s*-\s*before\b"
+    )
+    blind_version = re.compile(r"current_version\([^()]*\)\s*\+\s*1")
+    pkg = os.path.join(REPO, "delta_lake_health_spark")
+    differs, blind = [], []
+    for root, _, files in os.walk(pkg):
+        for name in files:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(root, name)
+            rel = os.path.relpath(path, pkg).replace(os.sep, "/")
+            with open(path) as fh:
+                src = fh.read()
+            for node in ast.walk(ast.parse(src)):
+                if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    body = ast.get_source_segment(src, node) or ""
+                    if diffs_listing.search(body):
+                        differs.append(f"{rel}::{node.name}")
+                if (
+                    rel == "operators/maintenance.py"
+                    and isinstance(node, ast.Call)
+                    and getattr(node.func, "attr", getattr(node.func, "id", None))
+                    == "_commit"
+                    and blind_version.search(ast.get_source_segment(src, node) or "")
+                ):
+                    blind.append(f"{rel}:{node.lineno}")
+    assert differs == ["sources/delta_writer.py::_write_files"], differs
+    assert not blind, blind

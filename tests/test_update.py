@@ -4,6 +4,8 @@ how the commit surfaces in the row-level change feed."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 # copy-on-write UPDATE battery: slow battery, full-suite close-out only
@@ -313,3 +315,72 @@ def test_merge_writes_full_cdc(spark, tmp_path):
     exp.update({i: i + 100 for i in range(8, 13)})
     assert snap == exp
     del mv_ops
+
+
+def test_delete_keeps_rows_whose_predicate_is_null(spark, tmp_path):
+    """DELETE removes only the rows its predicate holds for: a row whose
+    predicate is NULL stays, also inside a file the DELETE rewrites."""
+    t = str(tmp_path / "t")
+    delta_writer.write(
+        spark,
+        spark.createDataFrame(
+            [(1, 5), (2, None), (3, 50)], "id long, v long"
+        ).coalesce(1),
+        t,
+    )
+    delta_writer.delete(spark, t, "v > 10")
+    ids = sorted(r.id for r in DeltaLog(spark, t).snapshot().collect())
+    assert ids == [1, 2]
+
+
+def _tree(path):
+    """Every directory and file under ``path``, hidden ones included."""
+    out = set()
+    for root, dirs, files in os.walk(path):
+        rel = os.path.relpath(root, path)
+        out |= {os.path.join(rel, d) + "/" for d in dirs}
+        out |= {os.path.join(rel, f) for f in files}
+    return out
+
+
+def test_refused_rewrites_leave_no_debris(spark, tmp_path):
+    """MERGE, UPDATE and COPY INTO check constraints inside their write
+    job; a refused batch leaves the table directory — data files, their
+    .crc checksums, partition directories, _change_data/ and the log —
+    listing exactly as before."""
+    t = str(tmp_path / "t")
+    delta_writer.write(
+        spark,
+        spark.range(0, 40).selectExpr(
+            "id", "CAST(id % 2 AS INT) AS p", "CAST(id AS BIGINT) AS v"
+        ),
+        t,
+        partition_by=["p"],
+    )
+    delta_writer.set_table_property(
+        spark, t, "delta.enableChangeDataFeed", "true"
+    )
+    delta_writer.set_constraint(spark, t, "v_nonneg", "v >= 0")
+    delta_writer.update(spark, t, "id = 1", {"v": "v + 1"})  # a good rewrite
+    assert os.path.isdir(os.path.join(t, "_change_data"))
+    src = str(tmp_path / "src")
+    spark.createDataFrame([(200, 9, -3)], "id long, p int, v long").write.parquet(src)
+    before = _tree(t)
+    version = delta_writer.current_version(t)
+
+    refused = {
+        "update": lambda: delta_writer.update(spark, t, "id = 3", {"v": "-1"}),
+        "merge": lambda: delta_writer.merge(
+            spark, t,
+            spark.createDataFrame(
+                [(3, 1, -5), (100, 7, 1)], "id long, p int, v long"
+            ),
+            ["id"],
+        ),
+        "copy_into": lambda: delta_writer.copy_into(spark, t, src),
+    }
+    for name, op in refused.items():
+        with pytest.raises(ValueError, match="CHECK constraint"):
+            op()
+        assert _tree(t) == before, name
+        assert delta_writer.current_version(t) == version, name
