@@ -597,14 +597,12 @@ def restore(spark: SparkSession, table_path: str, to_version: int) -> dict:
         )
 
     # files live at the target whose rows were soft-deleted AFTER it
-    acts = log.actions(use_checkpoint=False)
     late_dv = [
-        r.path
-        for r in acts.where(
-            F.col("dv").isNotNull() & (F.col("version") > to_version)
-        )
-        .select(F.col("dv.path").alias("path"))
-        .collect()
+        a["dv"]["path"]
+        for v in snap.versions
+        if v > to_version
+        for a in log_replay.read_commit(table_path, v)
+        if a.get("dv") is not None
     ]
     # A sidecar that checkpoint-GC retired and vacuum physically deleted
     # can be skipped, not failed on: GC only drops a dv action once its
@@ -638,7 +636,7 @@ def restore(spark: SparkSession, table_path: str, to_version: int) -> dict:
         early_dv = log.deletion_vectors(as_of=to_version)
         if early_dv is not None:
             out_cols = df.columns
-            df = log._apply_dv(df, early_dv).select(*out_cols)
+            df = log._drop_deleted(log._with_lineage(df), early_dv).select(*out_cols)
         rewritten, _ = delta_writer._write_files(
             spark, table_path, df, partition_by, validate=False, physical=False
         )
@@ -761,18 +759,12 @@ def generate_symlink_manifest(spark: SparkSession, table_path: str) -> dict:
     from delta_lake_health_spark.sources.delta_log import DeltaLog
 
     log = DeltaLog(spark, table_path)
-    dv = log.deletion_vectors()
-    if dv is not None:
-        live_paths = log.active_files().select(F.col("path").alias("rel_path"))
-        if (
-            dv.join(F.broadcast(live_paths), "rel_path", "left_semi").limit(1).count()
-            > 0
-        ):
-            raise ValueError(
-                "cannot generate a symlink manifest while deletion vectors "
-                "are live (manifests reference whole files); run "
-                "apply_deletion_vectors first"
-            )
+    if sum(log_replay.Snapshot(table_path).dv_deleted_rows().values()) > 0:
+        raise ValueError(
+            "cannot generate a symlink manifest while deletion vectors "
+            "are live (manifests reference whole files); run "
+            "apply_deletion_vectors first"
+        )
     live = log.live_files_rows()
     part_cols = log.partition_columns()
     by_partition: dict[str, list[str]] = {}

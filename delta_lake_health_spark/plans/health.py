@@ -127,6 +127,21 @@ try:  # never let a /tmp hiccup break module import
 except Exception:  # pragma: no cover
     pass
 
+
+def _build_delta_fixture(marker: str, build, clean: list[str], deps: tuple = ()) -> None:
+    """``build_once`` for a fixture built through the Delta writer: its
+    definition hash also covers the writer, maintenance and log modules,
+    so a change to any of them rebuilds the fixture instead of reusing
+    one an older tree wrote."""
+    from delta_lake_health_spark.operators import maintenance
+    from delta_lake_health_spark.sources import delta_log, delta_writer, log_replay
+
+    build_once(
+        marker, build, clean=clean,
+        deps=(*deps, delta_writer, maintenance, delta_log, log_replay),
+    )
+
+
 _FIXTURE_LOG_COLUMNS = (
     "{'add': 'STRUCT(path VARCHAR, partitionValues STRUCT(day VARCHAR), "
     "size BIGINT, modificationTime BIGINT, dataChange BOOLEAN, stats VARCHAR)', "
@@ -512,7 +527,7 @@ def _ensure_mv_fixture(spark: SparkSession) -> None:
         delta_writer.delete_with_dv(spark, _MV_FIXTURE, "id % 10 = 0")        # v2
         mv_ops.refresh_mv(spark, _MV_FIXTURE, _MV_VIEW, ["k"], ["v"])
 
-    build_once(_MV_MARKER, build, clean=[_MV_FIXTURE, _MV_VIEW])
+    _build_delta_fixture(_MV_MARKER, build, clean=[_MV_FIXTURE, _MV_VIEW])
 
 
 @query("delta_mv_refresh", _MV_ORACLE)
@@ -754,7 +769,7 @@ def _ensure_rt_fixture(spark: SparkSession) -> None:
         delta_writer.write(spark, rows(600, 1000), _RT_FIXTURE)    # append
         delta_writer.delete_with_dv(spark, _RT_FIXTURE, "id % 10 = 0")
 
-    build_once(_RT_MARKER, build, clean=[_RT_FIXTURE])
+    _build_delta_fixture(_RT_MARKER, build, clean=[_RT_FIXTURE])
 
 
 @query("delta_row_ids", _RT_ORACLE)
@@ -817,7 +832,7 @@ def _ensure_identity_fixture(spark: SparkSession) -> None:
         delta_writer.write(spark, names(100, 350).repartition(4), _ID_FIXTURE)
         delta_writer.write(spark, names(350, 400).repartition(2), _ID_FIXTURE)
 
-    build_once(_ID_MARKER, build, clean=[_ID_FIXTURE])
+    _build_delta_fixture(_ID_MARKER, build, clean=[_ID_FIXTURE])
 
 
 @query("delta_identity_series", _ID_ORACLE)
@@ -1072,7 +1087,7 @@ def _ensure_reorg_fixture(spark: SparkSession) -> None:
         delta_writer.delete_with_dv(spark, _REORG_FIXTURE, "id % 9 = 0")  # v2
         maintenance.reorg_purge(spark, _REORG_FIXTURE)                 # v3+
 
-    build_once(_REORG_MARKER, build, clean=[_REORG_FIXTURE])
+    _build_delta_fixture(_REORG_MARKER, build, clean=[_REORG_FIXTURE])
 
 
 @query("delta_reorg_purge", _REORG_ORACLE)
@@ -1180,7 +1195,7 @@ def _ensure_copy_fixture(spark: SparkSession) -> int:
         # time, not as a downstream oracle mismatch
         assert m2["numLoadedFiles"] == 0, m2
 
-    build_once(_COPY_MARKER, build, clean=[_COPY_FIXTURE, _COPY_SRC])
+    _build_delta_fixture(_COPY_MARKER, build, clean=[_COPY_FIXTURE, _COPY_SRC])
     return 0
 
 
@@ -1247,7 +1262,7 @@ def _ensure_bloomix_fixture(spark: SparkSession) -> None:
         bloom_index.build_bloom_index(spark, _BLOOMIX_FIXTURE, "id")
         delta_writer.delete_with_dv(spark, _BLOOMIX_FIXTURE, "id = 777")
 
-    build_once(_BLOOMIX_MARKER, build, clean=[_BLOOMIX_FIXTURE])
+    _build_delta_fixture(_BLOOMIX_MARKER, build, clean=[_BLOOMIX_FIXTURE])
 
 
 @query("delta_bloom_point_lookup", _BLOOMIX_ORACLE)
@@ -1347,7 +1362,7 @@ def _ensure_cdcsync_fixture(spark: SparkSession) -> tuple[int, int]:
         # build time, not as a downstream oracle mismatch
         assert m2["numUpserts"] == 0 and m2["numDeletes"] == 0, m2
 
-    build_once(_CDCSYNC_MARKER, build, clean=[_CDCSYNC_SRC, _CDCSYNC_DST])
+    _build_delta_fixture(_CDCSYNC_MARKER, build, clean=[_CDCSYNC_SRC, _CDCSYNC_DST])
     return (0, 0)
 
 
@@ -1416,7 +1431,7 @@ def _ensure_restore_fixture(spark: SparkSession) -> None:
         delta_writer.delete(spark, _RESTORE_FIXTURE, "id % 10 = 0")
         maintenance.restore(spark, _RESTORE_FIXTURE, 0)
 
-    build_once(_RESTORE_MARKER, build, clean=[_RESTORE_FIXTURE])
+    _build_delta_fixture(_RESTORE_MARKER, build, clean=[_RESTORE_FIXTURE])
 
 
 @query("delta_restore_snapshot", _RESTORE_ORACLE)
@@ -1478,7 +1493,7 @@ def _ensure_clone_fixture(spark: SparkSession) -> None:
             mode="append",
         )
 
-    build_once(_CLONE_MARKER, build, clean=[_CLONE_SRC, _CLONE_DST])
+    _build_delta_fixture(_CLONE_MARKER, build, clean=[_CLONE_SRC, _CLONE_DST])
 
 
 @query("delta_clone_snapshot", _CLONE_ORACLE)
@@ -1562,7 +1577,7 @@ def _ensure_evolution_fixture(spark: SparkSession) -> None:
             merge_schema=True,
         )
 
-    build_once(_EVOL_MARKER, build, clean=[_EVOL_FIXTURE])
+    _build_delta_fixture(_EVOL_MARKER, build, clean=[_EVOL_FIXTURE])
 
 
 @query("delta_schema_evolution", _EVOL_ORACLE)
@@ -1622,7 +1637,7 @@ def _ensure_generated_fixture(spark: SparkSession) -> None:
                 mode="append",
             )
 
-    build_once(_GEN_MARKER, build, clean=[_GEN_FIXTURE])
+    _build_delta_fixture(_GEN_MARKER, build, clean=[_GEN_FIXTURE])
 
 
 @query("delta_generated_columns", _GEN_ORACLE)
@@ -1687,7 +1702,7 @@ def _ensure_merge_fixture(spark: SparkSession) -> None:
             not_matched_by_source_delete="id < 20",
         )
 
-    build_once(_MERGE_MARKER, build, clean=[_MERGE_FIXTURE])
+    _build_delta_fixture(_MERGE_MARKER, build, clean=[_MERGE_FIXTURE])
 
 
 @query("delta_merge_snapshot", _MERGE_ORACLE)
@@ -1748,7 +1763,7 @@ def _ensure_vacuum_fixture(spark: SparkSession) -> None:
         ).write.mode("append").parquet(_VACUUM_FIXTURE)
         maintenance.vacuum(spark, _VACUUM_FIXTURE, retention_hours=0.0)
 
-    build_once(_VACUUM_MARKER, build, clean=[_VACUUM_FIXTURE])
+    _build_delta_fixture(_VACUUM_MARKER, build, clean=[_VACUUM_FIXTURE])
 
 
 @query("delta_vacuum_snapshot", _VACUUM_ORACLE)
@@ -1812,7 +1827,7 @@ def _ensure_update_fixture(spark: SparkSession) -> None:
         delta_writer.update(spark, _UPDATE_FIXTURE, "grp = 3 AND id >= 500",
                             {"val": "-id"})
 
-    build_once(_UPDATE_MARKER, build, clean=[_UPDATE_FIXTURE])
+    _build_delta_fixture(_UPDATE_MARKER, build, clean=[_UPDATE_FIXTURE])
 
 
 @query("delta_update_snapshot", _UPDATE_ORACLE)
@@ -1885,7 +1900,7 @@ def _ensure_optimize_fixture(spark: SparkSession) -> None:
         maintenance.compact(spark, _OPT_FIXTURE)
         maintenance.zorder_cluster(spark, _OPT_FIXTURE, ["a", "b"])
 
-    build_once(_OPT_MARKER, build, clean=[_OPT_FIXTURE])
+    _build_delta_fixture(_OPT_MARKER, build, clean=[_OPT_FIXTURE])
 
 
 @query("delta_optimize_zorder_snapshot", _OPT_ORACLE)
@@ -1959,7 +1974,7 @@ def _ensure_fsck_fixture(spark: SparkSession) -> None:
         with open(_FSCK_MARKER + ".value", "w") as fh:
                 fh.write(str(m["numMissingFiles"]))
 
-    build_once(_FSCK_MARKER, build, clean=[_FSCK_FIXTURE])
+    _build_delta_fixture(_FSCK_MARKER, build, clean=[_FSCK_FIXTURE])
 
 
 @query("delta_fsck_snapshot", _FSCK_ORACLE)
@@ -2024,7 +2039,7 @@ def _ensure_dclone_fixture(spark: SparkSession) -> None:
         delta_writer.delete(spark, _DCLONE_SRC, "id < 100")
         delta_writer.write(spark, mk(900, 950), _DCLONE_SRC, mode="append")
 
-    build_once(_DCLONE_MARKER, build, clean=[_DCLONE_SRC, _DCLONE_DST])
+    _build_delta_fixture(_DCLONE_MARKER, build, clean=[_DCLONE_SRC, _DCLONE_DST])
 
 
 @query("delta_deep_clone_snapshot", _DCLONE_ORACLE)
@@ -2098,7 +2113,7 @@ def _ensure_hilbert_fixture(spark: SparkSession) -> None:
         maintenance.compact(spark, _HILBERT_FIXTURE)
         maintenance.hilbert_cluster(spark, _HILBERT_FIXTURE, ["x", "y"])
 
-    build_once(_HILBERT_MARKER, build, clean=[_HILBERT_FIXTURE])
+    _build_delta_fixture(_HILBERT_MARKER, build, clean=[_HILBERT_FIXTURE])
 
 
 @query("delta_hilbert_snapshot", _HILBERT_ORACLE)
@@ -2176,7 +2191,7 @@ def _ensure_rts_fixture(spark: SparkSession) -> None:
         if n != 600:  # fail loud at build time, not as an oracle mismatch
             raise RuntimeError(f"RESTORE TO TIMESTAMP landed {n} rows, not 600")
 
-    build_once(_RTS_MARKER, build, clean=[_RTS_FIXTURE])
+    _build_delta_fixture(_RTS_MARKER, build, clean=[_RTS_FIXTURE])
 
 
 @query("delta_restore_timestamp_snapshot", _RTS_ORACLE)
@@ -2261,7 +2276,7 @@ def _ensure_defaults_fixture(spark: SparkSession) -> None:
 
     from delta_lake_health_spark.sources import delta_writer as _dw
 
-    build_once(
+    _build_delta_fixture(
         _DEFAULTS_MARKER,
         build,
         clean=[_DEFAULTS_FIXTURE],

@@ -52,6 +52,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import MapType, StructType, VariantType
 
+from delta_lake_health_spark.sources import log_replay
 from delta_lake_health_spark.sources.delta_log import DeltaLog
 from delta_lake_health_spark.sources.delta_writer import schema_has
 
@@ -75,9 +76,7 @@ def _read_raw(
         reader = reader.schema(StructType.fromJson(log.physical_schema(schema)))
     df = reader.parquet(*[os.path.join(log.table_path, p) for p in rel_paths])
     if with_pos:
-        df = df.withColumn("_rel_path", log._rel_path_expr()).withColumn(
-            "_row_index", F.col("_metadata.row_index")
-        )
+        df = log._with_lineage(df)
     if schema is not None:
         df = log._rename_physical_to_logical(df, schema)
     return df
@@ -96,37 +95,25 @@ def changed_actions(
     ``[{"version", "operation", "adds", "removes", "dvs", "cdcs"}, ...]``
     (paths only; ``operation`` from the commitInfo, None without one)."""
     log.require_history_from(from_version)
-    acts = log.actions(use_checkpoint=False).where(
-        (F.col("version") >= from_version) & (F.col("version") <= to_version)
-    )
-    rows = acts.select(
-        "version",
-        F.when(F.col("add.dataChange"), F.col("add.path")).alias("add_path"),
-        F.when(F.col("remove.dataChange"), F.col("remove.path")).alias(
-            "remove_path"
-        ),
-        F.col("dv.path").alias("dv_path"),
-        F.col("cdc.path").alias("cdc_path"),
-        F.col("commitInfo.operation").alias("operation"),
-    ).collect()
-    by_v: dict[int, dict] = {}
-    for r in rows:
-        slot = by_v.setdefault(
-            r.version,
-            {"version": r.version, "operation": None, "adds": [],
-             "removes": [], "dvs": [], "cdcs": []},
-        )
-        if r.operation is not None:
-            slot["operation"] = r.operation
-        if r.add_path is not None:
-            slot["adds"].append(r.add_path)
-        if r.remove_path is not None:
-            slot["removes"].append(r.remove_path)
-        if r.dv_path is not None:
-            slot["dvs"].append(r.dv_path)
-        if r.cdc_path is not None:
-            slot["cdcs"].append(r.cdc_path)
-    return [by_v[v] for v in sorted(by_v)]
+    out = []
+    for v in log_replay.commit_versions(log.table_path):
+        if not from_version <= v <= to_version:
+            continue
+        slot = {"version": v, "operation": None, "adds": [], "removes": [],
+                "dvs": [], "cdcs": []}
+        for a in log_replay.read_commit(log.table_path, v):
+            if a.get("commitInfo") is not None:
+                slot["operation"] = a["commitInfo"].get("operation")
+            if (a.get("add") or {}).get("dataChange"):
+                slot["adds"].append(a["add"]["path"])
+            if (a.get("remove") or {}).get("dataChange"):
+                slot["removes"].append(a["remove"]["path"])
+            if a.get("dv") is not None:
+                slot["dvs"].append(a["dv"]["path"])
+            if a.get("cdc") is not None:
+                slot["cdcs"].append(a["cdc"]["path"])
+        out.append(slot)
+    return out
 
 
 def _dv_positions(
@@ -150,8 +137,7 @@ def row_changes(
     to_version] (defaults to the full log). Columns = current logical
     table columns (files from older schemas are null-filled for columns
     they predate) + ``_change_type`` + ``_commit_version``. Callers that
-    already hold a DeltaLog pass it through ``log`` so its per-instance
-    memos are shared instead of re-collecting the commit list."""
+    already hold a DeltaLog may pass it through ``log``."""
     log = log or DeltaLog(spark, table_path)
     if to_version is None:
         to_version = log.version()
@@ -162,11 +148,11 @@ def row_changes(
 
     # sidecars committed before each version, per the DV-delete semantics
     dv_before: list[tuple[int, str]] = [
-        (r.version, r.path)
-        for r in log.actions(use_checkpoint=False)
-        .where(F.col("dv").isNotNull() & (F.col("version") < to_version))
-        .select("version", F.col("dv.path").alias("path"))
-        .collect()
+        (v, a["dv"]["path"])
+        for v in log_replay.commit_versions(log.table_path)
+        if v < to_version
+        for a in log_replay.read_commit(log.table_path, v)
+        if a.get("dv") is not None
     ]
 
     parts: list[DataFrame] = []

@@ -1,22 +1,21 @@
 """Delta transaction-log reader — no delta library.
 
 The ``_delta_log`` of a Delta table is newline-delimited JSON (plus
-optional parquet checkpoints). It is read two ways, one per kind of
-question:
+optional parquet checkpoints). It is read once, by the driver-side replay
+in ``log_replay`` (checkpoint + JSON tail in plain Python, no Spark job),
+and every ``DeltaLog`` answer comes from that replay:
 
 - **Metadata-sized answers** — version, metadata, protocol, live add
   actions, deletion-vector paths, record counts, file stats, operation
   counts, ``txn`` and domain metadata, commit timestamps, DESCRIBE
-  DETAIL, DESCRIBE HISTORY (an arrow LocalRelation) and checkpoint
-  writing (pyarrow) — come from the driver-side replay in ``log_replay``
-  (checkpoint + JSON tail in plain Python, no Spark job).
-- **DataFrames** — tombstones, active files, snapshot joins and change
-  feeds — come from the distributed replay here: ``spark.read.json``
-  over the commit files with an explicit action schema, version
-  extracted from the file name via ``_metadata.file_path``. Snapshot
-  reconstruction is the standard add/remove reconciliation: per path,
-  the action with the highest (version, add-wins) rank decides liveness
-  — one shuffle over |files| rows.
+  DETAIL and checkpoint writing (pyarrow) — are Python values.
+- **Log DataFrames** — actions, active files, tombstones, DESCRIBE
+  HISTORY, file-level changes and the data-skipping candidates — are the
+  replay's rows as arrow LocalRelations: built once, unchanged by later
+  commits, and collected without a Spark job.
+- **Data** — snapshots, time travel, position-tracking reads and pruned
+  scans — go through one live-file scan (``DeltaLog._read``) over the
+  replay's live file list, with deletion vectors applied.
 
 Replaces the reference's delta-rs ``DeltaTable`` dependency
 (src/delta_lake_health/health_analyzers/delta_python_analyzer.py:17-31,
@@ -43,12 +42,11 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-from pyspark.sql.window import Window
 
 from delta_lake_health_spark.sources import log_replay
-from delta_lake_health_spark.sources.log_replay import (
+from delta_lake_health_spark.sources.log_replay import (  # noqa: F401
     LOG_DIR,
-    checkpoint_file_names,
+    checkpoint_file_names,  # re-exported for callers of this module
 )
 
 _STR_MAP = MapType(StringType(), StringType())
@@ -186,45 +184,9 @@ ACTION_SCHEMA = StructType(
 )
 
 
-def _conform_column(col, src_type, dst_type):
-    """Align a checkpoint column to ACTION_SCHEMA's (possibly wider) type.
-
-    Spark cannot cast a struct with FEWER fields to a wider struct
-    (DATATYPE_MISMATCH), so a checkpoint written before a schema-widening
-    engine upgrade (e.g. protocol gained readerFeatures/writerFeatures,
-    commitInfo gained inCommitTimestamp) would make the table unreadable
-    under a whole-struct cast. Structs are therefore rebuilt field by
-    field — present subfields conformed recursively, missing ones
-    null-filled — preserving NULL struct values as NULL (not a struct of
-    nulls, which would resurrect e.g. an absent `remove` action)."""
-    from pyspark.sql.types import StructType
-
-    if col is None or src_type is None:
-        return F.lit(None).cast(dst_type)
-    if isinstance(dst_type, StructType):
-        if not isinstance(src_type, StructType):
-            return F.lit(None).cast(dst_type)
-        src_fields = {f.name: f.dataType for f in src_type.fields}
-        rebuilt = F.struct(
-            *[
-                _conform_column(
-                    col.getField(f.name) if f.name in src_fields else None,
-                    src_fields.get(f.name),
-                    f.dataType,
-                ).alias(f.name)
-                for f in dst_type.fields
-            ]
-        )
-        return F.when(col.isNull(), F.lit(None).cast(dst_type)).otherwise(
-            rebuilt
-        )
-    return col.cast(dst_type)
-
-
-# checkpoint state rows: every action column plus the commit version
-_STATE_SCHEMA = log_replay.arrow_schema(
-    StructType([*ACTION_SCHEMA.fields, StructField("version", LongType())]).jsonValue()
-)
+# one action row: every action column plus the commit version — what
+# actions() returns and a checkpoint records
+_STATE_SCHEMA = StructType([*ACTION_SCHEMA.fields, StructField("version", LongType())])
 
 _HISTORY_SCHEMA = StructType(
     [
@@ -235,7 +197,50 @@ _HISTORY_SCHEMA = StructType(
         StructField("operationMetrics", _STR_MAP),
     ]
 )
-_HISTORY_ARROW = log_replay.arrow_schema(_HISTORY_SCHEMA.jsonValue())
+_ACTIVE_FILES_SCHEMA = StructType(
+    [
+        StructField("path", StringType()),
+        StructField("partitionValues", _STR_MAP),
+        StructField("size", LongType()),
+        StructField("num_records", LongType()),
+        StructField("version", LongType()),
+    ]
+)
+
+_TOMBSTONES_SCHEMA = StructType(
+    [
+        StructField("path", StringType()),
+        StructField("version", LongType()),
+        StructField("deletionTimestamp", LongType()),
+    ]
+)
+
+_LIVE_ADDS_SCHEMA = StructType(
+    [
+        StructField("path", StringType()),
+        StructField("stats", StringType()),
+        StructField("partitionValues", _STR_MAP),
+    ]
+)
+
+_ROW_LINEAGE_SCHEMA = StructType(
+    [
+        StructField("_rel_path", StringType()),
+        StructField("_base_row_id", LongType()),
+        StructField("_row_commit_version", LongType()),
+    ]
+)
+
+_CHANGES_SCHEMA = StructType(
+    [
+        StructField("version", LongType()),
+        StructField("ts_ms", LongType()),
+        StructField("change_type", StringType()),
+        StructField("path", StringType()),
+        StructField("num_records", LongType()),
+        StructField("size", LongType()),
+    ]
+)
 
 
 # one live file as ``live_files_rows`` returns it
@@ -251,14 +256,15 @@ class DeltaLog:
         self.log_dir = os.path.join(self.table_path, LOG_DIR)
         if not os.path.isdir(self.log_dir):
             raise FileNotFoundError(f"not a Delta table (no {LOG_DIR}): {table_path}")
-        # per-instance plan cache: an instance reads the commit-file list
-        # once, so the many derived reads (active files, tombstones,
-        # history) share one scan plan. A commit made AFTER
-        # construction is seen by a NEW DeltaLog, which is how every
-        # caller already behaves — the standard snapshot-isolation
-        # contract. Metadata-sized answers come from log_replay, which
-        # memoises them per log state across instances.
-        self._actions_cache: dict[bool, DataFrame] = {}
+
+    def _local(self, rows: list[dict], schema: StructType) -> DataFrame:
+        """``rows`` as a DataFrame of ``schema``: an arrow LocalRelation,
+        so the rows are fixed when it is built (a later commit never
+        changes it) and collecting it runs no Spark job."""
+        return self.spark.createDataFrame(
+            log_replay.arrow_table(rows, log_replay.arrow_schema(schema.jsonValue())),
+            schema,
+        )
 
     # -- raw actions -------------------------------------------------------
 
@@ -272,100 +278,20 @@ class DeltaLog:
         multi-part checkpoints — parts), or None."""
         return log_replay.last_checkpoint_info(self.table_path)
 
-    def _read_v2_checkpoint(self, info: dict) -> DataFrame:
-        """Resolve a V2 checkpoint: the UUID top-level file carries
-        non-file actions plus ``sidecar`` index rows; the referenced
-        sidecar parquet files under ``_sidecars/`` carry the add/remove
-        state. Returns one DataFrame shaped like a V1 checkpoint."""
-        top = self.spark.read.parquet(os.path.join(self.log_dir, info["path"]))
-        side_names = log_replay.sidecar_names(self.table_path, info)
-        others = top.where(
-            F.col("sidecar").isNull() & F.col("checkpointMetadata").isNull()
-        ).drop("checkpointMetadata", "sidecar")
-        if not side_names:
-            return others
-        sides = self.spark.read.parquet(
-            *[
-                os.path.join(self.log_dir, "_sidecars", n)
-                for n in side_names
-            ]
-        )
-        return others.unionByName(sides, allowMissingColumns=True)
-
     def actions(self, use_checkpoint: bool = True) -> DataFrame:
         """All actions, tagged with their version.
 
-        With a checkpoint present, reads the checkpoint parquet (the
-        compacted state at version V) plus ONLY the commit JSONs after V —
-        log-read cost is bounded by checkpoint interval, not table age.
+        With a checkpoint present, the checkpoint's rows (the compacted
+        state at version V) plus ONLY the commit JSONs after V — log-read
+        cost is bounded by checkpoint interval, not table age.
         ``use_checkpoint=False`` replays the raw JSON commits instead
         (needed for time travel to versions at or before the checkpoint,
         which compacts away superseded adds).
         """
-        cached = self._actions_cache.get(use_checkpoint)
-        if cached is not None:
-            return cached
-        ckpt_info = self.last_checkpoint_info() if use_checkpoint else None
-        ckpt_version = None if ckpt_info is None else int(ckpt_info["version"])
-        json_files = [
-            log_replay.commit_path(self.table_path, v)
-            for v in log_replay.commit_versions(self.table_path)
-            if ckpt_version is None or v > ckpt_version
-        ]
-        parts = []
-        if ckpt_version is not None:
-            if ckpt_info.get("format") == "v2":
-                ckpt = self._read_v2_checkpoint(ckpt_info)
-            else:
-                ckpt = self.spark.read.parquet(
-                    *[
-                        os.path.join(self.log_dir, n)
-                        for n in checkpoint_file_names(ckpt_info)
-                    ]
-                )
-            ver = (
-                F.col("version").cast("long")
-                if "version" in ckpt.columns
-                else F.lit(ckpt_version).cast("long")
-            )
-            src_types = {f.name: f.dataType for f in ckpt.schema.fields}
-            parts.append(
-                ckpt.select(
-                    *[
-                        _conform_column(
-                            F.col(c) if c in src_types else None,
-                            src_types.get(c),
-                            ACTION_SCHEMA[c].dataType,
-                        ).alias(c)
-                        for c in ACTION_SCHEMA.fieldNames()
-                    ],
-                    ver.alias("version"),
-                )
-            )
-        if json_files:
-            # FAILFAST: a truncated/corrupted commit line must error
-            # loudly — the default PERMISSIVE mode turns it into an
-            # all-null action row and the snapshot silently loses files
-            df = (
-                self.spark.read.schema(ACTION_SCHEMA)
-                .option("mode", "FAILFAST")
-                .json(json_files)
-            )
-            parts.append(
-                df.withColumn(
-                    "version",
-                    F.regexp_extract(
-                        F.col("_metadata.file_path"), r"(\d{20})\.json$", 1
-                    ).cast("long"),
-                )
-            )
-        if not parts:
+        rows = log_replay.Snapshot(self.table_path).actions(use_checkpoint)
+        if not rows:
             raise FileNotFoundError(f"empty delta log: {self.log_dir}")
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        self._actions_cache[use_checkpoint] = out
-        return out
+        return self._local(rows, _STATE_SCHEMA)
 
     def checkpoint(
         self,
@@ -429,7 +355,7 @@ class DeltaLog:
                 )
         cutoff_ms = int((time.time() - tombstone_retention_hours * 3600) * 1000)
         return log_replay.Snapshot(self.table_path).write_checkpoint(
-            _STATE_SCHEMA, cutoff_ms, rows_per_part, v2=format == "v2"
+            log_replay.arrow_schema(_STATE_SCHEMA.jsonValue()), cutoff_ms, rows_per_part, v2=format == "v2"
         )
 
     # -- snapshot ----------------------------------------------------------
@@ -445,53 +371,24 @@ class DeltaLog:
         time travel / change feeds are bounded by log retention)."""
         log_replay.Snapshot(self.table_path).require_history_from(version)
 
-    def _as_of_source(self, as_of: int) -> bool:
-        """Whether replay to ``as_of`` may read from the checkpoint
-        (state at V + JSON tail is exact for any as_of >= V — and after
-        log cleanup it is the ONLY exact source). Raises if neither the
-        checkpoint nor retained JSON can reconstruct ``as_of``."""
-        return log_replay.Snapshot(self.table_path).replays_checkpoint(as_of)
-
     def active_files(self, as_of: int | None = None) -> DataFrame:
         """One row per live data file: path, partitionValues, size,
-        num_records, version (the commit that added it).
-
-        Last-wins reconciliation: rank actions per path by (version desc,
-        add-before-remove desc); a path is live iff its top-ranked action
-        is an add. One shuffle over |files| rows. ``as_of`` reconstructs
-        the state as of that committed version (time travel) by replaying
-        only actions with version <= as_of from the raw JSON log.
-        """
-        use_ckpt = True if as_of is None else self._as_of_source(as_of)
-        acts = self.actions(use_checkpoint=use_ckpt)
-        if as_of is not None:
-            acts = acts.where(F.col("version") <= as_of)
-        adds = acts.where(F.col("add").isNotNull()).select(
-            F.col("add.path").alias("path"),
-            F.col("add.partitionValues").alias("partitionValues"),
-            F.col("add.size").alias("size"),
-            F.get_json_object("add.stats", "$.numRecords")
-            .cast("long")
-            .alias("num_records"),
-            "version",
-            F.lit(1).alias("is_add"),
-        )
-        removes = acts.where(F.col("remove").isNotNull()).select(
-            F.col("remove.path").alias("path"),
-            F.lit(None).cast(_STR_MAP).alias("partitionValues"),
-            F.lit(None).cast("long").alias("size"),
-            F.lit(None).cast("long").alias("num_records"),
-            "version",
-            F.lit(0).alias("is_add"),
-        )
-        # add outranks remove at the same version (add-wins, as documented:
-        # a commit that removes and re-adds a path keeps the file live)
-        w = Window.partitionBy("path").orderBy(F.desc("version"), F.desc("is_add"))
-        return (
-            adds.unionByName(removes)
-            .withColumn("rn", F.row_number().over(w))
-            .where((F.col("rn") == 1) & (F.col("is_add") == 1))
-            .drop("rn", "is_add")
+        num_records, version (the commit that added it), by path.
+        ``as_of`` reconstructs the state as of that committed version
+        (time travel)."""
+        live, _, at = log_replay.Snapshot(self.table_path)._reconciled(as_of)
+        return self._local(
+            [
+                {
+                    "path": p,
+                    "partitionValues": live[p].get("partitionValues"),
+                    "size": live[p].get("size"),
+                    "num_records": log_replay._num_records(live[p].get("stats")),
+                    "version": at[p],
+                }
+                for p in sorted(live)
+            ],
+            _ACTIVE_FILES_SCHEMA,
         )
 
     def live_files_rows(self, as_of: int | None = None) -> list:
@@ -509,26 +406,15 @@ class DeltaLog:
         return log_replay.Snapshot(self.table_path).live_add_actions()
 
     def tombstones(self) -> DataFrame:
-        """Files whose latest action is a remove (vacuum candidates)."""
-        acts = self.actions()
-        adds = acts.where(F.col("add").isNotNull()).select(
-            F.col("add.path").alias("path"), "version",
-            F.lit(None).cast("long").alias("deletionTimestamp"),
-            F.lit(1).alias("is_add"),
-        )
-        removes = acts.where(F.col("remove").isNotNull()).select(
-            F.col("remove.path").alias("path"), "version",
-            F.col("remove.deletionTimestamp").alias("deletionTimestamp"),
-            F.lit(0).alias("is_add"),
-        )
-        # add outranks remove at the same version (add-wins, as documented:
-        # a commit that removes and re-adds a path keeps the file live)
-        w = Window.partitionBy("path").orderBy(F.desc("version"), F.desc("is_add"))
-        return (
-            adds.unionByName(removes)
-            .withColumn("rn", F.row_number().over(w))
-            .where((F.col("rn") == 1) & (F.col("is_add") == 0))
-            .select("path", "version", "deletionTimestamp")
+        """Files whose latest action is a remove (vacuum candidates):
+        path, version, deletionTimestamp, by path."""
+        _, tombs, at = log_replay.Snapshot(self.table_path)._reconciled(None)
+        return self._local(
+            [
+                {"path": p, "version": at[p], "deletionTimestamp": tombs[p].get("deletionTimestamp")}
+                for p in sorted(tombs)
+            ],
+            _TOMBSTONES_SCHEMA,
         )
 
     # -- history / metadata ------------------------------------------------
@@ -559,9 +445,7 @@ class DeltaLog:
             rows.append(
                 {**infos[v], "version": v, "timestamp": infos[v].get("timestamp") if ts is None else ts}
             )
-        return self.spark.createDataFrame(
-            log_replay.arrow_table(rows, _HISTORY_ARROW), _HISTORY_SCHEMA
-        )
+        return self._local(rows, _HISTORY_SCHEMA)
 
     def version(self) -> int:
         v = log_replay.Snapshot(self.table_path).version()
@@ -734,21 +618,17 @@ class DeltaLog:
         Scale shape: the per-file (path, baseRowId) map is |files| rows
         and broadcasts; the data never shuffles."""
         base = self.snapshot_with_positions(as_of)
-        use_ckpt = True if as_of is None else self._as_of_source(as_of)
-        acts = self.actions(use_checkpoint=use_ckpt)
-        if as_of is not None:
-            acts = acts.where(F.col("version") <= as_of)
-        adds = acts.where(F.col("add").isNotNull()).select(
-            F.col("add.path").alias("_rel_path"),
-            F.col("add.baseRowId").alias("_base_row_id"),
-            F.col("add.defaultRowCommitVersion").alias("_row_commit_version"),
-            "version",
-        )
-        w = Window.partitionBy("_rel_path").orderBy(F.desc("version"))
-        latest = (
-            adds.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-            .drop("rn", "version")
+        live = log_replay.Snapshot(self.table_path)._reconciled(as_of)[0]
+        latest = self._local(
+            [
+                {
+                    "_rel_path": p,
+                    "_base_row_id": a.get("baseRowId"),
+                    "_row_commit_version": a.get("defaultRowCommitVersion"),
+                }
+                for p, a in sorted(live.items())
+            ],
+            _ROW_LINEAGE_SCHEMA,
         )
         return (
             base.join(F.broadcast(latest), "_rel_path", "left")
@@ -775,23 +655,58 @@ class DeltaLog:
 
     # -- data access -------------------------------------------------------
 
+    def _file_path_expr(self):
+        """Absolute path of the file behind each row, from
+        ``_metadata.file_path``. The metadata column is a percent-encoded
+        ``file:`` URI — a table path or partition value containing a
+        character Spark encodes (space, ``#``, …) would never match the
+        un-encoded log paths, silently turning the DV anti-join into a
+        no-op. So: decode first (protecting ``+``, which is literal in a
+        URI path but form-decoded by ``url_decode``), then normalize the
+        scheme."""
+        decoded = F.url_decode(
+            F.regexp_replace(F.col("_metadata.file_path"), r"\+", "%2B")
+        )
+        return F.regexp_replace(decoded, r"^file:/+", "/")
+
+    def _with_lineage(self, df: DataFrame) -> DataFrame:
+        """``df`` (a parquet scan) plus ``_rel_path`` (the log-relative
+        path of the row's file) and ``_row_index`` — ``_metadata`` is
+        only resolvable directly on the scan."""
+        rel = F.replace(self._file_path_expr(), F.lit(self.table_path + "/"), F.lit(""))
+        return df.withColumn("_rel_path", rel).withColumn(
+            "_row_index", F.col("_metadata.row_index")
+        )
+
+    @staticmethod
+    def _drop_deleted(df: DataFrame, dv: DataFrame) -> DataFrame:
+        """Anti-join the soft-deleted positions ``dv`` (rel_path,
+        row_index) out of ``df``, which carries lineage columns. The dv
+        side is tiny, so it broadcasts; the data never shuffles."""
+        return df.join(
+            F.broadcast(
+                dv.select(
+                    F.col("rel_path").alias("_rel_path"),
+                    F.col("row_index").alias("_row_index"),
+                )
+            ),
+            ["_rel_path", "_row_index"],
+            "left_anti",
+        )
+
     def _read_with_logged_partitions(
-        self, live, schema: dict | None, as_of: int | None = None,
-        keep_lineage: bool = False,
+        self, live, schema: dict | None, as_of: int | None, keep_lineage: bool
     ) -> DataFrame:
         """Read live files by explicit path with partition columns taken
         from the LOG's partitionValues (the Delta-spec source of truth) —
         required when live files sit outside this table directory (shallow
         clones), where hive basePath inference cannot run. ``live`` is
-        rows of (path, partitionValues). The per-file partition map is
-        metadata-sized and broadcasts."""
-        from pyspark.sql.types import StringType, StructField as SF
-
+        rows of (path, partitionValues). Columns stay in physical names.
+        The per-file partition map is metadata-sized and broadcasts."""
         from delta_lake_health_spark.sources import delta_writer
 
         part_cols = self.metadata(as_of).get("partition_columns", [])
         abs_of = lambda p: p if os.path.isabs(p) else os.path.join(self.table_path, p)  # noqa: E731
-        abs_paths = [abs_of(r.path) for r in live]
         reader = self.spark.read
         if schema is not None:
             data_fields = [
@@ -802,88 +717,103 @@ class DeltaLog:
             reader = reader.schema(
                 StructType.fromJson({"type": "struct", "fields": data_fields})
             )
-        df = reader.parquet(*abs_paths)
+        df = reader.parquet(*[abs_of(r.path) for r in live])
         if keep_lineage:
-            df = df.withColumn("_rel_path", self._rel_path_expr()).withColumn(
-                "_row_index", F.col("_metadata.row_index")
-            )
+            # captured on the scan: the partition-value join below hides
+            # ``_metadata``
+            df = self._with_lineage(df)
         if not part_cols:
-            return (
-                self._rename_physical_to_logical(df, schema) if schema else df
-            )
-        decoded = F.url_decode(
-            F.regexp_replace(F.col("_metadata.file_path"), r"\+", "%2B")
-        )
-        normalized = F.regexp_replace(decoded, r"^file:/+", "/")
+            return df
         rows = []
         for r in live:
             pv = delta_writer.logged_partition_values(r.path, r.partitionValues)
             rows.append(tuple([abs_of(r.path)] + [pv.get(c) for c in part_cols]))
         pv_schema = StructType(
-            [SF("_abs_path", StringType())]
-            + [SF(f"_pv_{c}", StringType()) for c in part_cols]
+            [StructField("_abs_path", StringType())]
+            + [StructField(f"_pv_{c}", StringType()) for c in part_cols]
         )
-        pv_df = self.spark.createDataFrame(rows, pv_schema)
         df = (
-            df.withColumn("_abs_path", normalized)
-            .join(F.broadcast(pv_df), "_abs_path")
+            df.withColumn("_abs_path", self._file_path_expr())
+            .join(F.broadcast(self.spark.createDataFrame(rows, pv_schema)), "_abs_path")
             .drop("_abs_path")
         )
         field_by_name = {f["name"]: f for f in (schema or {}).get("fields", [])}
-        from pyspark.sql.types import StructField as SField
-
         for c in part_cols:
             if c in field_by_name:
-                dtype = SField.fromJson(field_by_name[c]).dataType
+                dtype = StructField.fromJson(field_by_name[c]).dataType
                 df = df.withColumn(c, F.col(f"_pv_{c}").cast(dtype))
             else:
                 df = df.withColumn(c, F.col(f"_pv_{c}"))
             df = df.drop(f"_pv_{c}")
-        return self._rename_physical_to_logical(df, schema) if schema else df
+        return df
+
+    def _read(self, live: list, as_of: int | None, keep_lineage: bool) -> DataFrame:
+        """The one live-file scan: the files ``live`` (rows of path,
+        partitionValues) of the state at ``as_of``, with the deletion
+        vectors of that state applied, in logical column names and logged
+        table-schema order, plus ``_rel_path`` / ``_row_index`` lineage
+        when ``keep_lineage``.
+
+        Files are read under the LOGGED schema in PHYSICAL column names
+        (files always carry physical names; RENAME COLUMN is
+        metadata-only): after schema evolution, files written before a
+        column existed surface it as null instead of the reader picking
+        whichever file schema it samples first. A table whose files all
+        sit under it recovers hive partition columns through the
+        ``basePath`` option; a shallow clone's files sit OUTSIDE it, so
+        its partition values come from the log.
+
+        The live-file PATH LIST is held on the driver to feed the parquet
+        reader — deliberate: it is bounded by |files| (metadata, not
+        data; ~100 bytes/file, so even a million-file table is ~100 MB,
+        the same order every Delta/Iceberg driver-side planner holds),
+        and passing explicit paths is what lets the scan skip dead files
+        without a data-side filter."""
+        self.require_readable()
+        schema = self.metadata(as_of).get("schema")
+        lineage = ["_rel_path", "_row_index"] if keep_lineage else []
+        if not live:
+            if schema is None:
+                raise ValueError("empty table with no schema")
+            df = self.spark.createDataFrame([], StructType.fromJson(schema))
+            if keep_lineage:
+                df = df.withColumn("_rel_path", F.lit(None).cast("string")).withColumn(
+                    "_row_index", F.lit(None).cast("long")
+                )
+            return df
+        dv = self.deletion_vectors(as_of)
+        capture = keep_lineage or dv is not None
+        if any(os.path.isabs(r.path) for r in live):
+            df = self._read_with_logged_partitions(live, schema, as_of, capture)
+        else:
+            reader = self.spark.read.option("basePath", self.table_path)
+            if schema is not None:
+                reader = reader.schema(
+                    StructType.fromJson(self.physical_schema(schema))
+                )
+            df = reader.parquet(
+                *[os.path.join(self.table_path, r.path) for r in live]
+            )
+            if capture:
+                df = self._with_lineage(df)
+        if dv is not None:
+            df = self._drop_deleted(df, dv)
+        if schema is None:
+            return df if keep_lineage else df.drop("_rel_path", "_row_index")
+        # the basePath reader appends hive partition columns at the end
+        return self._rename_physical_to_logical(df, schema).select(
+            *[f["name"] for f in schema["fields"]], *lineage
+        )
 
     def read_data_files(self, rel_paths: list[str]) -> DataFrame:
         """Read specific live data files WITH deletion vectors applied —
         the reader every file-rewriting operator (compact, delete,
         apply_deletion_vectors) must use: reading the raw parquet would
         resurrect soft-deleted positions into the rewritten files."""
-        dv = self.deletion_vectors()
-        if any(os.path.isabs(p) for p in rel_paths):
-            want = set(rel_paths)
-            live = [r for r in self.live_files_rows() if r.path in want]
-            # lineage captured at scan: _apply_dv's _metadata reference
-            # would be unresolvable after the partition-value join
-            df = self._read_with_logged_partitions(
-                live, self.metadata().get("schema"), keep_lineage=True
-            )
-            out_cols = [
-                c for c in df.columns if c not in ("_rel_path", "_row_index")
-            ]
-            if dv is not None:
-                df = df.join(
-                    F.broadcast(
-                        dv.select(
-                            F.col("rel_path").alias("_rel_path"),
-                            F.col("row_index").alias("_row_index"),
-                        )
-                    ),
-                    ["_rel_path", "_row_index"],
-                    "left_anti",
-                )
-            return df.select(*out_cols)
-        abs_paths = [os.path.join(self.table_path, p) for p in rel_paths]
-        schema = self.metadata().get("schema")
-        reader = self.spark.read.option("basePath", self.table_path)
-        if schema is not None:
-            reader = reader.schema(
-                StructType.fromJson(self.physical_schema(schema))
-            )
-        df = reader.parquet(*abs_paths)
-        if dv is not None:
-            out_cols = df.columns
-            df = self._apply_dv(df, dv).select(*out_cols)
-        if schema is not None:
-            df = self._rename_physical_to_logical(df, schema)
-        return df
+        want = set(rel_paths)
+        return self._read(
+            [r for r in self.live_files_rows() if r.path in want], None, False
+        )
 
     def commit_timestamps(self) -> list[tuple[int, int]]:
         """(version, adjusted_ts_millis) over the RETAINED log for
@@ -932,114 +862,12 @@ class DeltaLog:
         return self.snapshot(as_of=self.version_at_timestamp(ts))
 
     def snapshot(self, as_of: int | None = None) -> DataFrame:
-        """The table's data as a DataFrame — reads ONLY the live files
-        (basePath option recovers hive-style partition columns). ``as_of``
-        time-travels to the state after that committed version; superseded
-        files stay readable until ``vacuum`` physically deletes them, so
-        travel depth = vacuum retention, exactly like Delta's
-        ``versionAsOf``.
-
-        The live-file PATH LIST is collected to the driver to feed the
-        parquet reader — deliberate: it is bounded by |files| (metadata,
-        not data; ~100 bytes/file, so even a million-file table is
-        ~100 MB, the same order every Delta/Iceberg driver-side planner
-        holds), and passing explicit paths is what lets the scan skip
-        dead files without a data-side filter."""
-        self.require_readable()
-        live = self.live_files_rows(as_of)
-        paths = [r.path for r in live]
-        schema = self.metadata(as_of).get("schema")
-        if not paths:
-            if schema is None:
-                raise ValueError("empty table with no schema")
-            return self.spark.createDataFrame(
-                [], StructType.fromJson(schema)
-            )
-        dv = self.deletion_vectors(as_of)
-        if any(os.path.isabs(p) for p in paths):
-            # shallow-cloned table: some live files sit OUTSIDE this table
-            # directory, so hive-style basePath inference can't run —
-            # partition values come from the LOG instead (the Delta-spec
-            # source of truth). Lineage is captured at scan because
-            # _apply_dv's _metadata reference is unresolvable after the
-            # partition-value join.
-            df = self._read_with_logged_partitions(
-                live, schema, as_of, keep_lineage=dv is not None
-            )
-            if dv is not None:
-                out_cols = [
-                    c for c in df.columns if c not in ("_rel_path", "_row_index")
-                ]
-                df = df.join(
-                    F.broadcast(
-                        dv.select(
-                            F.col("rel_path").alias("_rel_path"),
-                            F.col("row_index").alias("_row_index"),
-                        )
-                    ),
-                    ["_rel_path", "_row_index"],
-                    "left_anti",
-                ).select(*out_cols)
-        else:
-            abs_paths = [os.path.join(self.table_path, p) for p in paths]
-            reader = self.spark.read.option("basePath", self.table_path)
-            if schema is not None:
-                # read under the LOGGED schema — in PHYSICAL column names
-                # (files always carry physical names; RENAME COLUMN is
-                # metadata-only): after schema evolution, files written
-                # before a column existed surface it as null instead of
-                # the reader picking whichever file schema it samples
-                # first
-                reader = reader.schema(
-                    StructType.fromJson(self.physical_schema(schema))
-                )
-            df = reader.parquet(*abs_paths)
-            if dv is not None:
-                # apply position deletes: anti-join on (file, row position)
-                # — the dv side is tiny, so this broadcasts; data never
-                # shuffles
-                out_cols = df.columns
-                df = self._apply_dv(df, dv).select(*out_cols)
-            if schema is not None:
-                df = self._rename_physical_to_logical(df, schema)
-        if schema is not None:
-            # the basePath reader appends hive partition columns at the
-            # end; present columns in logged table-schema order
-            df = df.select(*[f["name"] for f in schema["fields"]])
-        return df
-
-    def _rel_path_expr(self):
-        """Log-relative path of the file behind each row, derived from
-        ``_metadata.file_path``. The metadata column is a percent-encoded
-        ``file:`` URI — a table path or partition value containing a
-        character Spark encodes (space, ``#``, …) would never match the
-        un-encoded log paths under a plain prefix strip, silently turning
-        the DV anti-join into a no-op. So: decode first (protecting ``+``,
-        which is literal in a URI path but form-decoded by ``url_decode``),
-        normalize the scheme, then strip the table prefix."""
-        decoded = F.url_decode(
-            F.regexp_replace(F.col("_metadata.file_path"), r"\+", "%2B")
-        )
-        normalized = F.regexp_replace(decoded, r"^file:/+", "/")
-        return F.replace(normalized, F.lit(self.table_path + "/"), F.lit(""))
-
-    def _apply_dv(self, df: DataFrame, dv: DataFrame) -> DataFrame:
-        """Anti-join soft-deleted positions; leaves ``_rel_path`` /
-        ``_row_index`` lineage columns on the result."""
-        return (
-            df.withColumn("_rel_path", self._rel_path_expr())
-            .withColumn("_row_index", F.col("_metadata.row_index"))
-            .join(
-                F.broadcast(
-                    dv.select(
-                        F.col("rel_path").alias("_rel_path"),
-                        F.col("row_index").alias("_row_index"),
-                    )
-                ),
-                ["_rel_path", "_row_index"],
-                "left_anti",
-            )
-        )
+        """The table's data as a DataFrame — reads ONLY the live files.
+        ``as_of`` time-travels to the state after that committed version;
+        superseded files stay readable until ``vacuum`` physically
+        deletes them, so travel depth = vacuum retention, exactly like
+        Delta's ``versionAsOf``."""
+        return self._read(self.live_files_rows(as_of), as_of, False)
 
     def snapshot_with_positions(
         self,
@@ -1049,107 +877,52 @@ class DeltaLog:
         """Snapshot plus ``_rel_path`` / ``_row_index`` lineage columns —
         what DELETE-style operators need: ``_metadata`` is only resolvable
         directly on the scan, so any caller that joins or projects first
-        must capture the position columns up front (the DV anti-join in
-        ``snapshot`` does exactly that, which is why this exists).
+        must capture the position columns up front.
 
         ``rel_paths`` restricts the scan to a SUBSET of live files at
         plan time (the file list itself, not a post-scan filter) — what
         incremental indexers need: touching only the files missing from
         their sidecar instead of rereading the table."""
-        self.require_readable()
         live = self.live_files_rows(as_of)
         if rel_paths is not None:
             want = set(rel_paths)
             live = [r for r in live if r.path in want]
-        paths = [r.path for r in live]
-        schema = self.metadata(as_of).get("schema")
-        if not paths:
-            base = self.snapshot(as_of)
-            if rel_paths is not None:
-                base = base.where(F.lit(False))
-            return base.withColumn(
-                "_rel_path", F.lit(None).cast("string")
-            ).withColumn("_row_index", F.lit(None).cast("long"))
-        if any(os.path.isabs(p) for p in paths):
-            # shallow clone: lineage columns captured on the scan inside
-            # the helper (before the partition-value join)
-            df = self._read_with_logged_partitions(
-                live, schema, as_of, keep_lineage=True
-            )
-            dv = self.deletion_vectors(as_of)
-            if dv is not None:
-                df = df.join(
-                    F.broadcast(
-                        dv.select(
-                            F.col("rel_path").alias("_rel_path"),
-                            F.col("row_index").alias("_row_index"),
-                        )
-                    ),
-                    ["_rel_path", "_row_index"],
-                    "left_anti",
-                )
-        else:
-            abs_paths = [os.path.join(self.table_path, p) for p in paths]
-            reader = self.spark.read.option("basePath", self.table_path)
-            if schema is not None:
-                reader = reader.schema(
-                    StructType.fromJson(self.physical_schema(schema))
-                )
-            df = reader.parquet(*abs_paths)
-            dv = self.deletion_vectors(as_of)
-            if dv is not None:
-                df = self._apply_dv(df, dv)
-            else:
-                df = df.withColumn("_rel_path", self._rel_path_expr()).withColumn(
-                    "_row_index", F.col("_metadata.row_index")
-                )
-            if schema is not None:
-                df = self._rename_physical_to_logical(df, schema)
-        if schema is not None:
-            df = df.select(
-                *[f["name"] for f in schema["fields"]], "_rel_path", "_row_index"
-            )
-        return df
+        return self._read(live, as_of, True)
 
     def changes(
         self, from_version: int = 0, to_version: int | None = None
     ) -> DataFrame:
         """CDC-style change feed from the log alone: one row per file-level
         change in [from_version, to_version] — (version, ts, change_type
-        add|remove, path, num_records, size). File-granular like Delta's
+        add|remove, path, num_records, size), ordered by version, change
+        type and path. File-granular like Delta's
         change-data-feed-without-CDF reads; a consumer incrementally
         processes exactly the files each commit touched instead of
         re-scanning the table."""
-        self.require_history_from(from_version)
-        acts = self.actions(use_checkpoint=False).where(
-            F.col("version") >= from_version
-        )
-        if to_version is not None:
-            acts = acts.where(F.col("version") <= to_version)
-        adds = acts.where(F.col("add").isNotNull()).select(
-            "version",
-            F.lit("add").alias("change_type"),
-            F.col("add.path").alias("path"),
-            F.get_json_object("add.stats", "$.numRecords")
-            .cast("long")
-            .alias("num_records"),
-            F.col("add.size").alias("size"),
-        )
-        removes = acts.where(F.col("remove").isNotNull()).select(
-            "version",
-            F.lit("remove").alias("change_type"),
-            F.col("remove.path").alias("path"),
-            F.lit(None).cast("long").alias("num_records"),
-            F.lit(None).cast("long").alias("size"),
-        )
-        ts = acts.where(F.col("commitInfo").isNotNull()).select(
-            "version", F.timestamp_millis(F.col("commitInfo.timestamp")).alias("ts")
-        )
-        return (
-            adds.unionByName(removes)
-            .join(ts, "version", "left")
-            .select("version", "ts", "change_type", "path", "num_records", "size")
-            .orderBy("version", "change_type", "path")
+        snap = log_replay.Snapshot(self.table_path)
+        snap.require_history_from(from_version)
+        rows = []
+        for v in snap.versions:
+            if v < from_version or (to_version is not None and v > to_version):
+                continue
+            acts = log_replay.read_commit(self.table_path, v)
+            ts = next(
+                (a["commitInfo"].get("timestamp") for a in acts if a.get("commitInfo") is not None),
+                None,
+            )
+            for a in acts:
+                for kind, act in (("add", a.get("add")), ("remove", a.get("remove"))):
+                    if act is not None:
+                        rows.append({
+                            "version": v, "ts_ms": ts, "change_type": kind,
+                            "path": act.get("path"),
+                            "num_records": log_replay._num_records(act.get("stats")) if kind == "add" else None,
+                            "size": act.get("size") if kind == "add" else None,
+                        })
+        rows.sort(key=lambda r: (r["version"], r["change_type"], r["path"] or ""))
+        return self._local(rows, _CHANGES_SCHEMA).select(
+            "version", F.timestamp_millis("ts_ms").alias("ts"),
+            "change_type", "path", "num_records", "size",
         )
 
     def pruned_files(self, column: str, lower, upper) -> DataFrame:
@@ -1196,33 +969,14 @@ class DeltaLog:
 
     def _live_adds(self) -> DataFrame:
         """(path, stats, partitionValues) for every live file — the
-        add-wins liveness rule (add outranks remove at the same
-        version: a commit that removes and re-adds a path keeps the
-        file live), shared by every log-level skipping path so the
-        liveness semantics cannot silently diverge between them."""
-        acts = self.actions()
-        adds = acts.where(F.col("add").isNotNull()).select(
-            F.col("add.path").alias("path"),
-            F.col("add.stats").alias("stats"),
-            F.col("add.partitionValues").alias("partitionValues"),
-            "version",
-            F.lit(1).alias("is_add"),
-        )
-        removes = acts.where(F.col("remove").isNotNull()).select(
-            F.col("remove.path").alias("path"),
-            F.lit(None).cast("string").alias("stats"),
-            F.lit(None).cast(_STR_MAP).alias("partitionValues"),
-            "version",
-            F.lit(0).alias("is_add"),
-        )
-        w = Window.partitionBy("path").orderBy(
-            F.desc("version"), F.desc("is_add")
-        )
-        return (
-            adds.unionByName(removes)
-            .withColumn("rn", F.row_number().over(w))
-            .where((F.col("rn") == 1) & (F.col("is_add") == 1))
-            .select("path", "stats", "partitionValues")
+        replay's live set, shared by every log-level skipping path so
+        the liveness semantics cannot diverge between them."""
+        return self._local(
+            [
+                {"path": a["path"], "stats": a.get("stats"), "partitionValues": a.get("partitionValues")}
+                for a in log_replay.Snapshot(self.table_path)._live_adds()
+            ],
+            _LIVE_ADDS_SCHEMA,
         )
 
     def live_file_intervals(
@@ -1316,14 +1070,10 @@ class DeltaLog:
         files whose stats interval intersects [lower, upper]. The caller
         still applies the row-level filter; this prunes at FILE
         granularity, like Delta's stats-based skipping."""
-        paths = [r.path for r in self.pruned_files(column, lower, upper).collect()]
-        if not paths:
-            schema = self.metadata().get("schema")
-            if schema is None:
-                raise ValueError("empty scan with no schema")
-            return self.spark.createDataFrame([], StructType.fromJson(schema))
-        abs_paths = [os.path.join(self.table_path, p) for p in paths]
-        return self.spark.read.option("basePath", self.table_path).parquet(*abs_paths)
+        keep = {r.path for r in self.pruned_files(column, lower, upper).collect()}
+        return self._read(
+            [r for r in self.live_files_rows() if r.path in keep], None, False
+        )
 
     # -- log-only aggregates (no data scan) --------------------------------
 

@@ -1027,16 +1027,12 @@ def _maybe_auto_compact(spark: SparkSession, table_path: str, meta) -> None:
     small_size = int(
         config.get("delta.autoOptimize.smallFileSize", str(32 * 1024 * 1024))
     )
-    from pyspark.sql import functions as F
-
     from delta_lake_health_spark.operators import maintenance
-    from delta_lake_health_spark.sources.delta_log import DeltaLog
 
-    n_small = (
-        DeltaLog(spark, table_path)
-        .active_files()
-        .where(F.col("size") < small_size)
-        .count()
+    n_small = sum(
+        1
+        for a in log_replay.Snapshot(table_path)._live_adds()
+        if a.get("size") is not None and a["size"] < small_size
     )
     if n_small >= min_files:
         maintenance.compact(
@@ -1874,10 +1870,12 @@ def _write_files(
        ``physical`` is False) is written with ``partition_by``;
     3. the new files are the table folder's listing minus the one taken
        before the write;
-    4. on a violation those files, their hidden Hadoop checksums and the
-       partition directories they emptied are deleted before raising,
-       so a refused batch leaves no debris;
-    5. their add actions carry ``dataChange = data_change``.
+    4. on a violation those files are discarded (``_discard_files``)
+       before raising, so a refused batch leaves no debris;
+    5. files holding no row (Spark writes one when every task of the
+       write is empty — a DELETE that removes every row it rewrites) are
+       discarded too: a 0-row add would only grow the small-file count;
+    6. the other files' add actions carry ``dataChange = data_change``.
 
     The observation is read only after the write job that computes it,
     so ``Observation.get`` never waits on a plan that is not run."""
@@ -1906,22 +1904,34 @@ def _write_files(
         if check is not None:
             _raise_constraint_violations(observed, *check[1:])
     except Exception:
-        for rel in new_files:
-            head, name = os.path.split(os.path.join(table_path, rel))
-            for n in (name, f".{name}.crc"):
-                try:
-                    os.remove(os.path.join(head, n))
-                except OSError:
-                    pass
-        for d in {os.path.dirname(rel) for rel in new_files}:
-            while d:
-                try:
-                    os.rmdir(os.path.join(table_path, d))
-                except OSError:
-                    break  # not empty: it holds committed files
-                d = os.path.dirname(d)
+        _discard_files(table_path, new_files)
         raise
-    return [_add_action(table_path, rel, data_change) for rel in new_files], observed
+    adds = [_add_action(table_path, rel, data_change) for rel in new_files]
+    empty = {
+        rel for rel, a in zip(new_files, adds)
+        if log_replay._num_records(a["add"]["stats"]) == 0
+    }
+    _discard_files(table_path, sorted(empty))
+    return [a for rel, a in zip(new_files, adds) if rel not in empty], observed
+
+
+def _discard_files(table_path: str, rels: list[str]) -> None:
+    """Delete uncommitted data files, their hidden Hadoop checksums and
+    the partition directories they leave empty."""
+    for rel in rels:
+        head, name = os.path.split(os.path.join(table_path, rel))
+        for n in (name, f".{name}.crc"):
+            try:
+                os.remove(os.path.join(head, n))
+            except OSError:
+                pass
+    for d in {os.path.dirname(rel) for rel in rels}:
+        while d:
+            try:
+                os.rmdir(os.path.join(table_path, d))
+            except OSError:
+                break  # not empty: it holds committed files
+            d = os.path.dirname(d)
 
 
 def _remove_actions(paths, data_change: bool = True) -> list[dict]:
@@ -2627,8 +2637,6 @@ def clone_deep(spark: SparkSession, source_path: str, target_path: str) -> int:
     the rows the source masks. Refused only when the source mixes live
     DVs with absolute-path adds (a materialization would change the
     paths the sidecars key on)."""
-    from pyspark.sql import functions as F
-
     from delta_lake_health_spark.sources.delta_log import DeltaLog
 
     src = DeltaLog(spark, source_path)
@@ -2680,14 +2688,10 @@ def clone_deep(spark: SparkSession, source_path: str, target_path: str) -> int:
         copied.append((a, rel))
     dv_counts: dict[str, int] = {}
     if live_dvs:
-        dv_acts = (
-            src.actions()
-            .where(F.col("dv").isNotNull())
-            .select(F.col("dv.path").alias("p"),
-                    F.col("dv.numDeletedRows").alias("n"))
-            .collect()
-        )
-        n_by_path = {r.p: int(r.n) for r in dv_acts}
+        n_by_path = {
+            d.get("path"): int(d.get("numDeletedRows") or 0)
+            for _, d in log_replay.Snapshot(src.table_path)._every("dv", None)
+        }
         for rel in live_dvs:
             dst_abs = os.path.join(target_path, rel)
             os.makedirs(os.path.dirname(dst_abs), exist_ok=True)
@@ -3398,8 +3402,6 @@ def drop_feature(spark: SparkSession, table_path: str, feature: str) -> int:
     ``DROP FEATURE TRUNCATE HISTORY`` flow where ``cleanup_log``
     (operators/maintenance.py) is the truncation half.
     """
-    from pyspark.sql import functions as F
-
     from delta_lake_health_spark.sources.delta_log import DeltaLog
 
     _require_writable(spark, table_path)
@@ -3411,19 +3413,12 @@ def drop_feature(spark: SparkSession, table_path: str, feature: str) -> int:
         raise ValueError(f"table does not declare feature {feature!r}")
 
     if feature == "deletionVectors":
-        dv = log.deletion_vectors()
-        if dv is not None:
-            live = log.active_files().select(
-                F.col("path").alias("rel_path")
+        n_live = sum(log_replay.Snapshot(table_path).dv_deleted_rows().values())
+        if n_live:
+            raise ValueError(
+                f"cannot drop deletionVectors: {n_live} live DV "
+                "positions remain — run reorg_purge first"
             )
-            n_live = dv.join(
-                F.broadcast(live), "rel_path", "left_semi"
-            ).count()
-            if n_live:
-                raise ValueError(
-                    f"cannot drop deletionVectors: {n_live} live DV "
-                    "positions remain — run reorg_purge first"
-                )
     elif feature == "columnMapping":
         schema = log.metadata().get("schema") or {}
         mapped = [

@@ -1,15 +1,15 @@
 """Driver-side Delta log replay — stdlib + pyarrow, no SparkSession.
 
-Every metadata-sized answer about a table's ``_delta_log`` is resolved
-here: the version, metaData, protocol, live add actions, tombstones,
-deletion-vector sidecars and the rows they delete per live file, record
-counts per live file, the ``txn`` version per appId, domain metadata per
-domain, commitInfo per version and commit timestamps. A snapshot is the
-newest checkpoint (v1 single, multi-part, or v2 with ``_sidecars/``) plus
-the commit JSONs after it, reconciled last-wins per path (the Delta
-protocol's definition, PAPER.md D1). The distributed replay in
-``delta_log.DeltaLog.actions`` stays for consumers that need a
-DataFrame.
+This is the one reader of a table's ``_delta_log``. Every answer about
+the log is resolved here: the actions themselves, the version, metaData,
+protocol, live add actions, tombstones, deletion-vector sidecars and the
+rows they delete per live file, record counts per live file, the ``txn``
+version per appId, domain metadata per domain, commitInfo per version
+and commit timestamps. A snapshot is the newest checkpoint (v1 single,
+multi-part, or v2 with ``_sidecars/``) plus the commit JSONs after it,
+reconciled last-wins per path (the Delta protocol's definition, PAPER.md
+D1). ``delta_log.DeltaLog`` hands the DataFrame-shaped answers to Spark
+as arrow LocalRelations built from these rows.
 
 Checkpoints are written here too, next to the reader:
 ``Snapshot.write_checkpoint`` turns the reconciled state into arrow
@@ -166,42 +166,54 @@ def sidecar_names(table_path: str, info: dict) -> list[str]:
     return [r["path"] for r in col.to_pylist() if r and r.get("path")]
 
 
-def _has_map(t) -> bool:
+def _plainer(t: pa.DataType):
+    """A function turning one ``to_pylist`` value of arrow type ``t`` into
+    the shape a commit JSON parses to: map values (tuple lists in
+    ``to_pylist``) become dicts. None when ``t`` holds no map, so its
+    values are used as they are. ``to_pylist`` builds fresh dicts, so
+    struct values are converted in place."""
     if pa.types.is_map(t):
-        return True
+        item = _plainer(t.item_type)
+        if item is None:
+            return lambda v: None if v is None else dict(v)
+        return lambda v: None if v is None else {k: item(x) for k, x in v}
     if pa.types.is_struct(t):
-        return any(_has_map(f.type) for f in t)
+        fields = [(f.name, c) for f in t if (c := _plainer(f.type)) is not None]
+        if not fields:
+            return None
+
+        def struct(v):
+            if v is not None:
+                for name, c in fields:
+                    v[name] = c(v[name])
+            return v
+
+        return struct
     if pa.types.is_list(t) or pa.types.is_large_list(t):
-        return _has_map(t.value_type)
-    return False
+        elem = _plainer(t.value_type)
+        if elem is None:
+            return None
+        return lambda v: None if v is None else [elem(x) for x in v]
+    return None
 
 
-def _plain(v, t):
-    """One pyarrow value with its map values turned into dicts (the
-    shape a commit JSON parses to; ``to_pylist`` yields tuple lists)."""
-    if v is None:
-        return None
-    if pa.types.is_map(t):
-        return {k: _plain(x, t.item_type) for k, x in v}
-    if pa.types.is_struct(t):
-        return {f.name: _plain(v.get(f.name), f.type) for f in t}
-    if pa.types.is_list(t) or pa.types.is_large_list(t):
-        return [_plain(x, t.value_type) for x in v]
-    return v
+# checkpoint columns that index the checkpoint rather than hold actions
+_NOT_ACTIONS = frozenset({"version", "checkpointMetadata", "sidecar"})
 
 
 def _checkpoint_rows(
-    table_path: str, info: dict, columns: list[str]
+    table_path: str, info: dict, columns: list[str] | None
 ) -> list[tuple[int, dict]]:
     """(version, {column: value}) for every checkpoint row with a
-    non-null value in one of ``columns``. Reads only those columns (plus
-    ``version``) of the top-level files and — for add/remove on a V2
-    checkpoint — of its sidecars. Rows without a ``version`` column (a
-    foreign checkpoint) carry the checkpoint's version."""
+    non-null value in one of ``columns`` (None: every action column).
+    Reads only those columns (plus ``version``) of the top-level files
+    and — for add/remove on a V2 checkpoint — of its sidecars. Rows
+    without a ``version`` column (a foreign checkpoint) carry the
+    checkpoint's version."""
     log_dir = os.path.join(table_path, LOG_DIR)
     base = int(info["version"])
     files = [os.path.join(log_dir, n) for n in checkpoint_file_names(info)]
-    if {"add", "remove"} & set(columns):
+    if columns is None or {"add", "remove"} & set(columns):
         files += [
             os.path.join(log_dir, "_sidecars", n)
             for n in sidecar_names(table_path, info)
@@ -210,29 +222,27 @@ def _checkpoint_rows(
     for fp in files:
         with pq.ParquetFile(fp) as pf:
             names = pf.schema_arrow.names
-            want = [c for c in columns if c in names]
+            want = [
+                c for c in (names if columns is None else columns)
+                if c in names and c not in _NOT_ACTIONS
+            ]
             if not want:
                 continue
             t = pf.read(columns=want + (["version"] if "version" in names else []))
-        # drop the rows holding none of the requested actions in arrow,
-        # before any value becomes a Python object
-        mask = pc.is_valid(t.column(want[0]))
-        for c in want[1:]:
-            mask = pc.or_(mask, pc.is_valid(t.column(c)))
-        t = t.filter(mask)
-        vals = []
+        # only the non-null values of each column become Python objects
+        rows: dict[int, dict] = {}
         for c in want:
-            typ, col = t.schema.field(c).type, t.column(c).to_pylist()
-            vals.append([_plain(v, typ) for v in col] if _has_map(typ) else col)
-        vers = (
-            t.column("version").to_pylist()
-            if "version" in names
-            else [base] * t.num_rows
-        )
-        for i, v in enumerate(vers):
-            row = {c: col[i] for c, col in zip(want, vals) if col[i] is not None}
-            if row:
-                out.append((base if v is None else int(v), row))
+            col = t.column(c)
+            valid = pc.is_valid(col)
+            plain = _plainer(col.type)
+            for i, v in zip(
+                pc.indices_nonzero(valid).to_pylist(), col.filter(valid).to_pylist()
+            ):
+                rows.setdefault(i, {})[c] = v if plain is None else plain(v)
+        vers = t.column("version").to_pylist() if "version" in names else None
+        for i in sorted(rows):
+            v = None if vers is None else vers[i]
+            out.append((base if v is None else int(v), rows[i]))
     return out
 
 
@@ -468,6 +478,21 @@ class Snapshot:
         return out
 
     # -- answers -----------------------------------------------------------
+
+    def actions(self, use_checkpoint: bool = True) -> list[dict]:
+        """Every action row, each ``{action column: action, "version":
+        its commit}``: the checkpoint's rows, then every commit after
+        it in version order. ``use_checkpoint=False`` (or no checkpoint)
+        replays every retained commit instead."""
+        info = self.info if use_checkpoint else None
+        out = [] if info is None else [
+            {**row, "version": v}
+            for v, row in _checkpoint_rows(self.table_path, info, None)
+        ]
+        for v in self.versions:
+            if info is None or v > self.checkpoint:
+                out += [{**a, "version": v} for a in read_commit(self.table_path, v)]
+        return out
 
     def version(self) -> int:
         """Newest committed version, -1 for an empty log. The newest

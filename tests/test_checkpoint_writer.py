@@ -1,8 +1,8 @@
 """Checkpoints are built from the driver-side log replay and written with
 pyarrow; DESCRIBE HISTORY is an arrow LocalRelation over the replay's
 commitInfo. Each shape below checks, against references computed here
-from the DataFrame API (``actions()``, ``active_files()``,
-``tombstones()``), that a checkpoint records exactly the state rows the
+from an independent Spark reader of the log (``tests/spark_log_oracle.py``:
+actions, active files, tombstones), that a checkpoint records exactly the state rows the
 Delta rules ask for, that every ``log_replay`` answer reads the same
 through it, that its parquet schema is the one Spark writes for the
 action schema, and that neither ``checkpoint()`` nor
@@ -24,6 +24,7 @@ from pyspark.sql.window import Window
 from delta_lake_health_spark.operators import maintenance
 from delta_lake_health_spark.sources import delta_writer, log_replay
 from delta_lake_health_spark.sources.delta_log import ACTION_SCHEMA, DeltaLog
+from tests import spark_log_oracle
 
 DAY_MS = 24 * 3600 * 1000
 STATE = StructType([*ACTION_SCHEMA.fields, StructField("version", LongType())])
@@ -77,13 +78,13 @@ def _canon(rows) -> list[str]:
 
 
 def _expected_state(spark, path, retention_hours=168.0):
-    """The checkpoint's state rows, from the DataFrame API."""
+    """The checkpoint's state rows, from the Spark log reader."""
     log = DeltaLog(spark, path)
-    acts = log.actions()
+    acts = spark_log_oracle.actions(spark, path)
     cols = STATE.fieldNames()
     cutoff = int((time.time() - retention_hours * 3600) * 1000)
-    live = log.active_files().select(F.col("path").alias("lp"), F.col("version").alias("lv"))
-    tombs = log.tombstones().select(F.col("path").alias("tp"), F.col("version").alias("tv"))
+    live = spark_log_oracle.active_files(spark, path).select(F.col("path").alias("lp"), F.col("version").alias("lv"))
+    tombs = spark_log_oracle.tombstones(spark, path).select(F.col("path").alias("tp"), F.col("version").alias("tv"))
     adds = acts.where(F.col("add").isNotNull()).join(
         live, (F.col("add.path") == F.col("lp")) & (F.col("version") == F.col("lv")), "left_semi"
     )
@@ -148,12 +149,12 @@ def _answers(spark, path) -> dict:
 
 
 def _reference_history(spark, path, limit=None):
-    """DESCRIBE HISTORY rows from the DataFrame replay: the checkpoint
+    """DESCRIBE HISTORY rows from the Spark log reader: the checkpoint
     view plus the raw commits, one row per version, newest first."""
     log = DeltaLog(spark, path)
-    src = log.actions()
+    src = spark_log_oracle.actions(spark, path)
     if log.last_checkpoint() is not None and log_replay.commit_versions(path):
-        src = src.unionByName(log.actions(use_checkpoint=False))
+        src = src.unionByName(spark_log_oracle.actions(spark, path, use_checkpoint=False))
     out = (
         src.where(F.col("commitInfo").isNotNull())
         .dropDuplicates(["version"])
@@ -356,6 +357,76 @@ def test_history_values_read_like_spark_json(spark, tmp_path):
         DeltaLog(spark, path).actions(use_checkpoint=False).where("commitInfo IS NOT NULL AND version < 2").collect()
         + DeltaLog(spark, path).actions().where("version = 2").collect()
     )
+
+
+def test_nested_map_values_agree_across_readers(spark, tmp_path):
+    """A nested operationParameters value reads as the same compact JSON
+    text from the raw commits, from a checkpoint and from DESCRIBE
+    HISTORY."""
+    path = str(tmp_path / "t")
+    _write(spark, path, 10)
+    delta_writer._commit(
+        path,
+        1,
+        [{"commitInfo": {"timestamp": 5, "operation": "FOREIGN",
+                         "operationParameters": {"nested": {"a": [1, "é"]}}}}],
+    )
+
+    def nested(df):
+        return [
+            r.commitInfo.operationParameters["nested"]
+            for r in df.where("version = 1 AND commitInfo IS NOT NULL").collect()
+        ]
+
+    raw = nested(DeltaLog(spark, path).actions(use_checkpoint=False))
+    hist = [r.operationParameters["nested"] for r in DeltaLog(spark, path).history().collect() if r.version == 1]
+    DeltaLog(spark, path).checkpoint()
+    ckpt = nested(DeltaLog(spark, path).actions())
+    assert raw == ckpt == hist == ['{"a":[1,"é"]}']
+
+
+def _job_ids(spark, fn) -> list:
+    """Ids of the Spark jobs ``fn`` launches, read from a job group; a
+    job in a later control group proves the tracker has seen them all."""
+    sc = spark.sparkContext
+    group, control = f"probe-{time.time_ns()}", f"control-{time.time_ns()}"
+    sc.setJobGroup(group, "probe")
+    try:
+        fn()
+        sc.setJobGroup(control, "control")
+        spark.range(3).count()
+        deadline = time.time() + 30
+        while not sc.statusTracker().getJobIdsForGroup(control):
+            assert time.time() < deadline, "control job never reached the tracker"
+            time.sleep(0.1)
+        return list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+@pytest.mark.parametrize("shape", sorted(SHAPES))
+def test_log_dataframes_launch_no_spark_job(spark, tmp_path, shape):
+    """Every DeltaLog DataFrame over the log is a LocalRelation built by
+    the driver-side replay: collecting it runs no Spark job, above a
+    checkpoint and over a commit tail."""
+    path = str(tmp_path / "t")
+    kw = SHAPES[shape](spark, path)
+    DeltaLog(spark, path).checkpoint(**kw)
+    _write_json_commit(path)
+    log = DeltaLog(spark, path)
+    reads = {
+        "actions": lambda: log.actions(),
+        "actions_raw": lambda: log.actions(use_checkpoint=False),
+        "active_files": lambda: log.active_files(),
+        "tombstones": lambda: log.tombstones(),
+        "changes": lambda: log.changes(log.earliest_version()),
+        "pruned_files": lambda: log.pruned_files("v", 0.0, 10.0),
+    }
+    for name, read in reads.items():
+        rows = []
+        assert _job_ids(spark, lambda: rows.extend(read().collect())) == [], name
+        assert rows or name in ("tombstones", "pruned_files"), name
 
 
 def test_history_of_an_empty_log_raises(spark, tmp_path):

@@ -797,6 +797,19 @@ def test_data_skipping_and_zorder_synergy(spark):
     shutil.rmtree(tmp)
 
 
+def test_scan_applies_deletion_vectors(spark, tmp_path):
+    """``scan`` reads through the same live-file scan as ``snapshot``: a
+    row a deletion vector soft-deleted stays deleted."""
+    path = str(tmp_path / "t")
+    df = spark.createDataFrame([(i, float(i)) for i in range(100)], "id long, val double")
+    delta_writer.write(spark, df.coalesce(1), path)
+    delta_writer.delete_with_dv(spark, path, "id = 5")
+    log = DeltaLog(spark, path)
+    got = sorted(tuple(r) for r in log.scan("val", 0.0, 99.0).collect())
+    assert got == sorted(tuple(r) for r in log.snapshot().collect())
+    assert len(got) == 99 and 5 not in {r[0] for r in got}
+
+
 def test_change_feed(spark):
     """changes() replays file-level adds/removes per version with commit
     timestamps — the incremental-consumption contract."""

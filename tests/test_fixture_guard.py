@@ -116,3 +116,60 @@ def test_build_once_deps_change_rebuilds(tmp_path):
 
     build_once(marker, build, deps=(helper,))
     assert calls == ["v1", "v2"]
+
+
+def test_module_deps_track_source_edits(tmp_path, monkeypatch):
+    """A module passed in ``deps`` joins the hash with its whole source,
+    so editing the module's file changes the definition."""
+    import importlib
+
+    (tmp_path / "fixture_dep_mod.py").write_text("X = 1\n")
+    monkeypatch.syspath_prepend(str(tmp_path))
+    mod = importlib.import_module("fixture_dep_mod")
+
+    def build() -> None:
+        pass
+
+    before = definition_hash(build, deps=(mod,))
+    (tmp_path / "fixture_dep_mod.py").write_text("X = 22\n")
+    assert definition_hash(build, deps=(mod,)) != before
+
+
+def test_health_delta_fixtures_hash_the_writer_and_log_modules(tmp_path, monkeypatch):
+    """Every Delta fixture ``plans/health.py`` builds goes through
+    ``_build_delta_fixture``, whose definition hash changes when the
+    source of the writer, maintenance or either log module changes."""
+    import ast
+    import inspect
+
+    from delta_lake_health_spark.operators import maintenance
+    from delta_lake_health_spark.plans import health
+    from delta_lake_health_spark.sources import delta_log, delta_writer, log_replay
+
+    tree = ast.parse(inspect.getsource(health))
+    callers = [
+        fn.name
+        for fn in ast.walk(tree)
+        if isinstance(fn, ast.FunctionDef)
+        and any(
+            isinstance(c, ast.Call) and getattr(c.func, "id", None) == "build_once"
+            for c in ast.walk(fn)
+        )
+    ]
+    assert callers == ["_build_delta_fixture"]
+
+    seen = {}
+    monkeypatch.setattr(
+        health, "build_once",
+        lambda marker, build, clean=None, salt="", deps=(): seen.update(build=build, deps=deps),
+    )
+    health._build_delta_fixture(str(tmp_path / "m"), lambda: None, clean=[])
+    base = definition_hash(seen["build"], deps=seen["deps"])
+    real = inspect.getsource
+    for mod in (delta_writer, maintenance, delta_log, log_replay):
+        monkeypatch.setattr(
+            inspect, "getsource",
+            lambda o, _m=mod: real(o) + ("\n# edited\n" if o is _m else ""),
+        )
+        assert definition_hash(seen["build"], deps=seen["deps"]) != base, mod.__name__
+    monkeypatch.setattr(inspect, "getsource", real)

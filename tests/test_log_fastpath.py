@@ -1,7 +1,7 @@
 """The driver-side log replay (``sources/log_replay.py``) behind DeltaLog's
 metadata / protocol / version / live adds / dv paths must equal the same
-answers computed from the distributed replay (``actions()`` /
-``active_files()``) on every log shape the engine writes — json-only,
+answers computed from an independent Spark reader of the log
+(``tests/spark_log_oracle.py``) on every log shape the engine writes — json-only,
 post-checkpoint (single, multi-part, v2), post-cleanup, with DVs, with
 re-added paths (add-wins) and time travel on either side of the
 checkpoint."""
@@ -19,13 +19,13 @@ from pyspark.sql.window import Window
 from delta_lake_health_spark.operators import maintenance
 from delta_lake_health_spark.sources import delta_writer, log_replay
 from delta_lake_health_spark.sources.delta_log import DeltaLog
+from tests import spark_log_oracle
 
 
 def _spark_side(spark, path, as_of=None) -> dict:
-    """The answers computed here from the distributed replay."""
-    log = DeltaLog(spark, path)
-    use_ckpt = True if as_of is None else log._as_of_source(as_of)
-    acts = log.actions(use_checkpoint=use_ckpt)
+    """The answers computed here from the Spark log reader."""
+    use_ckpt = log_replay.Snapshot(path).replays_checkpoint(as_of)
+    acts = spark_log_oracle.actions(spark, path, use_checkpoint=use_ckpt)
     if as_of is not None:
         acts = acts.where(F.col("version") <= as_of)
     meta = (
@@ -76,7 +76,7 @@ def _spark_side(spark, path, as_of=None) -> dict:
         ),
         "live_rows": sorted(
             (r.path, dict(r.partitionValues or {}))
-            for r in log.active_files(as_of)
+            for r in spark_log_oracle.active_files(spark, path, as_of)
             .select("path", "partitionValues").collect()
         ),
         "live_adds": sorted(live_adds, key=lambda a: a["path"]),

@@ -107,10 +107,11 @@ def test_only_log_replay_reads_the_delta_log():
     """Structure guard: ``sources/log_replay.py`` is the one driver-side
     reader and checkpoint writer of ``_delta_log``. No other package
     function lists commit files (a ``.json`` name test plus ``isdigit``),
-    reads a log parquet (checkpoint or sidecar) with pyarrow, or writes
+    reads a log parquet (checkpoint or sidecar) with pyarrow, writes
     one (``pq.write_table``, or a DataFrame ``.write`` into the log
-    directory) — a second copy of the replay is how the copies came to
-    disagree."""
+    directory), or reads the log with Spark (``.json(`` or
+    ``read.parquet(`` next to a log file name) — a second copy of the
+    replay is how the copies came to disagree."""
     import ast
     import re
 
@@ -123,14 +124,21 @@ def test_only_log_replay_reads_the_delta_log():
         re.compile(r"\bpq\.write_table\b|\.write\s*\.\s*(parquet|save|mode|format)\b"),
         re.compile(r"_delta_log|LOG_DIR|log_dir|_sidecars"),
     )
+    reads_log_with_spark = (
+        re.compile(r"\.json\(|\bread\s*\.\s*parquet\("),
+        re.compile(r"\b(commit_path|checkpoint_file_names|sidecar_names|_sidecars|LOG_DIR|log_dir)\b"),
+    )
     # _log_token is a directory freshness token (entry count + newest
     # commit's identity from one os.listdir), not a replay: it must not
     # parse anything, so it does not go through log_replay. build_fixture
     # creates the fixture's _delta_log directory and writes a deletion
     # vector sidecar under _deletes/ (table data, not the log).
+    # convert_to_delta reads the schema of the plain parquet it converts
+    # and names LOG_DIR only to refuse a table that already has a log.
     exempt = {
         ("operators/text_index.py", "_log_token", "lists commit files"),
         ("sources/fixture.py", "build_fixture", "writes a log parquet"),
+        ("sources/delta_writer.py", "convert_to_delta", "reads the log with Spark"),
     }
     pkg = os.path.join(REPO, "delta_lake_health_spark")
     offenders = []
@@ -151,6 +159,7 @@ def test_only_log_replay_reads_the_delta_log():
                     ("lists commit files", lists_commits),
                     ("reads a log parquet", reads_log_parquet),
                     ("writes a log parquet", writes_log_parquet),
+                    ("reads the log with Spark", reads_log_with_spark),
                 ):
                     if a.search(body) and b.search(body) and (
                         (rel.replace(os.sep, "/"), node.name, what) not in exempt

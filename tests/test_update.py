@@ -333,6 +333,19 @@ def test_delete_keeps_rows_whose_predicate_is_null(spark, tmp_path):
     assert ids == [1, 2]
 
 
+def test_delete_that_empties_a_rewritten_file_adds_no_file(spark, tmp_path):
+    """A copy-on-write DELETE that removes every row of a file it
+    rewrites commits no 0-row data file and leaves none on disk."""
+    t = str(tmp_path / "t")
+    delta_writer.write(spark, spark.range(0, 10).coalesce(1), t)
+    delta_writer.write(spark, spark.range(10, 20).coalesce(1), t, mode="append")
+    delta_writer.delete(spark, t, "id < 10")
+    log = DeltaLog(spark, t)
+    assert [r.num_records for r in log.active_files().collect()] == [10]
+    assert sorted(r.id for r in log.snapshot().collect()) == list(range(10, 20))
+    assert len(delta_writer._list_parquet_rel(t)) == 2  # the two originals
+
+
 def _tree(path):
     """Every directory and file under ``path``, hidden ones included."""
     out = set()
