@@ -641,25 +641,11 @@ def restore(spark: SparkSession, table_path: str, to_version: int) -> dict:
             spark, table_path, df, partition_by, validate=False, physical=False
         )
 
-    now = int(time.time() * 1000)
     readds = sorted((old_live - cur_live) - tainted)
     removes = sorted((cur_live - old_live) | (tainted & cur_live))
     actions: list[dict] = []
     if old_meta and old_meta.get("schema") != log.metadata().get("schema"):
-        import json as _json
-
-        actions.append(
-            {
-                "metaData": {
-                    "id": old_meta["id"],
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": _json.dumps(old_meta["schema"]),
-                    "partitionColumns": partition_by,
-                    "configuration": old_meta.get("configuration", {}),
-                    "createdTime": now,
-                }
-            }
-        )
+        actions.append(delta_writer._metadata_action(old_meta))
     actions += [delta_writer._add_action(table_path, rel) for rel in readds]
     actions += rewritten + delta_writer._remove_actions(removes)
     metrics = {

@@ -14,12 +14,37 @@ feed to any charting stack:
 
 from __future__ import annotations
 
+import math
+from collections import Counter
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+from pyspark.sql.types import (
+    DoubleType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
-from delta_lake_health_spark.sources import delta_writer
+from delta_lake_health_spark.sources import delta_writer, log_replay
 from delta_lake_health_spark.sources.delta_log import DeltaLog
+
+_HISTOGRAM_SCHEMA = StructType([
+    StructField("bin_start_mb", DoubleType()),
+    StructField("bin_end_mb", DoubleType()),
+    StructField("n_files", LongType()),
+])
+_PARTITION_SCHEMA = StructType([
+    StructField("partition_key", StringType()),
+    StructField("n_records", LongType()),
+    StructField("n_files", LongType()),
+    StructField("size_bytes", LongType()),
+])
+_TRENDS_SCHEMA = StructType([
+    StructField(name, LongType())
+    for name in ("version", "ts_ms", "table_size_bytes", "data_file_count", "record_count")
+])
 
 
 def ops_timeline(spark: SparkSession, table_path: str) -> DataFrame:
@@ -46,125 +71,117 @@ def file_size_histogram(
     spark: SparkSession, table_path: str, n_bins: int = 20
 ) -> DataFrame:
     """(bin_start_mb, bin_end_mb, n_files) over live data files — computed
-    from the log's size column, no filesystem stat calls."""
-    log = DeltaLog(spark, table_path)
-    sizes = log.active_files().select(
-        (F.col("size") / (1024.0 * 1024.0)).alias("size_mb")
-    )
-    bounds = sizes.agg(
-        F.min("size_mb").alias("lo"), F.max("size_mb").alias("hi")
-    ).collect()[0]
-    if bounds.lo is None:
-        return spark.createDataFrame(
-            [], "bin_start_mb double, bin_end_mb double, n_files long"
+    on the driver from the log replay's add sizes: no filesystem stat
+    call and no Spark job."""
+    sizes = [
+        a["size"] / (1024.0 * 1024.0)
+        for a in log_replay.Snapshot(table_path)._live_adds()
+        if a.get("size") is not None
+    ]
+    rows = []
+    if sizes:
+        lo, hi = min(sizes), max(sizes)
+        width = (hi - lo) / n_bins if hi > lo else 1.0
+        counts = Counter(
+            min(math.floor((x - lo) / width), n_bins - 1) for x in sizes
         )
-    lo, hi = float(bounds.lo), float(bounds.hi)
-    width = (hi - lo) / n_bins if hi > lo else 1.0
-    binned = sizes.withColumn(
-        "bin",
-        F.least(
-            F.floor((F.col("size_mb") - F.lit(lo)) / F.lit(width)).cast("int"),
-            F.lit(n_bins - 1),
-        ),
-    )
-    return (
-        binned.groupBy("bin")
-        .agg(F.count(F.lit(1)).alias("n_files"))
-        .select(
-            (F.lit(lo) + F.col("bin") * F.lit(width)).alias("bin_start_mb"),
-            (F.lit(lo) + (F.col("bin") + 1) * F.lit(width)).alias("bin_end_mb"),
-            "n_files",
-        )
-        .orderBy("bin_start_mb")
-    )
+        rows = [
+            {"bin_start_mb": lo + b * width, "bin_end_mb": lo + (b + 1) * width,
+             "n_files": counts[b]}
+            for b in sorted(counts)
+        ]
+    return DeltaLog(spark, table_path)._local(rows, _HISTOGRAM_SCHEMA)
+
+
+def _sum(values) -> int | None:
+    """SQL ``SUM``: nulls skipped, null when every value is null."""
+    known = [x for x in values if x is not None]
+    return sum(known) if known else None
 
 
 def partition_records(spark: SparkSession, table_path: str) -> DataFrame:
     """(partition_key, n_records, n_files, size_bytes) per partition from
-    the log's add-file stats — the skew bar chart's data, no scan."""
+    the log's add-file stats — the skew bar chart's data, computed on the
+    driver from the log replay: no scan and no Spark job."""
     log = DeltaLog(spark, table_path)
     cols = log.partition_columns()
-    active = log.active_files()
-    if not cols:
-        key = F.lit("<unpartitioned>")
-    else:
+    groups: dict[str, list[dict]] = {}
+    for a in log_replay.Snapshot(table_path)._live_adds():
+        pv = a.get("partitionValues") or {}
         # a null value is labelled like its hive directory
-        key = F.concat_ws(
-            "/", *[
-                F.concat(
-                    F.lit(f"{c}="),
-                    F.coalesce(
-                        F.element_at("partitionValues", c),
-                        F.lit(delta_writer.HIVE_DEFAULT_PARTITION),
-                    ),
-                )
-                for c in cols
-            ]
-        )
-    return (
-        active.groupBy(key.alias("partition_key"))
-        .agg(
-            F.sum("num_records").alias("n_records"),
-            F.count(F.lit(1)).alias("n_files"),
-            F.sum("size").alias("size_bytes"),
-        )
-        .orderBy("partition_key")
-    )
+        key = "/".join(
+            f"{c}={delta_writer.HIVE_DEFAULT_PARTITION if pv.get(c) is None else pv[c]}"
+            for c in cols
+        ) if cols else "<unpartitioned>"
+        groups.setdefault(key, []).append(a)
+    rows = [
+        {
+            "partition_key": key,
+            "n_records": _sum(log_replay._num_records(a.get("stats")) for a in adds),
+            "n_files": len(adds),
+            "size_bytes": _sum(a.get("size") for a in adds),
+        }
+        for key, adds in sorted(groups.items())
+    ]
+    return log._local(rows, _PARTITION_SCHEMA)
 
 
 def historical_trends(spark: SparkSession, table_path: str) -> DataFrame:
     """Per-version cumulative state: table size, file count, record count
     after each commit — the 'over time' panels of the reference dashboard,
-    reconstructed from the log alone.
+    reconstructed on the driver from the log replay, with no Spark job.
 
-    Windowed cumulative sums over (version, add/remove deltas): each add
-    contributes +size/+records at its version, each remove -size at its.
+    Running sums over per-version deltas: each add contributes
+    +size/+records/+1 file at its version, each remove the negated size
+    and records of the newest add of its path (removes carry no size).
     """
     log = DeltaLog(spark, table_path)
-    acts = log.actions()
-    adds = acts.where(F.col("add").isNotNull()).select(
+    snap = log_replay.Snapshot(table_path)
+    acts = snap.actions()
+    if not acts:
+        raise FileNotFoundError(f"empty delta log: {log.log_dir}")
+    newest_add: dict[str, dict] = {}
+    for r in acts:
+        add = r.get("add")
+        if add is not None and (
+            add.get("path") not in newest_add
+            or r["version"] >= newest_add[add.get("path")]["version"]
+        ):
+            newest_add[add.get("path")] = {**add, "version": r["version"]}
+    deltas: dict[int, list[tuple]] = {}
+    for r in acts:
+        if r.get("add") is not None:
+            a, sign = r["add"], 1
+        elif r.get("remove") is not None and r["remove"].get("path") in newest_add:
+            a, sign = newest_add[r["remove"]["path"]], -1
+        else:
+            continue
+        recs = log_replay._num_records(a.get("stats"))
+        deltas.setdefault(r["version"], []).append((
+            None if a.get("size") is None else sign * a["size"],
+            None if recs is None else sign * recs,
+            sign,
+        ))
+    infos = snap.commit_infos()
+    rows, running = [], [None, None, None]
+    for v in sorted(deltas):
+        running = [
+            _sum([total, _sum(d[i] for d in deltas[v])])
+            for i, total in enumerate(running)
+        ]
+        ci = infos.get(v) or {}
+        ts = ci.get("inCommitTimestamp")
+        rows.append({
+            "version": v,
+            "ts_ms": ci.get("timestamp") if ts is None else ts,
+            "table_size_bytes": running[0],
+            "data_file_count": running[2],
+            "record_count": running[1],
+        })
+    return log._local(rows, _TRENDS_SCHEMA).select(
         "version",
-        F.col("add.size").alias("dsize"),
-        F.get_json_object("add.stats", "$.numRecords").cast("long").alias("drecs"),
-        F.lit(1).alias("dfiles"),
-    )
-    # removes don't carry size; join back to the add that introduced the path
-    add_sizes = acts.where(F.col("add").isNotNull()).select(
-        F.col("add.path").alias("path"),
-        F.col("add.size").alias("size"),
-        F.get_json_object("add.stats", "$.numRecords").cast("long").alias("recs"),
-        F.col("version").alias("add_version"),
-    )
-    w_latest = Window.partitionBy("path").orderBy(F.desc("add_version"))
-    latest_add = add_sizes.withColumn(
-        "rn", F.row_number().over(w_latest)
-    ).where(F.col("rn") == 1).drop("rn", "add_version")
-    removes = (
-        acts.where(F.col("remove").isNotNull())
-        .select(F.col("remove.path").alias("path"), "version")
-        .join(latest_add, "path")
-        .select(
-            "version",
-            (-F.col("size")).alias("dsize"),
-            (-F.col("recs")).alias("drecs"),
-            F.lit(-1).alias("dfiles"),
-        )
-    )
-    deltas = adds.unionByName(removes).groupBy("version").agg(
-        F.sum("dsize").alias("dsize"),
-        F.sum("drecs").alias("drecs"),
-        F.sum("dfiles").alias("dfiles"),
-    )
-    ts = log.history().select("version", F.timestamp_millis("timestamp").alias("ts"))
-    w = Window.orderBy("version").rowsBetween(Window.unboundedPreceding, 0)
-    return (
-        deltas.join(ts, "version", "left")
-        .select(
-            "version",
-            "ts",
-            F.sum("dsize").over(w).alias("table_size_bytes"),
-            F.sum("dfiles").over(w).alias("data_file_count"),
-            F.sum("drecs").over(w).alias("record_count"),
-        )
-        .orderBy("version")
+        F.timestamp_millis("ts_ms").alias("ts"),
+        "table_size_bytes",
+        "data_file_count",
+        "record_count",
     )

@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from delta_lake_health_spark.sources import delta_writer
+from delta_lake_health_spark.sources import delta_writer, log_replay
 from delta_lake_health_spark.sources.cdf import table_changes
 from delta_lake_health_spark.sources.delta_log import DeltaLog
 
@@ -52,8 +52,8 @@ def _last_synced(spark: SparkSession, dst_path: str, src_key: str) -> int | None
 def _record_synced(
     spark: SparkSession, dst_path: str, src_key: str, version: int
 ) -> None:
-    log = DeltaLog(spark, dst_path)
-    cfg = log.domain_metadata(SYNC_DOMAIN) or {}
+    snap = log_replay.Snapshot(dst_path)
+    cfg = snap.domain_metadata(SYNC_DOMAIN) or {}
     actions = []
     upgrade = delta_writer._protocol_upgrade_action(
         spark, dst_path, "domainMetadata"
@@ -74,52 +74,24 @@ def _record_synced(
             "CDC SYNC MARKER", {"source": src_key, "version": str(version)}, {}
         )
     )
-    delta_writer._commit(
-        dst_path, delta_writer.current_version(dst_path) + 1, actions
-    )
+    # a concurrent marker for another source rewrote the same domain:
+    # the conflict check refuses this one instead of dropping that entry
+    delta_writer.commit_mutation(dst_path, snap.version(), actions)
 
 
 def _delete_keys_dv(
     spark: SparkSession, dst_path: str, keys: DataFrame, key_cols: list[str]
 ) -> int:
-    """DELETE WHERE key IN (keys) via a deletion-vector sidecar — the
-    join-predicate twin of ``delete_with_dv`` (which takes a scalar SQL
-    predicate). Positions come from ONE semi-join of the lineage-tagged
-    snapshot against the (tiny, broadcast) key set."""
-    log = DeltaLog(spark, dst_path)
-    version = delta_writer.current_version(dst_path)
-    hits = (
-        log.snapshot_with_positions()
-        .join(F.broadcast(keys), key_cols, "left_semi")
-        .select(
-            F.col("_rel_path").alias("rel_path"),
-            F.col("_row_index").alias("row_index"),
-        )
-    )
-    n = hits.count()
-    if n == 0:
-        return version
-    dv_rel = f"{delta_writer.DELETES_DIR}/dv-{version + 1:020d}"
-    hits.coalesce(1).write.parquet(os.path.join(dst_path, dv_rel))
-    upgrade = delta_writer._protocol_upgrade_action(
-        spark, dst_path, "deletionVectors"
-    )
-    return delta_writer.commit_mutation(
+    """DELETE WHERE key IN (keys) via a deletion vector: the DV DELETE of
+    ``delete_with_dv`` with a key semi-join against the (tiny, broadcast)
+    key set in place of its SQL predicate. Already-absent keys commit
+    nothing, so a replayed batch leaves the target's version alone."""
+    return delta_writer._delete_rows_dv(
+        spark,
         dst_path,
-        version,
-        ([upgrade] if upgrade else [])
-        + [
-            {"dv": {"path": dv_rel, "numDeletedRows": n}},
-            delta_writer._commit_info(
-                "DELETE",
-                {"predicate": f"key in cdc batch ({key_cols})", "mode": "dv"},
-                {"numDeletedRows": n, "numRewrittenFiles": 0},
-            ),
-        ],
-        read_files={
-            p.replace(os.sep, "/")
-            for p in delta_writer._active_rel_paths(spark, dst_path)
-        },
+        lambda rows: rows.join(F.broadcast(keys), key_cols, "left_semi"),
+        f"key in cdc batch ({key_cols})",
+        commit_no_match=False,
     )
 
 

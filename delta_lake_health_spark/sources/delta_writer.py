@@ -609,10 +609,8 @@ def set_cluster_columns(
     ``zorder_cluster(cluster_cols=None)`` re-clusters incrementally over
     them — the two halves of liquid clustering's contract. ``cols=[]``
     clears the declaration (CLUSTER BY NONE)."""
-    _require_writable(spark, table_path)
-    from delta_lake_health_spark.sources.delta_log import DeltaLog
-
-    meta = DeltaLog(spark, table_path).metadata()
+    snap = _base_snapshot(spark, table_path)
+    meta = snap.metadata()
     names = {f["name"] for f in (meta.get("schema") or {}).get("fields", [])}
     for c in cols:
         if c not in names:
@@ -638,9 +636,7 @@ def set_cluster_columns(
     actions.append(
         _commit_info("CLUSTER BY", {"clusterBy": json.dumps(list(cols))}, {})
     )
-    version = current_version(table_path)
-    _commit(table_path, version + 1, actions)
-    return version + 1
+    return commit_mutation(table_path, snap.version(), actions)
 
 
 PRESERVE_ROW_ID_FLAG = "__preserveRowId__"
@@ -729,12 +725,15 @@ def _commit(table_path: str, version: int, actions: list[dict]) -> None:
     with open(tmp, "w") as f:
         for a in actions:
             f.write(json.dumps(_serializable(a)) + "\n")
-    # atomic single-writer commit; a real multi-writer would need
-    # put-if-absent on the log store
-    if os.path.exists(path):
+    # put-if-absent: link() refuses an existing name, so of two writers
+    # racing for one version exactly one publishes it (rename() would let
+    # the second silently replace the first one's actions)
+    try:
+        os.link(tmp, path)
+    except FileExistsError:
+        raise RuntimeError(f"concurrent commit: version {version} exists") from None
+    finally:
         os.remove(tmp)
-        raise RuntimeError(f"concurrent commit: version {version} exists")
-    os.rename(tmp, path)
     _write_version_checksum(table_path, version, actions)
 
 
@@ -791,31 +790,47 @@ def _commit_info(operation: str, parameters: dict, metrics: dict) -> dict:
 
 
 def _metadata_action(
-    df: DataFrame,
-    partition_by: list[str],
-    schema: dict | None = None,
-    existing: dict | None = None,
+    meta: dict,
+    *,
+    fields: list[dict] | None = None,
+    partition_columns: list[str] | None = None,
+    configuration: dict | None = None,
 ) -> dict:
-    """``schema`` overrides the logged schemaString — schema evolution
-    logs the MERGED schema (evolution-added columns nullable), not the
-    incoming batch's expression nullability.
-
-    ``existing`` is the table's current metadata when re-emitting
-    metaData on an already-created table: the table id is stable for the
-    table's lifetime and the configuration (``delta.constraints.*``,
-    other properties) must survive schema evolution — only the
-    schemaString changes. Omitting it is only correct at version 0."""
-    existing = existing or {}
+    """The metaData action of every table-state change. ``meta`` is the
+    ``Snapshot.metadata()`` the operation read — ``{}`` for a new table,
+    which gets a fresh id. Each keyword replaces that part of it (the
+    schema's ``fields``, the ``partition_columns``, the
+    ``configuration``); the rest carries over, and the table id is
+    stable for the table's lifetime."""
+    if fields is None:
+        fields = (meta.get("schema") or {}).get("fields", [])
+    if partition_columns is None:
+        partition_columns = meta.get("partition_columns") or []
+    if configuration is None:
+        configuration = meta.get("configuration") or {}
     return {
         "metaData": {
-            "id": existing.get("id") or str(uuid.uuid4()),
+            "id": meta.get("id") or str(uuid.uuid4()),
             "format": {"provider": "parquet", "options": {}},
-            "schemaString": json.dumps(schema) if schema else df.schema.json(),
-            "partitionColumns": list(partition_by),
-            "configuration": dict(existing.get("configuration") or {}),
+            "schemaString": json.dumps({"type": "struct", "fields": fields}),
+            "partitionColumns": list(partition_columns),
+            "configuration": dict(configuration),
             "createdTime": int(time.time() * 1000),
         }
     }
+
+
+def _base_snapshot(spark: SparkSession, table_path: str) -> log_replay.Snapshot:
+    """The log listing a table-state change reads — its metadata,
+    protocol and scanned files — and commits against at ``.version()``
+    through ``commit_mutation``. Taken before the writer-protocol gate,
+    so every commit that lands after the checks is an interleaved commit
+    the conflict check sees."""
+    snap = log_replay.Snapshot(table_path)
+    if snap.version() < 0:
+        raise FileNotFoundError(f"empty delta log: {table_path}/{LOG_DIR}")
+    _require_writable(spark, table_path)
+    return snap
 
 
 def _active_rel_paths(spark: SparkSession, table_path: str) -> list[str]:
@@ -928,40 +943,29 @@ def set_constraint(
     ``write``/``merge`` validates its batch against the expression and
     refuses the commit on violation. The EXISTING data is validated once
     here (one scan) so a constraint can't be added that the table already
-    breaks — same as Delta."""
-    _require_writable(spark, table_path)
+    breaks — same as Delta. A row appended after that scan conflicts
+    with the commit instead of slipping past the check."""
     from pyspark.sql import functions as F
 
     from delta_lake_health_spark.sources.delta_log import DeltaLog
 
-    log = DeltaLog(spark, table_path)
-    bad = log.snapshot().where(~F.expr(expr)).limit(1).count()
+    snap = _base_snapshot(spark, table_path)
+    bad = DeltaLog(spark, table_path).snapshot().where(~F.expr(expr)).limit(1).count()
     if bad:
         raise ValueError(
             f"cannot add constraint {name!r}: existing rows violate ({expr})"
         )
-    meta = log.metadata()
-    config = dict(meta.get("configuration", {}))
-    config[f"delta.constraints.{name}"] = expr
-    version = current_version(table_path)
-    _commit(
+    meta = snap.metadata()
+    config = {**meta["configuration"], f"delta.constraints.{name}": expr}
+    return commit_mutation(
         table_path,
-        version + 1,
+        snap.version(),
         [
-            {
-                "metaData": {
-                    "id": meta["id"],
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": json.dumps(meta["schema"]),
-                    "partitionColumns": meta.get("partition_columns", []),
-                    "configuration": config,
-                    "createdTime": int(time.time() * 1000),
-                }
-            },
+            _metadata_action(meta, configuration=config),
             _commit_info("ADD CONSTRAINT", {"name": name, "expr": expr}, {}),
         ],
+        read_files={a["path"] for a in snap._live_adds()},
     )
-    return version + 1
 
 
 def set_table_property(
@@ -984,32 +988,19 @@ def set_table_properties(
     callers that stamp a coherent parameter SET (e.g. the audio
     fingerprint index's frame/hop/fanOut) must use, so no reader can
     ever observe a half-stamped configuration between commits."""
-    _require_writable(spark, table_path)
-    from delta_lake_health_spark.sources.delta_log import DeltaLog
-
-    meta = DeltaLog(spark, table_path).metadata()
-    config = dict(meta.get("configuration", {}))
+    snap = _base_snapshot(spark, table_path)
+    meta = snap.metadata()
     stamped = {str(k): str(v) for k, v in props.items()}
-    config.update(stamped)
-    version = current_version(table_path)
-    _commit(
+    return commit_mutation(
         table_path,
-        version + 1,
+        snap.version(),
         [
-            {
-                "metaData": {
-                    "id": meta["id"],
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": json.dumps(meta["schema"]),
-                    "partitionColumns": meta.get("partition_columns", []),
-                    "configuration": config,
-                    "createdTime": int(time.time() * 1000),
-                }
-            },
+            _metadata_action(
+                meta, configuration={**meta["configuration"], **stamped}
+            ),
             _commit_info("SET TBLPROPERTIES", stamped, {}),
         ],
     )
-    return version + 1
 
 
 def _maybe_auto_compact(spark: SparkSession, table_path: str, meta) -> None:
@@ -1042,31 +1033,18 @@ def _maybe_auto_compact(spark: SparkSession, table_path: str, meta) -> None:
 
 def drop_constraint(spark: SparkSession, table_path: str, name: str) -> int:
     """ALTER TABLE ... DROP CONSTRAINT."""
-    _require_writable(spark, table_path)
-    from delta_lake_health_spark.sources.delta_log import DeltaLog
-
-    meta = DeltaLog(spark, table_path).metadata()
-    config = dict(meta.get("configuration", {}))
+    snap = _base_snapshot(spark, table_path)
+    meta = snap.metadata()
+    config = dict(meta["configuration"])
     config.pop(f"delta.constraints.{name}", None)
-    version = current_version(table_path)
-    _commit(
+    return commit_mutation(
         table_path,
-        version + 1,
+        snap.version(),
         [
-            {
-                "metaData": {
-                    "id": meta["id"],
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": json.dumps(meta["schema"]),
-                    "partitionColumns": meta.get("partition_columns", []),
-                    "configuration": config,
-                    "createdTime": int(time.time() * 1000),
-                }
-            },
+            _metadata_action(meta, configuration=config),
             _commit_info("DROP CONSTRAINT", {"name": name}, {}),
         ],
     )
-    return version + 1
 
 
 def _to_physical(spark: SparkSession, df: DataFrame, table_path: str) -> DataFrame:
@@ -1108,40 +1086,22 @@ def _refuse_referenced(meta: dict, col: str, action: str) -> None:
 
 
 def _commit_schema_change(
-    spark: SparkSession, table_path: str, fields: list[dict],
-    operation: str, parameters: dict,
+    spark: SparkSession, table_path: str, snap: log_replay.Snapshot,
+    fields: list[dict], operation: str, parameters: dict,
 ) -> int:
-    from delta_lake_health_spark.sources.delta_log import DeltaLog
-
-    _require_writable(spark, table_path)
-    meta = DeltaLog(spark, table_path).metadata()
-    version = current_version(table_path)
-    # RENAME/DROP introduce column-mapping metadata: the same commit must
-    # raise the protocol so conforming readers know to apply the mapping
-    upgrade = (
-        [_protocol_upgrade_action(spark, table_path, "columnMapping")]
-        if operation in ("RENAME COLUMN", "DROP COLUMN")
-        else []
-    )
-    _commit(
+    """Commit RENAME/DROP COLUMN's new ``fields`` against ``snap``. They
+    introduce column-mapping metadata, so the same commit raises the
+    protocol and conforming readers know to apply the mapping."""
+    upgrade = _protocol_upgrade_action(spark, table_path, "columnMapping")
+    return commit_mutation(
         table_path,
-        version + 1,
-        [a for a in upgrade if a]
+        snap.version(),
+        ([upgrade] if upgrade else [])
         + [
-            {
-                "metaData": {
-                    "id": meta["id"],
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": json.dumps({"type": "struct", "fields": fields}),
-                    "partitionColumns": meta.get("partition_columns", []),
-                    "configuration": meta.get("configuration", {}),
-                    "createdTime": int(time.time() * 1000),
-                }
-            },
+            _metadata_action(snap.metadata(), fields=fields),
             _commit_info(operation, parameters, {}),
         ],
     )
-    return version + 1
 
 
 def rename_column(
@@ -1153,9 +1113,8 @@ def rename_column(
     readers rename physical -> logical at scan time. Partition columns
     and columns referenced by constraints / generation expressions are
     refused."""
-    from delta_lake_health_spark.sources.delta_log import DeltaLog
-
-    meta = DeltaLog(spark, table_path).metadata()
+    snap = _base_snapshot(spark, table_path)
+    meta = snap.metadata()
     schema = meta.get("schema") or {}
     names = {f["name"] for f in schema.get("fields", [])}
     if old not in names:
@@ -1177,7 +1136,7 @@ def rename_column(
         else:
             fields.append(f)
     return _commit_schema_change(
-        spark, table_path, fields, "RENAME COLUMN", {"from": old, "to": new}
+        spark, table_path, snap, fields, "RENAME COLUMN", {"from": old, "to": new}
     )
 
 
@@ -1185,9 +1144,8 @@ def drop_column(spark: SparkSession, table_path: str, col: str) -> int:
     """ALTER TABLE ... DROP COLUMN — metadata-only: the field leaves the
     logical schema; the data stays in the files and is simply never read
     (Delta column-mapping drop semantics)."""
-    from delta_lake_health_spark.sources.delta_log import DeltaLog
-
-    meta = DeltaLog(spark, table_path).metadata()
+    snap = _base_snapshot(spark, table_path)
+    meta = snap.metadata()
     schema = meta.get("schema") or {}
     names = {f["name"] for f in schema.get("fields", [])}
     if col not in names:
@@ -1199,7 +1157,7 @@ def drop_column(spark: SparkSession, table_path: str, col: str) -> int:
     _refuse_referenced(meta, col, "drop")
     fields = [f for f in schema["fields"] if f["name"] != col]
     return _commit_schema_change(
-        spark, table_path, fields, "DROP COLUMN", {"column": col}
+        spark, table_path, snap, fields, "DROP COLUMN", {"column": col}
     )
 
 
@@ -1244,10 +1202,8 @@ def set_column_default(
     be constant-foldable per the feature contract: it is validated
     here by evaluating it once, and a reference to another column
     refuses loudly instead of materializing garbage."""
-    _require_writable(spark, table_path)
-    from delta_lake_health_spark.sources.delta_log import DeltaLog
-
-    meta = DeltaLog(spark, table_path).metadata()
+    snap = _base_snapshot(spark, table_path)
+    meta = snap.metadata()
     schema = meta.get("schema") or {}
     fields = [dict(f) for f in schema.get("fields", [])]
     names = {f["name"] for f in fields}
@@ -1311,28 +1267,15 @@ def set_column_default(
     )
     if upgrade:
         actions.append(upgrade)
-    version = current_version(table_path)
     actions += [
-        {
-            "metaData": {
-                "id": meta["id"],
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": json.dumps(
-                    {"type": "struct", "fields": fields}
-                ),
-                "partitionColumns": meta.get("partition_columns", []),
-                "configuration": meta.get("configuration", {}),
-                "createdTime": int(time.time() * 1000),
-            }
-        },
+        _metadata_action(meta, fields=fields),
         _commit_info(
             "ALTER COLUMN SET DEFAULT",
             {"column": col, "expr": expr, "type": str(target_type)},
             {},
         ),
     ]
-    _commit(table_path, version + 1, actions)
-    return version + 1
+    return commit_mutation(table_path, snap.version(), actions)
 
 
 def clear_column_default(
@@ -1341,10 +1284,8 @@ def clear_column_default(
     """ALTER TABLE ... ALTER COLUMN col DROP DEFAULT: remove the
     ``CURRENT_DEFAULT`` metadata; appends omitting the column go back
     to the ordinary schema-conformance rules."""
-    _require_writable(spark, table_path)
-    from delta_lake_health_spark.sources.delta_log import DeltaLog
-
-    meta = DeltaLog(spark, table_path).metadata()
+    snap = _base_snapshot(spark, table_path)
+    meta = snap.metadata()
     fields = [dict(f) for f in (meta.get("schema") or {}).get("fields", [])]
     hit = False
     for f in fields:
@@ -1354,27 +1295,14 @@ def clear_column_default(
             f["metadata"] = md
     if not hit:
         raise ValueError(f"column {col!r} has no default")
-    version = current_version(table_path)
-    _commit(
+    return commit_mutation(
         table_path,
-        version + 1,
+        snap.version(),
         [
-            {
-                "metaData": {
-                    "id": meta["id"],
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": json.dumps(
-                        {"type": "struct", "fields": fields}
-                    ),
-                    "partitionColumns": meta.get("partition_columns", []),
-                    "configuration": meta.get("configuration", {}),
-                    "createdTime": int(time.time() * 1000),
-                }
-            },
+            _metadata_action(meta, fields=fields),
             _commit_info("ALTER COLUMN DROP DEFAULT", {"column": col}, {}),
         ],
     )
-    return version + 1
 
 
 def _fill_default_columns(
@@ -1417,13 +1345,13 @@ def set_generated_column(
     ``delta.generationExpression``). Subsequent writes compute the column
     when the batch omits it and refuse batches whose provided values
     disagree with the expression. Existing data is validated once here."""
-    _require_writable(spark, table_path)
     from pyspark.sql import functions as F
 
     from delta_lake_health_spark.sources.delta_log import DeltaLog
 
+    snap = _base_snapshot(spark, table_path)
     log = DeltaLog(spark, table_path)
-    meta = log.metadata()
+    meta = snap.metadata()
     schema = meta.get("schema") or {}
     fields = [dict(f) for f in schema.get("fields", [])]
     if col not in {f["name"] for f in fields}:
@@ -1443,25 +1371,15 @@ def set_generated_column(
             md = dict(f.get("metadata") or {})
             md["delta.generationExpression"] = expr
             f["metadata"] = md
-    version = current_version(table_path)
-    _commit(
+    return commit_mutation(
         table_path,
-        version + 1,
+        snap.version(),
         [
-            {
-                "metaData": {
-                    "id": meta["id"],
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": json.dumps({"type": "struct", "fields": fields}),
-                    "partitionColumns": meta.get("partition_columns", []),
-                    "configuration": meta.get("configuration", {}),
-                    "createdTime": int(time.time() * 1000),
-                }
-            },
+            _metadata_action(meta, fields=fields),
             _commit_info("SET GENERATED COLUMN", {"column": col, "expr": expr}, {}),
         ],
+        read_files={a["path"] for a in snap._live_adds()},
     )
-    return version + 1
 
 
 def _fill_generated_columns(spark: SparkSession, df: DataFrame, table_path: str):
@@ -1522,22 +1440,6 @@ def _identity_fields(
     return fields
 
 
-def _identity_metadata_action(meta: dict, fields: list[dict]) -> dict:
-    """metaData action re-emitting the logged table state with updated
-    ``fields`` — id, partitioning, and configuration all carry over
-    (this is an append-path re-emit, never a schema replacement)."""
-    return {
-        "metaData": {
-            "id": meta["id"],
-            "format": {"provider": "parquet", "options": {}},
-            "schemaString": json.dumps({"type": "struct", "fields": fields}),
-            "partitionColumns": meta.get("partition_columns", []),
-            "configuration": dict(meta.get("configuration") or {}),
-            "createdTime": int(time.time() * 1000),
-        }
-    }
-
-
 def set_identity_column(
     spark: SparkSession,
     table_path: str,
@@ -1559,15 +1461,15 @@ def set_identity_column(
     Declaring on a table with existing data syncs the mark to the
     column's current extreme so generated values never collide
     (the spec's SYNC IDENTITY, run once at declaration)."""
-    _require_writable(spark, table_path)
     from pyspark.sql import functions as F
 
     from delta_lake_health_spark.sources.delta_log import DeltaLog
 
+    snap = _base_snapshot(spark, table_path)
     if step == 0:
         raise ValueError("identity step must be non-zero")
     log = DeltaLog(spark, table_path)
-    meta = log.metadata()
+    meta = snap.metadata()
     schema = meta.get("schema") or {}
     field = next(
         (f for f in schema.get("fields", []) if f["name"] == col), None
@@ -1609,7 +1511,7 @@ def set_identity_column(
     upgrade = _protocol_upgrade_action(spark, table_path, "identityColumns")
     if upgrade is not None:
         actions.append(upgrade)
-    actions.append(_identity_metadata_action(meta, fields))
+    actions.append(_metadata_action(meta, fields=fields))
     actions.append(
         _commit_info(
             "SET IDENTITY COLUMN",
@@ -1618,9 +1520,10 @@ def set_identity_column(
             {},
         )
     )
-    version = current_version(table_path)
-    _commit(table_path, version + 1, actions)
-    return version + 1
+    return commit_mutation(
+        table_path, snap.version(), actions,
+        read_files={a["path"] for a in snap._live_adds()},
+    )
 
 
 def sync_identity(spark: SparkSession, table_path: str, col: str) -> int:
@@ -1629,20 +1532,19 @@ def sync_identity(spark: SparkSession, table_path: str, col: str) -> int:
     and re-emit metaData when it moved. The mark only ever advances —
     shrinking it would let future generated values collide with rows a
     concurrent reader already saw."""
-    _require_writable(spark, table_path)
     from pyspark.sql import functions as F
 
     from delta_lake_health_spark.sources.delta_log import DeltaLog
 
-    log = DeltaLog(spark, table_path)
-    meta = log.metadata()
+    snap = _base_snapshot(spark, table_path)
+    meta = snap.metadata()
     specs = _identity_specs(meta.get("schema"))
     if col not in specs:
         raise ValueError(f"column {col!r} is not an identity column")
     spec = specs[col]
     agg = F.max(col) if spec["step"] > 0 else F.min(col)
-    row = log.snapshot().agg(agg.alias("m")).collect()[0]
-    version = current_version(table_path)
+    row = DeltaLog(spark, table_path).snapshot().agg(agg.alias("m")).collect()[0]
+    version = snap.version()
     if row["m"] is None:
         return version  # empty table: nothing to sync
     data_mark = int(row["m"])
@@ -1652,16 +1554,15 @@ def sync_identity(spark: SparkSession, table_path: str, col: str) -> int:
         or (spec["step"] < 0 and data_mark >= hwm)
     ):
         return version  # mark already covers the data
-    fields = _identity_fields(meta, {col: data_mark})
-    _commit(
+    return commit_mutation(
         table_path,
-        version + 1,
+        version,
         [
-            _identity_metadata_action(meta, fields),
+            _metadata_action(meta, fields=_identity_fields(meta, {col: data_mark})),
             _commit_info("SYNC IDENTITY", {"column": col}, {}),
         ],
+        read_files={a["path"] for a in snap._live_adds()},
     )
-    return version + 1
 
 
 _PARTITION_ID_BITS = 33  # monotonically_increasing_id: pid<<33 | local row
@@ -2174,7 +2075,12 @@ def write(
                     {"protocol": {"minReaderVersion": 1,
                                   "minWriterVersion": 2}}
                 )
-            actions.append(_metadata_action(df, partition_by))
+            actions.append(
+                _metadata_action(
+                    {}, fields=df.schema.jsonValue()["fields"],
+                    partition_columns=partition_by,
+                )
+            )
         else:
             if needs_variant and (
                 upgrade := _protocol_upgrade_action(
@@ -2198,7 +2104,9 @@ def write(
                     }
                 actions.append(
                     _metadata_action(
-                        df, partition_by, merged_schema, existing=meta_at_validation
+                        meta_at_validation,
+                        fields=(merged_schema or df.schema.jsonValue())["fields"],
+                        partition_columns=partition_by,
                     )
                 )
             elif hwm_updates:
@@ -2208,9 +2116,9 @@ def write(
                 # writers CONFLICT (metadata change) instead of silently
                 # generating duplicate values
                 actions.append(
-                    _identity_metadata_action(
+                    _metadata_action(
                         meta_at_validation,
-                        _identity_fields(meta_at_validation, hwm_updates),
+                        fields=_identity_fields(meta_at_validation, hwm_updates),
                     )
                 )
         actions += adds + _remove_actions(removed)
@@ -2525,8 +2433,8 @@ def merge(
         )
     if identity_updates:
         extra.append(
-            _identity_metadata_action(
-                merge_meta, _identity_fields(merge_meta, identity_updates)
+            _metadata_action(
+                merge_meta, fields=_identity_fields(merge_meta, identity_updates)
             )
         )
     if txn_app_id is not None:
@@ -2579,19 +2487,9 @@ def clone_shallow(spark: SparkSession, source_path: str, target_path: str) -> in
     if not meta.get("schema"):
         raise ValueError("source table has no logged schema")
     adds = src.live_add_actions()
-    now = int(time.time() * 1000)
     actions: list[dict] = [
         {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
-        {
-            "metaData": {
-                "id": str(uuid.uuid4()),
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": json.dumps(meta["schema"]),
-                "partitionColumns": meta.get("partition_columns", []),
-                "configuration": meta.get("configuration", {}),
-                "createdTime": now,
-            }
-        },
+        _metadata_action({**meta, "id": None}),  # a new table: a new id
     ]
     for a in adds:
         a = dict(a)
@@ -2702,7 +2600,6 @@ def clone_deep(spark: SparkSession, source_path: str, target_path: str) -> int:
                 shutil.copy2(src_abs, dst_abs)
             dv_counts[rel] = n_by_path.get(rel, 0)
 
-    now = int(time.time() * 1000)
     if live_dvs:
         protocol = {
             "minReaderVersion": 3,
@@ -2716,16 +2613,7 @@ def clone_deep(spark: SparkSession, source_path: str, target_path: str) -> int:
         protocol = {"minReaderVersion": 1, "minWriterVersion": 2}
     actions: list[dict] = [
         {"protocol": protocol},
-        {
-            "metaData": {
-                "id": str(uuid.uuid4()),
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": json.dumps(meta["schema"]),
-                "partitionColumns": meta.get("partition_columns", []),
-                "configuration": meta.get("configuration", {}),
-                "createdTime": now,
-            }
-        },
+        _metadata_action({**meta, "id": None}),  # a new table: a new id
     ]
     for a, rel in copied:
         a = dict(a)
@@ -2801,16 +2689,9 @@ def convert_to_delta(
     )
     actions: list[dict] = [
         {"protocol": proto},
-        {
-            "metaData": {
-                "id": str(uuid.uuid4()),
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": schema.json(),
-                "partitionColumns": part_cols,
-                "configuration": {},
-                "createdTime": int(time.time() * 1000),
-            }
-        },
+        _metadata_action(
+            {}, fields=schema.jsonValue()["fields"], partition_columns=part_cols
+        ),
     ]
     for rel in rels:
         actions.append(_add_action(table_path, rel))
@@ -2884,20 +2765,13 @@ def enable_row_tracking(spark: SparkSession, table_path: str) -> int:
     file-rewriting operations (OPTIMIZE / UPDATE / MERGE rewrite);
     stable-id materialization into a physical column is not implemented.
     Returns the version of the backfill (or upgrade) commit."""
-    _require_writable(spark, table_path)
+    snap = _base_snapshot(spark, table_path)
     upgrade = _protocol_upgrade_action(spark, table_path, "rowTracking")
     if upgrade is not None:
-        _commit(
+        commit_mutation(
             table_path,
-            current_version(table_path) + 1,
-            [
-                upgrade,
-                _commit_info(
-                    "UPGRADE PROTOCOL",
-                    {"feature": "rowTracking"},
-                    {},
-                ),
-            ],
+            snap.version(),
+            [upgrade, _commit_info("UPGRADE PROTOCOL", {"feature": "rowTracking"}, {})],
         )
     # backfill: re-add live files that predate row tracking so every
     # current row resolves an id (assignment happens inside _commit)
@@ -2928,35 +2802,53 @@ def delete_with_dv(spark: SparkSession, table_path: str, predicate: str) -> int:
     files and retires the vectors. At 100 TB this turns a delete that
     touches 1% of rows in every file from a full-table rewrite into a
     |deleted rows|-sized append."""
-    _require_writable(spark, table_path)
-    _refuse_append_only(spark, table_path, "DELETE (deletion vector)")
+    from pyspark.sql import functions as F
 
+    return _delete_rows_dv(
+        spark, table_path, lambda rows: rows.where(F.expr(predicate)), predicate
+    )
+
+
+def _delete_rows_dv(
+    spark: SparkSession,
+    table_path: str,
+    match,
+    predicate: str,
+    commit_no_match: bool = True,
+) -> int:
+    """The DV DELETE of every live row ``match(rows)`` keeps — ``match``
+    filters a table read (a SQL predicate for ``delete_with_dv``, a key
+    semi-join for the CDC sync), ``predicate`` describes it in the
+    commitInfo. One log listing gives the base version and the read set;
+    the positions come from the lineage-tagged snapshot, the change data
+    (``delta.enableChangeDataFeed``) from the hit files only, and the
+    first DV on the table upgrades the protocol in the same commit. No
+    match commits a bare DELETE record unless ``commit_no_match`` is
+    False, which returns the base version instead."""
     from pyspark.sql import functions as F
 
     from delta_lake_health_spark.sources.delta_log import DeltaLog
 
+    version, live = _snapshot_live(table_path)
+    _require_writable(spark, table_path)
+    _refuse_append_only(spark, table_path, "DELETE (deletion vector)")
+    read_files = {a["path"] for a in live}
+    params = {"predicate": predicate, "mode": "dv"}
     log = DeltaLog(spark, table_path)
-    version = current_version(table_path)
-    read_files = {
-        p.replace(os.sep, "/") for p in _active_rel_paths(spark, table_path)
-    }
-    hits = (
-        log.snapshot_with_positions()
-        .where(F.expr(predicate))
-        .select(
-            F.col("_rel_path").alias("rel_path"),
-            F.col("_row_index").alias("row_index"),
-        )
+    hits = match(log.snapshot_with_positions()).select(
+        F.col("_rel_path").alias("rel_path"),
+        F.col("_row_index").alias("row_index"),
     )
     n = hits.count()
     if n == 0:
-        _commit(
+        if not commit_no_match:
+            return version
+        return commit_mutation(
             table_path,
-            version + 1,
-            [_commit_info("DELETE", {"predicate": predicate, "mode": "dv"},
-                          {"numDeletedRows": 0})],
+            version,
+            [_commit_info("DELETE", params, {"numDeletedRows": 0})],
+            read_files=read_files,
         )
-        return version + 1
     dv_rel = f"{DELETES_DIR}/dv-{version + 1:020d}"
     hits.coalesce(1).write.parquet(os.path.join(table_path, dv_rel))
     cdc_actions: list[dict] = []
@@ -2967,10 +2859,8 @@ def delete_with_dv(spark: SparkSession, table_path: str, predicate: str) -> int:
         hit_rels = sorted(
             {r.rel_path for r in hits.select("rel_path").distinct().collect()}
         )
-        change = (
-            log.read_data_files(hit_rels)
-            .where(F.expr(predicate))
-            .withColumn("_change_type", F.lit("delete"))
+        change = match(log.read_data_files(hit_rels)).withColumn(
+            "_change_type", F.lit("delete")
         )
         cdc_actions = [
             _cdc_action(table_path, _write_change_data(spark, table_path, change))
@@ -2987,7 +2877,7 @@ def delete_with_dv(spark: SparkSession, table_path: str, predicate: str) -> int:
         + [
             {"dv": {"path": dv_rel, "numDeletedRows": n}},
             *cdc_actions,
-            _commit_info("DELETE", {"predicate": predicate, "mode": "dv"},
+            _commit_info("DELETE", params,
                          {"numDeletedRows": n, "numRewrittenFiles": 0}),
         ],
         read_files=read_files,
@@ -3084,23 +2974,30 @@ def update(
 
 
 # --------------------------------------------------------------------------
-# Optimistic-concurrency conflict detection for read-modify-write commits
-# (the Delta conflict matrix). Blind appends retry freely (write() above);
-# DELETE / UPDATE / MERGE / DV-delete and the maintenance rewrites
-# (OPTIMIZE, z-order, DV purge, REORG, RESTORE) read a snapshot, so a
-# commit that lands between their read and their commit must be CHECKED,
-# not blindly rebased:
+# Optimistic-concurrency conflict detection (the Delta conflict matrix).
+# Blind appends retry freely (write() above). Every other commit reads a
+# snapshot first — DELETE / UPDATE / MERGE / DV-delete, the maintenance
+# rewrites (OPTIMIZE, z-order, DV purge, REORG, RESTORE) and the
+# table-state changes (ALTER TABLE, CLUSTER BY, protocol upgrades, DROP
+# FEATURE, sync markers) — so a commit that lands between its read and
+# its commit must be CHECKED, not blindly rebased:
 #
 #   winner action                 loser op outcome
 #   -----------------------------------------------------------------
 #   metaData / protocol change    MetadataChangedException
+#   domainMetadata of a domain    MetadataChangedException (the loser's
+#   the loser also writes         domain state was built from the old
+#                                 one); delta.rowTracking excepted, as
+#                                 _commit re-derives it per attempt
 #   removed a file we removed     ConcurrentDeleteDeleteException
 #   removed a file we read        ConcurrentDeleteReadException
 #   added data files              ConcurrentAppendException (the new rows
 #                                 might match our predicate — Serializable),
-#                                 unless the loser changes no data (every
-#                                 add/remove dataChange=false): snapshot
-#                                 isolation, as Delta's OPTIMIZE
+#                                 unless the loser read no files (no
+#                                 predicate a new row could match: a
+#                                 metadata-only commit) or changes no data
+#                                 (every add/remove dataChange=false):
+#                                 snapshot isolation, as Delta's OPTIMIZE
 #   deletion vector               ConcurrentDeleteReadException
 #   txn / commitInfo only         safe: rebase to the next version
 #
@@ -3138,19 +3035,30 @@ def check_commit_conflicts(
     this operation's read/remove sets (driver-side, |interleaved actions|
     work). Returns the rebased commit version to use, or raises the
     matching conflict exception. ``actions`` is the operation's own
-    commit: when it adds or removes files and every one of those
-    actions is dataChange=false (a re-layout of rows it read), appended
-    rows cannot invalidate it, so only the append rule is skipped."""
+    commit: appended rows cannot invalidate it when it read no files or
+    when it adds or removes files and every one of those actions is
+    dataChange=false (a re-layout of rows it read), and a domain it
+    writes must not have been written since."""
     files = [a[k] for a in actions or () for k in ("add", "remove") if k in a]
     rearranges_only = bool(files) and not any(
         f.get("dataChange", True) for f in files
     )
+    appends_conflict = bool(read_files) and not rearranges_only
+    domains = {
+        a["domainMetadata"]["domain"] for a in actions or ()
+        if "domainMetadata" in a
+    } - {ROW_TRACKING_DOMAIN}
     current = current_version(table_path)
     for v in range(base_version + 1, current + 1):
         for act in log_replay.read_commit(table_path, v):
             if "metaData" in act or "protocol" in act:
                 raise MetadataChangedException(
                     f"version {v} changed table metadata/protocol"
+                )
+            if (act.get("domainMetadata") or {}).get("domain") in domains:
+                raise MetadataChangedException(
+                    f"version {v} also wrote domain "
+                    f"{act['domainMetadata']['domain']}"
                 )
             if "remove" in act:
                 p = act["remove"]["path"]
@@ -3162,11 +3070,7 @@ def check_commit_conflicts(
                     raise ConcurrentDeleteReadException(
                         f"version {v} removed {p}, which this operation read"
                     )
-            if (
-                "add" in act
-                and act["add"].get("dataChange")
-                and not rearranges_only
-            ):
+            if "add" in act and act["add"].get("dataChange") and appends_conflict:
                 raise ConcurrentAppendException(
                     f"version {v} added data files that may match this "
                     "operation's predicate"
@@ -3187,11 +3091,13 @@ def commit_mutation(
     removed_files: set[str] | None = None,
     max_retries: int = 10,
 ) -> int:
-    """Put-if-absent commit for a read-modify-write operation read at
-    ``base_version``: on a version collision, run the conflict matrix
-    over the interleaved commits and either rebase (safe winners only:
+    """Put-if-absent commit for an operation that read the table at
+    ``base_version`` — every commit but a blind append and a table
+    creation: on a version collision, run the conflict matrix over the
+    interleaved commits and either rebase (safe winners only:
     txn/commitInfo-only commits, e.g. replay-guard markers, and appends
-    under a dataChange=false rewrite) or raise the typed conflict."""
+    under a commit that read no files or a dataChange=false rewrite) or
+    raise the typed conflict."""
     read_files = read_files or set()
     removed_files = removed_files or set()
     version = base_version + 1
@@ -3361,8 +3267,9 @@ def copy_into(
             },
         )
     )
-    # read at base_version: a concurrent COPY INTO of the same files
-    # lands as an append this commit conflicts with, never a double load
+    # read at base_version: a concurrent COPY INTO also writes the
+    # loaded-set domain, so this commit conflicts with it instead of
+    # loading the same files twice
     version = commit_mutation(table_path, base_version, actions)
     return {
         "numLoadedFiles": len(new_paths),
@@ -3404,23 +3311,22 @@ def drop_feature(spark: SparkSession, table_path: str, feature: str) -> int:
     """
     from delta_lake_health_spark.sources.delta_log import DeltaLog
 
-    _require_writable(spark, table_path)
-    log = DeltaLog(spark, table_path)
-    p = log.protocol()
+    snap = _base_snapshot(spark, table_path)
+    p = snap.protocol()
     reader_feats = set(p.get("readerFeatures") or [])
     writer_feats = set(p.get("writerFeatures") or [])
     if feature not in (reader_feats | writer_feats):
         raise ValueError(f"table does not declare feature {feature!r}")
 
     if feature == "deletionVectors":
-        n_live = sum(log_replay.Snapshot(table_path).dv_deleted_rows().values())
+        n_live = sum(snap.dv_deleted_rows().values())
         if n_live:
             raise ValueError(
                 f"cannot drop deletionVectors: {n_live} live DV "
                 "positions remain — run reorg_purge first"
             )
     elif feature == "columnMapping":
-        schema = log.metadata().get("schema") or {}
+        schema = snap.metadata().get("schema") or {}
         mapped = [
             f["name"]
             for f in schema.get("fields", [])
@@ -3441,28 +3347,14 @@ def drop_feature(spark: SparkSession, table_path: str, feature: str) -> int:
 
     extra_actions: list[dict] = []
     if feature == "changeDataFeed":
-        meta = log.metadata()
-        config = dict(meta.get("configuration", {}))
+        meta = snap.metadata()
+        config = dict(meta["configuration"])
         if config.pop("delta.enableChangeDataFeed", None) is not None:
-            extra_actions.append(
-                {
-                    "metaData": {
-                        "id": meta["id"],
-                        "format": {"provider": "parquet", "options": {}},
-                        "schemaString": json.dumps(meta["schema"]),
-                        "partitionColumns": meta.get(
-                            "partition_columns", []
-                        ),
-                        "configuration": config,
-                        "createdTime": int(time.time() * 1000),
-                    }
-                }
-            )
+            extra_actions.append(_metadata_action(meta, configuration=config))
     elif feature == "v2Checkpoint":
-        lc = log.last_checkpoint_info()
+        lc = log_replay.last_checkpoint_info(table_path)
         if lc is not None and lc.get("format") == "v2":
-            log.checkpoint(format="v1")
-            log = DeltaLog(spark, table_path)
+            DeltaLog(spark, table_path).checkpoint(format="v1")
 
     proto = {
         "minReaderVersion": p["minReaderVersion"],
@@ -3477,6 +3369,4 @@ def drop_feature(spark: SparkSession, table_path: str, feature: str) -> int:
         *extra_actions,
         _commit_info("DROP FEATURE", {"feature": feature}, {}),
     ]
-    version = current_version(table_path) + 1
-    _commit(table_path, version, actions)
-    return version
+    return commit_mutation(table_path, snap.version(), actions)

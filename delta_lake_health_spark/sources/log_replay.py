@@ -249,6 +249,7 @@ def _checkpoint_rows(
 _ARROW_PRIMITIVES = {
     "string": pa.string(),
     "long": pa.int64(),
+    "double": pa.float64(),
     "integer": pa.int32(),
     "boolean": pa.bool_(),
 }

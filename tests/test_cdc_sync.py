@@ -241,3 +241,23 @@ def test_stream_apply_changes_replay_safe(spark, pair):
     # no data-changing commit landed (the DV probe found 0 positions and
     # the merge was skipped by the txn guard)
     assert delta_writer.current_version(dst) == v_after
+
+
+def test_net_delete_refused_on_append_only_target(spark, tmp_path):
+    """The sync's DV delete is DELETE: an append-only target refuses it,
+    like delete_with_dv, and stays unchanged."""
+    from delta_lake_health_spark.operators.sync import apply_net_changes
+
+    dst = str(tmp_path / "dst")
+    delta_writer.write(
+        spark, spark.range(10).selectExpr("id", "CAST(id * 2 AS BIGINT) AS v"), dst
+    )
+    delta_writer.set_table_property(spark, dst, "delta.appendOnly", "true")
+    v = delta_writer.current_version(dst)
+    changes = spark.createDataFrame(
+        [(3, 6, "delete", 1)], "id long, v long, _change_type string, _commit_version long"
+    )
+    with pytest.raises(ValueError, match="append-only"):
+        apply_net_changes(spark, dst, changes, ["id"])
+    assert delta_writer.current_version(dst) == v
+    assert DeltaLog(spark, dst).snapshot().count() == 10

@@ -429,6 +429,23 @@ def test_log_dataframes_launch_no_spark_job(spark, tmp_path, shape):
         assert rows or name in ("tombstones", "pruned_files"), name
 
 
+def test_report_frames_launch_no_spark_job(spark, tmp_path):
+    """The dashboard aggregates are computed on the driver from the log
+    replay: collecting them runs no Spark job, above a checkpoint and
+    over a commit tail."""
+    from delta_lake_health_spark.operators import report
+
+    path = str(tmp_path / "t")
+    kw = SHAPES["v1_single"](spark, path)
+    DeltaLog(spark, path).checkpoint(**kw)
+    _write_json_commit(path)
+    for fn in (report.file_size_histogram, report.partition_records,
+               report.historical_trends):
+        rows = []
+        assert _job_ids(spark, lambda: rows.extend(fn(spark, path).collect())) == [], fn
+        assert rows, fn
+
+
 def test_history_of_an_empty_log_raises(spark, tmp_path):
     os.makedirs(tmp_path / "t" / "_delta_log")
     with pytest.raises(FileNotFoundError):

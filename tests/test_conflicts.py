@@ -189,3 +189,161 @@ def test_compact_rebases_over_blind_append_committed_midway(
     assert dw.current_version(t) == base + 2
     ids = sorted(r.id for r in DeltaLog(spark, t).snapshot().collect())
     assert ids == list(range(30)) + list(range(100, 110))
+
+
+# -- table-state changes race a second writer ---------------------------------
+
+
+def _commit_midway(monkeypatch, commit):
+    """Run ``commit`` once, after an operation's checks and before its
+    commit: the first commitInfo the operation builds fires it."""
+    real, fired = dw._commit_info, []
+
+    def commit_info(*a, **k):
+        if not fired:
+            fired.append(True)
+            commit()
+        return real(*a, **k)
+
+    monkeypatch.setattr(dw, "_commit_info", commit_info)
+    return fired
+
+
+def test_constraint_refuses_violating_append_committed_midway(
+    spark, tmp_path, monkeypatch
+):
+    """A row appended behind ADD CONSTRAINT's validation scan: the
+    constraint must not be declared over a table that breaks it."""
+    t = str(tmp_path / "t")
+    _build(spark, t)
+    fired = _commit_midway(
+        monkeypatch,
+        lambda: dw.write(spark, spark.range(-5, -4).selectExpr(
+            "id", "CAST(id % 3 AS LONG) AS k"), t),
+    )
+    with pytest.raises(dw.ConcurrentAppendException):
+        dw.set_constraint(spark, t, "pos", "id >= 0")
+    assert fired
+    config = DeltaLog(spark, t).metadata()["configuration"]
+    assert "delta.constraints.pos" not in config
+
+
+def test_racing_property_sets_keep_the_winner(spark, tmp_path, monkeypatch):
+    t = str(tmp_path / "t")
+    _build(spark, t)
+    fired = _commit_midway(
+        monkeypatch, lambda: dw.set_table_property(spark, t, "b", "2")
+    )
+    with pytest.raises(dw.MetadataChangedException):
+        dw.set_table_property(spark, t, "a", "1")
+    assert fired
+    config = DeltaLog(spark, t).metadata()["configuration"]
+    assert config.get("b") == "2" and "a" not in config
+
+
+def test_property_set_commits_above_a_racing_append(
+    spark, tmp_path, monkeypatch
+):
+    """SET TBLPROPERTIES reads no rows, so an append is no conflict: the
+    property commit rebases above it and both survive."""
+    t = str(tmp_path / "t")
+    _build(spark, t)
+    base = dw.current_version(t)
+    fired = _commit_midway(
+        monkeypatch,
+        lambda: dw.write(spark, spark.range(100, 110).selectExpr(
+            "id", "CAST(id % 3 AS LONG) AS k"), t),
+    )
+    assert dw.set_table_property(spark, t, "a", "1") == base + 2
+    assert fired
+    log = DeltaLog(spark, t)
+    assert log.metadata()["configuration"]["a"] == "1"
+    assert log.snapshot().count() == 40
+
+
+def test_drop_dv_feature_refuses_dv_delete_committed_midway(
+    spark, tmp_path, monkeypatch
+):
+    """A DV delete behind DROP FEATURE's liveness check: the protocol
+    must keep deletionVectors while a live vector hides a row."""
+    from delta_lake_health_spark.operators import maintenance
+
+    t = str(tmp_path / "t")
+    _build(spark, t)
+    dw.delete_with_dv(spark, t, "id = 3")
+    maintenance.apply_deletion_vectors(spark, t)
+    fired = _commit_midway(
+        monkeypatch, lambda: dw.delete_with_dv(spark, t, "id = 5")
+    )
+    with pytest.raises(dw.ConcurrentWriteConflict):
+        dw.drop_feature(spark, t, "deletionVectors")
+    assert fired
+    p = DeltaLog(spark, t).protocol()
+    assert "deletionVectors" in p["readerFeatures"]
+    assert "deletionVectors" in p["writerFeatures"]
+    ids = {r.id for r in DeltaLog(spark, t).snapshot().collect()}
+    assert ids == set(range(30)) - {3, 5}
+
+
+def test_racing_sync_markers_keep_the_winner(spark, tmp_path, monkeypatch):
+    """Two CDC sync markers for different sources on one target both
+    rewrite the delta.cdcSync domain: the loser raises instead of
+    dropping the winner's entry."""
+    from delta_lake_health_spark.operators import sync
+
+    t = str(tmp_path / "t")
+    _build(spark, t)
+    # the first marker upgrades the protocol; the racing two do not
+    sync._record_synced(spark, t, "/src/c", 1)
+    fired = _commit_midway(
+        monkeypatch, lambda: sync._record_synced(spark, t, "/src/b", 7)
+    )
+    with pytest.raises(dw.MetadataChangedException):
+        sync._record_synced(spark, t, "/src/a", 5)
+    assert fired
+    marks = DeltaLog(spark, t).domain_metadata(sync.SYNC_DOMAIN)
+    assert marks == {"/src/c": 1, "/src/b": 7}
+
+
+def test_racing_copy_into_loads_every_file_once(spark, tmp_path, monkeypatch):
+    t = str(tmp_path / "t")
+    _build(spark, t)
+    # a first load upgrades the protocol; the racing two do not
+    first, src = str(tmp_path / "first"), str(tmp_path / "src")
+    spark.range(300, 302).selectExpr("id", "CAST(id % 3 AS LONG) AS k") \
+        .coalesce(1).write.parquet(first)
+    dw.copy_into(spark, t, first, "*.parquet")
+    spark.range(200, 206).selectExpr("id", "CAST(id % 3 AS LONG) AS k") \
+        .repartition(2).write.parquet(src)
+    fired = _commit_midway(
+        monkeypatch, lambda: dw.copy_into(spark, t, src, "*.parquet")
+    )
+    with pytest.raises(dw.ConcurrentWriteConflict):
+        dw.copy_into(spark, t, src, "*.parquet")
+    assert fired
+    ids = sorted(r.id for r in DeltaLog(spark, t).snapshot().collect())
+    assert ids == list(range(30)) + list(range(200, 206)) + [300, 301]
+
+
+def test_commit_is_put_if_absent(spark, tmp_path, monkeypatch):
+    """A writer that found no file at its version (it looked before the
+    other writer published) still cannot replace the published commit:
+    the second publish raises and the first commit's bytes stay."""
+    import os
+
+    from delta_lake_health_spark.sources import log_replay
+
+    t = str(tmp_path / "t")
+    _build(spark, t)
+    v = dw.current_version(t)
+    path = log_replay.commit_path(t, v)
+    with open(path, "rb") as f:
+        first = f.read()
+    real = os.path.exists
+    monkeypatch.setattr(os.path, "exists", lambda p: p != path and real(p))
+    with pytest.raises(RuntimeError, match="concurrent commit"):
+        dw._commit(t, v, _actions("WRITE"))
+    monkeypatch.undo()
+    with open(path, "rb") as f:
+        assert f.read() == first
+    assert not [n for n in os.listdir(os.path.dirname(path)) if ".tmp-" in n]

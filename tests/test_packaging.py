@@ -207,3 +207,55 @@ def test_one_file_rewrite_path():
                     blind.append(f"{rel}:{node.lineno}")
     assert differs == ["sources/delta_writer.py::_write_files"], differs
     assert not blind, blind
+
+
+def test_one_metadata_commit_path():
+    """Structure guard: every table-state change builds its metaData
+    with ``delta_writer._metadata_action`` and commits through
+    ``commit_mutation`` at the version it read. Only ``commit_mutation``,
+    ``write``'s blind-append loop and the three table creators call
+    ``_commit`` (any other caller would skip the conflict check), and
+    only ``_metadata_action`` holds a metaData literal. The test fixture
+    builder writes raw logs by design and is exempt."""
+    import ast
+
+    creators = {"commit_mutation", "write", "clone_shallow", "clone_deep",
+                "convert_to_delta"}
+    pkg = os.path.join(REPO, "delta_lake_health_spark")
+    callers, literals = [], []
+    for root, _, files in os.walk(pkg):
+        for name in files:
+            path = os.path.join(root, name)
+            rel = os.path.relpath(path, pkg).replace(os.sep, "/")
+            if not name.endswith(".py") or rel == "sources/fixture.py":
+                continue
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+            parents = {}
+            for node in ast.walk(tree):
+                for child in ast.iter_child_nodes(node):
+                    parents[child] = node
+
+            def enclosing(node):
+                while node in parents:
+                    node = parents[node]
+                    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                        return node.name
+                return "<module>"
+
+            for node in ast.walk(tree):
+                if isinstance(node, ast.Call) and getattr(
+                    node.func, "attr", getattr(node.func, "id", None)
+                ) == "_commit":
+                    fn = enclosing(node)
+                    if fn not in creators:
+                        callers.append(f"{rel}::{fn}")
+                if isinstance(node, ast.Dict) and any(
+                    isinstance(k, ast.Constant) and k.value == "metaData"
+                    for k in node.keys
+                ):
+                    fn = enclosing(node)
+                    if fn != "_metadata_action":
+                        literals.append(f"{rel}::{fn}")
+    assert not callers, callers
+    assert not literals, literals
