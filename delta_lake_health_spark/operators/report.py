@@ -169,11 +169,9 @@ def historical_trends(spark: SparkSession, table_path: str) -> DataFrame:
             _sum([total, _sum(d[i] for d in deltas[v])])
             for i, total in enumerate(running)
         ]
-        ci = infos.get(v) or {}
-        ts = ci.get("inCommitTimestamp")
         rows.append({
             "version": v,
-            "ts_ms": ci.get("timestamp") if ts is None else ts,
+            "ts_ms": log_replay.info_timestamp(infos.get(v) or {}),
             "table_size_bytes": running[0],
             "data_file_count": running[2],
             "record_count": running[1],

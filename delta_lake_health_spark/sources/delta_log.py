@@ -442,10 +442,8 @@ class DeltaLog:
         infos = snap.commit_infos()
         rows = []
         for v in sorted(infos, reverse=True)[:limit]:
-            ts = infos[v].get("inCommitTimestamp")
-            rows.append(
-                {**infos[v], "version": v, "timestamp": infos[v].get("timestamp") if ts is None else ts}
-            )
+            rows.append({**infos[v], "version": v,
+                         "timestamp": log_replay.info_timestamp(infos[v])})
         return self._local(rows, _HISTORY_SCHEMA)
 
     def version(self) -> int:

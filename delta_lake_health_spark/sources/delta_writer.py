@@ -727,11 +727,20 @@ def _commit(table_path: str, version: int, actions: list[dict]) -> None:
             f.write(json.dumps(_serializable(a)) + "\n")
     # put-if-absent: link() refuses an existing name, so of two writers
     # racing for one version exactly one publishes it (rename() would let
-    # the second silently replace the first one's actions)
+    # the second silently replace the first one's actions). The log store
+    # therefore needs hard links; a filesystem without them is refused
+    # rather than committed to without the guarantee
     try:
         os.link(tmp, path)
     except FileExistsError:
         raise RuntimeError(f"concurrent commit: version {version} exists") from None
+    except OSError as ex:
+        raise OSError(
+            ex.errno,
+            f"cannot publish {path}: the Delta log store needs put-if-absent "
+            f"commits, made with hard links, which this filesystem refused "
+            f"({ex.strerror})",
+        ) from ex
     finally:
         os.remove(tmp)
     _write_version_checksum(table_path, version, actions)
@@ -2819,20 +2828,21 @@ def _delete_rows_dv(
     """The DV DELETE of every live row ``match(rows)`` keeps — ``match``
     filters a table read (a SQL predicate for ``delete_with_dv``, a key
     semi-join for the CDC sync), ``predicate`` describes it in the
-    commitInfo. One log listing gives the base version and the read set;
-    the positions come from the lineage-tagged snapshot, the change data
-    (``delta.enableChangeDataFeed``) from the hit files only, and the
-    first DV on the table upgrades the protocol in the same commit. No
+    commitInfo. One ``_base_snapshot`` gives the base version and the
+    read set; the positions come from the lineage-tagged snapshot, the
+    change data (``delta.enableChangeDataFeed``) from the hit files
+    only, and the first DV on the table upgrades the protocol in the
+    same commit. No
     match commits a bare DELETE record unless ``commit_no_match`` is
     False, which returns the base version instead."""
     from pyspark.sql import functions as F
 
     from delta_lake_health_spark.sources.delta_log import DeltaLog
 
-    version, live = _snapshot_live(table_path)
-    _require_writable(spark, table_path)
+    snap = _base_snapshot(spark, table_path)
     _refuse_append_only(spark, table_path, "DELETE (deletion vector)")
-    read_files = {a["path"] for a in live}
+    version = snap.version()
+    read_files = {a["path"] for a in snap._live_adds()}
     params = {"predicate": predicate, "mode": "dv"}
     log = DeltaLog(spark, table_path)
     hits = match(log.snapshot_with_positions()).select(
@@ -2993,12 +3003,16 @@ def update(
 #   removed a file we read        ConcurrentDeleteReadException
 #   added data files              ConcurrentAppendException (the new rows
 #                                 might match our predicate — Serializable),
-#                                 unless the loser read no files (no
-#                                 predicate a new row could match: a
-#                                 metadata-only commit) or changes no data
-#                                 (every add/remove dataChange=false):
-#                                 snapshot isolation, as Delta's OPTIMIZE
-#   deletion vector               ConcurrentDeleteReadException
+#                                 unless the loser read no table rows (no
+#                                 read set passed: a metadata-only commit
+#                                 has no predicate a new row could match)
+#                                 or changes no data (every add/remove
+#                                 dataChange=false): snapshot isolation,
+#                                 as Delta's OPTIMIZE. A read set that is
+#                                 EMPTY (an empty table was read) counts
+#                                 as a read
+#   deletion vector               ConcurrentDeleteReadException, unless
+#                                 the loser read no table rows
 #   txn / commitInfo only         safe: rebase to the next version
 #
 # Exception names mirror delta-io/delta's org.apache.spark.sql.delta.
@@ -3027,23 +3041,28 @@ class ConcurrentDeleteDeleteException(ConcurrentWriteConflict):
 def check_commit_conflicts(
     table_path: str,
     base_version: int,
-    read_files: set[str],
+    read_files: set[str] | None,
     removed_files: set[str],
     actions: list[dict] | None = None,
 ) -> int:
     """Validate the commits that landed after ``base_version`` against
     this operation's read/remove sets (driver-side, |interleaved actions|
     work). Returns the rebased commit version to use, or raises the
-    matching conflict exception. ``actions`` is the operation's own
-    commit: appended rows cannot invalidate it when it read no files or
-    when it adds or removes files and every one of those actions is
+    matching conflict exception. ``read_files`` None means the operation
+    read no table rows (a metadata-only commit); any set, an empty one
+    included, is the live files it scanned. ``actions`` is the
+    operation's own commit: appended rows or deletion vectors cannot
+    invalidate it when it read no rows, appended rows cannot when it
+    adds or removes files and every one of those actions is
     dataChange=false (a re-layout of rows it read), and a domain it
     writes must not have been written since."""
+    read_rows = read_files is not None
+    read_files = read_files or set()
     files = [a[k] for a in actions or () for k in ("add", "remove") if k in a]
     rearranges_only = bool(files) and not any(
         f.get("dataChange", True) for f in files
     )
-    appends_conflict = bool(read_files) and not rearranges_only
+    appends_conflict = read_rows and not rearranges_only
     domains = {
         a["domainMetadata"]["domain"] for a in actions or ()
         if "domainMetadata" in a
@@ -3075,7 +3094,7 @@ def check_commit_conflicts(
                     f"version {v} added data files that may match this "
                     "operation's predicate"
                 )
-            if "dv" in act:
+            if "dv" in act and read_rows:
                 raise ConcurrentDeleteReadException(
                     f"version {v} committed a deletion vector over files "
                     "this operation may have read"
@@ -3096,9 +3115,9 @@ def commit_mutation(
     creation: on a version collision, run the conflict matrix over the
     interleaved commits and either rebase (safe winners only:
     txn/commitInfo-only commits, e.g. replay-guard markers, and appends
-    under a commit that read no files or a dataChange=false rewrite) or
+    or deletion vectors under a commit that read no rows — it passes no
+    ``read_files`` — and appends under a dataChange=false rewrite) or
     raise the typed conflict."""
-    read_files = read_files or set()
     removed_files = removed_files or set()
     version = base_version + 1
     for _ in range(max_retries):
@@ -3318,7 +3337,12 @@ def drop_feature(spark: SparkSession, table_path: str, feature: str) -> int:
     if feature not in (reader_feats | writer_feats):
         raise ValueError(f"table does not declare feature {feature!r}")
 
+    # the deletionVectors check reads the live files' vectors, so a
+    # vector committed behind it conflicts; the other checks read only
+    # metadata and protocol
+    read_files = None
     if feature == "deletionVectors":
+        read_files = {a["path"] for a in snap._live_adds()}
         n_live = sum(snap.dv_deleted_rows().values())
         if n_live:
             raise ValueError(
@@ -3369,4 +3393,6 @@ def drop_feature(spark: SparkSession, table_path: str, feature: str) -> int:
         *extra_actions,
         _commit_info("DROP FEATURE", {"feature": feature}, {}),
     ]
-    return commit_mutation(table_path, snap.version(), actions)
+    return commit_mutation(
+        table_path, snap.version(), actions, read_files=read_files
+    )

@@ -109,18 +109,25 @@ def read_commit(table_path: str, version: int) -> list[dict]:
     return _copy(_parsed(table_path, version))
 
 
+def info_timestamp(commit_info: dict) -> int | None:
+    """A commitInfo's timestamp: its inCommitTimestamp (the timestamp
+    ``timestampAsOf`` resolves, as Delta reports it once ICT is on),
+    else ``timestamp``; None when it carries neither."""
+    ts = commit_info.get("inCommitTimestamp")
+    if ts is None:  # a foreign writer may emit null
+        ts = commit_info.get("timestamp")
+    return ts
+
+
 def commit_timestamp(table_path: str, version: int) -> int | None:
-    """Commit ``version``'s own timestamp: its inCommitTimestamp, else
-    ``commitInfo.timestamp``; None when it carries no commitInfo."""
+    """Commit ``version``'s own timestamp (``info_timestamp``); None when
+    it carries no commitInfo."""
     stamps = []
     for a in _parsed(table_path, version):
         ci = a.get("commitInfo")
-        if ci is not None:
-            ts = ci.get("inCommitTimestamp")
-            if ts is None:  # a foreign writer may emit null
-                ts = ci.get("timestamp")
-            if ts is not None:
-                stamps.append(int(ts))
+        ts = None if ci is None else info_timestamp(ci)
+        if ts is not None:
+            stamps.append(int(ts))
     return max(stamps, default=None)
 
 

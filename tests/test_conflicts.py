@@ -191,6 +191,35 @@ def test_compact_rebases_over_blind_append_committed_midway(
     assert ids == list(range(30)) + list(range(100, 110))
 
 
+def _emptied(spark, t):
+    """A table whose every file was removed: 0 live files, so an
+    operation that reads it reads an EMPTY set of files."""
+    _build(spark, t)
+    dw.delete(spark, t, "true")
+    assert not _live(spark, t)
+
+
+def test_merge_into_empty_table_refuses_append_committed_midway(
+    spark, tmp_path, monkeypatch
+):
+    """Reading an empty table is still a read: an append of the same key
+    that lands behind MERGE's read must conflict, or the merge would
+    insert the key a second time."""
+    t = str(tmp_path / "t")
+    _emptied(spark, t)
+    fired = _rewrite_with_commit_midway(
+        monkeypatch,
+        lambda: dw.write(spark, spark.range(1, 2).selectExpr(
+            "id", "CAST(0 AS LONG) AS k"), t),
+    )
+    with pytest.raises(dw.ConcurrentAppendException):
+        dw.merge(spark, t, spark.range(1, 2).selectExpr(
+            "id", "CAST(7 AS LONG) AS k"), ["id"])
+    assert fired
+    rows = [(r.id, r.k) for r in DeltaLog(spark, t).snapshot().collect()]
+    assert rows == [(1, 0)]
+
+
 # -- table-state changes race a second writer ---------------------------------
 
 
@@ -209,13 +238,15 @@ def _commit_midway(monkeypatch, commit):
     return fired
 
 
+@pytest.mark.parametrize("table", ["built", "emptied"])
 def test_constraint_refuses_violating_append_committed_midway(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, table
 ):
     """A row appended behind ADD CONSTRAINT's validation scan: the
-    constraint must not be declared over a table that breaks it."""
+    constraint must not be declared over a table that breaks it. The
+    scan of an emptied table read no rows but still read the table."""
     t = str(tmp_path / "t")
-    _build(spark, t)
+    (_build if table == "built" else _emptied)(spark, t)
     fired = _commit_midway(
         monkeypatch,
         lambda: dw.write(spark, spark.range(-5, -4).selectExpr(
@@ -241,24 +272,35 @@ def test_racing_property_sets_keep_the_winner(spark, tmp_path, monkeypatch):
     assert config.get("b") == "2" and "a" not in config
 
 
-def test_property_set_commits_above_a_racing_append(
-    spark, tmp_path, monkeypatch
+@pytest.mark.parametrize("racer", ["append", "dv_delete"])
+def test_property_set_commits_above_a_racing_data_change(
+    spark, tmp_path, monkeypatch, racer
 ):
-    """SET TBLPROPERTIES reads no rows, so an append is no conflict: the
-    property commit rebases above it and both survive."""
+    """SET TBLPROPERTIES reads no rows, so neither an append nor a
+    deletion vector is a conflict: the property commit rebases above
+    the racing commit and both survive."""
     t = str(tmp_path / "t")
     _build(spark, t)
+    # the first DV delete upgrades the protocol; the racing one does not
+    dw.delete_with_dv(spark, t, "id = 3")
     base = dw.current_version(t)
     fired = _commit_midway(
         monkeypatch,
-        lambda: dw.write(spark, spark.range(100, 110).selectExpr(
-            "id", "CAST(id % 3 AS LONG) AS k"), t),
+        {
+            "append": lambda: dw.write(spark, spark.range(100, 110).selectExpr(
+                "id", "CAST(id % 3 AS LONG) AS k"), t),
+            "dv_delete": lambda: dw.delete_with_dv(spark, t, "id = 5"),
+        }[racer],
     )
     assert dw.set_table_property(spark, t, "a", "1") == base + 2
     assert fired
     log = DeltaLog(spark, t)
     assert log.metadata()["configuration"]["a"] == "1"
-    assert log.snapshot().count() == 40
+    ids = {r.id for r in log.snapshot().collect()}
+    assert ids == {
+        "append": set(range(30)) - {3} | set(range(100, 110)),
+        "dv_delete": set(range(30)) - {3, 5},
+    }[racer]
 
 
 def test_drop_dv_feature_refuses_dv_delete_committed_midway(
@@ -347,3 +389,28 @@ def test_commit_is_put_if_absent(spark, tmp_path, monkeypatch):
     with open(path, "rb") as f:
         assert f.read() == first
     assert not [n for n in os.listdir(os.path.dirname(path)) if ".tmp-" in n]
+
+
+def test_commit_without_hard_links_names_the_requirement(
+    spark, tmp_path, monkeypatch
+):
+    """A filesystem that refuses hard links cannot give put-if-absent
+    commits: the commit fails with an error saying so, not a bare OSError
+    or a commit without the guarantee."""
+    import errno
+    import os
+
+    t = str(tmp_path / "t")
+    _build(spark, t)
+    v = dw.current_version(t)
+
+    def no_link(src, dst):
+        raise OSError(errno.EPERM, "Operation not permitted")
+
+    monkeypatch.setattr(os, "link", no_link)
+    with pytest.raises(OSError, match="put-if-absent .*hard links"):
+        dw._commit(t, v + 1, _actions("WRITE"))
+    monkeypatch.undo()
+    assert dw.current_version(t) == v
+    log_dir = os.path.join(t, "_delta_log")
+    assert not [n for n in os.listdir(log_dir) if ".tmp-" in n]
