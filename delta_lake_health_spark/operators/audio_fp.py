@@ -207,7 +207,9 @@ def build_fp_index(
     the constellation table clustered by ``fp``. The frame parameters
     are stamped as table properties so every probe and upsert
     fingerprints its input with the SAME analysis the index was built
-    with — mixed-parameter hashes never vote together."""
+    with — mixed-parameter hashes never vote together. The index gets
+    one file per partition of ``media``, so probe pruning needs a
+    multi-partition ``media`` batch."""
     from delta_lake_health_spark.sources import delta_writer
 
     fps = audio_fingerprints(media, frame=frame, hop=hop, fan_out=fan_out)

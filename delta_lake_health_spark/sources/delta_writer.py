@@ -1887,11 +1887,15 @@ def write(
     """Write ``df`` as a new Delta commit; returns the committed version.
 
     ``cluster_by`` range-partitions and sorts the batch by the given
-    columns BEFORE writing (Delta's optimized/clustered ingest): each
-    output file then covers a narrow, mostly-disjoint range of the
-    cluster key, so the per-file min/max stats prune sharply from the
-    first write — no OPTIMIZE ZORDER rewrite needed for the common
-    single-key access path. One extra range shuffle per batch.
+    columns BEFORE writing (Delta's optimized/clustered ingest). The
+    range partition count is the incoming batch's partition count, so
+    the write emits one file per partition of ``df`` (fewer when a
+    range comes out empty or adaptive execution coalesces partitions).
+    Each file covers a narrow, mostly-disjoint range of the cluster
+    key, so the per-file min/max stats prune from the first write — no
+    OPTIMIZE ZORDER rewrite needed for the common single-key access
+    path. A one-partition batch writes a single file, which no min/max
+    probe can prune. One extra range shuffle per batch.
 
     Idempotent replay guard: with ``txn_app_id``/``txn_version`` set the
     commit carries a ``txn`` action (Delta spec), and a write whose

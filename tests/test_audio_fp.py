@@ -179,7 +179,14 @@ def test_persisted_probe_matches_in_session(spark, tmp_path):
 def test_persisted_probe_prunes_files(spark, tmp_path):
     from delta_lake_health_spark.sources.delta_log import DeltaLog
 
-    corpus = _wav_df(spark, list(range(1, 9))).localCheckpoint()
+    # the clustered write emits one file per partition of its batch, and
+    # createDataFrame gives one partition per core: partition by track so
+    # the index has 8 files on any core count
+    corpus = (
+        _wav_df(spark, list(range(1, 9)))
+        .repartition(8, "media_id")
+        .localCheckpoint()
+    )
     path = str(tmp_path / "fpidx")
     coalesce_key = "spark.sql.adaptive.coalescePartitions.enabled"
     spark.conf.set(coalesce_key, "false")
