@@ -29,10 +29,10 @@ from delta_lake_health_spark.sources.delta_log import DeltaLog
 TARGET_FILE_SIZE = 128 * 1024 * 1024
 
 
-def _table_target_file_size(log: DeltaLog) -> int:
-    """``delta.targetFileSize`` from the table configuration (bytes, or
-    a '128mb'-style size string — both Delta conventions), else the
-    128 MiB default."""
+def _table_target_file_size(log: DeltaLog | log_replay.Snapshot) -> int:
+    """``delta.targetFileSize`` from the table configuration of ``log``
+    (bytes, or a '128mb'-style size string — both Delta conventions),
+    else the 128 MiB default."""
     raw = (log.metadata().get("configuration") or {}).get(
         "delta.targetFileSize"
     )
@@ -52,15 +52,15 @@ def _table_target_file_size(log: DeltaLog) -> int:
 
 
 def _live_in_scope(
-    table_path: str, partition_filter: dict | None
-) -> tuple[int, list[dict]]:
-    """(snapshot version, live add actions whose logged partitionValues
+    spark: SparkSession, table_path: str, partition_filter: dict | None
+) -> tuple[log_replay.Snapshot, list[dict]]:
+    """(base snapshot, its live add actions whose logged partitionValues
     match ``partition_filter``) — the files an ``OPTIMIZE ... WHERE``
     may rewrite, from the driver-side log replay."""
-    version, live = delta_writer._snapshot_live(table_path)
+    snap = delta_writer._base_snapshot(spark, table_path)
     want = {k: str(v) for k, v in (partition_filter or {}).items()}
-    return version, [
-        a for a in live
+    return snap, [
+        a for a in snap._live_adds()
         if all((a.get("partitionValues") or {}).get(k) == v
                for k, v in want.items())
     ]
@@ -68,7 +68,7 @@ def _live_in_scope(
 
 def _rewrite_files(
     log: DeltaLog,
-    version: int,
+    snap: log_replay.Snapshot,
     paths: list[str],
     df,
     operation: str,
@@ -77,16 +77,16 @@ def _rewrite_files(
     metrics: dict | None = None,
     tags: dict | None = None,
 ) -> dict:
-    """Replace the live files ``paths``, read at ``version``, by the rows
-    of ``df``: one write through ``delta_writer._write_files``
+    """Replace the live files ``paths`` of the base snapshot ``snap`` by
+    the rows of ``df``: one write through ``delta_writer._write_files``
     (dataChange=false; the rows are the table's own, so they are not
     re-validated), the removes of ``paths`` and a ``commit_mutation``
-    commit, which raises if a commit since ``version`` removed or
+    commit, which raises if a commit since ``snap`` removed or
     soft-deleted a file it read or changed the metadata, and rebases
     over appends. ``tags`` go on every new add. Returns the commit's
     metrics."""
     adds, _ = delta_writer._write_files(
-        log.spark, log.table_path, df, log.partition_columns(),
+        log.spark, snap, df, snap.metadata()["partition_columns"],
         data_change=False, validate=False,
     )
     if tags:
@@ -96,7 +96,7 @@ def _rewrite_files(
                **(metrics or {})}
     delta_writer.commit_mutation(
         log.table_path,
-        version,
+        snap.version(),
         adds
         + delta_writer._remove_actions(paths, data_change=False)
         + [delta_writer._commit_info(operation, parameters, metrics)],
@@ -123,10 +123,9 @@ def compact(
     ``target_file_size=None`` resolves the table's
     ``delta.targetFileSize`` property (the Delta tuning knob), falling
     back to the 128 MiB default."""
-    log = DeltaLog(spark, table_path)
+    snap, live = _live_in_scope(spark, table_path, partition_filter)
     if target_file_size is None:
-        target_file_size = _table_target_file_size(log)
-    version, live = _live_in_scope(table_path, partition_filter)
+        target_file_size = _table_target_file_size(snap)
     small = [a for a in live if a["size"] < small_file_size]
     if len(small) < 2:
         return {"numRemovedFiles": 0, "numAddedFiles": 0, "skipped": True}
@@ -136,8 +135,9 @@ def compact(
     paths = [a["path"] for a in small]
 
     # DV-aware read: compacting raw parquet would resurrect soft-deleted rows
+    log = DeltaLog(spark, table_path)
     df = log.read_data_files(paths)
-    cluster_cols = delta_writer.clustering_columns(table_path)
+    cluster_cols = delta_writer._clustering_columns(snap)
     if cluster_cols:
         # liquid-clustered table (r13): a blind repartition would merge
         # narrow key ranges into wide ones and erase the file pruning
@@ -150,7 +150,7 @@ def compact(
     else:
         df = df.repartition(n_out)
     return _rewrite_files(
-        log, version, paths, df, "OPTIMIZE",
+        log, snap, paths, df, "OPTIMIZE",
         {"targetSize": target_file_size,
          **({"predicate": str(partition_filter)} if partition_filter else {})},
         metrics={"numRemovedBytes": total_size},
@@ -189,10 +189,10 @@ def vacuum(
     # touching any file — deleting by a stale live-set under an
     # ununderstood feature would destroy data
     log.require_readable()
-    delta_writer._require_writable(spark, table_path)
+    snap = log_replay.Snapshot(log.table_path)
+    delta_writer._require_writable(snap)
     cutoff_ms = int((time.time() - retention_hours * 3600) * 1000)
 
-    snap = log_replay.Snapshot(log.table_path)
     tombs = snap.tombstones()
     if mode == "lite":
         # log-only: tombstoned paths past retention that still exist
@@ -282,13 +282,13 @@ def apply_deletion_vectors(spark: SparkSession, table_path: str) -> dict:
     remove+add. Retired vectors then reference dead files and become
     no-ops for every reader. The rewrite cost is |affected files|, not
     table size — the purge half of the DV bargain."""
-    snap = log_replay.Snapshot(table_path)
-    version, affected = snap.version(), sorted(snap.dv_deleted_rows())
+    snap = delta_writer._base_snapshot(spark, table_path)
+    affected = sorted(snap.dv_deleted_rows())
     if not affected:
         return {"numRewrittenFiles": 0, "numAddedFiles": 0, "skipped": True}
     log = DeltaLog(spark, table_path)
     return _rewrite_files(
-        log, version, affected, log.read_data_files(affected),
+        log, snap, affected, log.read_data_files(affected),
         "APPLY DELETION VECTORS", {}, removed_key="numRewrittenFiles",
     )
 
@@ -370,8 +370,9 @@ def zorder_cluster(
     ``cluster_cols=None`` reads the table's DECLARED liquid-clustering
     columns (``set_cluster_columns``) — the bare ``OPTIMIZE`` of a
     clustered table."""
+    snap, live = _live_in_scope(spark, table_path, partition_filter)
     if cluster_cols is None:
-        cluster_cols = delta_writer.clustering_columns(table_path)
+        cluster_cols = delta_writer._clustering_columns(snap)
         if not cluster_cols:
             raise ValueError(
                 "no cluster_cols given and the table declares no "
@@ -379,8 +380,7 @@ def zorder_cluster(
             )
     log = DeltaLog(spark, table_path)
     if target_file_size is None:
-        target_file_size = _table_target_file_size(log)
-    version, live = _live_in_scope(table_path, partition_filter)
+        target_file_size = _table_target_file_size(snap)
     zorder_by = json.dumps(sorted(cluster_cols))
     if incremental and live:
         # ZCUBE members: live files whose add carries a tag for the same
@@ -410,7 +410,7 @@ def zorder_cluster(
             *cluster_cols
         )
     return _rewrite_files(
-        log, version, paths, clustered, "OPTIMIZE",
+        log, snap, paths, clustered, "OPTIMIZE",
         {"zOrderBy": ",".join(cluster_cols),
          **({"incremental": True} if incremental else {})},
         # membership for incremental runs
@@ -453,11 +453,10 @@ def hilbert_cluster(
         bits = min(Z_BITS, 63 // ncols)
     if bits * ncols > 63:
         raise ValueError(f"bits*cols = {bits * ncols} exceeds the 63-bit key")
-    delta_writer._require_writable(spark, table_path)
+    snap, live = _live_in_scope(spark, table_path, partition_filter)
     log = DeltaLog(spark, table_path)
     if target_file_size is None:
-        target_file_size = _table_target_file_size(log)
-    version, live = _live_in_scope(table_path, partition_filter)
+        target_file_size = _table_target_file_size(snap)
     if not live:
         return {"numRemovedFiles": 0, "numAddedFiles": 0, "skipped": True}
     total_size = sum(a["size"] for a in live)
@@ -525,7 +524,7 @@ def hilbert_cluster(
         .drop("_hkey")
     )
     return _rewrite_files(
-        log, version, paths, clustered, "OPTIMIZE",
+        log, snap, paths, clustered, "OPTIMIZE",
         {"hilbertBy": ",".join(cluster_cols), "bits": str(bits)},
     )
 
@@ -540,14 +539,16 @@ def compute_stats(spark: SparkSession, table_path: str) -> dict:
     keep the files' tags and row ids (``delta_writer._readd_actions``,
     shared with the row-tracking backfill). Returns
     ``{"numFilesBackfilled": n}``."""
-    delta_writer._require_writable(spark, table_path)
-    version, live = delta_writer._snapshot_live(table_path)
-    need = [a for a in live if log_replay._num_records(a.get("stats")) is None]
+    snap = delta_writer._base_snapshot(spark, table_path)
+    need = [
+        a for a in snap._live_adds()
+        if log_replay._num_records(a.get("stats")) is None
+    ]
     if not need:
         return {"numFilesBackfilled": 0}
     delta_writer.commit_mutation(
         table_path,
-        version,
+        snap.version(),
         delta_writer._readd_actions(table_path, need)
         + [delta_writer._commit_info(
             "COMPUTE STATISTICS", {}, {"numFilesBackfilled": len(need)}
@@ -577,8 +578,8 @@ def restore(spark: SparkSession, table_path: str, to_version: int) -> dict:
     metaData is re-emitted so readers reconstruct the restored schema.
     """
     log = DeltaLog(spark, table_path)
-    delta_writer._refuse_append_only(spark, table_path, "RESTORE")
-    snap = log_replay.Snapshot(table_path)
+    snap = delta_writer._base_snapshot(spark, table_path)
+    delta_writer._refuse_append_only(snap, "RESTORE")
     cur_version = snap.version()
     if to_version < 0 or to_version > cur_version:
         raise ValueError(
@@ -624,7 +625,7 @@ def restore(spark: SparkSession, table_path: str, to_version: int) -> dict:
             if r.rel_path in old_live
         }
 
-    old_meta = log.metadata(as_of=to_version)
+    old_meta = snap.metadata(as_of=to_version)
     partition_by = old_meta.get("partition_columns", [])
     rewritten: list[dict] = []
     if tainted:
@@ -638,13 +639,13 @@ def restore(spark: SparkSession, table_path: str, to_version: int) -> dict:
             out_cols = df.columns
             df = log._drop_deleted(log._with_lineage(df), early_dv).select(*out_cols)
         rewritten, _ = delta_writer._write_files(
-            spark, table_path, df, partition_by, validate=False, physical=False
+            spark, snap, df, partition_by, validate=False, physical=False
         )
 
     readds = sorted((old_live - cur_live) - tainted)
     removes = sorted((cur_live - old_live) | (tainted & cur_live))
     actions: list[dict] = []
-    if old_meta and old_meta.get("schema") != log.metadata().get("schema"):
+    if old_meta and old_meta.get("schema") != snap.metadata().get("schema"):
         actions.append(delta_writer._metadata_action(old_meta))
     actions += [delta_writer._add_action(table_path, rel) for rel in readds]
     actions += rewritten + delta_writer._remove_actions(removes)
@@ -794,9 +795,8 @@ def fsck_repair(
     at cluster scale; no data read) and one O(|missing|) commit.
     ``dry_run`` reports without committing. Returns
     ``{"numMissingFiles": n, "repaired": bool}``."""
-    delta_writer._require_writable(spark, table_path)
-    version, adds = delta_writer._snapshot_live(table_path)
-    live = [a["path"] for a in adds]
+    snap = delta_writer._base_snapshot(spark, table_path)
+    live = [a["path"] for a in snap._live_adds()]
     missing = [
         p
         for p in live
@@ -808,7 +808,7 @@ def fsck_repair(
         return {"numMissingFiles": len(missing), "repaired": False}
     delta_writer.commit_mutation(
         table_path,
-        version,
+        snap.version(),
         delta_writer._remove_actions(missing)
         + [delta_writer._commit_info(
             "FSCK", {"dryRun": "false"}, {"numRemovedFiles": len(missing)}
@@ -843,21 +843,21 @@ def reorg_purge(spark: SparkSession, table_path: str) -> dict:
     """
     import pyarrow.parquet as pq
 
-    delta_writer._require_writable(spark, table_path)
+    # the DV half gates the protocol and commits first; the purge half
+    # reads the table as it left it
     dv_metrics = apply_deletion_vectors(spark, table_path)
-
+    snap = delta_writer._base_snapshot(spark, table_path)
     log = DeltaLog(spark, table_path)
-    version, live = delta_writer._snapshot_live(table_path)
-    schema = log.metadata().get("schema") or {}
+    meta = snap.metadata()
+    schema = meta.get("schema") or {}
     physical = {
         (f.get("metadata") or {}).get(
             "delta.columnMapping.physicalName", f["name"]
         )
         for f in schema.get("fields", [])
     }
-    part_cols = set(log.partition_columns())
-    keep = physical | part_cols
-    live_rel = [a["path"] for a in live]
+    keep = physical | set(meta["partition_columns"])
+    live_rel = [a["path"] for a in snap._live_adds()]
 
     def _probe(batches):
         # One parquet FOOTER read per file, executed as distributed
@@ -895,7 +895,7 @@ def reorg_purge(spark: SparkSession, table_path: str) -> dict:
 
     stale = sorted(stale)
     metrics = _rewrite_files(
-        log, version, stale, log.read_data_files(stale), "REORG",
+        log, snap, stale, log.read_data_files(stale), "REORG",
         {"applyPurge": "true"}, removed_key="numPurgedFiles",
     )
     out["numAddedFiles"] += metrics["numAddedFiles"]

@@ -727,12 +727,6 @@ _SQL_COS_AB = (
 )
 
 
-def _sql_bucket_expr() -> str:
-    from delta_lake_health_spark.plans.similarity import _SQL_BUCKET
-
-    return _SQL_BUCKET
-
-
 @query(
     "dedup_embedding_cosine",
     None,  # oracle attached below (needs similarity's plane constants)

@@ -2794,11 +2794,6 @@ _SQL_QDIMS = ", ".join(f"({d}, {c})" for d, c in sorted(_QDIMS.items()))
 _DIM_EXPR = "instr('0123456789abcdef', substring(md5(w), 1, 1)) - 1"
 
 
-def _chunk_dense_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load(spark, sf_dir, "documents")
-    return _chunk_dense_rank(spark, _chunk_frames(docs))
-
-
 def _chunk_dense_rank(spark: SparkSession, chunks: DataFrame) -> DataFrame:
     """The dense arm: exact cosine between the hashed-BoW chunk vectors
     and the (constant) hashed query vector, best chunk per doc, global

@@ -412,33 +412,28 @@ _LEGACY_WRITER_FEATURES = {
 _LEGACY_READER_FEATURES = {1: frozenset(), 2: frozenset({"columnMapping"})}
 
 
-def _refuse_append_only(spark: SparkSession, table_path: str, op: str) -> None:
+def _refuse_append_only(snap: log_replay.Snapshot, op: str) -> None:
     """`delta.appendOnly=true` tables refuse data-removing operations
     (Delta's enforcement for the appendOnly writer feature): DELETE,
     DV-DELETE, UPDATE, file-removing MERGE, OVERWRITE, RESTORE. Pure
     maintenance rewrites (OPTIMIZE / z-order / DV purge, dataChange =
-    false) stay allowed, as in Delta. One cached metadata read; called
-    only from the rare mutation paths, never the append hot path."""
-    from delta_lake_health_spark.sources.delta_log import DeltaLog
-
-    if current_version(table_path) < 0:
-        return
-    cfg = DeltaLog(spark, table_path).metadata().get("configuration", {})
+    false) stay allowed, as in Delta. Reads the configuration of the
+    snapshot the operation commits against."""
+    cfg = snap.metadata().get("configuration") or {}
     if str(cfg.get("delta.appendOnly", "")).lower() == "true":
         raise ValueError(
             f"{op} is not allowed on an append-only table "
-            f"(delta.appendOnly=true): {table_path}"
+            f"(delta.appendOnly=true): {snap.table_path}"
         )
 
 
-def _require_writable(spark: SparkSession, table_path: str) -> None:
+def _require_writable(snap: log_replay.Snapshot) -> None:
     """Protocol gate for writes (Delta spec): refuse to commit to a
     table whose protocol demands writer capabilities this engine lacks —
     a commit that ignores an unknown writer feature (identity columns,
-    row tracking, ...) corrupts the table for conforming writers."""
-    if current_version(table_path) < 0:
-        return
-    p = log_replay.Snapshot(table_path).protocol()
+    row tracking, ...) corrupts the table for conforming writers. An
+    empty log has the default protocol, which passes."""
+    p = snap.protocol()
     w = p["minWriterVersion"]
     feats = (
         set(p["writerFeatures"])
@@ -590,7 +585,10 @@ def clustering_columns(table_path: str) -> list[str]:
     stays commit-cost; a table whose protocol never enabled the feature
     short-circuits without looking for the domain (every write calls
     this)."""
-    snap = log_replay.Snapshot(table_path)
+    return _clustering_columns(log_replay.Snapshot(table_path))
+
+
+def _clustering_columns(snap: log_replay.Snapshot) -> list[str]:
     p = snap.protocol()
     if p["minWriterVersion"] < 7 or "clustering" not in p["writerFeatures"]:
         return []
@@ -830,24 +828,17 @@ def _metadata_action(
 
 
 def _base_snapshot(spark: SparkSession, table_path: str) -> log_replay.Snapshot:
-    """The log listing a table-state change reads — its metadata,
-    protocol and scanned files — and commits against at ``.version()``
-    through ``commit_mutation``. Taken before the writer-protocol gate,
-    so every commit that lands after the checks is an interleaved commit
-    the conflict check sees."""
+    """The log listing an operation reads — its metadata, protocol and
+    scanned files — and commits against at ``.version()`` through
+    ``commit_mutation``. The writer-protocol gate checks this snapshot's
+    protocol, so every commit that lands after the checks is an
+    interleaved commit the conflict check sees. Refuses a table with no
+    log (``write`` alone creates one)."""
     snap = log_replay.Snapshot(table_path)
     if snap.version() < 0:
         raise FileNotFoundError(f"empty delta log: {table_path}/{LOG_DIR}")
-    _require_writable(spark, table_path)
+    _require_writable(snap)
     return snap
-
-
-def _active_rel_paths(spark: SparkSession, table_path: str) -> list[str]:
-    from delta_lake_health_spark.sources.delta_log import DeltaLog
-
-    return [
-        r.path for r in DeltaLog(spark, table_path).live_files_rows()
-    ]
 
 
 def _norm_fields(schema: dict) -> list[dict]:
@@ -882,15 +873,12 @@ def _widened_type(logged_t, incoming_t):
     return None
 
 
-def _merge_append_schema(spark, df: DataFrame, table_path: str, merge_schema: bool):
-    """For an append whose schema differs from the logged one: either raise
-    (default) or — with ``merge_schema`` — align ``df`` to the merged
-    schema (logged fields first, cast to their logged types or WIDENED to
-    the incoming type per the Delta type-widening chains; new fields
-    appended). Returns (df, schema_changed)."""
-    from delta_lake_health_spark.sources.delta_log import DeltaLog
-
-    logged = DeltaLog(spark, table_path).metadata().get("schema")
+def _merge_append_schema(df: DataFrame, logged: dict | None, merge_schema: bool):
+    """For an append whose schema differs from the ``logged`` one: either
+    raise (default) or — with ``merge_schema`` — align ``df`` to the
+    merged schema (logged fields first, cast to their logged types or
+    WIDENED to the incoming type per the Delta type-widening chains; new
+    fields appended). Returns (df, schema_changed, merged schema)."""
     cur = json.loads(df.schema.json())
     if logged is None or _norm_fields(logged) == _norm_fields(cur):
         return df, False, None
@@ -1056,17 +1044,13 @@ def drop_constraint(spark: SparkSession, table_path: str, name: str) -> int:
     )
 
 
-def _to_physical(spark: SparkSession, df: DataFrame, table_path: str) -> DataFrame:
+def _to_physical(df: DataFrame, meta: dict) -> DataFrame:
     """Rename logical -> physical column names just before writing data
     files: RENAME COLUMN is metadata-only, so every data file — old and
     new — carries PHYSICAL names. No-op for never-renamed tables."""
     from delta_lake_health_spark.sources.delta_log import DeltaLog
 
-    if current_version(table_path) < 0:
-        return df
-    mapping = DeltaLog.column_mapping(
-        DeltaLog(spark, table_path).metadata().get("schema")
-    )
+    mapping = DeltaLog.column_mapping(meta.get("schema"))
     if mapping:
         df = df.withColumnsRenamed(mapping)
     return df
@@ -1391,19 +1375,12 @@ def set_generated_column(
     )
 
 
-def _fill_generated_columns(spark: SparkSession, df: DataFrame, table_path: str):
+def _fill_generated_columns(df: DataFrame, meta: dict):
     """Compute generated columns the batch omitted (Delta writer
     behavior); provided values are checked by ``_write_files``."""
     from pyspark.sql import functions as F
 
-    from delta_lake_health_spark.sources.delta_log import DeltaLog
-
-    if current_version(table_path) < 0:
-        return df
-    gens = _generated_columns(
-        DeltaLog(spark, table_path).metadata().get("schema")
-    )
-    for c, expr in gens.items():
+    for c, expr in _generated_columns(meta.get("schema")).items():
         if c not in df.columns:
             df = df.withColumn(c, F.expr(expr))
     return df
@@ -1685,18 +1662,13 @@ def _fill_identity_columns(
     return df, updates
 
 
-def _constraint_aggs(spark: SparkSession, df: DataFrame, table_path: str):
+def _constraint_aggs(df: DataFrame, meta: dict):
     """(aggregate columns, checks, not_null, gens) folding every CHECK
     constraint / non-nullable logged column / generated-column equation
-    into one set of violation-count aggregates — or None when the table
-    declares nothing to validate."""
+    of the table metadata ``meta`` into one set of violation-count
+    aggregates — or None when the table declares nothing to validate."""
     from pyspark.sql import functions as F
 
-    from delta_lake_health_spark.sources.delta_log import DeltaLog
-
-    if current_version(table_path) < 0:
-        return None
-    meta = DeltaLog(spark, table_path).metadata()
     checks = {
         k[len("delta.constraints."):]: v
         for k, v in meta.get("configuration", {}).items()
@@ -1759,7 +1731,7 @@ REWRITE_MARK = "__rewrite_mark__"
 
 def _write_files(
     spark: SparkSession,
-    table_path: str,
+    snap: log_replay.Snapshot,
     df: DataFrame,
     partition_by: list[str],
     data_change: bool = True,
@@ -1767,15 +1739,17 @@ def _write_files(
     aggs: list | None = None,
     physical: bool = True,
 ) -> tuple[list[dict], dict]:
-    """Write ``df`` as new data files of the table; returns (their add
-    actions, the observed values). The one file-writing path of every
-    operation that adds data files — write, DML and the maintenance
-    rewrites. In order:
+    """Write ``df`` as new data files of the table of ``snap``, the
+    snapshot the operation commits against; returns (their add actions,
+    the observed values). The one file-writing path of every operation
+    that adds data files — write, DML and the maintenance rewrites. In
+    order:
 
     1. one ``Observation`` rides on the write job: the caller's named
-       ``aggs`` plus, when ``validate``, the table's CHECK / NOT NULL /
-       generated-column violation counts (``_constraint_aggs``) — no
-       separate validation pass over the batch;
+       ``aggs`` plus, when ``validate``, the CHECK / NOT NULL /
+       generated-column violation counts of ``snap``'s metadata
+       (``_constraint_aggs``) — no separate validation pass over the
+       batch;
     2. ``df`` (minus ``REWRITE_MARK``, in physical column names unless
        ``physical`` is False) is written with ``partition_by``;
     3. the new files are the table folder's listing minus the one taken
@@ -1789,8 +1763,9 @@ def _write_files(
 
     The observation is read only after the write job that computes it,
     so ``Observation.get`` never waits on a plan that is not run."""
+    table_path, meta = snap.table_path, snap.metadata()
     aggs = list(aggs or [])
-    check = _constraint_aggs(spark, df, table_path) if validate else None
+    check = _constraint_aggs(df, meta) if validate else None
     if check is not None:
         aggs += check[0]
     obs = None
@@ -1802,7 +1777,7 @@ def _write_files(
     if REWRITE_MARK in df.columns:
         df = df.drop(REWRITE_MARK)
     if physical:
-        df = _to_physical(spark, df, table_path)
+        df = _to_physical(df, meta)
     before = _list_parquet_rel(table_path)
     writer = df.write.mode("append")
     if partition_by:
@@ -1871,6 +1846,30 @@ def schema_has(dt, types: tuple) -> bool:
     return False
 
 
+def _txn_replayed(
+    snap: log_replay.Snapshot, app_id: str | None, version: int | None
+) -> bool:
+    """The idempotent replay guard of ``write`` and ``merge``: True when
+    ``app_id`` recorded ``version`` or a later one at ``snap`` — a
+    restarted stream replaying a batch that already committed, which
+    must write nothing."""
+    if (app_id is None) != (version is None):
+        raise ValueError("txn_app_id and txn_version must be set together")
+    if app_id is None:
+        return False
+    last = snap.txn_version(app_id)
+    return last is not None and version <= last
+
+
+def _txn_action(app_id: str | None, version: int | None) -> list[dict]:
+    """The ``txn`` action (Delta spec) a guarded batch commits with its
+    data; [] for an unguarded one."""
+    if app_id is None:
+        return []
+    return [{"txn": {"appId": app_id, "version": version,
+                     "lastUpdated": int(time.time() * 1000)}}]
+
+
 def write(
     spark: SparkSession,
     df: DataFrame,
@@ -1878,7 +1877,6 @@ def write(
     mode: str = "append",
     partition_by: list[str] | None = None,
     merge_schema: bool = False,
-    max_commit_retries: int = 10,
     txn_app_id: str | None = None,
     txn_version: int | None = None,
     checkpoint_interval: int | None = None,
@@ -1899,99 +1897,88 @@ def write(
 
     Idempotent replay guard: with ``txn_app_id``/``txn_version`` set the
     commit carries a ``txn`` action (Delta spec), and a write whose
-    version is at or below the last recorded one for that appId is
-    SKIPPED (returns the current version, writes nothing) — this is what
-    makes a restarted streaming sink exactly-once instead of
-    duplicate-on-replay. The guard is rechecked inside the commit retry
-    loop so a concurrent attempt of the same batch cannot double-commit.
+    version is at or below the last one the base snapshot records for
+    that appId is SKIPPED (returns the snapshot's version, writes
+    nothing) — this is what makes a restarted streaming sink
+    exactly-once instead of duplicate-on-replay. A commit of the same
+    appId that lands while this write runs raises
+    ``ConcurrentTransactionException``, so two attempts of one batch
+    cannot both commit.
 
     Schema handling: an append whose schema differs from the logged one
     raises unless ``merge_schema=True``, which widens the table schema
     (old columns keep their types, new columns append; old files read as
     null for new columns via the logged read schema in ``snapshot``).
 
-    Concurrency: the data files are written once; the commit step is an
-    optimistic put-if-absent retried up to ``max_commit_retries`` times
-    with the version (and, for overwrite, the remove set) recomputed per
-    attempt — the standard Delta optimistic-concurrency loop. On a local
-    FS the file-set diff below is not concurrency-safe for simultaneous
-    writers to the SAME directory tree; the retry protects the log, which
-    is where real log stores (put-if-absent object stores) draw the line.
+    Concurrency: every fact the write depends on — replay guard,
+    partitioning, schema, column defaults, generated and identity
+    columns, ``optimizeWrite`` sizing, clustering, the append-only
+    check and an overwrite's remove set — comes from ONE base snapshot
+    (version -1 for a new table). The data files are written once and
+    committed through ``commit_mutation`` at that version as a blind
+    write (no read set): an append rebases over racing appends and
+    deletes; a metadata or protocol change, or a creation of the same
+    new table, raises ``MetadataChangedException``; an overwrite removes
+    only the files it read, so a racing append survives it (Delta's
+    WriteSerializable outcome). On a local FS the file-set diff of
+    ``_write_files`` is not concurrency-safe for simultaneous writers to
+    the SAME directory tree; the put-if-absent commit protects the log,
+    which is where real log stores draw the line.
     """
     partition_by = list(partition_by or [])
     if mode not in ("append", "overwrite"):
         raise ValueError(f"bad mode {mode!r}")
-    if (txn_app_id is None) != (txn_version is None):
-        raise ValueError("txn_app_id and txn_version must be set together")
-    _require_writable(spark, table_path)
-    version = current_version(table_path)
+    snap = log_replay.Snapshot(table_path)
+    _require_writable(snap)
+    version = snap.version()
+    if _txn_replayed(snap, txn_app_id, txn_version):
+        return version
+    meta = snap.metadata()
 
-    def _already_committed() -> bool:
-        if txn_app_id is None or current_version(table_path) < 0:
-            return False
-        from delta_lake_health_spark.sources.delta_log import DeltaLog
-
-        last = DeltaLog(spark, table_path).last_txn_version(txn_app_id)
-        return last is not None and txn_version <= last
-
-    if _already_committed():
-        return current_version(table_path)
-
-    def _logged_meta():
-        if current_version(table_path) < 0:
-            return None
-        from delta_lake_health_spark.sources.delta_log import DeltaLog
-
-        return DeltaLog(spark, table_path).metadata()
-
+    removed: list[str] = []
     schema_changed = False
     merged_schema: dict | None = None
     hwm_updates: dict[str, int] = {}
-    meta_at_validation = _logged_meta()
-    logged_schema = (meta_at_validation or {}).get("schema")
     if version >= 0:
         # writes inherit the table's partition layout: unpartitioned
         # files appended into a hive-partitioned table would be invisible
         # to the partition-injecting snapshot reader (silent data loss),
         # and a CONFLICTING layout on append corrupts partition pruning
-        logged_parts = (meta_at_validation or {}).get(
-            "partition_columns"
-        ) or []
+        logged_parts = meta.get("partition_columns") or []
         if not partition_by:
             partition_by = list(logged_parts)
-        elif mode == "append" and list(partition_by) != list(logged_parts):
+        elif mode == "append" and partition_by != logged_parts:
             raise ValueError(
                 f"append partitioned by {partition_by}, but the table is "
                 f"partitioned by {logged_parts}"
             )
+        if mode == "overwrite":
+            _refuse_append_only(snap, "OVERWRITE")
+            removed = [a["path"] for a in snap._live_adds()]
         # defaults BEFORE generated columns: a generation expression may
         # reference a defaulted column the batch omitted
-        df = _fill_default_columns(spark, df, meta_at_validation)
-        df = _fill_generated_columns(spark, df, table_path)
-        df, hwm_updates = _fill_identity_columns(
-            spark, df, table_path, meta_at_validation
-        )
+        df = _fill_default_columns(spark, df, meta)
+        df = _fill_generated_columns(df, meta)
+        df, hwm_updates = _fill_identity_columns(spark, df, table_path, meta)
         if mode == "append":
             df, schema_changed, merged_schema = _merge_append_schema(
-                spark, df, table_path, merge_schema
+                df, meta.get("schema"), merge_schema
             )
         else:
-            schema_changed = (
-                logged_schema is not None
-                and _norm_fields(logged_schema)
+            # overwrite may re-layout the table, but then the metaData
+            # action must be re-emitted with the new partitionColumns or
+            # readers keep injecting the old ones
+            schema_changed = partition_by != logged_parts or (
+                meta.get("schema") is not None
+                and _norm_fields(meta["schema"])
                 != _norm_fields(json.loads(df.schema.json()))
             )
-            if list(partition_by) != list(logged_parts):
-                # overwrite may re-layout the table, but then the
-                # metaData action must be re-emitted with the new
-                # partitionColumns or readers keep injecting the old ones
-                schema_changed = True
 
     if cluster_by is None and version >= 0:
         # liquid clustering: a clustered table's declared columns apply
         # to every ingest that doesn't choose its own layout (skipped
         # when a schema-replacing overwrite dropped a declared column)
-        declared = clustering_columns(table_path)
+        declared = _clustering_columns(snap)
         if declared and all(c in df.columns for c in declared):
             cluster_by = declared
     if cluster_by:
@@ -2003,7 +1990,11 @@ def write(
         df = df.repartitionByRange(n_out, *cluster_by).sortWithinPartitions(
             *cluster_by
         )
-    if version >= 0 and cluster_by is None:
+    elif cluster_by is None and str(
+        (meta.get("configuration") or {}).get(
+            "delta.autoOptimize.optimizeWrite", ""
+        )
+    ).lower() == "true":
         # delta.autoOptimize.optimizeWrite: size the batch's output
         # partition count to the target file size BEFORE writing, so
         # many-partition small batches don't shred into small files at
@@ -2012,38 +2003,28 @@ def write(
         # (metadata-scale); cost = one count() pass over the batch, paid
         # only when the property is set. Only ever coalesces DOWN —
         # a genuinely large batch keeps its parallelism.
-        ow = str(
-            (meta_at_validation or {}).get("configuration", {}).get(
-                "delta.autoOptimize.optimizeWrite", ""
-            )
-        ).lower() == "true"
-        if ow:
-            from delta_lake_health_spark.sources.delta_log import DeltaLog
+        from delta_lake_health_spark.operators.maintenance import (
+            _table_target_file_size,
+        )
 
-            adds_live = DeltaLog(spark, table_path).live_add_actions()
-            tot_b = sum(a.get("size", 0) for a in adds_live)
-            tot_r = sum(
-                json.loads(a.get("stats") or "{}").get("numRecords", 0)
-                for a in adds_live
+        adds_live = snap._live_adds()
+        tot_b = sum(a.get("size", 0) for a in adds_live)
+        tot_r = sum(log_replay._num_records(a.get("stats")) or 0
+                    for a in adds_live)
+        bytes_per_row = (tot_b / tot_r) if tot_r else 100.0
+        target = _table_target_file_size(snap)
+        # Pin the batch before counting: without this the incoming
+        # plan is evaluated twice (count + write) and a
+        # nondeterministic upstream could size against stale counts.
+        df = df.localCheckpoint(eager=True)
+        n_rows = df.count()
+        n_out = max(1, math.ceil(n_rows * bytes_per_row / target))
+        if n_out < df.rdd.getNumPartitions():
+            df = (
+                df.repartition(n_out, *partition_by)
+                if partition_by
+                else df.repartition(n_out)
             )
-            bytes_per_row = (tot_b / tot_r) if tot_r else 100.0
-            from delta_lake_health_spark.operators.maintenance import (
-                _table_target_file_size,
-            )
-
-            target = _table_target_file_size(DeltaLog(spark, table_path))
-            # Pin the batch before counting: without this the incoming
-            # plan is evaluated twice (count + write) and a
-            # nondeterministic upstream could size against stale counts.
-            df = df.localCheckpoint(eager=True)
-            n_rows = df.count()
-            n_out = max(1, math.ceil(n_rows * bytes_per_row / target))
-            if n_out < df.rdd.getNumPartitions():
-                df = (
-                    df.repartition(n_out, *partition_by)
-                    if partition_by
-                    else df.repartition(n_out)
-                )
     # VARIANT columns gate the variantType table feature (reader+writer:
     # the shredded parquet encoding is unreadable without it). A real
     # type walk, not a schema-JSON substring test — a plain column
@@ -2053,149 +2034,95 @@ def write(
     # files carry physical names; a schema-REPLACING overwrite resets the
     # mapping (its metaData is re-emitted from the new df schema)
     adds, _ = _write_files(
-        spark, table_path, df, partition_by,
+        spark, snap, df, partition_by,
         physical=not (mode == "overwrite" and schema_changed),
     )
-    new_files = {a["add"]["path"] for a in adds}
     n_records = sum(json.loads(a["add"]["stats"])["numRecords"] for a in adds)
 
-    for attempt in range(max_commit_retries + 1):
-        removed: list[str] = []
-        if mode == "overwrite" and version >= 0:
-            _refuse_append_only(spark, table_path, "OVERWRITE")
-            removed = [
-                p for p in _active_rel_paths(spark, table_path)
-                if p not in new_files
-            ]
-        actions: list[dict] = []
-        next_version = version + 1
-        if next_version == 0:
-            if needs_variant:
-                actions.append(
-                    {
-                        "protocol": {
-                            "minReaderVersion": 3,
-                            "minWriterVersion": 7,
-                            "readerFeatures": ["variantType"],
-                            "writerFeatures": sorted(
-                                {"appendOnly", "invariants", "variantType"}
-                            ),
-                        }
-                    }
-                )
-            else:
-                actions.append(
-                    {"protocol": {"minReaderVersion": 1,
-                                  "minWriterVersion": 2}}
-                )
+    actions: list[dict] = []
+    if version < 0:
+        actions.append({"protocol": (
+            {
+                "minReaderVersion": 3,
+                "minWriterVersion": 7,
+                "readerFeatures": ["variantType"],
+                "writerFeatures": sorted(
+                    {"appendOnly", "invariants", "variantType"}
+                ),
+            }
+            if needs_variant
+            else {"minReaderVersion": 1, "minWriterVersion": 2}
+        )})
+        actions.append(
+            _metadata_action(
+                {}, fields=df.schema.jsonValue()["fields"],
+                partition_columns=partition_by,
+            )
+        )
+    else:
+        if needs_variant and (
+            upgrade := _protocol_upgrade_action(spark, table_path, "variantType")
+        ) is not None:
+            actions.append(upgrade)
+        if schema_changed:
+            # schema-changing write: re-emit metaData so snapshot() of a
+            # later-emptied table reconstructs the NEW schema; table id and
+            # configuration (constraints) carry over from the current
+            # metadata — re-emitting must not drop them. Identity marks
+            # advanced by this very batch fold into the same action.
+            if hwm_updates and merged_schema is not None:
+                merged_schema = {
+                    **merged_schema,
+                    "fields": _identity_fields(
+                        {**meta, "schema": merged_schema}, hwm_updates
+                    ),
+                }
             actions.append(
                 _metadata_action(
-                    {}, fields=df.schema.jsonValue()["fields"],
+                    meta,
+                    fields=(merged_schema or df.schema.jsonValue())["fields"],
                     partition_columns=partition_by,
                 )
             )
-        else:
-            if needs_variant and (
-                upgrade := _protocol_upgrade_action(
-                    spark, table_path, "variantType"
-                )
-            ) is not None:
-                actions.append(upgrade)
-            if schema_changed:
-                # schema-changing write: re-emit metaData so snapshot() of a
-                # later-emptied table reconstructs the NEW schema; table id and
-                # configuration (constraints) carry over from the current
-                # metadata — re-emitting must not drop them. Identity marks
-                # advanced by this very batch fold into the same action.
-                if hwm_updates and merged_schema is not None:
-                    merged_schema = {
-                        **merged_schema,
-                        "fields": _identity_fields(
-                            {**meta_at_validation, "schema": merged_schema},
-                            hwm_updates,
-                        ),
-                    }
-                actions.append(
-                    _metadata_action(
-                        meta_at_validation,
-                        fields=(merged_schema or df.schema.jsonValue())["fields"],
-                        partition_columns=partition_by,
-                    )
-                )
-            elif hwm_updates:
-                # identity-only metaData re-emit: the schema shape is
-                # unchanged, only the high-water marks moved — committing
-                # them with the data is what makes concurrent identity
-                # writers CONFLICT (metadata change) instead of silently
-                # generating duplicate values
-                actions.append(
-                    _metadata_action(
-                        meta_at_validation,
-                        fields=_identity_fields(meta_at_validation, hwm_updates),
-                    )
-                )
-        actions += adds + _remove_actions(removed)
-        if txn_app_id is not None:
+        elif hwm_updates:
+            # identity-only metaData re-emit: the schema shape is
+            # unchanged, only the high-water marks moved — committing
+            # them with the data is what makes concurrent identity
+            # writers CONFLICT (metadata change) instead of silently
+            # generating duplicate values
             actions.append(
-                {"txn": {"appId": txn_app_id, "version": txn_version,
-                         "lastUpdated": int(time.time() * 1000)}}
+                _metadata_action(meta, fields=_identity_fields(meta, hwm_updates))
             )
-        actions.append(
-            _commit_info(
-                "WRITE",
-                {"mode": "Overwrite" if mode == "overwrite" else "Append",
-                 "partitionBy": json.dumps(partition_by)},
-                {"numFiles": len(adds), "numOutputRows": n_records,
-                 "numRemovedFiles": len(removed)},
-            )
+    actions += adds + _remove_actions(removed) + _txn_action(txn_app_id, txn_version)
+    actions.append(
+        _commit_info(
+            "WRITE",
+            {"mode": "Overwrite" if mode == "overwrite" else "Append",
+             "partitionBy": json.dumps(partition_by)},
+            {"numFiles": len(adds), "numOutputRows": n_records,
+             "numRemovedFiles": len(removed)},
         )
-        try:
-            _commit(table_path, next_version, actions)
-            if checkpoint_interval and next_version > 0 and (
-                next_version % checkpoint_interval == 0
-            ):
-                # Delta's periodic checkpoint (delta.checkpointInterval):
-                # fold the log so readers scan one parquet + a short tail
-                # instead of every commit JSON
-                from delta_lake_health_spark.sources.delta_log import DeltaLog
+    )
+    committed = commit_mutation(
+        table_path, version, actions, removed_files=set(removed)
+    )
+    if checkpoint_interval and committed > 0 and (
+        committed % checkpoint_interval == 0
+    ):
+        # Delta's periodic checkpoint (delta.checkpointInterval): fold
+        # the log so readers scan one parquet + a short tail instead of
+        # every commit JSON
+        from delta_lake_health_spark.sources.delta_log import DeltaLog
 
-                DeltaLog(spark, table_path).checkpoint()
-            # best-effort, CONTAINED: the data commit above already
-            # succeeded, so a compaction that loses a concurrency race
-            # must not bubble its RuntimeError into this retry loop —
-            # that would re-commit the same add actions as a duplicate
-            try:
-                _maybe_auto_compact(spark, table_path, meta_at_validation)
-            except RuntimeError:
-                pass  # a later write's auto-compact picks the files up
-            return next_version
-        except RuntimeError:
-            if attempt == max_commit_retries:
-                raise
-            version = current_version(table_path)
-            if _already_committed():
-                # the colliding commit was this very transaction (a
-                # concurrent replay of the same batch) — don't double-write
-                return version
-            if _logged_meta() != meta_at_validation:
-                # the winning commit changed the table metadata (schema
-                # evolution, constraint add/drop, rename); this write's
-                # alignment/validation/metaData re-emit all used the old
-                # one — committing it would silently clobber the change
-                raise RuntimeError(
-                    "concurrent schema change during commit retry; "
-                    "re-run the write against the new table schema"
-                )
-    raise AssertionError("unreachable")
-
-
-def _snapshot_live(table_path: str) -> tuple[int, list[dict]]:
-    """(version, live add actions — shared, read-only) of one log
-    listing: the snapshot a read-modify-write operation reads and later
-    commits against (``commit_mutation``'s base version; its read set
-    is drawn from these files)."""
-    snap = log_replay.Snapshot(table_path)
-    return snap.version(), snap._live_adds()
+        DeltaLog(spark, table_path).checkpoint()
+    # best-effort, CONTAINED: the data commit above already succeeded,
+    # so a compaction that loses a concurrency race must not fail the
+    # write that committed
+    try:
+        _maybe_auto_compact(spark, table_path, meta)
+    except RuntimeError:
+        pass  # a later write's auto-compact picks the files up
+    return committed
 
 
 def _readd_actions(table_path: str, live: list[dict]) -> list[dict]:
@@ -2227,7 +2154,7 @@ def _rel_paths(df: DataFrame) -> set[str]:
 
 def _rewrite_matching(
     spark: SparkSession,
-    table_path: str,
+    snap: log_replay.Snapshot,
     predicate: str,
     operation: str,
     count_metric: str,
@@ -2238,15 +2165,16 @@ def _rewrite_matching(
     ``rewrite(log, hit_files)`` write their replacement rows through
     ``_write_files`` — it returns (add actions, extra actions, extra
     metrics) — and commit them with the removes of the hit files through
-    ``commit_mutation``. No match commits the bare operation with
+    ``commit_mutation`` against ``snap``, the base snapshot whose live
+    files are the read set. No match commits the bare operation with
     ``count_metric`` 0."""
     from pyspark.sql import functions as F
 
     from delta_lake_health_spark.sources.delta_log import DeltaLog
 
+    table_path = snap.table_path
     log = DeltaLog(spark, table_path)
-    version, live = _snapshot_live(table_path)
-    read_files = {a["path"] for a in live}
+    read_files = {a["path"] for a in snap._live_adds()}
     hits = _rel_paths(log.snapshot_with_positions().where(F.expr(predicate)))
     params = {"predicate": predicate}
     if not hits:
@@ -2260,7 +2188,8 @@ def _rewrite_matching(
                           "numAddedFiles": len(adds), **metrics})
         ]
     return commit_mutation(
-        table_path, version, actions, read_files=read_files, removed_files=hits
+        table_path, snap.version(), actions,
+        read_files=read_files, removed_files=hits,
     )
 
 
@@ -2269,8 +2198,9 @@ def delete(spark: SparkSession, table_path: str, predicate: str) -> int:
     files that contain matching rows, keeping every row the predicate
     does not hold for (NULL included), and commits remove+add with
     operation DELETE."""
-    _require_writable(spark, table_path)
-    _refuse_append_only(spark, table_path, "DELETE")
+    snap = _base_snapshot(spark, table_path)
+    _refuse_append_only(snap, "DELETE")
+    meta = snap.metadata()
 
     from pyspark.sql import functions as F
 
@@ -2281,16 +2211,16 @@ def delete(spark: SparkSession, table_path: str, predicate: str) -> int:
         # don't resurrect, and the change data is ∝ |changed rows|
         rows = log.read_data_files(hit_files)
         adds, _ = _write_files(
-            spark, table_path, rows.where(~matches), log.partition_columns()
+            spark, snap, rows.where(~matches), meta["partition_columns"]
         )
         cdc = []
-        if _cdf_enabled(log.metadata()):
+        if _cdf_enabled(meta):
             change = rows.where(matches).withColumn("_change_type", F.lit("delete"))
             cdc = [_cdc_action(table_path, _write_change_data(spark, table_path, change))]
         return adds, cdc, {}
 
     return _rewrite_matching(
-        spark, table_path, predicate, "DELETE", "numDeletedRows", rewrite
+        spark, snap, predicate, "DELETE", "numDeletedRows", rewrite
     )
 
 
@@ -2327,23 +2257,17 @@ def merge(
     DV anti-join, and a raw parquet survivor read would resurrect
     soft-deleted rows into rewritten files.
     """
-    _require_writable(spark, table_path)
-
     from pyspark.sql import functions as F
 
     from delta_lake_health_spark.sources.delta_log import DeltaLog
 
-    if (txn_app_id is None) != (txn_version is None):
-        raise ValueError("txn_app_id and txn_version must be set together")
+    snap = _base_snapshot(spark, table_path)
+    if _txn_replayed(snap, txn_app_id, txn_version):
+        return snap.version()
     log = DeltaLog(spark, table_path)
-    if txn_app_id is not None:
-        last = log.last_txn_version(txn_app_id)
-        if last is not None and txn_version <= last:
-            return current_version(table_path)  # replay of a committed batch
-    base_version, live = _snapshot_live(table_path)
-    read_files = {a["path"] for a in live}
-    source = _fill_generated_columns(spark, source, table_path)
-    merge_meta = log.metadata()
+    read_files = {a["path"] for a in snap._live_adds()}
+    merge_meta = snap.metadata()
+    source = _fill_generated_columns(source, merge_meta)
     id_specs = _identity_specs(merge_meta.get("schema"))
     if id_specs:
         # MERGE is a whole-row upsert here: the source must carry every
@@ -2364,8 +2288,8 @@ def merge(
                 f"the identity column(s) {missing}"
             )
     keys = source.select(*key_cols).distinct()
-    snap = log.snapshot_with_positions()
-    hit_files = _rel_paths(snap.join(F.broadcast(keys), key_cols, "left_semi"))
+    target = log.snapshot_with_positions()
+    hit_files = _rel_paths(target.join(F.broadcast(keys), key_cols, "left_semi"))
     # delete only when the condition is TRUE: a NULL condition keeps the
     # row (Delta's clause semantics) — bare ~expr would turn NULL into
     # filtered-out, i.e. silent data loss
@@ -2376,14 +2300,14 @@ def merge(
     if deletes is not None:
         # files holding unmatched rows the delete condition qualifies
         hit_files |= _rel_paths(
-            snap.join(F.broadcast(keys), key_cols, "left_anti").where(deletes)
+            target.join(F.broadcast(keys), key_cols, "left_anti").where(deletes)
         )
 
     rows = source.withColumn(REWRITE_MARK, F.lit(True))
     if hit_files:
         # insert-only merges append; a file-removing merge is a data
         # removal and falls under the append-only refusal like UPDATE
-        _refuse_append_only(spark, table_path, "MERGE (file-rewriting)")
+        _refuse_append_only(snap, "MERGE (file-rewriting)")
         survivors = log.read_data_files(sorted(hit_files)).join(
             F.broadcast(keys), key_cols, "left_anti"
         )
@@ -2394,7 +2318,7 @@ def merge(
         )
     # identity marks advance past the SOURCE rows' values only
     adds, seen = _write_files(
-        spark, table_path, rows, log.partition_columns(),
+        spark, snap, rows, merge_meta["partition_columns"],
         aggs=[
             (F.max if s["step"] > 0 else F.min)(
                 F.when(F.col(REWRITE_MARK), F.col(c))
@@ -2419,7 +2343,7 @@ def merge(
         # are deletes. Written only once the data write has passed its
         # checks — one extra narrow write ∝ |changed rows|.
         out_cols = [c for c in source.columns]
-        tgt = snap.drop("_rel_path", "_row_index").select(*out_cols)
+        tgt = target.drop("_rel_path", "_row_index").select(*out_cols)
         matched_tgt = tgt.join(F.broadcast(keys), key_cols, "left_semi")
         matched_keys = matched_tgt.select(*key_cols).distinct()
         src_upd = source.select(*out_cols).join(
@@ -2450,14 +2374,10 @@ def merge(
                 merge_meta, fields=_identity_fields(merge_meta, identity_updates)
             )
         )
-    if txn_app_id is not None:
-        extra.append(
-            {"txn": {"appId": txn_app_id, "version": txn_version,
-                     "lastUpdated": int(time.time() * 1000)}}
-        )
+    extra += _txn_action(txn_app_id, txn_version)
     return commit_mutation(
         table_path,
-        base_version,
+        snap.version(),
         adds + _remove_actions(hit_files) + extra + [
             _commit_info(
                 "MERGE",
@@ -2522,8 +2442,7 @@ def clone_shallow(spark: SparkSession, source_path: str, target_path: str) -> in
         )
     )
     os.makedirs(target_path, exist_ok=True)
-    _commit(target_path, 0, actions)
-    return 0
+    return commit_mutation(target_path, -1, actions)
 
 
 def clone_deep(spark: SparkSession, source_path: str, target_path: str) -> int:
@@ -2644,8 +2563,7 @@ def clone_deep(spark: SparkSession, source_path: str, target_path: str) -> int:
              "numCopiedDVs": len(dv_counts)},
         )
     )
-    _commit(target_path, 0, actions)
-    return 0
+    return commit_mutation(target_path, -1, actions)
 
 
 def convert_to_delta(
@@ -2715,8 +2633,7 @@ def convert_to_delta(
             {"numConvertedFiles": len(rels)},
         )
     )
-    _commit(table_path, 0, actions)
-    return 0
+    return commit_mutation(table_path, -1, actions)
 
 
 DELETES_DIR = "_deletes"
@@ -2786,15 +2703,16 @@ def enable_row_tracking(spark: SparkSession, table_path: str) -> int:
             snap.version(),
             [upgrade, _commit_info("UPGRADE PROTOCOL", {"feature": "rowTracking"}, {})],
         )
+        # the backfill reads the table as the upgrade left it
+        snap = _base_snapshot(spark, table_path)
     # backfill: re-add live files that predate row tracking so every
     # current row resolves an id (assignment happens inside _commit)
-    version, live = _snapshot_live(table_path)
-    need = [a for a in live if a.get("baseRowId") is None]
+    need = [a for a in snap._live_adds() if a.get("baseRowId") is None]
     if not need:
-        return version
+        return snap.version()
     return commit_mutation(
         table_path,
-        version,
+        snap.version(),
         _readd_actions(table_path, need)
         + [_commit_info("ROW TRACKING BACKFILL", {},
                         {"numBackfilledFiles": len(need)})],
@@ -2844,7 +2762,7 @@ def _delete_rows_dv(
     from delta_lake_health_spark.sources.delta_log import DeltaLog
 
     snap = _base_snapshot(spark, table_path)
-    _refuse_append_only(spark, table_path, "DELETE (deletion vector)")
+    _refuse_append_only(snap, "DELETE (deletion vector)")
     version = snap.version()
     read_files = {a["path"] for a in snap._live_adds()}
     params = {"predicate": predicate, "mode": "dv"}
@@ -2863,10 +2781,12 @@ def _delete_rows_dv(
             [_commit_info("DELETE", params, {"numDeletedRows": 0})],
             read_files=read_files,
         )
-    dv_rel = f"{DELETES_DIR}/dv-{version + 1:020d}"
+    # unique per attempt: another DV delete read at the same base names
+    # its own sidecar, so the two meet at the conflict check
+    dv_rel = f"{DELETES_DIR}/dv-{version + 1:020d}-{uuid.uuid4().hex}"
     hits.coalesce(1).write.parquet(os.path.join(table_path, dv_rel))
     cdc_actions: list[dict] = []
-    if _cdf_enabled(log.metadata()):
+    if _cdf_enabled(snap.metadata()):
         # restrict to the files the hit positions live in (∝ |changed
         # rows|, not table size); read_data_files is DV-aware, so rows
         # already soft-deleted earlier are not re-reported
@@ -2918,14 +2838,12 @@ def update(
     rewrite has passed its checks; without it the feed reconstructs the
     commit as delete+insert pairs for the touched files, same as Delta's
     UPDATE without CDF."""
-    _require_writable(spark, table_path)
-    _refuse_append_only(spark, table_path, "UPDATE")
+    snap = _base_snapshot(spark, table_path)
+    _refuse_append_only(snap, "UPDATE")
 
     from pyspark.sql import functions as F
 
-    from delta_lake_health_spark.sources.delta_log import DeltaLog
-
-    meta = DeltaLog(spark, table_path).metadata()
+    meta = snap.metadata()
     gens = _generated_columns(meta.get("schema"))
     idents = _identity_specs(meta.get("schema"))
     for col in set_exprs:
@@ -2964,9 +2882,9 @@ def update(
             return F.expr(set_exprs[c]).cast(dtypes[c])
 
         adds, seen = _write_files(
-            spark, table_path,
+            spark, snap,
             assigned(lambda c: F.when(cond, new(c)).otherwise(F.col(c))),
-            log.partition_columns(),
+            meta["partition_columns"],
             aggs=[F.sum(F.col(REWRITE_MARK).cast("long")).alias("numUpdatedRows")],
         )
         # CDF (Delta spec cdc action): exactly the changed rows as
@@ -2983,18 +2901,18 @@ def update(
         return adds, cdc, {"numUpdatedRows": int(seen.get("numUpdatedRows") or 0)}
 
     return _rewrite_matching(
-        spark, table_path, predicate, "UPDATE", "numUpdatedRows", rewrite
+        spark, snap, predicate, "UPDATE", "numUpdatedRows", rewrite
     )
 
 
 # --------------------------------------------------------------------------
 # Optimistic-concurrency conflict detection (the Delta conflict matrix).
-# Blind appends retry freely (write() above). Every other commit reads a
-# snapshot first — DELETE / UPDATE / MERGE / DV-delete, the maintenance
-# rewrites (OPTIMIZE, z-order, DV purge, REORG, RESTORE) and the
-# table-state changes (ALTER TABLE, CLUSTER BY, protocol upgrades, DROP
-# FEATURE, sync markers) — so a commit that lands between its read and
-# its commit must be CHECKED, not blindly rebased:
+# Every commit reads a snapshot first — write() and COPY INTO, DELETE /
+# UPDATE / MERGE / DV-delete, the maintenance rewrites (OPTIMIZE,
+# z-order, DV purge, REORG, RESTORE), the table-state changes (ALTER
+# TABLE, CLUSTER BY, protocol upgrades, DROP FEATURE, sync markers) and
+# the table creators (at version -1) — so a commit that lands between
+# its read and its commit must be CHECKED, not blindly rebased:
 #
 #   winner action                 loser op outcome
 #   -----------------------------------------------------------------
@@ -3017,7 +2935,9 @@ def update(
 #                                 as a read
 #   deletion vector               ConcurrentDeleteReadException, unless
 #                                 the loser read no table rows
-#   txn / commitInfo only         safe: rebase to the next version
+#   txn of an appId the loser     ConcurrentTransactionException (two
+#   also writes                   attempts of one streaming batch)
+#   other txn / commitInfo only   safe: rebase to the next version
 #
 # Exception names mirror delta-io/delta's org.apache.spark.sql.delta.
 
@@ -3042,6 +2962,10 @@ class ConcurrentDeleteDeleteException(ConcurrentWriteConflict):
     pass
 
 
+class ConcurrentTransactionException(ConcurrentWriteConflict):
+    pass
+
+
 def check_commit_conflicts(
     table_path: str,
     base_version: int,
@@ -3053,13 +2977,14 @@ def check_commit_conflicts(
     this operation's read/remove sets (driver-side, |interleaved actions|
     work). Returns the rebased commit version to use, or raises the
     matching conflict exception. ``read_files`` None means the operation
-    read no table rows (a metadata-only commit); any set, an empty one
+    read no table rows (a blind write or a metadata-only commit); any
+    set, an empty one
     included, is the live files it scanned. ``actions`` is the
     operation's own commit: appended rows or deletion vectors cannot
     invalidate it when it read no rows, appended rows cannot when it
     adds or removes files and every one of those actions is
-    dataChange=false (a re-layout of rows it read), and a domain it
-    writes must not have been written since."""
+    dataChange=false (a re-layout of rows it read), and a domain or a
+    txn appId it writes must not have been written since."""
     read_rows = read_files is not None
     read_files = read_files or set()
     files = [a[k] for a in actions or () for k in ("add", "remove") if k in a]
@@ -3071,6 +2996,7 @@ def check_commit_conflicts(
         a["domainMetadata"]["domain"] for a in actions or ()
         if "domainMetadata" in a
     } - {ROW_TRACKING_DOMAIN}
+    app_ids = {a["txn"]["appId"] for a in actions or () if "txn" in a}
     current = current_version(table_path)
     for v in range(base_version + 1, current + 1):
         for act in log_replay.read_commit(table_path, v):
@@ -3082,6 +3008,11 @@ def check_commit_conflicts(
                 raise MetadataChangedException(
                     f"version {v} also wrote domain "
                     f"{act['domainMetadata']['domain']}"
+                )
+            if (act.get("txn") or {}).get("appId") in app_ids:
+                raise ConcurrentTransactionException(
+                    f"version {v} also committed txn appId "
+                    f"{act['txn']['appId']}"
                 )
             if "remove" in act:
                 p = act["remove"]["path"]
@@ -3114,14 +3045,15 @@ def commit_mutation(
     removed_files: set[str] | None = None,
     max_retries: int = 10,
 ) -> int:
-    """Put-if-absent commit for an operation that read the table at
-    ``base_version`` — every commit but a blind append and a table
-    creation: on a version collision, run the conflict matrix over the
+    """Put-if-absent commit of an operation that read the table at
+    ``base_version`` — every commit of the package, a table creation at
+    version -1: on a version collision, run the conflict matrix over the
     interleaved commits and either rebase (safe winners only:
-    txn/commitInfo-only commits, e.g. replay-guard markers, and appends
-    or deletion vectors under a commit that read no rows — it passes no
-    ``read_files`` — and appends under a dataChange=false rewrite) or
-    raise the typed conflict."""
+    commitInfo-only commits and txn markers of other appIds, appends or
+    deletion vectors under a commit that read no rows — it passes no
+    ``read_files``, as a blind ``write`` does — and appends under a
+    dataChange=false rewrite) or raise the typed conflict. After
+    ``max_retries`` collisions the last one is raised."""
     removed_files = removed_files or set()
     version = base_version + 1
     for _ in range(max_retries):
@@ -3131,10 +3063,11 @@ def commit_mutation(
         except RuntimeError as ex:
             if "concurrent commit" not in str(ex):
                 raise
+            collision = ex
             version = check_commit_conflicts(
                 table_path, base_version, read_files, removed_files, actions
             )
-    raise RuntimeError(f"commit contention after {max_retries} retries")
+    raise collision
 
 
 COPY_INTO_DOMAIN = "delta.copyInto"
@@ -3163,17 +3096,14 @@ def copy_into(
     """
     import glob as _glob
 
-    _require_writable(spark, table_path)
-    from delta_lake_health_spark.sources.delta_log import DeltaLog
-
-    log = DeltaLog(spark, table_path)
-    base_version = current_version(table_path)
-    meta = log.metadata()
+    snap = _base_snapshot(spark, table_path)
+    base_version = snap.version()
+    meta = snap.metadata()
     logical_cols = [f["name"] for f in (meta.get("schema") or {})["fields"]]
     partition_by = meta.get("partition_columns") or []
 
     src_key = os.path.abspath(source_dir)
-    cfg = log.domain_metadata(COPY_INTO_DOMAIN) or {}
+    cfg = snap.domain_metadata(COPY_INTO_DOMAIN) or {}
     loaded: dict = dict(cfg.get(src_key, {}))
 
     candidates = sorted(_glob.glob(os.path.join(source_dir, pattern)))
@@ -3244,7 +3174,7 @@ def copy_into(
                 actions.insert(0, upgrade)
             version = commit_mutation(table_path, base_version, actions)
         else:
-            version = current_version(table_path)
+            version = base_version
         return {
             "numLoadedFiles": 0,
             "numSkippedFiles": len(candidates),
@@ -3258,7 +3188,7 @@ def copy_into(
         raise ValueError(
             f"COPY INTO schema mismatch: missing={missing} extra={extra}"
         )
-    adds, _ = _write_files(spark, table_path, df.select(*logical_cols), partition_by)
+    adds, _ = _write_files(spark, snap, df.select(*logical_cols), partition_by)
 
     for _, name, ident in new_paths:
         loaded[name] = ident

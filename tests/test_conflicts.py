@@ -11,6 +11,7 @@ import time
 import pytest
 
 from delta_lake_health_spark.sources import delta_writer as dw
+from delta_lake_health_spark.sources import log_replay
 from delta_lake_health_spark.sources.delta_log import DeltaLog
 
 
@@ -21,7 +22,7 @@ def _build(spark, t):
 
 
 def _live(spark, t):
-    return {p for p in dw._active_rel_paths(spark, t)}
+    return {a["path"] for a in log_replay.Snapshot(t)._live_adds()}
 
 
 def _actions(op="DELETE"):
@@ -220,6 +221,95 @@ def test_merge_into_empty_table_refuses_append_committed_midway(
     assert rows == [(1, 0)]
 
 
+def _rows(spark, lo, hi):
+    return spark.range(lo, hi).selectExpr("id", "CAST(id % 3 AS LONG) AS k")
+
+
+def _ids(spark, t):
+    return sorted(r.id for r in DeltaLog(spark, t).snapshot().collect())
+
+
+# -- write() races a second writer ---------------------------------------------
+
+
+def test_overwrite_keeps_an_append_committed_midway(
+    spark, tmp_path, monkeypatch
+):
+    """An overwrite removes the files it read, not the files of an
+    append that lands while it writes: both batches stay (Delta's
+    WriteSerializable outcome for a blind append racing an overwrite)."""
+    t = str(tmp_path / "t")
+    _build(spark, t)
+    fired = _rewrite_with_commit_midway(
+        monkeypatch, lambda: dw.write(spark, _rows(spark, 100, 110), t)
+    )
+    dw.write(spark, _rows(spark, 50, 55), t, mode="overwrite")
+    assert fired
+    assert _ids(spark, t) == list(range(50, 55)) + list(range(100, 110))
+
+
+@pytest.mark.parametrize("op", ["write", "merge"])
+def test_racing_commit_of_the_same_txn_app_id_conflicts(
+    spark, tmp_path, monkeypatch, op
+):
+    """Two attempts of one streaming batch: the one that commits second
+    raises instead of committing the batch again. An empty attempt
+    commits only its txn marker, which is still the batch's commit. A
+    replay of the committed batch in sequence is skipped."""
+    t = str(tmp_path / "t")
+    _build(spark, t)
+
+    def attempt(rows):
+        if op == "write":
+            return dw.write(spark, rows, t, txn_app_id="app", txn_version=1)
+        return dw.merge(spark, t, rows, ["id"], txn_app_id="app",
+                        txn_version=1)
+
+    fired = _rewrite_with_commit_midway(
+        monkeypatch, lambda: attempt(_rows(spark, 0, 0))
+    )
+    with pytest.raises(dw.ConcurrentTransactionException):
+        attempt(_rows(spark, 100, 105))
+    assert fired
+    assert _ids(spark, t) == list(range(30))
+    v = dw.current_version(t)
+    assert attempt(_rows(spark, 100, 105)) == v
+    assert dw.current_version(t) == v
+
+
+def test_append_refuses_protocol_change_committed_midway(
+    spark, tmp_path, monkeypatch
+):
+    """A protocol-only commit behind a blind append: the append checked
+    the writer protocol it read, so it raises (Delta's
+    ProtocolChangedException) instead of rebasing over the new one."""
+    t = str(tmp_path / "t")
+    _build(spark, t)
+
+    def upgrade():
+        dw.commit_mutation(t, dw.current_version(t), [
+            dw._protocol_upgrade_action(spark, t, "domainMetadata"),
+            dw._commit_info("UPGRADE PROTOCOL", {}, {}),
+        ])
+
+    fired = _rewrite_with_commit_midway(monkeypatch, upgrade)
+    with pytest.raises(dw.MetadataChangedException):
+        dw.write(spark, _rows(spark, 100, 110), t)
+    assert fired
+    assert _ids(spark, t) == list(range(30))
+
+
+def test_racing_table_creation_conflicts(spark, tmp_path, monkeypatch):
+    t = str(tmp_path / "t")
+    fired = _rewrite_with_commit_midway(
+        monkeypatch, lambda: dw.write(spark, _rows(spark, 100, 103), t)
+    )
+    with pytest.raises(dw.MetadataChangedException):
+        dw.write(spark, _rows(spark, 0, 5), t)
+    assert fired
+    assert _ids(spark, t) == [100, 101, 102]
+
+
 # -- table-state changes race a second writer ---------------------------------
 
 
@@ -373,8 +463,6 @@ def test_commit_is_put_if_absent(spark, tmp_path, monkeypatch):
     the second publish raises and the first commit's bytes stay."""
     import os
 
-    from delta_lake_health_spark.sources import log_replay
-
     t = str(tmp_path / "t")
     _build(spark, t)
     v = dw.current_version(t)
@@ -414,3 +502,20 @@ def test_commit_without_hard_links_names_the_requirement(
     assert dw.current_version(t) == v
     log_dir = os.path.join(t, "_delta_log")
     assert not [n for n in os.listdir(log_dir) if ".tmp-" in n]
+
+
+def test_second_dv_delete_from_one_base_conflicts(spark, tmp_path, monkeypatch):
+    """Two DV deletes read at one base each write their own sidecar, so
+    the second reaches the conflict check: it raises, and the rows the
+    first one deleted stay deleted."""
+    t = str(tmp_path / "t")
+    _build(spark, t)
+    # the first DV delete upgrades the protocol; the racing two do not
+    dw.delete_with_dv(spark, t, "id = 3")
+    fired = _commit_midway(
+        monkeypatch, lambda: dw.delete_with_dv(spark, t, "id = 5")
+    )
+    with pytest.raises(dw.ConcurrentWriteConflict):
+        dw.delete_with_dv(spark, t, "id = 7")
+    assert fired
+    assert _ids(spark, t) == sorted(set(range(30)) - {3, 5})

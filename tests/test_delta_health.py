@@ -451,7 +451,7 @@ def test_commit_retry_detects_concurrent_schema_change(spark, monkeypatch):
         return real_commit(table_path, version, actions)
 
     monkeypatch.setattr(delta_writer, "_commit", racing_commit)
-    with pytest.raises(RuntimeError, match="concurrent schema change"):
+    with pytest.raises(delta_writer.MetadataChangedException):
         delta_writer.write(spark, df, path, mode="append")
     shutil.rmtree(tmp)
 
@@ -673,35 +673,43 @@ def test_append_schema_evolution(spark):
 def test_commit_retry_on_version_collision(spark, monkeypatch):
     """Optimistic concurrency: if another writer takes our version while
     we are committing, the commit retries at the next version instead of
-    failing (data files are written once). Simulated by making the first
-    version read stale, as an interleaved commit would."""
+    failing (data files are written once). Simulated by committing a
+    competing append between the write's data files and its commit."""
     tmp = tempfile.mkdtemp()
     path = f"{tmp}/retry"
     delta_writer.write(spark, _tips_df(spark), path, mode="append")
     v = delta_writer.current_version(path)
 
-    real_cv = delta_writer.current_version
-    calls = {"n": 0}
+    real_add = delta_writer._add_action
+    fired = []
 
-    def stale_once(p):
-        calls["n"] += 1
-        return real_cv(p) - 1 if calls["n"] == 1 else real_cv(p)
+    def add_action(*a, **k):
+        if not fired:
+            fired.append(True)
+            delta_writer.write(spark, _tips_df(spark, 1, 1, 1, offset=500),
+                               path, mode="append")
+        return real_add(*a, **k)
 
-    monkeypatch.setattr(delta_writer, "current_version", stale_once)
+    monkeypatch.setattr(delta_writer, "_add_action", add_action)
     got = delta_writer.write(spark, _tips_df(spark, 2, 1, 1, offset=300), path,
                              mode="append")
-    assert got == v + 1  # landed on the REAL next version after one retry
-    assert calls["n"] >= 2
-    assert DeltaLog(spark, path).snapshot().count() == 104
-    monkeypatch.setattr(delta_writer, "current_version", real_cv)
+    assert fired
+    assert got == v + 2  # the first free version above the competitor
+    assert DeltaLog(spark, path).snapshot().count() == 107
+    monkeypatch.setattr(delta_writer, "_add_action", real_add)
 
-    # retries exhausted -> the collision surfaces
-    monkeypatch.setattr(
-        delta_writer, "current_version", lambda p: real_cv(p) - 1
-    )
+    # every attempt collides -> the last collision surfaces
+    real_commit = delta_writer._commit
+
+    def always_taken(table_path, version, actions):
+        real_commit(table_path, version,
+                    [delta_writer._commit_info("WRITE", {}, {})])
+        real_commit(table_path, version, actions)
+
+    monkeypatch.setattr(delta_writer, "_commit", always_taken)
     with pytest.raises(RuntimeError, match="concurrent commit"):
         delta_writer.write(spark, _tips_df(spark, 1, 1, 1), path,
-                           mode="append", max_commit_retries=1)
+                           mode="append")
     shutil.rmtree(tmp)
 
 

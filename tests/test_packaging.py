@@ -210,17 +210,16 @@ def test_one_file_rewrite_path():
 
 
 def test_one_metadata_commit_path():
-    """Structure guard: every table-state change builds its metaData
-    with ``delta_writer._metadata_action`` and commits through
-    ``commit_mutation`` at the version it read. Only ``commit_mutation``,
-    ``write``'s blind-append loop and the three table creators call
-    ``_commit`` (any other caller would skip the conflict check), and
-    only ``_metadata_action`` holds a metaData literal. The test fixture
-    builder writes raw logs by design and is exempt."""
+    """Structure guard: every commit — writes, table-state changes and
+    table creations — builds its metaData with
+    ``delta_writer._metadata_action`` and goes through
+    ``commit_mutation`` at the version it read. Only ``commit_mutation``
+    calls ``_commit`` (any other caller would skip the conflict check),
+    and only ``_metadata_action`` holds a metaData literal. The test
+    fixture builder writes raw logs by design and is exempt."""
     import ast
 
-    creators = {"commit_mutation", "write", "clone_shallow", "clone_deep",
-                "convert_to_delta"}
+    creators = {"commit_mutation"}
     pkg = os.path.join(REPO, "delta_lake_health_spark")
     callers, literals = [], []
     for root, _, files in os.walk(pkg):
