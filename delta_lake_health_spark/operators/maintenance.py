@@ -29,11 +29,11 @@ from delta_lake_health_spark.sources.delta_log import DeltaLog
 TARGET_FILE_SIZE = 128 * 1024 * 1024
 
 
-def _table_target_file_size(log: DeltaLog | log_replay.Snapshot) -> int:
-    """``delta.targetFileSize`` from the table configuration of ``log``
+def _table_target_file_size(snap: log_replay.Snapshot) -> int:
+    """``delta.targetFileSize`` from the table configuration at ``snap``
     (bytes, or a '128mb'-style size string — both Delta conventions),
     else the 128 MiB default."""
-    raw = (log.metadata().get("configuration") or {}).get(
+    raw = (snap.metadata().get("configuration") or {}).get(
         "delta.targetFileSize"
     )
     if not raw:
@@ -137,7 +137,7 @@ def compact(
     # DV-aware read: compacting raw parquet would resurrect soft-deleted rows
     log = DeltaLog(spark, table_path)
     df = log.read_data_files(paths)
-    cluster_cols = delta_writer._clustering_columns(snap)
+    cluster_cols = delta_writer.clustering_columns(snap)
     if cluster_cols:
         # liquid-clustered table (r13): a blind repartition would merge
         # narrow key ranges into wide ones and erase the file pruning
@@ -372,7 +372,7 @@ def zorder_cluster(
     clustered table."""
     snap, live = _live_in_scope(spark, table_path, partition_filter)
     if cluster_cols is None:
-        cluster_cols = delta_writer._clustering_columns(snap)
+        cluster_cols = delta_writer.clustering_columns(snap)
         if not cluster_cols:
             raise ValueError(
                 "no cluster_cols given and the table declares no "

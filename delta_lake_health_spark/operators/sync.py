@@ -55,9 +55,7 @@ def _record_synced(
     snap = log_replay.Snapshot(dst_path)
     cfg = snap.domain_metadata(SYNC_DOMAIN) or {}
     actions = []
-    upgrade = delta_writer._protocol_upgrade_action(
-        spark, dst_path, "domainMetadata"
-    )
+    upgrade = delta_writer._protocol_upgrade_action(snap, "domainMetadata")
     if upgrade is not None:
         actions.append(upgrade)
     actions.append(

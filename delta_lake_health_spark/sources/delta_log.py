@@ -339,14 +339,14 @@ class DeltaLog:
             # a checkpoint is not a commit, so the protocol upgrade is its
             # own tiny commit FIRST: a reader must never find a v2
             # checkpoint on a table whose protocol does not announce it
-            base = log_replay.Snapshot(self.table_path).version()
+            snap = log_replay.Snapshot(self.table_path)
             upgrade = delta_writer._protocol_upgrade_action(
-                self.spark, self.table_path, "v2Checkpoint"
+                snap, "v2Checkpoint"
             )
             if upgrade is not None:
                 delta_writer.commit_mutation(
                     self.table_path,
-                    base,
+                    snap.version(),
                     [
                         upgrade,
                         delta_writer._commit_info(

@@ -450,15 +450,16 @@ def _require_writable(snap: log_replay.Snapshot) -> None:
 
 
 def _protocol_upgrade_action(
-    spark: SparkSession, table_path: str, feature: str
+    snap: log_replay.Snapshot, feature: str
 ) -> dict | None:
-    """The protocol action that enables ``feature`` on this table, or
-    None when the current protocol already allows it. Column mapping
+    """The protocol action that enables ``feature`` on the table at
+    ``snap`` (the base snapshot the upgrading commit is checked
+    against), or None when its protocol already allows it. Column mapping
     upgrades to the legacy (2, 5) pair; deletion vectors require the
     table-features protocol (3, 7), which must enumerate every feature
     the table already relies on (the spec's legacy-to-features
     migration)."""
-    p = log_replay.Snapshot(table_path).protocol()
+    p = snap.protocol()
     r, w = p["minReaderVersion"], p["minWriterVersion"]
     if feature == "columnMapping":
         if (r, w) >= (2, 5) and (
@@ -578,17 +579,13 @@ ROW_TRACKING_DOMAIN = "delta.rowTracking"
 CLUSTERING_DOMAIN = "delta.clustering"
 
 
-def clustering_columns(table_path: str) -> list[str]:
-    """The table's declared liquid-clustering columns (latest
+def clustering_columns(snap: log_replay.Snapshot) -> list[str]:
+    """The declared liquid-clustering columns at ``snap`` (latest
     ``delta.clustering`` domainMetadata), [] when never declared or
-    cleared. Driver-side — no Spark job, so the per-write default lookup
-    stays commit-cost; a table whose protocol never enabled the feature
-    short-circuits without looking for the domain (every write calls
-    this)."""
-    return _clustering_columns(log_replay.Snapshot(table_path))
-
-
-def _clustering_columns(snap: log_replay.Snapshot) -> list[str]:
+    cleared. Driver-side — no Spark job, so the default lookup of
+    ``write`` and of a bare ``zorder_cluster`` stays commit-cost; a
+    table whose protocol never enabled the feature short-circuits
+    without looking for the domain."""
     p = snap.protocol()
     if p["minWriterVersion"] < 7 or "clustering" not in p["writerFeatures"]:
         return []
@@ -619,7 +616,7 @@ def set_cluster_columns(
                 "within a partition value is a no-op"
             )
     actions: list[dict] = []
-    upgrade = _protocol_upgrade_action(spark, table_path, "clustering")
+    upgrade = _protocol_upgrade_action(snap, "clustering")
     if upgrade is not None:
         actions.append(upgrade)
     actions.append(
@@ -1079,15 +1076,15 @@ def _refuse_referenced(meta: dict, col: str, action: str) -> None:
 
 
 def _commit_schema_change(
-    spark: SparkSession, table_path: str, snap: log_replay.Snapshot,
-    fields: list[dict], operation: str, parameters: dict,
+    snap: log_replay.Snapshot, fields: list[dict], operation: str,
+    parameters: dict,
 ) -> int:
     """Commit RENAME/DROP COLUMN's new ``fields`` against ``snap``. They
     introduce column-mapping metadata, so the same commit raises the
     protocol and conforming readers know to apply the mapping."""
-    upgrade = _protocol_upgrade_action(spark, table_path, "columnMapping")
+    upgrade = _protocol_upgrade_action(snap, "columnMapping")
     return commit_mutation(
-        table_path,
+        snap.table_path,
         snap.version(),
         ([upgrade] if upgrade else [])
         + [
@@ -1129,7 +1126,7 @@ def rename_column(
         else:
             fields.append(f)
     return _commit_schema_change(
-        spark, table_path, snap, fields, "RENAME COLUMN", {"from": old, "to": new}
+        snap, fields, "RENAME COLUMN", {"from": old, "to": new}
     )
 
 
@@ -1150,7 +1147,7 @@ def drop_column(spark: SparkSession, table_path: str, col: str) -> int:
     _refuse_referenced(meta, col, "drop")
     fields = [f for f in schema["fields"] if f["name"] != col]
     return _commit_schema_change(
-        spark, table_path, snap, fields, "DROP COLUMN", {"column": col}
+        snap, fields, "DROP COLUMN", {"column": col}
     )
 
 
@@ -1255,9 +1252,7 @@ def set_column_default(
             md["CURRENT_DEFAULT"] = expr
             f["metadata"] = md
     actions: list[dict] = []
-    upgrade = _protocol_upgrade_action(
-        spark, table_path, "allowColumnDefaults"
-    )
+    upgrade = _protocol_upgrade_action(snap, "allowColumnDefaults")
     if upgrade:
         actions.append(upgrade)
     actions += [
@@ -1494,7 +1489,7 @@ def set_identity_column(
                 fmd["delta.identity.highWaterMark"] = hwm
             f["metadata"] = fmd
     actions: list[dict] = []
-    upgrade = _protocol_upgrade_action(spark, table_path, "identityColumns")
+    upgrade = _protocol_upgrade_action(snap, "identityColumns")
     if upgrade is not None:
         actions.append(upgrade)
     actions.append(_metadata_action(meta, fields=fields))
@@ -1920,7 +1915,10 @@ def write(
     deletes; a metadata or protocol change, or a creation of the same
     new table, raises ``MetadataChangedException``; an overwrite removes
     only the files it read, so a racing append survives it (Delta's
-    WriteSerializable outcome). On a local FS the file-set diff of
+    WriteSerializable outcome). An overwrite that changes the schema or
+    the partitioning is not blind: it reads every live file, so a racing
+    append, written in the old layout, raises
+    ``ConcurrentAppendException``. On a local FS the file-set diff of
     ``_write_files`` is not concurrency-safe for simultaneous writers to
     the SAME directory tree; the put-if-absent commit protects the log,
     which is where real log stores draw the line.
@@ -1978,7 +1976,7 @@ def write(
         # liquid clustering: a clustered table's declared columns apply
         # to every ingest that doesn't choose its own layout (skipped
         # when a schema-replacing overwrite dropped a declared column)
-        declared = _clustering_columns(snap)
+        declared = clustering_columns(snap)
         if declared and all(c in df.columns for c in declared):
             cluster_by = declared
     if cluster_by:
@@ -2061,7 +2059,7 @@ def write(
         )
     else:
         if needs_variant and (
-            upgrade := _protocol_upgrade_action(spark, table_path, "variantType")
+            upgrade := _protocol_upgrade_action(snap, "variantType")
         ) is not None:
             actions.append(upgrade)
         if schema_changed:
@@ -2103,8 +2101,14 @@ def write(
              "numRemovedFiles": len(removed)},
         )
     )
+    # an overwrite that re-lays the table (new schema or partitioning)
+    # read every live file: an append racing it wrote the old layout, so
+    # it must conflict rather than survive unreadable
     committed = commit_mutation(
-        table_path, version, actions, removed_files=set(removed)
+        table_path, version, actions,
+        read_files=set(removed) if mode == "overwrite" and schema_changed
+        else None,
+        removed_files=set(removed),
     )
     if checkpoint_interval and committed > 0 and (
         committed % checkpoint_interval == 0
@@ -2696,7 +2700,7 @@ def enable_row_tracking(spark: SparkSession, table_path: str) -> int:
     stable-id materialization into a physical column is not implemented.
     Returns the version of the backfill (or upgrade) commit."""
     snap = _base_snapshot(spark, table_path)
-    upgrade = _protocol_upgrade_action(spark, table_path, "rowTracking")
+    upgrade = _protocol_upgrade_action(snap, "rowTracking")
     if upgrade is not None:
         commit_mutation(
             table_path,
@@ -2803,7 +2807,7 @@ def _delete_rows_dv(
     # the table-features form with deletionVectors enumerated, so
     # conforming readers without DV support refuse instead of reading
     # soft-deleted rows back
-    upgrade = _protocol_upgrade_action(spark, table_path, "deletionVectors")
+    upgrade = _protocol_upgrade_action(snap, "deletionVectors")
     return commit_mutation(
         table_path,
         version,
@@ -3167,9 +3171,7 @@ def copy_into(
                     },
                 ),
             ]
-            upgrade = _protocol_upgrade_action(
-                spark, table_path, "domainMetadata"
-            )
+            upgrade = _protocol_upgrade_action(snap, "domainMetadata")
             if upgrade is not None:
                 actions.insert(0, upgrade)
             version = commit_mutation(table_path, base_version, actions)
@@ -3193,7 +3195,7 @@ def copy_into(
     for _, name, ident in new_paths:
         loaded[name] = ident
     actions: list[dict] = []
-    upgrade = _protocol_upgrade_action(spark, table_path, "domainMetadata")
+    upgrade = _protocol_upgrade_action(snap, "domainMetadata")
     if upgrade is not None:
         actions.append(upgrade)
     actions += adds

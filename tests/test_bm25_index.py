@@ -249,7 +249,7 @@ def test_optimize_restores_pruning_after_upserts(spark, tmp_path):
     finally:
         spark.conf.set(coalesce_key, "true")
     post = os.path.join(path, "postings")
-    assert clustering_columns(post) == ["w", "doc_id"]
+    assert clustering_columns(log_replay.Snapshot(post)) == ["w", "doc_id"]
     log = DeltaLog(spark, post)
     before_paths = len(
         text_index.bm25_pruned_paths(spark, log, _BM25_QUERY)

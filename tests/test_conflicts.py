@@ -248,6 +248,29 @@ def test_overwrite_keeps_an_append_committed_midway(
     assert _ids(spark, t) == list(range(50, 55)) + list(range(100, 110))
 
 
+@pytest.mark.parametrize("layout", ["schema", "partitioning"])
+def test_relayout_overwrite_refuses_an_append_committed_midway(
+    spark, tmp_path, monkeypatch, layout
+):
+    """An overwrite that replaces the schema or the partitioning cannot
+    keep a racing append's files — they hold the old layout — so it
+    raises, and the table keeps the winner's rows."""
+    t = str(tmp_path / "t")
+    _build(spark, t)
+    fired = _rewrite_with_commit_midway(
+        monkeypatch, lambda: dw.write(spark, _rows(spark, 100, 110), t)
+    )
+    with pytest.raises(dw.ConcurrentAppendException):
+        if layout == "schema":
+            dw.write(spark, spark.range(50, 55).selectExpr(
+                "CAST(id AS STRING) AS s"), t, mode="overwrite")
+        else:
+            dw.write(spark, _rows(spark, 50, 55), t, mode="overwrite",
+                     partition_by=["k"])
+    assert fired
+    assert _ids(spark, t) == list(range(30)) + list(range(100, 110))
+
+
 @pytest.mark.parametrize("op", ["write", "merge"])
 def test_racing_commit_of_the_same_txn_app_id_conflicts(
     spark, tmp_path, monkeypatch, op
@@ -287,8 +310,9 @@ def test_append_refuses_protocol_change_committed_midway(
     _build(spark, t)
 
     def upgrade():
-        dw.commit_mutation(t, dw.current_version(t), [
-            dw._protocol_upgrade_action(spark, t, "domainMetadata"),
+        snap = log_replay.Snapshot(t)
+        dw.commit_mutation(t, snap.version(), [
+            dw._protocol_upgrade_action(snap, "domainMetadata"),
             dw._commit_info("UPGRADE PROTOCOL", {}, {}),
         ])
 

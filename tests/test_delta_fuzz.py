@@ -76,7 +76,7 @@ def _df(spark, rows):
 @given(ops=st.lists(_op_strategy(), min_size=3, max_size=8))
 def test_random_mutation_sequences_match_model(spark, ops):
     from delta_lake_health_spark.operators import maintenance
-    from delta_lake_health_spark.sources import delta_writer
+    from delta_lake_health_spark.sources import delta_writer, log_replay
     from delta_lake_health_spark.sources.delta_log import DeltaLog
 
     tmp = tempfile.mkdtemp(prefix="fuzz_delta_")
@@ -163,7 +163,9 @@ def test_random_mutation_sequences_match_model(spark, ops):
             elif kind == "zorder":
                 # declare-once, then the bare OPTIMIZE of a clustered
                 # table; dataChange=false — the model is untouched
-                if not delta_writer.clustering_columns(path):
+                if not delta_writer.clustering_columns(
+                    log_replay.Snapshot(path)
+                ):
                     delta_writer.set_cluster_columns(spark, path, ["k"])
                 maintenance.zorder_cluster(spark, path)
             elif kind == "identity_declare":

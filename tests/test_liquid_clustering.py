@@ -16,7 +16,7 @@ import tempfile
 import pytest
 
 from delta_lake_health_spark.operators import maintenance
-from delta_lake_health_spark.sources import delta_writer
+from delta_lake_health_spark.sources import delta_writer, log_replay
 from delta_lake_health_spark.sources.delta_log import DeltaLog
 
 
@@ -40,7 +40,7 @@ def test_declaration_protocol_and_domain(spark, table):
     p = DeltaLog(spark, table).protocol()
     assert p["minWriterVersion"] == 7
     assert {"clustering", "domainMetadata"} <= set(p["writerFeatures"])
-    assert delta_writer.clustering_columns(table) == ["k"]
+    assert delta_writer.clustering_columns(log_replay.Snapshot(table)) == ["k"]
     dom = DeltaLog(spark, table).domain_metadata(
         delta_writer.CLUSTERING_DOMAIN
     )
@@ -48,9 +48,9 @@ def test_declaration_protocol_and_domain(spark, table):
 
     # re-declare replaces; [] clears (CLUSTER BY NONE)
     delta_writer.set_cluster_columns(spark, table, ["id"])
-    assert delta_writer.clustering_columns(table) == ["id"]
+    assert delta_writer.clustering_columns(log_replay.Snapshot(table)) == ["id"]
     delta_writer.set_cluster_columns(spark, table, [])
-    assert delta_writer.clustering_columns(table) == []
+    assert delta_writer.clustering_columns(log_replay.Snapshot(table)) == []
 
 
 def test_ingest_clusters_by_declared_columns(spark, table):
@@ -67,7 +67,7 @@ def test_ingest_clusters_by_declared_columns(spark, table):
 
     # the declaration survives a checkpoint (domainMetadata folds in)
     log.checkpoint()
-    assert delta_writer.clustering_columns(table) == ["k"]
+    assert delta_writer.clustering_columns(log_replay.Snapshot(table)) == ["k"]
 
 
 def test_optimize_defaults_to_declared_columns(spark, table):
@@ -121,8 +121,9 @@ def test_target_file_size_property_resolved(spark, table):
     delta_writer.set_table_property(
         spark, table, "delta.targetFileSize", "64kb"
     )
-    log = DeltaLog(spark, table)
-    assert maintenance._table_target_file_size(log) == 64 * 1024
+    assert maintenance._table_target_file_size(
+        log_replay.Snapshot(table)
+    ) == 64 * 1024
     out = maintenance.compact(spark, table, small_file_size=1 << 30)
     # 6 small files re-packed into more, smaller outputs (64 KiB target
     # over ~hundreds of KiB of data -> several files)
@@ -132,10 +133,12 @@ def test_target_file_size_property_resolved(spark, table):
     delta_writer.set_table_property(
         spark, table, "delta.targetFileSize", "1048576"
     )
-    assert maintenance._table_target_file_size(DeltaLog(spark, table)) == 1048576
+    assert maintenance._table_target_file_size(
+        log_replay.Snapshot(table)
+    ) == 1048576
     t2 = table + "_plain"
     delta_writer.write(spark, _df(spark, 0, 10), t2)
     assert (
-        maintenance._table_target_file_size(DeltaLog(spark, t2))
+        maintenance._table_target_file_size(log_replay.Snapshot(t2))
         == maintenance.TARGET_FILE_SIZE
     )

@@ -282,13 +282,17 @@ def test_variant_writer_only_feature_gets_reader_gate(spark, tmp_path):
             }
         ],
     )
-    act = delta_writer._protocol_upgrade_action(spark, path, "variantType")
+    act = delta_writer._protocol_upgrade_action(
+        log_replay.Snapshot(path), "variantType"
+    )
     assert act is not None
     assert "variantType" in act["protocol"]["readerFeatures"]
     assert "variantType" in act["protocol"]["writerFeatures"]
     # and once both sides carry it, the upgrade is a no-op
     delta_writer._commit(path, v + 1, [act])
     assert (
-        delta_writer._protocol_upgrade_action(spark, path, "variantType")
+        delta_writer._protocol_upgrade_action(
+            log_replay.Snapshot(path), "variantType"
+        )
         is None
     )
