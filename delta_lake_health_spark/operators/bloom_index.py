@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from delta_lake_health_spark.operators import bloom
+from delta_lake_health_spark.sources import delta_log, log_replay
 from delta_lake_health_spark.sources.delta_log import DeltaLog
 
 INDEX_ROOT = "_delta_index"
@@ -72,17 +73,18 @@ def build_bloom_index(
     """Build or INCREMENTALLY refresh the sidecar: bitmaps are computed
     only for live files MISSING from the existing index (the data scan —
     the expensive half — touches exactly those files, via the
-    ``rel_paths`` plan-time file list of ``snapshot_with_positions``);
-    entries for dead files are dropped. A refresh after appending k
+    ``rel_paths`` plan-time file list of ``delta_log.read_files``);
+    entries for dead files are dropped. The version, the live set and
+    the scan come from one snapshot. A refresh after appending k
     files to a million-file table reads k files, not the table. The
     first build (or an m_bits/k change) computes everything. Returns
     ``{"numIndexedFiles", "mBits", "k", "version", "numNewBitmaps",
     "numDroppedEntries"}``."""
     import shutil
 
-    log = DeltaLog(spark, table_path)
-    version = log.version()
-    live = {r.path for r in log.live_files_rows()}
+    snap = log_replay.table_snapshot(table_path)
+    version = snap.version()
+    live = {a["path"] for a in snap._live_adds()}
     idx_dir = _index_dir(table_path, column)
 
     prev_meta = _index_meta(table_path, column)
@@ -114,7 +116,7 @@ def build_bloom_index(
 
     fresh = None
     if missing:
-        rows = log.snapshot_with_positions(rel_paths=missing).select(
+        rows = delta_log.read_files(spark, snap, missing, keep_lineage=True).select(
             F.col("_rel_path").alias("rel_path"),
             F.col(column).cast("string").alias("v"),
         )
@@ -228,8 +230,7 @@ def bloom_point_lookup(
 ) -> DataFrame:
     """Point lookup through the index: scan only the surviving files
     (deletion vectors applied), then the exact predicate."""
-    log = DeltaLog(spark, table_path)
     cand, _pruned = bloom_pruned_files(spark, table_path, column, value)
-    if not cand:
-        return log.snapshot().where(F.lit(False))
-    return log.read_data_files(cand).where(F.col(column) == F.lit(value))
+    return delta_log.read_files(
+        spark, log_replay.Snapshot(table_path), cand
+    ).where(F.col(column) == F.lit(value))

@@ -21,7 +21,9 @@ per-partition counts.
 
 from __future__ import annotations
 
+import os
 import re
+from collections import Counter
 from dataclasses import dataclass, field
 from datetime import date
 from enum import Enum
@@ -29,8 +31,7 @@ from enum import Enum
 from pyspark.sql import SparkSession
 
 from delta_lake_health_spark.operators import skew as skew_ops
-from delta_lake_health_spark.sources import delta_writer, log_replay
-from delta_lake_health_spark.sources.delta_log import DeltaLog
+from delta_lake_health_spark.sources import delta_log, delta_writer, log_replay
 
 
 class HealthStatus(str, Enum):
@@ -234,21 +235,19 @@ class HealthAnalyzer:
         small_file_ratio_threshold: float = 0.3,
         collect_partitions: bool = True,
     ) -> HealthMetrics:
-        log = DeltaLog(self.spark, table_path)
-        snap = log_replay.Snapshot(log.table_path)
-        m = HealthMetrics(table_path=log.table_path)
+        table_path = os.path.abspath(table_path)
+        snap = log_replay.table_snapshot(table_path)  # every answer's source
+        m = HealthMetrics(table_path=table_path)
 
         # --- history: version and op counts ------------------------------
         m.version_count = snap.version()
-        if m.version_count < 0:
-            raise FileNotFoundError(f"empty delta log: {log.log_dir}")
-        ops = log.operation_counts()
+        ops = Counter(ci.get("operation") for ci in snap.commit_infos().values())
         m.number_of_writes = ops.get("WRITE", 0)
         m.number_of_deletes = ops.get("DELETE", 0)
         m.number_of_optimizes = ops.get("OPTIMIZE", 0)
 
         # --- live-file stats ----------------------------------------------
-        stats = log.file_stats()
+        stats = delta_log._file_stats(snap)
         m.data_file_count = stats["data_file_count"]
         m.table_size_bytes = stats["table_size_bytes"]
         m.avg_file_size_bytes = stats["avg_file_size_bytes"]
@@ -263,10 +262,14 @@ class HealthAnalyzer:
             > m.data_file_count * small_file_ratio_threshold
         )
         m.is_compacted = not m.needs_optimize
-        m.record_count = log.record_count()
+        per_file = snap.record_counts()
+        m.record_count = (
+            delta_log.read_files(self.spark, snap).count()
+            if per_file is None else sum(per_file.values())
+        )
 
         # --- folder listing: orphan files + folder size --------------------
-        listing = delta_writer._list_parquet_rel(log.table_path)
+        listing = delta_writer._list_parquet_rel(table_path)
         live = {a["path"] for a in adds}
         m.total_file_count = len(listing)
         m.folder_size_bytes = sum(listing.values())
@@ -291,13 +294,12 @@ class HealthAnalyzer:
         # --- partition skew -------------------------------------------------
         cols = snap.metadata().get("partition_columns") or []
         if cols:
-            per_file = snap.record_counts()
             counts = None if per_file is None else _logged_counts(snap, cols, per_file)
             if counts is None:
                 counts = {
                     r.partition_key: r.cnt
                     for r in skew_ops.records_per_partition(
-                        log.snapshot(), cols
+                        delta_log.read_files(self.spark, snap), cols
                     ).collect()
                 }
             m.skew_metrics = skew_ops.skew_metrics(

@@ -23,7 +23,7 @@ import uuid
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from delta_lake_health_spark.sources import delta_writer, log_replay
+from delta_lake_health_spark.sources import delta_log, delta_writer, log_replay
 from delta_lake_health_spark.sources.delta_log import DeltaLog
 
 TARGET_FILE_SIZE = 128 * 1024 * 1024
@@ -67,7 +67,7 @@ def _live_in_scope(
 
 
 def _rewrite_files(
-    log: DeltaLog,
+    spark: SparkSession,
     snap: log_replay.Snapshot,
     paths: list[str],
     df,
@@ -78,15 +78,15 @@ def _rewrite_files(
     tags: dict | None = None,
 ) -> dict:
     """Replace the live files ``paths`` of the base snapshot ``snap`` by
-    the rows of ``df``: one write through ``delta_writer._write_files``
-    (dataChange=false; the rows are the table's own, so they are not
-    re-validated), the removes of ``paths`` and a ``commit_mutation``
+    the rows of ``df`` (read from ``snap``): one write through
+    ``delta_writer._write_files`` (dataChange=false; the rows are the
+    table's own, so they are not re-validated), the removes of ``paths`` and a ``commit_mutation``
     commit, which raises if a commit since ``snap`` removed or
     soft-deleted a file it read or changed the metadata, and rebases
     over appends. ``tags`` go on every new add. Returns the commit's
     metrics."""
     adds, _ = delta_writer._write_files(
-        log.spark, snap, df, snap.metadata()["partition_columns"],
+        spark, snap, df, snap.metadata()["partition_columns"],
         data_change=False, validate=False,
     )
     if tags:
@@ -95,8 +95,7 @@ def _rewrite_files(
     metrics = {removed_key: len(paths), "numAddedFiles": len(adds),
                **(metrics or {})}
     delta_writer.commit_mutation(
-        log.table_path,
-        snap.version(),
+        snap,
         adds
         + delta_writer._remove_actions(paths, data_change=False)
         + [delta_writer._commit_info(operation, parameters, metrics)],
@@ -135,8 +134,7 @@ def compact(
     paths = [a["path"] for a in small]
 
     # DV-aware read: compacting raw parquet would resurrect soft-deleted rows
-    log = DeltaLog(spark, table_path)
-    df = log.read_data_files(paths)
+    df = delta_log.read_files(spark, snap, paths)
     cluster_cols = delta_writer.clustering_columns(snap)
     if cluster_cols:
         # liquid-clustered table (r13): a blind repartition would merge
@@ -150,7 +148,7 @@ def compact(
     else:
         df = df.repartition(n_out)
     return _rewrite_files(
-        log, snap, paths, df, "OPTIMIZE",
+        spark, snap, paths, df, "OPTIMIZE",
         {"targetSize": target_file_size,
          **({"predicate": str(partition_filter)} if partition_filter else {})},
         metrics={"numRemovedBytes": total_size},
@@ -183,13 +181,13 @@ def vacuum(
     every tombstoned file is still collected exactly as in full mode."""
     if mode not in ("full", "lite"):
         raise ValueError(f"vacuum mode must be 'full' or 'lite': {mode!r}")
-    log = DeltaLog(spark, table_path)
+    snap = log_replay.table_snapshot(table_path)
     # the vacuumProtocolCheck table feature's mandate: VACUUM must
     # consult the full protocol (reader AND writer gates) before
     # touching any file — deleting by a stale live-set under an
-    # ununderstood feature would destroy data
-    log.require_readable()
-    snap = log_replay.Snapshot(log.table_path)
+    # ununderstood feature would destroy data. Both gates, the live
+    # set, the tombstones and the vector references read one snapshot
+    delta_log.require_readable(snap)
     delta_writer._require_writable(snap)
     cutoff_ms = int((time.time() - retention_hours * 3600) * 1000)
 
@@ -256,11 +254,10 @@ def vacuum(
         for rel in dead_sidecars:
             shutil.rmtree(os.path.join(table_path, rel), ignore_errors=True)
         # a history record of deletions already made: it reads nothing
-        # a later commit could invalidate, so its base is the newest
-        # version and only a simultaneous commit is checked
+        # a later commit could invalidate, so its base is a fresh
+        # snapshot and only a simultaneous commit is checked
         delta_writer.commit_mutation(
-            table_path,
-            delta_writer.current_version(table_path),
+            log_replay.Snapshot(table_path),
             [
                 delta_writer._commit_info(
                     "VACUUM END",
@@ -286,9 +283,8 @@ def apply_deletion_vectors(spark: SparkSession, table_path: str) -> dict:
     affected = sorted(snap.dv_deleted_rows())
     if not affected:
         return {"numRewrittenFiles": 0, "numAddedFiles": 0, "skipped": True}
-    log = DeltaLog(spark, table_path)
     return _rewrite_files(
-        log, snap, affected, log.read_data_files(affected),
+        spark, snap, affected, delta_log.read_files(spark, snap, affected),
         "APPLY DELETION VECTORS", {}, removed_key="numRewrittenFiles",
     )
 
@@ -378,7 +374,6 @@ def zorder_cluster(
                 "no cluster_cols given and the table declares no "
                 "clustering columns (set_cluster_columns)"
             )
-    log = DeltaLog(spark, table_path)
     if target_file_size is None:
         target_file_size = _table_target_file_size(snap)
     zorder_by = json.dumps(sorted(cluster_cols))
@@ -397,7 +392,7 @@ def zorder_cluster(
     n_out = max(1, math.ceil(total_size / target_file_size))
     paths = [a["path"] for a in live]
 
-    df = log.read_data_files(paths)
+    df = delta_log.read_files(spark, snap, paths)
     if interleaved and len(cluster_cols) > 1:
         zed = df.withColumn("_zval", _zvalue_column(df, cluster_cols))
         clustered = (
@@ -410,7 +405,7 @@ def zorder_cluster(
             *cluster_cols
         )
     return _rewrite_files(
-        log, snap, paths, clustered, "OPTIMIZE",
+        spark, snap, paths, clustered, "OPTIMIZE",
         {"zOrderBy": ",".join(cluster_cols),
          **({"incremental": True} if incremental else {})},
         # membership for incremental runs
@@ -454,7 +449,6 @@ def hilbert_cluster(
     if bits * ncols > 63:
         raise ValueError(f"bits*cols = {bits * ncols} exceeds the 63-bit key")
     snap, live = _live_in_scope(spark, table_path, partition_filter)
-    log = DeltaLog(spark, table_path)
     if target_file_size is None:
         target_file_size = _table_target_file_size(snap)
     if not live:
@@ -463,7 +457,7 @@ def hilbert_cluster(
     n_out = max(1, math.ceil(total_size / target_file_size))
     paths = [a["path"] for a in live]
 
-    df = log.read_data_files(paths)
+    df = delta_log.read_files(spark, snap, paths)
     bounds = df.agg(
         *[F.min(F.col(c).cast("double")).alias(f"lo_{i}")
           for i, c in enumerate(cluster_cols)],
@@ -524,7 +518,7 @@ def hilbert_cluster(
         .drop("_hkey")
     )
     return _rewrite_files(
-        log, snap, paths, clustered, "OPTIMIZE",
+        spark, snap, paths, clustered, "OPTIMIZE",
         {"hilbertBy": ",".join(cluster_cols), "bits": str(bits)},
     )
 
@@ -547,8 +541,7 @@ def compute_stats(spark: SparkSession, table_path: str) -> dict:
     if not need:
         return {"numFilesBackfilled": 0}
     delta_writer.commit_mutation(
-        table_path,
-        snap.version(),
+        snap,
         delta_writer._readd_actions(table_path, need)
         + [delta_writer._commit_info(
             "COMPUTE STATISTICS", {}, {"numFilesBackfilled": len(need)}
@@ -577,7 +570,6 @@ def restore(spark: SparkSession, table_path: str, to_version: int) -> dict:
     If the schema evolved after ``to_version``, the target version's
     metaData is re-emitted so readers reconstruct the restored schema.
     """
-    log = DeltaLog(spark, table_path)
     snap = delta_writer._base_snapshot(spark, table_path)
     delta_writer._refuse_append_only(snap, "RESTORE")
     cur_version = snap.version()
@@ -634,10 +626,12 @@ def restore(spark: SparkSession, table_path: str, to_version: int) -> dict:
         df = spark.read.option("basePath", table_path).parquet(
             *[os.path.join(table_path, p) for p in sorted(tainted)]
         )
-        early_dv = log.deletion_vectors(as_of=to_version)
+        early_dv = delta_log._deletion_vectors(spark, snap, to_version)
         if early_dv is not None:
             out_cols = df.columns
-            df = log._drop_deleted(log._with_lineage(df), early_dv).select(*out_cols)
+            df = delta_log._drop_deleted(
+                delta_log._with_lineage(df, table_path), early_dv
+            ).select(*out_cols)
         rewritten, _ = delta_writer._write_files(
             spark, snap, df, partition_by, validate=False, physical=False
         )
@@ -658,7 +652,7 @@ def restore(spark: SparkSession, table_path: str, to_version: int) -> dict:
         delta_writer._commit_info("RESTORE", {"version": to_version}, metrics)
     )
     delta_writer.commit_mutation(
-        table_path, cur_version, actions,
+        snap, actions,
         read_files=cur_live, removed_files=set(removes),
     )
     return metrics
@@ -677,26 +671,22 @@ def cleanup_log(
     clear error instead of silently replaying a truncated log)."""
     import re
 
-    from delta_lake_health_spark.sources.delta_log import DeltaLog
-
-    log = DeltaLog(spark, table_path)
-    info = log.last_checkpoint_info()
+    snap = log_replay.table_snapshot(table_path)
+    info = snap.info
     if info is None:
         return {"numDeletedJson": 0, "numDeletedCheckpointFiles": 0}
-    ckpt_version = int(info["version"])
+    ckpt_version = snap.checkpoint
     cutoff = time.time() - retention_hours * 3600.0
     log_dir = os.path.join(table_path, "_delta_log")
 
-    deleted_json = 0
-    for v in log_replay.commit_versions(table_path):
-        p = log_replay.commit_path(table_path, v)
-        if v < ckpt_version and os.path.getmtime(p) <= cutoff:
-            os.remove(p)
-            deleted_json += 1
-            # the expired commit's version checksum goes with it
-            crc = os.path.join(log_dir, f"{v:020d}.crc")
-            if os.path.isfile(crc):
-                os.remove(crc)
+    expired = [v for v in snap.versions if v < ckpt_version and os.path.getmtime(
+        log_replay.commit_path(table_path, v)) <= cutoff]
+    for v in expired:
+        os.remove(log_replay.commit_path(table_path, v))
+        # the expired commit's version checksum goes with it
+        crc = os.path.join(log_dir, f"{v:020d}.crc")
+        if os.path.isfile(crc):
+            os.remove(crc)
 
     # superseded checkpoints: classic, multi-part, and V2 UUID names
     ckpt_re = re.compile(
@@ -724,10 +714,10 @@ def cleanup_log(
                 deleted_sidecars += 1
 
     return {
-        "numDeletedJson": deleted_json,
+        "numDeletedJson": len(expired),
         "numDeletedCheckpointFiles": deleted_ckpt,
         "numDeletedSidecars": deleted_sidecars,
-        "retainedFromVersion": log.earliest_version(),
+        "retainedFromVersion": min(set(snap.versions) - set(expired), default=0),
     }
 
 
@@ -743,20 +733,17 @@ def generate_symlink_manifest(spark: SparkSession, table_path: str) -> dict:
     points at whole files, so soft-deleted rows would resurrect."""
     import shutil as _shutil
 
-    from delta_lake_health_spark.sources.delta_log import DeltaLog
-
-    log = DeltaLog(spark, table_path)
-    if sum(log_replay.Snapshot(table_path).dv_deleted_rows().values()) > 0:
+    snap = log_replay.table_snapshot(table_path)
+    if sum(snap.dv_deleted_rows().values()) > 0:
         raise ValueError(
             "cannot generate a symlink manifest while deletion vectors "
             "are live (manifests reference whole files); run "
             "apply_deletion_vectors first"
         )
-    live = log.live_files_rows()
-    part_cols = log.partition_columns()
+    part_cols = snap.metadata().get("partition_columns", [])
     by_partition: dict[str, list[str]] = {}
-    for r in live:
-        rel = r.path
+    for a in snap._live_adds():
+        rel = a["path"]
         abs_path = (
             rel if os.path.isabs(rel) else os.path.join(table_path, rel)
         )
@@ -764,7 +751,7 @@ def generate_symlink_manifest(spark: SparkSession, table_path: str) -> dict:
         # file path — shallow-cloned tables hold absolute paths whose
         # directory layout belongs to the SOURCE tree, and the log is
         # the spec's source of truth for partition membership
-        vals = dict(r.partitionValues or {})
+        vals = dict(a.get("partitionValues") or {})
         part_dir = "/".join(
             delta_writer._partition_dir(c, vals.get(c)) for c in part_cols
         ) if part_cols else ""
@@ -807,8 +794,7 @@ def fsck_repair(
     if dry_run or not missing:
         return {"numMissingFiles": len(missing), "repaired": False}
     delta_writer.commit_mutation(
-        table_path,
-        snap.version(),
+        snap,
         delta_writer._remove_actions(missing)
         + [delta_writer._commit_info(
             "FSCK", {"dryRun": "false"}, {"numRemovedFiles": len(missing)}
@@ -832,7 +818,7 @@ def reorg_purge(spark: SparkSession, table_path: str) -> dict:
     2. Dropped-column half: probe each live file's parquet FOOTER (one
        metadata read per file, no data scan — a per-file task at cluster
        scale) for physical columns absent from the current physical
-       schema; rewrite those files through ``read_data_files`` (which
+       schema; rewrite those files through ``delta_log.read_files`` (which
        selects only the current physical schema) and commit remove+add
        with ``dataChange = false``.
 
@@ -847,7 +833,6 @@ def reorg_purge(spark: SparkSession, table_path: str) -> dict:
     # reads the table as it left it
     dv_metrics = apply_deletion_vectors(spark, table_path)
     snap = delta_writer._base_snapshot(spark, table_path)
-    log = DeltaLog(spark, table_path)
     meta = snap.metadata()
     schema = meta.get("schema") or {}
     physical = {
@@ -895,7 +880,7 @@ def reorg_purge(spark: SparkSession, table_path: str) -> dict:
 
     stale = sorted(stale)
     metrics = _rewrite_files(
-        log, snap, stale, log.read_data_files(stale), "REORG",
+        spark, snap, stale, delta_log.read_files(spark, snap, stale), "REORG",
         {"applyPurge": "true"}, removed_key="numPurgedFiles",
     )
     out["numAddedFiles"] += metrics["numAddedFiles"]

@@ -74,7 +74,7 @@ def _record_synced(
     )
     # a concurrent marker for another source rewrote the same domain:
     # the conflict check refuses this one instead of dropping that entry
-    delta_writer.commit_mutation(dst_path, snap.version(), actions)
+    delta_writer.commit_mutation(snap, actions)
 
 
 def _delete_keys_dv(

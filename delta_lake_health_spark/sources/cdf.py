@@ -53,7 +53,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import MapType, StructType, VariantType
 
 from delta_lake_health_spark.sources import log_replay
-from delta_lake_health_spark.sources.delta_log import DeltaLog
+from delta_lake_health_spark.sources.delta_log import DeltaLog, _to_logical, _with_lineage
 from delta_lake_health_spark.sources.delta_writer import schema_has
 
 CHANGE_TYPE = "_change_type"
@@ -76,9 +76,9 @@ def _read_raw(
         reader = reader.schema(StructType.fromJson(log.physical_schema(schema)))
     df = reader.parquet(*[os.path.join(log.table_path, p) for p in rel_paths])
     if with_pos:
-        df = log._with_lineage(df)
+        df = _with_lineage(df, log.table_path)
     if schema is not None:
-        df = log._rename_physical_to_logical(df, schema)
+        df = _to_logical(df, schema)
     return df
 
 

@@ -14,8 +14,11 @@ and every ``DeltaLog`` answer comes from that replay:
   replay's rows as arrow LocalRelations: built once, unchanged by later
   commits, and collected without a Spark job.
 - **Data** — snapshots, time travel, position-tracking reads and pruned
-  scans — go through one live-file scan (``DeltaLog._read``) over the
-  replay's live file list, with deletion vectors applied.
+  scans — go through one live-file scan, ``read_files``.
+
+One snapshot per answer and per scan: each ``DeltaLog`` call lists the
+log once, and ``read_files`` takes every fact from the snapshot it is
+handed, so a writer scans the snapshot it commits against.
 
 Replaces the reference's delta-rs ``DeltaTable`` dependency
 (src/delta_lake_health/health_analyzers/delta_python_analyzer.py:17-31,
@@ -248,7 +251,8 @@ LiveFile = namedtuple("LiveFile", ["path", "partitionValues"])
 
 
 class DeltaLog:
-    """Reader for one table's ``_delta_log``."""
+    """Reader for one table's ``_delta_log``: each call lists the log
+    once and answers from that one ``log_replay.Snapshot``."""
 
     def __init__(self, spark: SparkSession, table_path: str):
         self.spark = spark
@@ -345,8 +349,7 @@ class DeltaLog:
             )
             if upgrade is not None:
                 delta_writer.commit_mutation(
-                    self.table_path,
-                    snap.version(),
+                    snap,
                     [
                         upgrade,
                         delta_writer._commit_info(
@@ -393,8 +396,7 @@ class DeltaLog:
         )
 
     def live_files_rows(self, as_of: int | None = None) -> list:
-        """(path, partitionValues) of every live file at ``as_of`` — the
-        list every snapshot path feeds the parquet reader."""
+        """(path, partitionValues) of every live file at ``as_of``."""
         return [
             LiveFile(a["path"], a.get("partitionValues") or {})
             for a in log_replay.Snapshot(self.table_path).live_add_actions(as_of)
@@ -436,9 +438,7 @@ class DeltaLog:
         inCommitTimestamp when present, as Delta's DESCRIBE HISTORY
         reports it once ICT is enabled: the timestamp ``timestampAsOf``
         resolves, so a row's timestamp addresses ITS OWN version."""
-        snap = log_replay.Snapshot(self.table_path)
-        if snap.version() < 0:
-            raise FileNotFoundError(f"empty delta log: {self.log_dir}")
+        snap = log_replay.table_snapshot(self.table_path)
         infos = snap.commit_infos()
         rows = []
         for v in sorted(infos, reverse=True)[:limit]:
@@ -447,10 +447,7 @@ class DeltaLog:
         return self._local(rows, _HISTORY_SCHEMA)
 
     def version(self) -> int:
-        v = log_replay.Snapshot(self.table_path).version()
-        if v < 0:
-            raise FileNotFoundError(f"empty delta log: {self.log_dir}")
-        return v
+        return log_replay.table_snapshot(self.table_path).version()
 
     def metadata(self, as_of: int | None = None) -> dict:
         return log_replay.Snapshot(self.table_path).metadata(as_of)
@@ -481,73 +478,18 @@ class DeltaLog:
             fields.append({**f, "name": p} if p else f)
         return {"type": "struct", "fields": fields}
 
-    def _rename_physical_to_logical(self, df: DataFrame, schema: dict) -> DataFrame:
-        mapping = self.column_mapping(schema)
-        if mapping:
-            df = df.withColumnsRenamed({p: l for l, p in mapping.items()})
-        return df
-
-    # Reader features this engine actually implements; protocol gating
-    # below refuses tables demanding anything else (Delta table-features
-    # protocol: better a clear refusal than a silently wrong read).
-    # timestampNtz only gates the TIMESTAMP_NTZ data type, which Spark 4
-    # reads natively through the logged schema; vacuumProtocolCheck
-    # mandates that VACUUM consult the protocol before touching files —
-    # maintenance.vacuum() runs both gates.
-    SUPPORTED_READER_FEATURES = frozenset(
-        {"deletionVectors", "columnMapping", "v2Checkpoint",
-         "timestampNtz", "vacuumProtocolCheck",
-         # VARIANT data type: Spark 4 reads the shredded parquet
-         # encoding natively through the logged schema
-         "variantType"}
-    )
-
     def protocol(self) -> dict:
         """Latest protocol action: {minReaderVersion, minWriterVersion,
         readerFeatures, writerFeatures} (feature lists empty for legacy
         version-only protocols)."""
         return log_replay.Snapshot(self.table_path).protocol()
 
-    def require_readable(self) -> None:
-        """Protocol gate (Delta spec): refuse to read a table whose
-        protocol demands reader capabilities this engine lacks, instead
-        of returning silently wrong data (e.g. unapplied deletion
-        semantics of an unknown feature)."""
-        p = self.protocol()
-        r = p["minReaderVersion"]
-        if r > 3:
-            raise ValueError(
-                f"unsupported Delta protocol: minReaderVersion={r} "
-                "(this reader supports up to 3)"
-            )
-        if r == 3:
-            unsupported = set(p["readerFeatures"]) - self.SUPPORTED_READER_FEATURES
-            if unsupported:
-                raise ValueError(
-                    "unsupported Delta reader features: "
-                    f"{sorted(unsupported)} (supported: "
-                    f"{sorted(self.SUPPORTED_READER_FEATURES)})"
-                )
-
     def version_checksum(self) -> dict | None:
         """The current version's ``.crc`` checksum (tableSizeBytes,
         numFiles) written incrementally at commit time, or None when
         absent (foreign log / unresolvable commit) — see
         delta_writer._write_version_checksum."""
-        p = os.path.join(self.log_dir, f"{self.version():020d}.crc")
-        try:
-            with open(p) as f:
-                c = json.loads(f.read())
-            if int(c.get("version", -1)) != self.version():
-                return None
-            return {
-                "tableSizeBytes": int(c["tableSizeBytes"]),
-                "numFiles": int(c["numFiles"]),
-            }
-        except (FileNotFoundError, KeyError, ValueError, TypeError):
-            # accelerator only: a malformed/foreign .crc (e.g. null
-            # fields) must fall back to replay, never crash detail()
-            return None
+        return _version_checksum(log_replay.Snapshot(self.table_path))
 
     def detail(self) -> dict:
         """``DESCRIBE DETAIL`` equivalent (the fields the reference's
@@ -558,14 +500,14 @@ class DeltaLog:
         numbers from one tiny file), replay otherwise."""
         snap = log_replay.Snapshot(self.table_path)
         meta = snap.metadata()
-        crc = self.version_checksum()
+        crc = _version_checksum(snap)
         stats = (
             {
                 "data_file_count": crc["numFiles"],
                 "table_size_bytes": crc["tableSizeBytes"],
             }
             if crc is not None
-            else self.file_stats()
+            else _file_stats(snap)
         )
         proto = snap.protocol()
         stamps = [
@@ -616,8 +558,9 @@ class DeltaLog:
 
         Scale shape: the per-file (path, baseRowId) map is |files| rows
         and broadcasts; the data never shuffles."""
-        base = self.snapshot_with_positions(as_of)
-        live = log_replay.Snapshot(self.table_path)._reconciled(as_of)[0]
+        snap = log_replay.Snapshot(self.table_path)
+        base = read_files(self.spark, snap, as_of=as_of, keep_lineage=True)
+        live = snap._reconciled(as_of)[0]
         latest = self._local(
             [
                 {
@@ -646,172 +589,8 @@ class DeltaLog:
         """(rel_path, row_index) of every soft-deleted row, or None when
         the table has no deletion vectors. Sidecars are tiny relative to
         the data (|deleted rows| x 2 columns)."""
-        paths = self.deletion_vector_paths(as_of)
-        if not paths:
-            return None
-        abs_paths = [os.path.join(self.table_path, p) for p in paths]
-        return self.spark.read.parquet(*abs_paths)
-
-    # -- data access -------------------------------------------------------
-
-    def _file_path_expr(self):
-        """Absolute path of the file behind each row, from
-        ``_metadata.file_path``. The metadata column is a percent-encoded
-        ``file:`` URI — a table path or partition value containing a
-        character Spark encodes (space, ``#``, …) would never match the
-        un-encoded log paths, silently turning the DV anti-join into a
-        no-op. So: decode first (protecting ``+``, which is literal in a
-        URI path but form-decoded by ``url_decode``), then normalize the
-        scheme."""
-        decoded = F.url_decode(
-            F.regexp_replace(F.col("_metadata.file_path"), r"\+", "%2B")
-        )
-        return F.regexp_replace(decoded, r"^file:/+", "/")
-
-    def _with_lineage(self, df: DataFrame) -> DataFrame:
-        """``df`` (a parquet scan) plus ``_rel_path`` (the log-relative
-        path of the row's file) and ``_row_index`` — ``_metadata`` is
-        only resolvable directly on the scan."""
-        rel = F.replace(self._file_path_expr(), F.lit(self.table_path + "/"), F.lit(""))
-        return df.withColumn("_rel_path", rel).withColumn(
-            "_row_index", F.col("_metadata.row_index")
-        )
-
-    @staticmethod
-    def _drop_deleted(df: DataFrame, dv: DataFrame) -> DataFrame:
-        """Anti-join the soft-deleted positions ``dv`` (rel_path,
-        row_index) out of ``df``, which carries lineage columns. The dv
-        side is tiny, so it broadcasts; the data never shuffles."""
-        return df.join(
-            F.broadcast(
-                dv.select(
-                    F.col("rel_path").alias("_rel_path"),
-                    F.col("row_index").alias("_row_index"),
-                )
-            ),
-            ["_rel_path", "_row_index"],
-            "left_anti",
-        )
-
-    def _read_with_logged_partitions(
-        self, live, schema: dict | None, as_of: int | None, keep_lineage: bool
-    ) -> DataFrame:
-        """Read live files by explicit path with partition columns taken
-        from the LOG's partitionValues (the Delta-spec source of truth) —
-        required when live files sit outside this table directory (shallow
-        clones), where hive basePath inference cannot run. ``live`` is
-        rows of (path, partitionValues). Columns stay in physical names.
-        The per-file partition map is metadata-sized and broadcasts."""
-        from delta_lake_health_spark.sources import delta_writer
-
-        part_cols = self.metadata(as_of).get("partition_columns", [])
-        abs_of = lambda p: p if os.path.isabs(p) else os.path.join(self.table_path, p)  # noqa: E731
-        reader = self.spark.read
-        if schema is not None:
-            data_fields = [
-                f
-                for f in self.physical_schema(schema)["fields"]
-                if f["name"] not in part_cols
-            ]
-            reader = reader.schema(
-                StructType.fromJson({"type": "struct", "fields": data_fields})
-            )
-        df = reader.parquet(*[abs_of(r.path) for r in live])
-        if keep_lineage:
-            # captured on the scan: the partition-value join below hides
-            # ``_metadata``
-            df = self._with_lineage(df)
-        if not part_cols:
-            return df
-        rows = []
-        for r in live:
-            pv = delta_writer.logged_partition_values(r.path, r.partitionValues)
-            rows.append(tuple([abs_of(r.path)] + [pv.get(c) for c in part_cols]))
-        pv_schema = StructType(
-            [StructField("_abs_path", StringType())]
-            + [StructField(f"_pv_{c}", StringType()) for c in part_cols]
-        )
-        df = (
-            df.withColumn("_abs_path", self._file_path_expr())
-            .join(F.broadcast(self.spark.createDataFrame(rows, pv_schema)), "_abs_path")
-            .drop("_abs_path")
-        )
-        field_by_name = {f["name"]: f for f in (schema or {}).get("fields", [])}
-        for c in part_cols:
-            if c in field_by_name:
-                dtype = StructField.fromJson(field_by_name[c]).dataType
-                df = df.withColumn(c, F.col(f"_pv_{c}").cast(dtype))
-            else:
-                df = df.withColumn(c, F.col(f"_pv_{c}"))
-            df = df.drop(f"_pv_{c}")
-        return df
-
-    def _read(self, live: list, as_of: int | None, keep_lineage: bool) -> DataFrame:
-        """The one live-file scan: the files ``live`` (rows of path,
-        partitionValues) of the state at ``as_of``, with the deletion
-        vectors of that state applied, in logical column names and logged
-        table-schema order, plus ``_rel_path`` / ``_row_index`` lineage
-        when ``keep_lineage``.
-
-        Files are read under the LOGGED schema in PHYSICAL column names
-        (files always carry physical names; RENAME COLUMN is
-        metadata-only): after schema evolution, files written before a
-        column existed surface it as null instead of the reader picking
-        whichever file schema it samples first. A table whose files all
-        sit under it recovers hive partition columns through the
-        ``basePath`` option; a shallow clone's files sit OUTSIDE it, so
-        its partition values come from the log.
-
-        The live-file PATH LIST is held on the driver to feed the parquet
-        reader — deliberate: it is bounded by |files| (metadata, not
-        data; ~100 bytes/file, so even a million-file table is ~100 MB,
-        the same order every Delta/Iceberg driver-side planner holds),
-        and passing explicit paths is what lets the scan skip dead files
-        without a data-side filter."""
-        self.require_readable()
-        schema = self.metadata(as_of).get("schema")
-        lineage = ["_rel_path", "_row_index"] if keep_lineage else []
-        if not live:
-            if schema is None:
-                raise ValueError("empty table with no schema")
-            df = self.spark.createDataFrame([], StructType.fromJson(schema))
-            if keep_lineage:
-                df = df.withColumn("_rel_path", F.lit(None).cast("string")).withColumn(
-                    "_row_index", F.lit(None).cast("long")
-                )
-            return df
-        dv = self.deletion_vectors(as_of)
-        capture = keep_lineage or dv is not None
-        if any(os.path.isabs(r.path) for r in live):
-            df = self._read_with_logged_partitions(live, schema, as_of, capture)
-        else:
-            reader = self.spark.read.option("basePath", self.table_path)
-            if schema is not None:
-                reader = reader.schema(
-                    StructType.fromJson(self.physical_schema(schema))
-                )
-            df = reader.parquet(
-                *[os.path.join(self.table_path, r.path) for r in live]
-            )
-            if capture:
-                df = self._with_lineage(df)
-        if dv is not None:
-            df = self._drop_deleted(df, dv)
-        if schema is None:
-            return df if keep_lineage else df.drop("_rel_path", "_row_index")
-        # the basePath reader appends hive partition columns at the end
-        return self._rename_physical_to_logical(df, schema).select(
-            *[f["name"] for f in schema["fields"]], *lineage
-        )
-
-    def read_data_files(self, rel_paths: list[str]) -> DataFrame:
-        """Read specific live data files WITH deletion vectors applied —
-        the reader every file-rewriting operator (compact, delete,
-        apply_deletion_vectors) must use: reading the raw parquet would
-        resurrect soft-deleted positions into the rewritten files."""
-        want = set(rel_paths)
-        return self._read(
-            [r for r in self.live_files_rows() if r.path in want], None, False
+        return _deletion_vectors(
+            self.spark, log_replay.Snapshot(self.table_path), as_of
         )
 
     def commit_timestamps(self) -> list[tuple[int, int]]:
@@ -845,8 +624,11 @@ class DeltaLog:
         ISO string, or datetime) — Delta's ``timestampAsOf``. Bounded by
         the retained log window after ``cleanup_log``, like Delta's
         retention-bounded timestamp travel."""
+        return self._version_at(log_replay.Snapshot(self.table_path), ts)
+
+    def _version_at(self, snap: log_replay.Snapshot, ts) -> int:
         target = self._to_millis(ts)
-        pairs = self.commit_timestamps()
+        pairs = snap.commit_timestamps()
         candidates = [v for v, t in pairs if t <= target]
         if not candidates:
             lo = pairs[0][1] if pairs else None
@@ -857,8 +639,10 @@ class DeltaLog:
         return max(candidates)
 
     def snapshot_at_timestamp(self, ts) -> DataFrame:
-        """``timestampAsOf`` read: resolve the version, then time-travel."""
-        return self.snapshot(as_of=self.version_at_timestamp(ts))
+        """``timestampAsOf`` read: resolve the version, then time-travel
+        (both on one snapshot)."""
+        snap = log_replay.Snapshot(self.table_path)
+        return read_files(self.spark, snap, as_of=self._version_at(snap, ts))
 
     def snapshot(self, as_of: int | None = None) -> DataFrame:
         """The table's data as a DataFrame — reads ONLY the live files.
@@ -866,27 +650,9 @@ class DeltaLog:
         superseded files stay readable until ``vacuum`` physically
         deletes them, so travel depth = vacuum retention, exactly like
         Delta's ``versionAsOf``."""
-        return self._read(self.live_files_rows(as_of), as_of, False)
-
-    def snapshot_with_positions(
-        self,
-        as_of: int | None = None,
-        rel_paths: list[str] | None = None,
-    ) -> DataFrame:
-        """Snapshot plus ``_rel_path`` / ``_row_index`` lineage columns —
-        what DELETE-style operators need: ``_metadata`` is only resolvable
-        directly on the scan, so any caller that joins or projects first
-        must capture the position columns up front.
-
-        ``rel_paths`` restricts the scan to a SUBSET of live files at
-        plan time (the file list itself, not a post-scan filter) — what
-        incremental indexers need: touching only the files missing from
-        their sidecar instead of rereading the table."""
-        live = self.live_files_rows(as_of)
-        if rel_paths is not None:
-            want = set(rel_paths)
-            live = [r for r in live if r.path in want]
-        return self._read(live, as_of, True)
+        return read_files(
+            self.spark, log_replay.Snapshot(self.table_path), as_of=as_of
+        )
 
     def changes(
         self, from_version: int = 0, to_version: int | None = None
@@ -946,8 +712,16 @@ class DeltaLog:
         evaluation is one filter over |files| rows, never a data read —
         at 100 TB this is the difference between planning from GBs of
         log and listing/reading the table."""
+        return self._pruned(
+            log_replay.Snapshot(self.table_path), predicates, partition_filter
+        )
+
+    def _pruned(
+        self, snap: log_replay.Snapshot, predicates: list[tuple],
+        partition_filter: dict | None = None,
+    ) -> DataFrame:
         keep = F.lit(True)
-        mapping = self.column_mapping(self.metadata().get("schema"))
+        mapping = self.column_mapping(snap.metadata().get("schema"))
         for column, lower, upper in predicates:
             # stats keys carry PHYSICAL column names (footer-derived)
             phys = mapping.get(column, column)
@@ -964,16 +738,16 @@ class DeltaLog:
         for col, want in (partition_filter or {}).items():
             vals = [str(v) for v in (want if isinstance(want, (list, tuple, set)) else [want])]
             keep = keep & F.col("partitionValues")[col].isin(vals)
-        return self._live_adds().where(keep).select("path")
+        return self._live_adds(snap).where(keep).select("path")
 
-    def _live_adds(self) -> DataFrame:
-        """(path, stats, partitionValues) for every live file — the
-        replay's live set, shared by every log-level skipping path so
-        the liveness semantics cannot diverge between them."""
+    def _live_adds(self, snap: log_replay.Snapshot) -> DataFrame:
+        """(path, stats, partitionValues) for every live file of ``snap``
+        — the replay's live set, shared by every log-level skipping path
+        so the liveness semantics cannot diverge between them."""
         return self._local(
             [
                 {"path": a["path"], "stats": a.get("stats"), "partitionValues": a.get("partitionValues")}
-                for a in log_replay.Snapshot(self.table_path)._live_adds()
+                for a in snap._live_adds()
             ],
             _LIVE_ADDS_SCHEMA,
         )
@@ -992,7 +766,8 @@ class DeltaLog:
         three query terms), callers broadcast these |files| rows and
         range-join them against the key set — file pruning stays a
         metadata operation either way."""
-        schema = self.metadata().get("schema")
+        snap = log_replay.Snapshot(self.table_path)
+        schema = snap.metadata().get("schema")
         mapping = self.column_mapping(schema)
         phys = mapping.get(column, column)
         col_type = next(
@@ -1023,7 +798,7 @@ class DeltaLog:
         hi = F.get_json_object(F.col("stats"), f"$.maxValues.{phys}")
         if cast_to is not None:
             lo, hi = lo.cast(cast_to), hi.cast(cast_to)
-        live = self._live_adds()
+        live = self._live_adds(snap)
         for col, want in (partition_filter or {}).items():
             vals = [
                 str(v)
@@ -1069,10 +844,9 @@ class DeltaLog:
         files whose stats interval intersects [lower, upper]. The caller
         still applies the row-level filter; this prunes at FILE
         granularity, like Delta's stats-based skipping."""
-        keep = {r.path for r in self.pruned_files(column, lower, upper).collect()}
-        return self._read(
-            [r for r in self.live_files_rows() if r.path in keep], None, False
-        )
+        snap = log_replay.Snapshot(self.table_path)
+        keep = [r.path for r in self._pruned(snap, [(column, lower, upper)]).collect()]
+        return read_files(self.spark, snap, keep)
 
     # -- log-only aggregates (no data scan) --------------------------------
 
@@ -1080,21 +854,16 @@ class DeltaLog:
         """Sum of add-file stats.numRecords minus soft-deleted positions
         in still-live files, from the log replay; falls back to a scan
         only if any live file lacks stats."""
-        counts = log_replay.Snapshot(self.table_path).record_counts()
+        snap = log_replay.Snapshot(self.table_path)
+        counts = snap.record_counts()
         if counts is None:
-            return self.snapshot().count()
+            return read_files(self.spark, snap).count()
         return sum(counts.values())
 
     def file_stats(self) -> dict:
         """data_file_count, table_size_bytes, avg_file_size_bytes over
         the live file list."""
-        adds = log_replay.Snapshot(self.table_path)._live_adds()
-        sizes = [a["size"] for a in adds if a.get("size") is not None]
-        return {
-            "data_file_count": len(adds),
-            "table_size_bytes": sum(sizes),
-            "avg_file_size_bytes": int(sum(sizes) / len(sizes)) if sizes else 0,
-        }
+        return _file_stats(log_replay.Snapshot(self.table_path))
 
     def operation_counts(self) -> dict:
         """{'WRITE': n, 'DELETE': n, 'OPTIMIZE': n, 'MERGE': n} from
@@ -1104,3 +873,267 @@ class DeltaLog:
             for ci in log_replay.Snapshot(self.table_path).commit_infos().values()
             if ci.get("operation")
         ))
+
+
+def _version_checksum(snap: log_replay.Snapshot) -> dict | None:
+    """``DeltaLog.version_checksum`` of the version ``snap`` holds."""
+    p = os.path.join(snap.table_path, LOG_DIR, f"{snap.version():020d}.crc")
+    try:
+        with open(p) as f:
+            c = json.loads(f.read())
+        if int(c.get("version", -1)) != snap.version():
+            return None
+        return {
+            "tableSizeBytes": int(c["tableSizeBytes"]),
+            "numFiles": int(c["numFiles"]),
+        }
+    except (FileNotFoundError, KeyError, ValueError, TypeError):
+        # accelerator only: a malformed/foreign .crc (e.g. null
+        # fields) must fall back to replay, never crash detail()
+        return None
+
+
+def _file_stats(snap: log_replay.Snapshot) -> dict:
+    """``DeltaLog.file_stats`` over the live files of ``snap``."""
+    adds = snap._live_adds()
+    sizes = [a["size"] for a in adds if a.get("size") is not None]
+    return {
+        "data_file_count": len(adds),
+        "table_size_bytes": sum(sizes),
+        "avg_file_size_bytes": int(sum(sizes) / len(sizes)) if sizes else 0,
+    }
+
+
+# -- the one live-file scan ------------------------------------------------
+
+# Reader features this engine actually implements; ``require_readable``
+# refuses tables demanding anything else (Delta table-features protocol:
+# better a clear refusal than a silently wrong read). timestampNtz only
+# gates the TIMESTAMP_NTZ data type, which Spark 4 reads natively through
+# the logged schema; vacuumProtocolCheck mandates that VACUUM consult the
+# protocol before touching files — maintenance.vacuum() runs both gates.
+SUPPORTED_READER_FEATURES = frozenset(
+    {"deletionVectors", "columnMapping", "v2Checkpoint",
+     "timestampNtz", "vacuumProtocolCheck",
+     # VARIANT data type: Spark 4 reads the shredded parquet
+     # encoding natively through the logged schema
+     "variantType"}
+)
+
+
+def require_readable(snap: log_replay.Snapshot) -> None:
+    """Protocol gate for reads (Delta spec), the mirror of
+    ``delta_writer._require_writable``: refuse to read a table whose
+    protocol at ``snap`` demands reader capabilities this engine lacks,
+    instead of returning silently wrong data (e.g. unapplied deletion
+    semantics of an unknown feature)."""
+    p = snap.protocol()
+    r = p["minReaderVersion"]
+    if r > 3:
+        raise ValueError(
+            f"unsupported Delta protocol: minReaderVersion={r} "
+            "(this reader supports up to 3)"
+        )
+    if r == 3:
+        unsupported = set(p["readerFeatures"]) - SUPPORTED_READER_FEATURES
+        if unsupported:
+            raise ValueError(
+                "unsupported Delta reader features: "
+                f"{sorted(unsupported)} (supported: "
+                f"{sorted(SUPPORTED_READER_FEATURES)})"
+            )
+
+
+def _file_path_expr():
+    """Absolute path of the file behind each row, from
+    ``_metadata.file_path``. The metadata column is a percent-encoded
+    ``file:`` URI — a table path or partition value containing a
+    character Spark encodes (space, ``#``, …) would never match the
+    un-encoded log paths, silently turning the DV anti-join into a
+    no-op. So: decode first (protecting ``+``, which is literal in a
+    URI path but form-decoded by ``url_decode``), then normalize the
+    scheme."""
+    decoded = F.url_decode(
+        F.regexp_replace(F.col("_metadata.file_path"), r"\+", "%2B")
+    )
+    return F.regexp_replace(decoded, r"^file:/+", "/")
+
+
+def _with_lineage(df: DataFrame, table_path: str) -> DataFrame:
+    """``df`` (a parquet scan of the table at ``table_path``) plus
+    ``_rel_path`` (the log-relative path of the row's file) and
+    ``_row_index`` — ``_metadata`` is only resolvable directly on the
+    scan."""
+    root = os.path.abspath(table_path) + "/"
+    rel = F.replace(_file_path_expr(), F.lit(root), F.lit(""))
+    return df.withColumn("_rel_path", rel).withColumn(
+        "_row_index", F.col("_metadata.row_index")
+    )
+
+
+def _drop_deleted(df: DataFrame, dv: DataFrame) -> DataFrame:
+    """Anti-join the soft-deleted positions ``dv`` (rel_path,
+    row_index) out of ``df``, which carries lineage columns. The dv
+    side is tiny, so it broadcasts; the data never shuffles."""
+    return df.join(
+        F.broadcast(
+            dv.select(
+                F.col("rel_path").alias("_rel_path"),
+                F.col("row_index").alias("_row_index"),
+            )
+        ),
+        ["_rel_path", "_row_index"],
+        "left_anti",
+    )
+
+
+def _to_logical(df: DataFrame, schema: dict) -> DataFrame:
+    """``df`` with physical column names renamed to the logical ones of
+    ``schema`` (column mapping); unchanged for never-renamed tables."""
+    mapping = DeltaLog.column_mapping(schema)
+    if mapping:
+        df = df.withColumnsRenamed({p: l for l, p in mapping.items()})
+    return df
+
+
+def _deletion_vectors(
+    spark: SparkSession, snap: log_replay.Snapshot, as_of: int | None
+) -> DataFrame | None:
+    """(rel_path, row_index) of every position the deletion vectors of
+    ``snap`` at ``as_of`` soft-delete, or None when there are none."""
+    paths = snap.deletion_vector_paths(as_of)
+    if not paths:
+        return None
+    root = os.path.abspath(snap.table_path)
+    return spark.read.parquet(*[os.path.join(root, p) for p in paths])
+
+
+def _read_with_logged_partitions(
+    spark: SparkSession, table_path: str, live: list[dict],
+    schema: dict | None, part_cols: list[str], keep_lineage: bool,
+) -> DataFrame:
+    """Read the live adds ``live`` by explicit path with partition
+    columns taken from the LOG's partitionValues (the Delta-spec source
+    of truth) — required when live files sit outside the table directory
+    (shallow clones), where hive basePath inference cannot run. Columns
+    stay in physical names. The per-file partition map is metadata-sized
+    and broadcasts."""
+    from delta_lake_health_spark.sources import delta_writer
+
+    abs_of = lambda p: p if os.path.isabs(p) else os.path.join(table_path, p)  # noqa: E731
+    reader = spark.read
+    if schema is not None:
+        data_fields = [
+            f
+            for f in DeltaLog.physical_schema(schema)["fields"]
+            if f["name"] not in part_cols
+        ]
+        reader = reader.schema(
+            StructType.fromJson({"type": "struct", "fields": data_fields})
+        )
+    df = reader.parquet(*[abs_of(a["path"]) for a in live])
+    if keep_lineage:
+        # captured on the scan: the partition-value join below hides
+        # ``_metadata``
+        df = _with_lineage(df, table_path)
+    if not part_cols:
+        return df
+    rows = []
+    for a in live:
+        pv = delta_writer.logged_partition_values(
+            a["path"], a.get("partitionValues") or {}
+        )
+        rows.append(tuple([abs_of(a["path"])] + [pv.get(c) for c in part_cols]))
+    pv_schema = StructType(
+        [StructField("_abs_path", StringType())]
+        + [StructField(f"_pv_{c}", StringType()) for c in part_cols]
+    )
+    df = (
+        df.withColumn("_abs_path", _file_path_expr())
+        .join(F.broadcast(spark.createDataFrame(rows, pv_schema)), "_abs_path")
+        .drop("_abs_path")
+    )
+    field_by_name = {f["name"]: f for f in (schema or {}).get("fields", [])}
+    for c in part_cols:
+        if c in field_by_name:
+            dtype = StructField.fromJson(field_by_name[c]).dataType
+            df = df.withColumn(c, F.col(f"_pv_{c}").cast(dtype))
+        else:
+            df = df.withColumn(c, F.col(f"_pv_{c}"))
+        df = df.drop(f"_pv_{c}")
+    return df
+
+
+def read_files(
+    spark: SparkSession,
+    snap: log_replay.Snapshot,
+    rel_paths: list[str] | None = None,
+    *,
+    as_of: int | None = None,
+    keep_lineage: bool = False,
+) -> DataFrame:
+    """The one live-file scan: the live files of ``snap`` at ``as_of``
+    (only those of ``rel_paths`` when given — a plan-time file list)
+    with deletion vectors applied, in logical names and logged schema
+    order, plus ``_rel_path`` / ``_row_index`` when ``keep_lineage``.
+    The reader gate, schema, partition columns, live set and vectors
+    all come from ``snap``. File rewrites read through here: raw
+    parquet would resurrect soft-deleted rows.
+
+    Files are read under the LOGGED schema in PHYSICAL column names
+    (files always carry physical names; RENAME COLUMN is
+    metadata-only): after schema evolution, files written before a
+    column existed surface it as null instead of the reader picking
+    whichever file schema it samples first. A table whose files all sit
+    under it recovers hive partition columns through the ``basePath``
+    option; a shallow clone's files sit OUTSIDE it, so its partition
+    values come from the log.
+
+    The live-file PATH LIST is held on the driver to feed the parquet
+    reader — deliberate: it is bounded by |files| (metadata, not data;
+    ~100 bytes/file, so even a million-file table is ~100 MB, the same
+    order every Delta/Iceberg driver-side planner holds), and passing
+    explicit paths is what lets the scan skip dead files without a
+    data-side filter."""
+    require_readable(snap)
+    table_path = os.path.abspath(snap.table_path)
+    meta = snap.metadata(as_of)
+    schema = meta.get("schema")
+    live = snap._live_adds(as_of)
+    if rel_paths is not None:
+        want = set(rel_paths)
+        live = [a for a in live if a["path"] in want]
+    lineage = ["_rel_path", "_row_index"] if keep_lineage else []
+    if not live:
+        if schema is None:
+            raise ValueError("empty table with no schema")
+        df = spark.createDataFrame([], StructType.fromJson(schema))
+        if keep_lineage:
+            df = df.withColumn("_rel_path", F.lit(None).cast("string")).withColumn(
+                "_row_index", F.lit(None).cast("long")
+            )
+        return df
+    dv = _deletion_vectors(spark, snap, as_of)
+    capture = keep_lineage or dv is not None
+    if any(os.path.isabs(a["path"]) for a in live):
+        df = _read_with_logged_partitions(
+            spark, table_path, live, schema,
+            meta.get("partition_columns", []), capture,
+        )
+    else:
+        reader = spark.read.option("basePath", table_path)
+        if schema is not None:
+            reader = reader.schema(
+                StructType.fromJson(DeltaLog.physical_schema(schema))
+            )
+        df = reader.parquet(*[os.path.join(table_path, a["path"]) for a in live])
+        if capture:
+            df = _with_lineage(df, table_path)
+    if dv is not None:
+        df = _drop_deleted(df, dv)
+    if schema is None:
+        return df if keep_lineage else df.drop("_rel_path", "_row_index")
+    # the basePath reader appends hive partition columns at the end
+    return _to_logical(df, schema).select(
+        *[f["name"] for f in schema["fields"]], *lineage
+    )

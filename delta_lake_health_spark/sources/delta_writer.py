@@ -33,7 +33,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import VariantType
 
-from delta_lake_health_spark.sources import log_replay
+from delta_lake_health_spark.sources import delta_log, log_replay
 from delta_lake_health_spark.sources.log_replay import LOG_DIR
 
 
@@ -631,33 +631,34 @@ def set_cluster_columns(
     actions.append(
         _commit_info("CLUSTER BY", {"clusterBy": json.dumps(list(cols))}, {})
     )
-    return commit_mutation(table_path, snap.version(), actions)
+    return commit_mutation(snap, actions)
 
 
 PRESERVE_ROW_ID_FLAG = "__preserveRowId__"
 
 
-def _assign_row_ids(table_path: str, version: int, actions: list[dict]) -> None:
-    """Row-tracking assignment (in ``_commit`` so EVERY operator —
-    write, delete, merge, update, compact, clone — gets ids, and a
-    retried commit re-derives them from the then-current high-water
-    mark instead of reusing stale ones): each add action gets
+def _assign_row_ids(
+    snap: log_replay.Snapshot, version: int, actions: list[dict]
+) -> None:
+    """Row-tracking assignment (in ``commit_mutation``, once per attempt,
+    so EVERY operator — write, delete, merge, update, compact, clone —
+    gets ids, and a retried commit re-derives them from the then-current
+    high-water mark instead of reusing stale ones): each add action gets
     ``baseRowId`` (fresh ids [base, base + numRecords - 1]) and
     ``defaultRowCommitVersion``; the commit carries the advanced
-    ``delta.rowTracking`` domainMetadata.
+    ``delta.rowTracking`` domainMetadata. The gate reads the protocol of
+    the base snapshot ``snap`` (a protocol change since raises before any
+    retry); only a row-tracked table lists the log again, for the mark.
 
     A metadata-only re-add of an UNCHANGED file (stats backfill) marks
     itself with ``PRESERVE_ROW_ID_FLAG`` and keeps its carried-over
     baseRowId — reassigning would break the spec's id stability for
     rows that never moved. The flag is stripped before serialization."""
     adds = [a["add"] for a in actions if "add" in a]
-    if not adds:
-        return
-    snap = log_replay.Snapshot(table_path)
     p = snap.protocol()
-    if p["minWriterVersion"] < 7 or "rowTracking" not in p["writerFeatures"]:
+    if not adds or p["minWriterVersion"] < 7 or "rowTracking" not in p["writerFeatures"]:
         return
-    cfg = snap.domain_metadata(ROW_TRACKING_DOMAIN) or {}
+    cfg = log_replay.Snapshot(snap.table_path).domain_metadata(ROW_TRACKING_DOMAIN) or {}
     hwm = int(cfg.get("rowIdHighWaterMark", -1))
     assigned = False
     for add in adds:
@@ -690,7 +691,6 @@ def _assign_row_ids(table_path: str, version: int, actions: list[dict]) -> None:
 
 
 def _commit(table_path: str, version: int, actions: list[dict]) -> None:
-    _assign_row_ids(table_path, version, actions)
     # In-commit timestamps (Delta ICT): the commit's own monotonic
     # timestamp is the authority for timestampAsOf — max(wall clock,
     # predecessor + 1 ms), so clock skew between writers can never make
@@ -831,9 +831,7 @@ def _base_snapshot(spark: SparkSession, table_path: str) -> log_replay.Snapshot:
     protocol, so every commit that lands after the checks is an
     interleaved commit the conflict check sees. Refuses a table with no
     log (``write`` alone creates one)."""
-    snap = log_replay.Snapshot(table_path)
-    if snap.version() < 0:
-        raise FileNotFoundError(f"empty delta log: {table_path}/{LOG_DIR}")
+    snap = log_replay.table_snapshot(table_path)
     _require_writable(snap)
     return snap
 
@@ -941,10 +939,8 @@ def set_constraint(
     with the commit instead of slipping past the check."""
     from pyspark.sql import functions as F
 
-    from delta_lake_health_spark.sources.delta_log import DeltaLog
-
     snap = _base_snapshot(spark, table_path)
-    bad = DeltaLog(spark, table_path).snapshot().where(~F.expr(expr)).limit(1).count()
+    bad = delta_log.read_files(spark, snap).where(~F.expr(expr)).limit(1).count()
     if bad:
         raise ValueError(
             f"cannot add constraint {name!r}: existing rows violate ({expr})"
@@ -952,8 +948,7 @@ def set_constraint(
     meta = snap.metadata()
     config = {**meta["configuration"], f"delta.constraints.{name}": expr}
     return commit_mutation(
-        table_path,
-        snap.version(),
+        snap,
         [
             _metadata_action(meta, configuration=config),
             _commit_info("ADD CONSTRAINT", {"name": name, "expr": expr}, {}),
@@ -986,8 +981,7 @@ def set_table_properties(
     meta = snap.metadata()
     stamped = {str(k): str(v) for k, v in props.items()}
     return commit_mutation(
-        table_path,
-        snap.version(),
+        snap,
         [
             _metadata_action(
                 meta, configuration={**meta["configuration"], **stamped}
@@ -1032,8 +1026,7 @@ def drop_constraint(spark: SparkSession, table_path: str, name: str) -> int:
     config = dict(meta["configuration"])
     config.pop(f"delta.constraints.{name}", None)
     return commit_mutation(
-        table_path,
-        snap.version(),
+        snap,
         [
             _metadata_action(meta, configuration=config),
             _commit_info("DROP CONSTRAINT", {"name": name}, {}),
@@ -1045,9 +1038,7 @@ def _to_physical(df: DataFrame, meta: dict) -> DataFrame:
     """Rename logical -> physical column names just before writing data
     files: RENAME COLUMN is metadata-only, so every data file — old and
     new — carries PHYSICAL names. No-op for never-renamed tables."""
-    from delta_lake_health_spark.sources.delta_log import DeltaLog
-
-    mapping = DeltaLog.column_mapping(meta.get("schema"))
+    mapping = delta_log.DeltaLog.column_mapping(meta.get("schema"))
     if mapping:
         df = df.withColumnsRenamed(mapping)
     return df
@@ -1084,8 +1075,7 @@ def _commit_schema_change(
     protocol and conforming readers know to apply the mapping."""
     upgrade = _protocol_upgrade_action(snap, "columnMapping")
     return commit_mutation(
-        snap.table_path,
-        snap.version(),
+        snap,
         ([upgrade] if upgrade else [])
         + [
             _metadata_action(snap.metadata(), fields=fields),
@@ -1263,7 +1253,7 @@ def set_column_default(
             {},
         ),
     ]
-    return commit_mutation(table_path, snap.version(), actions)
+    return commit_mutation(snap, actions)
 
 
 def clear_column_default(
@@ -1284,8 +1274,7 @@ def clear_column_default(
     if not hit:
         raise ValueError(f"column {col!r} has no default")
     return commit_mutation(
-        table_path,
-        snap.version(),
+        snap,
         [
             _metadata_action(meta, fields=fields),
             _commit_info("ALTER COLUMN DROP DEFAULT", {"column": col}, {}),
@@ -1335,17 +1324,14 @@ def set_generated_column(
     disagree with the expression. Existing data is validated once here."""
     from pyspark.sql import functions as F
 
-    from delta_lake_health_spark.sources.delta_log import DeltaLog
-
     snap = _base_snapshot(spark, table_path)
-    log = DeltaLog(spark, table_path)
     meta = snap.metadata()
     schema = meta.get("schema") or {}
     fields = [dict(f) for f in schema.get("fields", [])]
     if col not in {f["name"] for f in fields}:
         raise ValueError(f"column {col!r} not in table schema")
     bad = (
-        log.snapshot()
+        delta_log.read_files(spark, snap)
         .where(~F.col(col).eqNullSafe(F.expr(expr)))
         .limit(1)
         .count()
@@ -1360,8 +1346,7 @@ def set_generated_column(
             md["delta.generationExpression"] = expr
             f["metadata"] = md
     return commit_mutation(
-        table_path,
-        snap.version(),
+        snap,
         [
             _metadata_action(meta, fields=fields),
             _commit_info("SET GENERATED COLUMN", {"column": col, "expr": expr}, {}),
@@ -1444,12 +1429,9 @@ def set_identity_column(
     (the spec's SYNC IDENTITY, run once at declaration)."""
     from pyspark.sql import functions as F
 
-    from delta_lake_health_spark.sources.delta_log import DeltaLog
-
     snap = _base_snapshot(spark, table_path)
     if step == 0:
         raise ValueError("identity step must be non-zero")
-    log = DeltaLog(spark, table_path)
     meta = snap.metadata()
     schema = meta.get("schema") or {}
     field = next(
@@ -1471,7 +1453,7 @@ def set_identity_column(
 
     # sync the mark to existing data so generated values never collide
     agg = F.max(col) if step > 0 else F.min(col)
-    row = log.snapshot().agg(agg.alias("m")).collect()[0]
+    row = delta_log.read_files(spark, snap).agg(agg.alias("m")).collect()[0]
     hwm = None
     if row["m"] is not None:
         hwm = int(row["m"])
@@ -1502,7 +1484,7 @@ def set_identity_column(
         )
     )
     return commit_mutation(
-        table_path, snap.version(), actions,
+        snap, actions,
         read_files={a["path"] for a in snap._live_adds()},
     )
 
@@ -1515,8 +1497,6 @@ def sync_identity(spark: SparkSession, table_path: str, col: str) -> int:
     concurrent reader already saw."""
     from pyspark.sql import functions as F
 
-    from delta_lake_health_spark.sources.delta_log import DeltaLog
-
     snap = _base_snapshot(spark, table_path)
     meta = snap.metadata()
     specs = _identity_specs(meta.get("schema"))
@@ -1524,7 +1504,7 @@ def sync_identity(spark: SparkSession, table_path: str, col: str) -> int:
         raise ValueError(f"column {col!r} is not an identity column")
     spec = specs[col]
     agg = F.max(col) if spec["step"] > 0 else F.min(col)
-    row = DeltaLog(spark, table_path).snapshot().agg(agg.alias("m")).collect()[0]
+    row = delta_log.read_files(spark, snap).agg(agg.alias("m")).collect()[0]
     version = snap.version()
     if row["m"] is None:
         return version  # empty table: nothing to sync
@@ -1536,8 +1516,7 @@ def sync_identity(spark: SparkSession, table_path: str, col: str) -> int:
     ):
         return version  # mark already covers the data
     return commit_mutation(
-        table_path,
-        version,
+        snap,
         [
             _metadata_action(meta, fields=_identity_fields(meta, {col: data_mark})),
             _commit_info("SYNC IDENTITY", {"column": col}, {}),
@@ -2105,7 +2084,7 @@ def write(
     # read every live file: an append racing it wrote the old layout, so
     # it must conflict rather than survive unreadable
     committed = commit_mutation(
-        table_path, version, actions,
+        snap, actions,
         read_files=set(removed) if mode == "overwrite" and schema_changed
         else None,
         removed_files=set(removed),
@@ -2116,9 +2095,7 @@ def write(
         # Delta's periodic checkpoint (delta.checkpointInterval): fold
         # the log so readers scan one parquet + a short tail instead of
         # every commit JSON
-        from delta_lake_health_spark.sources.delta_log import DeltaLog
-
-        DeltaLog(spark, table_path).checkpoint()
+        delta_log.DeltaLog(spark, table_path).checkpoint()
     # best-effort, CONTAINED: the data commit above already succeeded,
     # so a compaction that loses a concurrency race must not fail the
     # write that committed
@@ -2164,35 +2141,33 @@ def _rewrite_matching(
     count_metric: str,
     rewrite,
 ) -> int:
-    """DELETE and UPDATE: find the live files holding a row that matches
-    ``predicate`` (the DV-aware lineage scan), have
-    ``rewrite(log, hit_files)`` write their replacement rows through
-    ``_write_files`` — it returns (add actions, extra actions, extra
+    """DELETE and UPDATE: find the live files of ``snap``, the base
+    snapshot, holding a row that matches ``predicate`` (the DV-aware
+    lineage scan of ``snap``), have ``rewrite(hit_files)`` write their
+    replacement rows through ``_write_files`` — it reads them from
+    ``snap`` too, and returns (add actions, extra actions, extra
     metrics) — and commit them with the removes of the hit files through
-    ``commit_mutation`` against ``snap``, the base snapshot whose live
-    files are the read set. No match commits the bare operation with
-    ``count_metric`` 0."""
+    ``commit_mutation`` against ``snap``, whose live files are the read
+    set. No match commits the bare operation with ``count_metric`` 0."""
     from pyspark.sql import functions as F
 
-    from delta_lake_health_spark.sources.delta_log import DeltaLog
-
-    table_path = snap.table_path
-    log = DeltaLog(spark, table_path)
     read_files = {a["path"] for a in snap._live_adds()}
-    hits = _rel_paths(log.snapshot_with_positions().where(F.expr(predicate)))
+    hits = _rel_paths(
+        delta_log.read_files(spark, snap, keep_lineage=True).where(F.expr(predicate))
+    )
     params = {"predicate": predicate}
     if not hits:
         actions = [_commit_info(operation, params,
                                 {"numRemovedFiles": 0, count_metric: 0})]
     else:
-        adds, extra, metrics = rewrite(log, sorted(hits))
+        adds, extra, metrics = rewrite(sorted(hits))
         actions = adds + _remove_actions(hits) + extra + [
             _commit_info(operation, params,
                          {"numRemovedFiles": len(hits),
                           "numAddedFiles": len(adds), **metrics})
         ]
     return commit_mutation(
-        table_path, snap.version(), actions,
+        snap, actions,
         read_files=read_files, removed_files=hits,
     )
 
@@ -2210,10 +2185,10 @@ def delete(spark: SparkSession, table_path: str, predicate: str) -> int:
 
     matches = F.coalesce(F.expr(predicate), F.lit(False))
 
-    def rewrite(log, hit_files):
+    def rewrite(hit_files):
         # DV-aware read of the hit files only: soft-deleted positions
         # don't resurrect, and the change data is ∝ |changed rows|
-        rows = log.read_data_files(hit_files)
+        rows = delta_log.read_files(spark, snap, hit_files)
         adds, _ = _write_files(
             spark, snap, rows.where(~matches), meta["partition_columns"]
         )
@@ -2255,20 +2230,18 @@ def merge(
     dropped) together with the full source in ONE job through
     ``_write_files`` — its observation carries the constraint check and
     the identity high-water marks — and make one commit. Hit-file
-    detection and the survivor read both go through the DV-aware log
-    reader (``snapshot_with_positions`` / ``read_data_files``) — a plain
-    ``snapshot()`` scan cannot resolve ``_metadata.file_path`` after its
-    DV anti-join, and a raw parquet survivor read would resurrect
-    soft-deleted rows into rewritten files.
+    detection and the survivor read both scan the base snapshot the
+    commit is checked against, through the DV-aware
+    ``delta_log.read_files``: with lineage for the hit files (a plain
+    scan cannot resolve ``_metadata.file_path`` after its DV anti-join),
+    restricted to the hit files for the survivors (a raw parquet read
+    would resurrect soft-deleted rows into rewritten files).
     """
     from pyspark.sql import functions as F
-
-    from delta_lake_health_spark.sources.delta_log import DeltaLog
 
     snap = _base_snapshot(spark, table_path)
     if _txn_replayed(snap, txn_app_id, txn_version):
         return snap.version()
-    log = DeltaLog(spark, table_path)
     read_files = {a["path"] for a in snap._live_adds()}
     merge_meta = snap.metadata()
     source = _fill_generated_columns(source, merge_meta)
@@ -2292,7 +2265,7 @@ def merge(
                 f"the identity column(s) {missing}"
             )
     keys = source.select(*key_cols).distinct()
-    target = log.snapshot_with_positions()
+    target = delta_log.read_files(spark, snap, keep_lineage=True)
     hit_files = _rel_paths(target.join(F.broadcast(keys), key_cols, "left_semi"))
     # delete only when the condition is TRUE: a NULL condition keeps the
     # row (Delta's clause semantics) — bare ~expr would turn NULL into
@@ -2312,7 +2285,7 @@ def merge(
         # insert-only merges append; a file-removing merge is a data
         # removal and falls under the append-only refusal like UPDATE
         _refuse_append_only(snap, "MERGE (file-rewriting)")
-        survivors = log.read_data_files(sorted(hit_files)).join(
+        survivors = delta_log.read_files(spark, snap, sorted(hit_files)).join(
             F.broadcast(keys), key_cols, "left_anti"
         )
         if deletes is not None:
@@ -2380,8 +2353,7 @@ def merge(
         )
     extra += _txn_action(txn_app_id, txn_version)
     return commit_mutation(
-        table_path,
-        snap.version(),
+        snap,
         adds + _remove_actions(hit_files) + extra + [
             _commit_info(
                 "MERGE",
@@ -2409,13 +2381,13 @@ def clone_shallow(spark: SparkSession, source_path: str, target_path: str) -> in
 
     Refused when the source has deletion vectors still soft-deleting
     live rows: the clone's log can't reference the source's sidecars.
-    ``apply_deletion_vectors`` on the source first."""
-    from delta_lake_health_spark.sources.delta_log import DeltaLog
-
-    src = DeltaLog(spark, source_path)
+    ``apply_deletion_vectors`` on the source first. The schema, the files
+    and the vector check come from one snapshot of the source."""
+    src_path = os.path.abspath(source_path)
+    src = log_replay.table_snapshot(src_path)
     if os.path.isdir(os.path.join(target_path, LOG_DIR)):
         raise ValueError(f"target is already a Delta table: {target_path}")
-    if log_replay.Snapshot(src.table_path).live_dv_paths():
+    if src.live_dv_paths():
         raise ValueError(
             "shallow clone of a table with live deletion vectors is "
             "unsupported; run apply_deletion_vectors on the source first"
@@ -2431,7 +2403,7 @@ def clone_shallow(spark: SparkSession, source_path: str, target_path: str) -> in
     for a in adds:
         a = dict(a)
         if not os.path.isabs(a["path"]):
-            a["path"] = os.path.join(src.table_path, a["path"])
+            a["path"] = os.path.join(src_path, a["path"])
         # the clone starts without rowTracking (fresh v0 protocol):
         # carrying the source's ids would collide with ids assigned from
         # the clone's own (empty) high-water mark after a later enable
@@ -2441,12 +2413,12 @@ def clone_shallow(spark: SparkSession, source_path: str, target_path: str) -> in
     actions.append(
         _commit_info(
             "CLONE",
-            {"source": src.table_path, "isShallow": True},
+            {"source": src_path, "isShallow": True},
             {"numFiles": len(adds), "numCopiedFiles": 0},
         )
     )
     os.makedirs(target_path, exist_ok=True)
-    return commit_mutation(target_path, -1, actions)
+    return commit_mutation(log_replay.Snapshot(target_path), actions)
 
 
 def clone_deep(spark: SparkSession, source_path: str, target_path: str) -> int:
@@ -2470,17 +2442,17 @@ def clone_deep(spark: SparkSession, source_path: str, target_path: str) -> int:
     copied files' relative paths, so the clone's snapshot masks exactly
     the rows the source masks. Refused only when the source mixes live
     DVs with absolute-path adds (a materialization would change the
-    paths the sidecars key on)."""
-    from delta_lake_health_spark.sources.delta_log import DeltaLog
-
-    src = DeltaLog(spark, source_path)
+    paths the sidecars key on). The schema, the files and the vectors
+    come from one snapshot of the source."""
+    src_path = os.path.abspath(source_path)
+    src = log_replay.table_snapshot(src_path)
     if os.path.isdir(os.path.join(target_path, LOG_DIR)):
         raise ValueError(f"target is already a Delta table: {target_path}")
     meta = src.metadata()
     if not meta.get("schema"):
         raise ValueError("source table has no logged schema")
     adds = src.live_add_actions()
-    live_dvs = log_replay.Snapshot(src.table_path).live_dv_paths()
+    live_dvs = src.live_dv_paths()
     if live_dvs and any(os.path.isabs(a["path"]) for a in adds):
         raise ValueError(
             "deep clone of a table mixing live deletion vectors with "
@@ -2492,7 +2464,7 @@ def clone_deep(spark: SparkSession, source_path: str, target_path: str) -> int:
         p = a["path"]
         if not os.path.isabs(p):
             return p
-        root = src.table_path.rstrip("/") + "/"
+        root = src_path.rstrip("/") + "/"
         if p.startswith(root):
             return p[len(root):]
         # foreign absolute reference (source is a shallow clone):
@@ -2514,7 +2486,7 @@ def clone_deep(spark: SparkSession, source_path: str, target_path: str) -> int:
         src_abs = (
             a["path"]
             if os.path.isabs(a["path"])
-            else os.path.join(src.table_path, a["path"])
+            else os.path.join(src_path, a["path"])
         )
         dst_abs = os.path.join(target_path, rel)
         os.makedirs(os.path.dirname(dst_abs) or target_path, exist_ok=True)
@@ -2524,12 +2496,12 @@ def clone_deep(spark: SparkSession, source_path: str, target_path: str) -> int:
     if live_dvs:
         n_by_path = {
             d.get("path"): int(d.get("numDeletedRows") or 0)
-            for _, d in log_replay.Snapshot(src.table_path)._every("dv", None)
+            for _, d in src._every("dv", None)
         }
         for rel in live_dvs:
             dst_abs = os.path.join(target_path, rel)
             os.makedirs(os.path.dirname(dst_abs), exist_ok=True)
-            src_abs = os.path.join(src.table_path, rel)
+            src_abs = os.path.join(src_path, rel)
             if os.path.isdir(src_abs):  # sidecar written as a parquet dir
                 shutil.copytree(src_abs, dst_abs)
             else:
@@ -2562,12 +2534,12 @@ def clone_deep(spark: SparkSession, source_path: str, target_path: str) -> int:
     actions.append(
         _commit_info(
             "CLONE",
-            {"source": src.table_path, "isShallow": False},
+            {"source": src_path, "isShallow": False},
             {"numFiles": len(copied), "numCopiedFiles": len(copied),
              "numCopiedDVs": len(dv_counts)},
         )
     )
-    return commit_mutation(target_path, -1, actions)
+    return commit_mutation(log_replay.Snapshot(target_path), actions)
 
 
 def convert_to_delta(
@@ -2637,7 +2609,7 @@ def convert_to_delta(
             {"numConvertedFiles": len(rels)},
         )
     )
-    return commit_mutation(table_path, -1, actions)
+    return commit_mutation(log_replay.Snapshot(table_path), actions)
 
 
 DELETES_DIR = "_deletes"
@@ -2703,8 +2675,7 @@ def enable_row_tracking(spark: SparkSession, table_path: str) -> int:
     upgrade = _protocol_upgrade_action(snap, "rowTracking")
     if upgrade is not None:
         commit_mutation(
-            table_path,
-            snap.version(),
+            snap,
             [upgrade, _commit_info("UPGRADE PROTOCOL", {"feature": "rowTracking"}, {})],
         )
         # the backfill reads the table as the upgrade left it
@@ -2715,8 +2686,7 @@ def enable_row_tracking(spark: SparkSession, table_path: str) -> int:
     if not need:
         return snap.version()
     return commit_mutation(
-        table_path,
-        snap.version(),
+        snap,
         _readd_actions(table_path, need)
         + [_commit_info("ROW TRACKING BACKFILL", {},
                         {"numBackfilledFiles": len(need)})],
@@ -2763,15 +2733,12 @@ def _delete_rows_dv(
     False, which returns the base version instead."""
     from pyspark.sql import functions as F
 
-    from delta_lake_health_spark.sources.delta_log import DeltaLog
-
     snap = _base_snapshot(spark, table_path)
     _refuse_append_only(snap, "DELETE (deletion vector)")
     version = snap.version()
     read_files = {a["path"] for a in snap._live_adds()}
     params = {"predicate": predicate, "mode": "dv"}
-    log = DeltaLog(spark, table_path)
-    hits = match(log.snapshot_with_positions()).select(
+    hits = match(delta_log.read_files(spark, snap, keep_lineage=True)).select(
         F.col("_rel_path").alias("rel_path"),
         F.col("_row_index").alias("row_index"),
     )
@@ -2780,8 +2747,7 @@ def _delete_rows_dv(
         if not commit_no_match:
             return version
         return commit_mutation(
-            table_path,
-            version,
+            snap,
             [_commit_info("DELETE", params, {"numDeletedRows": 0})],
             read_files=read_files,
         )
@@ -2792,12 +2758,12 @@ def _delete_rows_dv(
     cdc_actions: list[dict] = []
     if _cdf_enabled(snap.metadata()):
         # restrict to the files the hit positions live in (∝ |changed
-        # rows|, not table size); read_data_files is DV-aware, so rows
+        # rows|, not table size); read_files is DV-aware, so rows
         # already soft-deleted earlier are not re-reported
         hit_rels = sorted(
             {r.rel_path for r in hits.select("rel_path").distinct().collect()}
         )
-        change = match(log.read_data_files(hit_rels)).withColumn(
+        change = match(delta_log.read_files(spark, snap, hit_rels)).withColumn(
             "_change_type", F.lit("delete")
         )
         cdc_actions = [
@@ -2809,8 +2775,7 @@ def _delete_rows_dv(
     # soft-deleted rows back
     upgrade = _protocol_upgrade_action(snap, "deletionVectors")
     return commit_mutation(
-        table_path,
-        version,
+        snap,
         ([upgrade] if upgrade else [])
         + [
             {"dv": {"path": dv_rel, "numDeletedRows": n}},
@@ -2863,8 +2828,8 @@ def update(
             )
     cond = F.expr(predicate)
 
-    def rewrite(log, hit_files):
-        df = log.read_data_files(hit_files)
+    def rewrite(hit_files):
+        df = delta_log.read_files(spark, snap, hit_files)
         for col in set_exprs:
             if col not in df.columns:
                 raise ValueError(f"unknown column {col!r}")
@@ -3042,25 +3007,29 @@ def check_commit_conflicts(
 
 
 def commit_mutation(
-    table_path: str,
-    base_version: int,
+    snap: log_replay.Snapshot,
     actions: list[dict],
+    *,
     read_files: set[str] | None = None,
     removed_files: set[str] | None = None,
     max_retries: int = 10,
 ) -> int:
-    """Put-if-absent commit of an operation that read the table at
-    ``base_version`` — every commit of the package, a table creation at
-    version -1: on a version collision, run the conflict matrix over the
-    interleaved commits and either rebase (safe winners only:
-    commitInfo-only commits and txn markers of other appIds, appends or
-    deletion vectors under a commit that read no rows — it passes no
-    ``read_files``, as a blind ``write`` does — and appends under a
-    dataChange=false rewrite) or raise the typed conflict. After
-    ``max_retries`` collisions the last one is raised."""
+    """Put-if-absent commit of an operation against ``snap``, the base
+    snapshot it checked and scanned — every commit of the package; a
+    table creation passes its empty log's snapshot (version -1). Each
+    attempt assigns row ids (``_assign_row_ids``). On a version
+    collision, run the conflict matrix over the interleaved commits and
+    either rebase (safe winners only: commitInfo-only commits and txn
+    markers of other appIds, appends or deletion vectors under a commit
+    that read no rows — it passes no ``read_files``, as a blind
+    ``write`` does — and appends under a dataChange=false rewrite) or
+    raise the typed conflict. After ``max_retries`` collisions the last
+    one is raised."""
+    table_path, base_version = snap.table_path, snap.version()
     removed_files = removed_files or set()
     version = base_version + 1
     for _ in range(max_retries):
+        _assign_row_ids(snap, version, actions)
         try:
             _commit(table_path, version, actions)
             return version
@@ -3174,7 +3143,7 @@ def copy_into(
             upgrade = _protocol_upgrade_action(snap, "domainMetadata")
             if upgrade is not None:
                 actions.insert(0, upgrade)
-            version = commit_mutation(table_path, base_version, actions)
+            version = commit_mutation(snap, actions)
         else:
             version = base_version
         return {
@@ -3225,7 +3194,7 @@ def copy_into(
     # read at base_version: a concurrent COPY INTO also writes the
     # loaded-set domain, so this commit conflicts with it instead of
     # loading the same files twice
-    version = commit_mutation(table_path, base_version, actions)
+    version = commit_mutation(snap, actions)
     return {
         "numLoadedFiles": len(new_paths),
         "numSkippedFiles": len(candidates) - len(new_paths),
@@ -3264,8 +3233,6 @@ def drop_feature(spark: SparkSession, table_path: str, feature: str) -> int:
     ``DROP FEATURE TRUNCATE HISTORY`` flow where ``cleanup_log``
     (operators/maintenance.py) is the truncation half.
     """
-    from delta_lake_health_spark.sources.delta_log import DeltaLog
-
     snap = _base_snapshot(spark, table_path)
     p = snap.protocol()
     reader_feats = set(p.get("readerFeatures") or [])
@@ -3314,7 +3281,7 @@ def drop_feature(spark: SparkSession, table_path: str, feature: str) -> int:
     elif feature == "v2Checkpoint":
         lc = log_replay.last_checkpoint_info(table_path)
         if lc is not None and lc.get("format") == "v2":
-            DeltaLog(spark, table_path).checkpoint(format="v1")
+            delta_log.DeltaLog(spark, table_path).checkpoint(format="v1")
 
     proto = {
         "minReaderVersion": p["minReaderVersion"],
@@ -3330,5 +3297,5 @@ def drop_feature(spark: SparkSession, table_path: str, feature: str) -> int:
         _commit_info("DROP FEATURE", {"feature": feature}, {}),
     ]
     return commit_mutation(
-        table_path, snap.version(), actions, read_files=read_files
+        snap, actions, read_files=read_files
     )

@@ -367,6 +367,15 @@ def _num_records(stats) -> int | None:
         return None
 
 
+def table_snapshot(table_path: str) -> "Snapshot":
+    """``Snapshot(table_path)`` of a table with at least one commit;
+    FileNotFoundError for a missing or empty log."""
+    snap = Snapshot(table_path)
+    if snap.version() < 0:
+        raise FileNotFoundError(f"empty delta log: {snap.key[0]}")
+    return snap
+
+
 class Snapshot:
     """One listing of a table's log — the ``_last_checkpoint`` record and
     the retained commit versions — and the answers replayed from it. A

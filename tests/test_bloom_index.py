@@ -11,7 +11,7 @@ from __future__ import annotations
 import pytest
 
 from delta_lake_health_spark.operators import bloom_index
-from delta_lake_health_spark.sources import delta_writer
+from delta_lake_health_spark.sources import delta_log, delta_writer, log_replay
 from delta_lake_health_spark.sources.delta_log import DeltaLog
 
 
@@ -46,10 +46,10 @@ def test_exhaustive_no_false_negative_sweep(spark, table):
     """Every one of the 800 values must keep its containing file — the
     Bloom no-false-negative property end-to-end through the sidecar."""
     bloom_index.build_bloom_index(spark, table, "id")
-    log = DeltaLog(spark, table)
+    lineage = delta_log.read_files(spark, log_replay.Snapshot(table), keep_lineage=True)
     truth = {
         r.id: r._rel_path
-        for r in log.snapshot_with_positions().select("id", "_rel_path").collect()
+        for r in lineage.select("id", "_rel_path").collect()
     }
     for v in range(0, 800, 37):  # sampled sweep
         cand, _ = bloom_index.bloom_pruned_files(spark, table, "id", v)
@@ -100,13 +100,13 @@ def test_incremental_refresh_reads_only_new_files(spark, table, monkeypatch):
     }
     assert len(appended) == 1
     calls = []
-    orig = DeltaLog.snapshot_with_positions
+    orig = delta_log.read_files
 
-    def spy(self, as_of=None, rel_paths=None):
+    def spy(spark, snap, rel_paths=None, **kw):
         calls.append(rel_paths)
-        return orig(self, as_of=as_of, rel_paths=rel_paths)
+        return orig(spark, snap, rel_paths, **kw)
 
-    monkeypatch.setattr(DeltaLog, "snapshot_with_positions", spy)
+    monkeypatch.setattr(delta_log, "read_files", spy)
     m = bloom_index.build_bloom_index(spark, table, "id")
     assert m["numNewBitmaps"] == 1 and m["numDroppedEntries"] == 0
     assert m["numIndexedFiles"] == 9

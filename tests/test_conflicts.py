@@ -32,27 +32,30 @@ def _actions(op="DELETE"):
 def test_rebase_over_txn_only_commit(spark, tmp_path):
     t = str(tmp_path / "t")
     _build(spark, t)
-    base = dw.current_version(t)
+    snap = log_replay.Snapshot(t)
+    base = snap.version()
     # a replay-guard marker lands first: data-neutral, loser rebases
     dw._commit(t, base + 1, [{"txn": {"appId": "x", "version": 1}}])
-    v = dw.commit_mutation(t, base, _actions(), read_files=_live(spark, t))
+    v = dw.commit_mutation(snap, _actions(), read_files=_live(spark, t))
     assert v == base + 2
 
 
 def test_concurrent_append_conflicts(spark, tmp_path):
     t = str(tmp_path / "t")
     _build(spark, t)
-    base = dw.current_version(t)
+    snap = log_replay.Snapshot(t)
+    base = snap.version()
     dw.write(spark, spark.range(100, 110).selectExpr(
         "id", "CAST(id % 3 AS LONG) AS k"), t)
     with pytest.raises(dw.ConcurrentAppendException):
-        dw.commit_mutation(t, base, _actions(), read_files=_live(spark, t))
+        dw.commit_mutation(snap, _actions(), read_files=_live(spark, t))
 
 
 def test_concurrent_delete_delete_conflicts(spark, tmp_path):
     t = str(tmp_path / "t")
     _build(spark, t)
-    base = dw.current_version(t)
+    snap = log_replay.Snapshot(t)
+    base = snap.version()
     victim = sorted(_live(spark, t))[0]
     now = int(time.time() * 1000)
     dw._commit(t, base + 1, [
@@ -61,7 +64,7 @@ def test_concurrent_delete_delete_conflicts(spark, tmp_path):
     ])
     with pytest.raises(dw.ConcurrentDeleteDeleteException):
         dw.commit_mutation(
-            t, base, _actions(),
+            snap, _actions(),
             read_files={victim}, removed_files={victim},
         )
 
@@ -69,7 +72,8 @@ def test_concurrent_delete_delete_conflicts(spark, tmp_path):
 def test_concurrent_delete_read_conflicts(spark, tmp_path):
     t = str(tmp_path / "t")
     _build(spark, t)
-    base = dw.current_version(t)
+    snap = log_replay.Snapshot(t)
+    base = snap.version()
     victim = sorted(_live(spark, t))[0]
     now = int(time.time() * 1000)
     dw._commit(t, base + 1, [
@@ -79,17 +83,18 @@ def test_concurrent_delete_read_conflicts(spark, tmp_path):
     with pytest.raises(dw.ConcurrentDeleteReadException):
         # we read the victim but removed something else
         dw.commit_mutation(
-            t, base, _actions(), read_files={victim}, removed_files=set()
+            snap, _actions(), read_files={victim}, removed_files=set()
         )
 
 
 def test_metadata_change_conflicts(spark, tmp_path):
     t = str(tmp_path / "t")
     _build(spark, t)
-    base = dw.current_version(t)
+    snap = log_replay.Snapshot(t)
+    base = snap.version()
     dw.set_constraint(spark, t, "pos", "id >= 0")  # metaData commit
     with pytest.raises(dw.MetadataChangedException):
-        dw.commit_mutation(t, base, _actions(), read_files=_live(spark, t))
+        dw.commit_mutation(snap, _actions(), read_files=_live(spark, t))
 
 
 def test_concurrent_dv_conflicts(spark, tmp_path):
@@ -98,16 +103,18 @@ def test_concurrent_dv_conflicts(spark, tmp_path):
     # the FIRST DV delete carries the protocol upgrade to table features,
     # so a loser interleaved with it sees a protocol change (Delta's
     # ProtocolChanged rule outranks the DV row-conflict rule)
-    base = dw.current_version(t)
+    snap = log_replay.Snapshot(t)
+    base = snap.version()
     dw.delete_with_dv(spark, t, "id = 3")
     with pytest.raises(dw.MetadataChangedException):
-        dw.commit_mutation(t, base, _actions(), read_files=_live(spark, t))
+        dw.commit_mutation(snap, _actions(), read_files=_live(spark, t))
     # subsequent DV deletes are protocol-quiet: the loser sees the
     # deletion vector itself
-    base = dw.current_version(t)
+    snap = log_replay.Snapshot(t)
+    base = snap.version()
     dw.delete_with_dv(spark, t, "id = 5")
     with pytest.raises(dw.ConcurrentDeleteReadException):
-        dw.commit_mutation(t, base, _actions(), read_files=_live(spark, t))
+        dw.commit_mutation(snap, _actions(), read_files=_live(spark, t))
 
 
 def test_mutations_still_work_uncontended(spark, tmp_path):
@@ -311,7 +318,7 @@ def test_append_refuses_protocol_change_committed_midway(
 
     def upgrade():
         snap = log_replay.Snapshot(t)
-        dw.commit_mutation(t, snap.version(), [
+        dw.commit_mutation(snap, [
             dw._protocol_upgrade_action(snap, "domainMetadata"),
             dw._commit_info("UPGRADE PROTOCOL", {}, {}),
         ])

@@ -274,3 +274,129 @@ def test_answers_are_copies(spark, tmp_path):
     fresh = DeltaLog(spark, path)
     assert fresh.live_add_actions() == want_adds
     assert fresh.metadata()["configuration"] == want_conf
+
+
+def _count_listings(monkeypatch) -> list:
+    """Record every listing of a ``_delta_log`` (``commit_versions``, the
+    one function that lists it) from here on."""
+    calls = []
+    orig = log_replay.commit_versions
+
+    def counting(table_path):
+        calls.append(table_path)
+        return orig(table_path)
+
+    monkeypatch.setattr(log_replay, "commit_versions", counting)
+    return calls
+
+
+def _four_file_table(spark, path):
+    delta_writer.write(
+        spark,
+        spark.range(0, 40).selectExpr("id", "id % 4 AS k").repartition(4),
+        path,
+    )
+    assert len(log_replay.Snapshot(path)._live_adds()) == 4
+
+
+def _listings(calls, fn) -> int:
+    calls.clear()
+    fn()
+    return len(calls)
+
+
+def test_read_sees_one_snapshot_while_a_commit_lands(spark, tmp_path, monkeypatch):
+    """A read is a scan of ONE snapshot: a schema-replacing overwrite
+    committed right after the read lists the log changes nothing it
+    returns — version 0's rows under version 0's columns, never version
+    0's files under version 1's schema."""
+    path = str(tmp_path / "t")
+    delta_writer.write(
+        spark, spark.range(0, 5).selectExpr("id", "id * 10 AS k"), path
+    )
+    orig = log_replay.commit_versions
+    fired = []
+
+    def list_then_overwrite(table_path):
+        out = orig(table_path)
+        if not fired:  # the overwrite's own listings pass through
+            fired.append(True)
+            delta_writer.write(
+                spark,
+                spark.range(0, 5).selectExpr("id", "CAST(id AS STRING) AS s"),
+                path,
+                mode="overwrite",
+            )
+        return out
+
+    monkeypatch.setattr(log_replay, "commit_versions", list_then_overwrite)
+    df = DeltaLog(spark, path).snapshot()
+    rows = sorted(tuple(r) for r in df.collect())
+    monkeypatch.undo()
+    assert fired and delta_writer.current_version(path) == 1
+    assert df.columns == ["id", "k"]
+    assert rows == [(i, i * 10) for i in range(5)]
+
+
+def test_one_listing_per_read(spark, tmp_path, monkeypatch):
+    """Every DeltaLog read lists ``_delta_log`` once: its protocol gate,
+    schema, live files and deletion vectors come from one snapshot."""
+    from delta_lake_health_spark.sources import delta_log
+
+    path = str(tmp_path / "t")
+    _four_file_table(spark, path)
+    log = DeltaLog(spark, path)
+    some = [a["path"] for a in log_replay.Snapshot(path)._live_adds()][:2]
+    calls = _count_listings(monkeypatch)
+    got = {
+        "snapshot": _listings(calls, lambda: log.snapshot().count()),
+        "read_files": _listings(calls, lambda: delta_log.read_files(
+            spark, log_replay.Snapshot(path), some).count()),
+        "scan": _listings(calls, lambda: log.scan("id", 0, 5).count()),
+        "detail": _listings(calls, log.detail),
+    }
+    assert got == {"snapshot": 1, "read_files": 1, "scan": 1, "detail": 1}
+
+
+def test_one_listing_per_operation(spark, tmp_path, monkeypatch):
+    """Every writer and maintenance operation lists ``_delta_log`` once
+    — its base snapshot, which it also scans — and a commit that meets
+    no concurrent one lists nothing more."""
+    path = str(tmp_path / "t")
+    _four_file_table(spark, path)
+    calls = _count_listings(monkeypatch)
+    got = {
+        "append": _listings(calls, lambda: delta_writer.write(
+            spark, spark.range(40, 44).selectExpr("id", "id % 4 AS k"), path)),
+        "merge": _listings(calls, lambda: delta_writer.merge(
+            spark, path,
+            spark.range(0, 3).selectExpr("id", "id + 100 AS k"), ["id"])),
+        "update": _listings(calls, lambda: delta_writer.update(
+            spark, path, "id = 5", {"k": "k + 1"})),
+        "delete": _listings(calls, lambda: delta_writer.delete(
+            spark, path, "id = 6")),
+        "delete_dv": _listings(calls, lambda: delta_writer.delete_with_dv(
+            spark, path, "id = 7")),
+        "compact": _listings(calls, lambda: maintenance.compact(spark, path)),
+        "vacuum_dry_run": _listings(calls, lambda: maintenance.vacuum(
+            spark, path, retention_hours=0, dry_run=True)),
+    }
+    assert got == dict.fromkeys(got, 1)
+    assert DeltaLog(spark, path).snapshot().count() == 42
+
+
+def test_row_tracked_commit_lists_for_its_high_water_mark(
+    spark, tmp_path, monkeypatch
+):
+    """On a row-tracked table an add-carrying commit lists the log once
+    more, for the row-id high-water mark it advances."""
+    path = str(tmp_path / "t")
+    _four_file_table(spark, path)
+    delta_writer.enable_row_tracking(spark, path)
+    calls = _count_listings(monkeypatch)
+    n = _listings(calls, lambda: delta_writer.merge(
+        spark, path, spark.range(0, 3).selectExpr("id", "id + 100 AS k"), ["id"]))
+    monkeypatch.undo()
+    assert n == 2
+    ids = [r._row_id for r in DeltaLog(spark, path).row_ids().collect()]
+    assert len(ids) == 40 and None not in ids and len(set(ids)) == 40

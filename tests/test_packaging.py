@@ -209,6 +209,52 @@ def test_one_file_rewrite_path():
     assert not blind, blind
 
 
+def test_one_snapshot_per_operation():
+    """Structure guard: a writer or maintenance function that reads a
+    base snapshot (``_base_snapshot``, ``log_replay.Snapshot`` or
+    ``log_replay.table_snapshot``) scans
+    that snapshot through ``delta_log.read_files`` and builds no
+    ``DeltaLog`` — every ``DeltaLog`` call lists the log again and may
+    read a newer version — except to write a checkpoint. The DeltaLog
+    scans over a second listing are gone."""
+    import ast
+
+    from delta_lake_health_spark.sources.delta_log import DeltaLog
+
+    pkg = os.path.join(REPO, "delta_lake_health_spark")
+    offenders = []
+    for rel in ("sources/delta_writer.py", "operators/maintenance.py"):
+        with open(os.path.join(pkg, rel)) as fh:
+            src = fh.read()
+        tree = ast.parse(src)
+        parent = {
+            child: node
+            for node in ast.walk(tree)
+            for child in ast.iter_child_nodes(node)
+        }
+        for fn in ast.walk(tree):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            body = ast.get_source_segment(src, fn) or ""
+            if not any(
+                read in body for read in
+                ("_base_snapshot(", "log_replay.Snapshot(", "table_snapshot(")
+            ):
+                continue
+            for node in ast.walk(fn):
+                if not isinstance(node, ast.Call):
+                    continue
+                name = getattr(node.func, "id", getattr(node.func, "attr", None))
+                up = parent.get(node)
+                if name == "DeltaLog" and not (
+                    isinstance(up, ast.Attribute) and up.attr == "checkpoint"
+                ):
+                    offenders.append(f"{rel}::{fn.name}:{node.lineno}")
+    assert not offenders, offenders
+    for gone in ("_read", "read_data_files", "snapshot_with_positions"):
+        assert not hasattr(DeltaLog, gone), gone
+
+
 def test_one_metadata_commit_path():
     """Structure guard: every commit — writes, table-state changes and
     table creations — builds its metaData with
