@@ -367,7 +367,7 @@ def _num_records(stats) -> int | None:
         return None
 
 
-def table_snapshot(table_path: str) -> "Snapshot":
+def table_snapshot(table_path: str) -> Snapshot:
     """``Snapshot(table_path)`` of a table with at least one commit;
     FileNotFoundError for a missing or empty log."""
     snap = Snapshot(table_path)
