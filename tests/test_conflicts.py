@@ -44,7 +44,6 @@ def test_concurrent_append_conflicts(spark, tmp_path):
     t = str(tmp_path / "t")
     _build(spark, t)
     snap = log_replay.Snapshot(t)
-    base = snap.version()
     dw.write(spark, spark.range(100, 110).selectExpr(
         "id", "CAST(id % 3 AS LONG) AS k"), t)
     with pytest.raises(dw.ConcurrentAppendException):
@@ -91,7 +90,6 @@ def test_metadata_change_conflicts(spark, tmp_path):
     t = str(tmp_path / "t")
     _build(spark, t)
     snap = log_replay.Snapshot(t)
-    base = snap.version()
     dw.set_constraint(spark, t, "pos", "id >= 0")  # metaData commit
     with pytest.raises(dw.MetadataChangedException):
         dw.commit_mutation(snap, _actions(), read_files=_live(spark, t))
@@ -104,14 +102,12 @@ def test_concurrent_dv_conflicts(spark, tmp_path):
     # so a loser interleaved with it sees a protocol change (Delta's
     # ProtocolChanged rule outranks the DV row-conflict rule)
     snap = log_replay.Snapshot(t)
-    base = snap.version()
     dw.delete_with_dv(spark, t, "id = 3")
     with pytest.raises(dw.MetadataChangedException):
         dw.commit_mutation(snap, _actions(), read_files=_live(spark, t))
     # subsequent DV deletes are protocol-quiet: the loser sees the
     # deletion vector itself
     snap = log_replay.Snapshot(t)
-    base = snap.version()
     dw.delete_with_dv(spark, t, "id = 5")
     with pytest.raises(dw.ConcurrentDeleteReadException):
         dw.commit_mutation(snap, _actions(), read_files=_live(spark, t))
