@@ -44,7 +44,6 @@ from pyspark.sql import functions as F
 
 from delta_lake_health_spark.operators import bloom
 from delta_lake_health_spark.sources import delta_log, log_replay
-from delta_lake_health_spark.sources.delta_log import DeltaLog
 
 INDEX_ROOT = "_delta_index"
 DEFAULT_M_BITS = 1 << 16  # 8 KiB per file
@@ -178,7 +177,11 @@ def _index_meta(table_path: str, column: str) -> dict | None:
 
 
 def bloom_pruned_files(
-    spark: SparkSession, table_path: str, column: str, value
+    spark: SparkSession,
+    table_path: str,
+    column: str,
+    value,
+    snap: log_replay.Snapshot | None = None,
 ) -> tuple[list[str], int]:
     """Live files that MIGHT contain ``value``: indexed files whose
     bitmap test fails are pruned; unindexed files are kept (stale-safe).
@@ -187,9 +190,11 @@ def bloom_pruned_files(
     memory); only the surviving paths (bounded by the true candidate
     set plus false positives) and the |files| path strings reach the
     driver, the same planning cost as every log operation.
-    Returns (candidate rel paths, number pruned)."""
-    log = DeltaLog(spark, table_path)
-    live = {r.path for r in log.active_files().select("path").collect()}
+    ``snap`` is the snapshot whose live files are pruned (default: a
+    fresh one of the table). Returns (candidate rel paths, number
+    pruned)."""
+    snap = snap or log_replay.table_snapshot(table_path)
+    live = {a["path"] for a in snap._live_adds()}
     if _index_meta(table_path, column) is None or not _has_bitmap_data(
         _index_dir(table_path, column)
     ):
@@ -230,7 +235,8 @@ def bloom_point_lookup(
 ) -> DataFrame:
     """Point lookup through the index: scan only the surviving files
     (deletion vectors applied), then the exact predicate."""
-    cand, _pruned = bloom_pruned_files(spark, table_path, column, value)
-    return delta_log.read_files(
-        spark, log_replay.Snapshot(table_path), cand
-    ).where(F.col(column) == F.lit(value))
+    snap = log_replay.table_snapshot(table_path)
+    cand, _pruned = bloom_pruned_files(spark, table_path, column, value, snap)
+    return delta_log.read_files(spark, snap, cand).where(
+        F.col(column) == F.lit(value)
+    )

@@ -608,9 +608,7 @@ def restore(spark: SparkSession, table_path: str, to_version: int) -> dict:
     ]
     tainted: set[str] = set()
     if late_dv:
-        dvdf = spark.read.parquet(
-            *[os.path.join(table_path, p) for p in late_dv]
-        )
+        dvdf = delta_log.read_deletion_vectors(spark, table_path, late_dv)
         tainted = {
             r.rel_path
             for r in dvdf.select("rel_path").distinct().collect()
@@ -626,7 +624,9 @@ def restore(spark: SparkSession, table_path: str, to_version: int) -> dict:
         df = spark.read.option("basePath", table_path).parquet(
             *[os.path.join(table_path, p) for p in sorted(tainted)]
         )
-        early_dv = delta_log._deletion_vectors(spark, snap, to_version)
+        early_dv = delta_log.read_deletion_vectors(
+            spark, table_path, snap.deletion_vector_paths(to_version)
+        )
         if early_dv is not None:
             out_cols = df.columns
             df = delta_log._drop_deleted(

@@ -104,9 +104,10 @@ def partition_records(spark: SparkSession, table_path: str) -> DataFrame:
     the log's add-file stats — the skew bar chart's data, computed on the
     driver from the log replay: no scan and no Spark job."""
     log = DeltaLog(spark, table_path)
-    cols = log.partition_columns()
+    snap = log_replay.Snapshot(table_path)
+    cols = snap.metadata().get("partition_columns", [])
     groups: dict[str, list[dict]] = {}
-    for a in log_replay.Snapshot(table_path)._live_adds():
+    for a in snap._live_adds():
         pv = a.get("partitionValues") or {}
         # a null value is labelled like its hive directory
         key = "/".join(

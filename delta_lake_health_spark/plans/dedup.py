@@ -10,9 +10,11 @@ JVM (no Python anywhere); candidate generation NEVER self-joins — bands
 and shingles group into posting lists whose in-bucket pairs are expanded
 with an index-lambda transform, so the expensive pipeline executes once
 and the only shuffles move |docs| x bands tiny rows, uniformly keyed by
-construction. Duplicate clusters come from iterative min-label propagation
-over the candidate graph. All of it holds at 100 TB: costs scale with
-corpus size and duplicate-cluster size, never corpus^2.
+construction. Duplicate clusters are the connected components of the
+candidate graph: union-find on the driver while the candidate pairs fit
+``plans.DRIVER_STATE_ROWS``, iterative min-label propagation past it. All
+of it holds at 100 TB: costs scale with corpus size and duplicate-cluster
+size, never corpus^2.
 
 See ``_signatures`` for the CollapseProject materialization-barrier note.
 MinHash/LSH per Broder 1997 / Leskovec-Rajaraman-Ullman ch.3; SimHash per
@@ -23,7 +25,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
+from delta_lake_health_spark.plans import collect_bounded, local_relation
 from delta_lake_health_spark.sources.catalog import load
 
 QUERIES: dict = {}
@@ -807,12 +811,16 @@ ORACLE["dedup_embedding_cosine"] = _cosine_oracle_sql()
 # --------------------------------------------------------------------------
 # X7 — duplicate clusters: connected components over the LSH candidate
 # graph; each doc gets the min doc_id of its component as cluster id (the
-# canonical "keep" doc). Spark side: min-label propagation iterated to
-# CONVERGENCE (exact for any component diameter) — each round is one join
-# + one min-aggregate over the label table, lineage truncated by
-# localCheckpoint so the convergence check costs one tiny job, not a plan
-# replay. Oracle: recursive-CTE transitive closure (fine at oracle scale;
-# the iterative form is what scales).
+# canonical "keep" doc). The candidate pairs are localCheckpointed; while
+# they fit DRIVER_STATE_ROWS the action that materializes them also
+# collects them, and union-find labels them on the driver (driver state:
+# the pairs and one label per paired doc; 276 pairs at sf0.1). Past the
+# bound a warning names the query and the labels stay distributed:
+# min-label propagation iterated to CONVERGENCE (exact for any component
+# diameter), each round one join + one min-aggregate over the label
+# table, lineage truncated by localCheckpoint so the convergence check
+# costs one tiny job, not a plan replay. Oracle: recursive-CTE transitive
+# closure (fine at oracle scale).
 CLUSTER_MAX_ROUNDS = 50  # safety bound; dup clusters converge in a few
 
 
@@ -888,20 +896,59 @@ def propagate_min_labels(edges: DataFrame) -> DataFrame:
     return labels
 
 
+def min_labels(doc_a: list, doc_b: list) -> dict:
+    """{doc_id: min doc_id of its component} over the undirected edges
+    ``zip(doc_a, doc_b)`` (non-null ids of one comparable type): the
+    driver-side twin of ``propagate_min_labels``. Union-find that always
+    links the larger root under the smaller, so every root is its
+    component's min; path halving keeps the finds short."""
+    parent: dict = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in zip(doc_a, doc_b):
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            lo, hi = (ra, rb) if ra < rb else (rb, ra)
+            parent[hi] = lo
+    return {x: find(x) for x in parent}
+
+
 def cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, cluster) labels of the LSH candidate graph — X7 WITHOUT
     the presentation sizes-join/orderBy, for consumers that only need
     the labels (the corpus-build census and keep-corpus derive their
     removed set from it; r14, guide §2.4 — same split as r13's
-    candidate_pairs_unordered)."""
+    candidate_pairs_unordered). Union-find on the driver when the pairs
+    fit ``DRIVER_STATE_ROWS``, else distributed min-label propagation."""
     # checkpoint the PAIRS, not the union: the union's two branches each
     # re-ran the candidate pipeline when the barrier sat above them
-    # (r13, guide §2.4). A/B at sf0.1: 2.37 -> 1.79s.
+    # (r13, guide §2.4). Lazy: the bounded collect materializes it, and
+    # the distributed fallback reuses it.
     pairs = (
         candidate_pairs_unordered(band_rows(load(spark, sf_dir, "documents")))
         .select("doc_a", "doc_b")
-        .localCheckpoint()
+        .localCheckpoint(eager=False)
     )
+    state = collect_bounded(pairs, "dedup cluster_labels")
+    if state is not None:
+        labels = min_labels(
+            state.column("doc_a").to_pylist(), state.column("doc_b").to_pylist()
+        )
+        id_type = pairs.schema["doc_a"].dataType
+        return local_relation(
+            spark,
+            {"doc_id": list(labels), "cluster": list(labels.values())},
+            StructType(
+                [StructField("doc_id", id_type), StructField("cluster", id_type)]
+            ),
+        )
     edges = pairs.unionByName(
         pairs.select(
             F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
@@ -935,7 +982,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels = cluster_labels(spark, sf_dir)
     # cluster sizes via groupBy + broadcast join, not a window: one giant
     # duplicate cluster would otherwise land whole on a single partition
-    # (labels is already localCheckpointed, so no recompute)
+    # (labels is already materialized, so no recompute)
     sizes = labels.groupBy("cluster").agg(
         F.count(F.lit(1)).alias("cluster_size")
     )

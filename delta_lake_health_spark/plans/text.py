@@ -12,9 +12,14 @@ are the LLM-data-pipeline additions the brief requires.
 
 from __future__ import annotations
 
+from decimal import ROUND_HALF_UP, Decimal
+
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
+from delta_lake_health_spark.plans import collect_bounded, local_relation
 from delta_lake_health_spark.sources.catalog import load
 
 QUERIES: dict = {}
@@ -2040,17 +2045,21 @@ def corpus_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # T30 — TRAINED quality classifier: full-batch logistic-regression
-# gradient descent run as DataFrame aggregations (the broadcast-weights /
-# aggregate-gradients pattern every distributed ML system uses: each
-# iteration is ONE corpus pass computing dim gradient scalars; driver
-# state is |dim| floats, never data). Features are the deterministic
-# quality signals (bias, capped token count, punctuation ratio, stopword
-# ratio), the label is the Gopher-ish word-count + stopword rule, and
-# SIXTEEN unrolled iterations (lr=8, w0=0 — past the all-positive
-# plateau: train_acc 0.866 vs the 0.758 majority baseline at sf0.01) are
-# mirrored exactly in the
-# DuckDB oracle — weights are rounded to 6 dp between iterations in both
-# engines, so distributed-sum ulp noise cannot compound. Output: corpus
+# gradient descent. Features are the deterministic quality signals (bias,
+# capped token count, punctuation ratio, stopword ratio), each rounded to
+# 6 dp, and the label is the Gopher-ish word-count + stopword rule, so the
+# corpus collapses to few distinct (y, f1, f2, f3) tuples (643 for 5000
+# docs at sf0.1). One Spark pass counts the docs per tuple; while the
+# tuples fit DRIVER_STATE_ROWS the gradient rounds, class balance and
+# training accuracy run on the driver over the weighted tuples (driver
+# state: at most DRIVER_STATE_ROWS tuples of five numbers). Past the bound
+# a warning names the query and training stays distributed: each round is
+# ONE corpus pass computing the dim gradient scalars (the
+# broadcast-weights / aggregate-gradients pattern). SIXTEEN unrolled
+# iterations (lr=8, w0=0 — past the all-positive plateau: train_acc 0.866
+# vs the 0.758 majority baseline at sf0.01) are mirrored exactly in the
+# DuckDB oracle — weights are rounded to 6 dp between iterations in every
+# engine, so summation-order ulp noise cannot compound. Output: corpus
 # size, class balance, the trained weight vector, and training accuracy
 # on a 6 dp-rounded margin.
 _LR_ITERS = 16
@@ -2113,6 +2122,61 @@ _SQL_LR = (
 )
 
 
+_LR_SCHEMA = StructType(
+    [StructField("n_docs", LongType()), StructField("n_pos", LongType())]
+    + [
+        StructField(c, DoubleType())
+        for c in ("weight_bias", "weight_toklen", "weight_punct", "weight_stop")
+    ]
+    + [StructField("train_acc", DoubleType())]
+)
+# Spark rounds a double HALF_UP on its decimal form, so a margin rounds to
+# a positive 6 dp value exactly when it is at least 5e-7
+_LR_MARGIN_MIN = 5e-7
+
+
+def _round6(x: float) -> float:
+    """Spark's ``round(x, 6)`` of a double: HALF_UP on its decimal form."""
+    return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+
+
+def _lr_fit_tuples(t) -> dict[str, list]:
+    """The distributed fit's output row, from the arrow table ``t`` of
+    distinct (y, f1, f2, f3) tuples and their doc counts ``n``. Null
+    features drop a doc from the gradient averages, as in Spark's AVG,
+    and count as a miss in the training accuracy."""
+    n = t.column("n").to_numpy()
+    y = t.column("y").to_numpy(zero_copy_only=False)
+    f = [np.ones(len(n))] + [
+        t.column(c).to_numpy(zero_copy_only=False) for c in ("f1", "f2", "f3")
+    ]
+    ok = ~(np.isnan(y) | np.isnan(f[1]) | np.isnan(f[2]) | np.isnan(f[3]))
+    n_ok = n[ok].astype(np.float64)
+    m = n_ok.sum()
+    y_ok, f_ok = y[ok], [fj[ok] for fj in f]
+
+    w = [0.0, 0.0, 0.0, 0.0]
+    for _ in range(_LR_ITERS):
+        z = w[0] * f_ok[0] + w[1] * f_ok[1] + w[2] * f_ok[2] + w[3] * f_ok[3]
+        r = 1.0 / (1.0 + np.exp(-z)) - y_ok
+        grad = [float(np.dot(n_ok, r * f_ok[j]) / m) for j in range(4)]
+        w = [round(w[j] - _LR_RATE * grad[j], 6) for j in range(4)]
+
+    z = w[0] * f_ok[0] + w[1] * f_ok[1] + w[2] * f_ok[2] + w[3] * f_ok[3]
+    hit = (z >= _LR_MARGIN_MIN) == (y_ok == 1.0)
+    n_docs = int(n.sum())
+    has_y = ~np.isnan(y)
+    return {
+        "n_docs": [n_docs],
+        "n_pos": [int(np.dot(n[has_y], y[has_y])) if has_y.any() else None],
+        "weight_bias": [w[0]],
+        "weight_toklen": [w[1]],
+        "weight_punct": [w[2]],
+        "weight_stop": [w[3]],
+        "train_acc": [_round6(float(n_ok[hit].sum()) / n_docs)],
+    }
+
+
 @query("text_quality_lr_train", _SQL_LR)
 def text_quality_lr_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
@@ -2134,10 +2198,17 @@ def text_quality_lr_train(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("f2"),
         F.round(n_stop.cast("double") / n_tok, 6).alias("f3"),
-    ).localCheckpoint(eager=False)  # materialized by the first gradient
-    # collect; every later pass re-reads the persisted rows (lazy saves
-    # the standalone materialization job, r13)
+    )
+    tuples = collect_bounded(
+        feats.groupBy("y", "f1", "f2", "f3").agg(F.count(F.lit(1)).alias("n")),
+        "text_quality_lr_train",
+    )
+    if tuples is not None:
+        return local_relation(spark, _lr_fit_tuples(tuples), _LR_SCHEMA)
 
+    # materialized by the first gradient collect; every later pass
+    # re-reads the persisted rows (lazy saves the standalone job, r13)
+    feats = feats.localCheckpoint(eager=False)
     w = [0.0, 0.0, 0.0, 0.0]
     fcols = ["f0", "f1", "f2", "f3"]
     for _ in range(_LR_ITERS):

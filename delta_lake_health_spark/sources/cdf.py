@@ -53,7 +53,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import MapType, StructType, VariantType
 
 from delta_lake_health_spark.sources import log_replay
-from delta_lake_health_spark.sources.delta_log import DeltaLog, _to_logical, _with_lineage
+from delta_lake_health_spark.sources.delta_log import (
+    DeltaLog,
+    _to_logical,
+    _with_lineage,
+    read_deletion_vectors,
+)
 from delta_lake_health_spark.sources.delta_writer import schema_has
 
 CHANGE_TYPE = "_change_type"
@@ -116,16 +121,6 @@ def changed_actions(
     return out
 
 
-def _dv_positions(
-    log: DeltaLog, sidecar_rels: list[str]
-) -> DataFrame | None:
-    if not sidecar_rels:
-        return None
-    return log.spark.read.parquet(
-        *[os.path.join(log.table_path, p) for p in sidecar_rels]
-    )
-
-
 def row_changes(
     spark: SparkSession,
     table_path: str,
@@ -178,8 +173,8 @@ def row_changes(
             # dv history; after log cleanup it can't be proven complete
             log.require_history_from(0)
             df = _read_raw(log, slot["removes"], v, True)
-            prior = _dv_positions(
-                log, [p for dvv, p in dv_before if dvv < v]
+            prior = read_deletion_vectors(
+                spark, log.table_path, [p for dvv, p in dv_before if dvv < v]
             )
             if prior is not None:
                 df = df.join(
@@ -208,7 +203,7 @@ def row_changes(
         if deletes is not None:
             parts.append(_tag(deletes, "delete", v))
         if slot["dvs"]:
-            pos = _dv_positions(log, slot["dvs"])
+            pos = read_deletion_vectors(spark, log.table_path, slot["dvs"])
             touched = sorted({r.rel_path for r in pos.select("rel_path").distinct().collect()})
             df = _read_raw(log, touched, v, True).join(
                 F.broadcast(

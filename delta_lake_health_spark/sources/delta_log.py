@@ -54,6 +54,28 @@ from delta_lake_health_spark.sources.log_replay import (  # noqa: F401
 
 _STR_MAP = MapType(StringType(), StringType())
 
+# Deletion-vector sidecars: parquet directories under DELETES_DIR, each
+# listing soft-deleted row positions as (data file rel path, row index).
+DELETES_DIR = "_deletes"
+DV_SCHEMA = StructType(
+    [StructField("rel_path", StringType()), StructField("row_index", LongType())]
+)
+
+
+def read_deletion_vectors(
+    spark: SparkSession, table_path: str, rel_paths: list[str]
+) -> DataFrame | None:
+    """The (rel_path, row_index) rows of the sidecars ``rel_paths`` of
+    ``table_path``, or None when there are none. The declared schema
+    spares each read a schema-inference job."""
+    if not rel_paths:
+        return None
+    root = os.path.abspath(table_path)
+    return spark.read.schema(DV_SCHEMA).parquet(
+        *[os.path.join(root, p) for p in rel_paths]
+    )
+
+
 ACTION_SCHEMA = StructType(
     [
         StructField(
@@ -589,8 +611,10 @@ class DeltaLog:
         """(rel_path, row_index) of every soft-deleted row, or None when
         the table has no deletion vectors. Sidecars are tiny relative to
         the data (|deleted rows| x 2 columns)."""
-        return _deletion_vectors(
-            self.spark, log_replay.Snapshot(self.table_path), as_of
+        return read_deletion_vectors(
+            self.spark,
+            self.table_path,
+            log_replay.Snapshot(self.table_path).deletion_vector_paths(as_of),
         )
 
     def commit_timestamps(self) -> list[tuple[int, int]]:
@@ -996,18 +1020,6 @@ def _to_logical(df: DataFrame, schema: dict) -> DataFrame:
     return df
 
 
-def _deletion_vectors(
-    spark: SparkSession, snap: log_replay.Snapshot, as_of: int | None
-) -> DataFrame | None:
-    """(rel_path, row_index) of every position the deletion vectors of
-    ``snap`` at ``as_of`` soft-delete, or None when there are none."""
-    paths = snap.deletion_vector_paths(as_of)
-    if not paths:
-        return None
-    root = os.path.abspath(snap.table_path)
-    return spark.read.parquet(*[os.path.join(root, p) for p in paths])
-
-
 def _read_with_logged_partitions(
     spark: SparkSession, table_path: str, live: list[dict],
     schema: dict | None, part_cols: list[str], keep_lineage: bool,
@@ -1113,7 +1125,7 @@ def read_files(
                 "_row_index", F.lit(None).cast("long")
             )
         return df
-    dv = _deletion_vectors(spark, snap, as_of)
+    dv = read_deletion_vectors(spark, table_path, snap.deletion_vector_paths(as_of))
     capture = keep_lineage or dv is not None
     if any(os.path.isabs(a["path"]) for a in live):
         df = _read_with_logged_partitions(

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import VariantType
 
 from delta_lake_health_spark.sources import delta_log, log_replay
+from delta_lake_health_spark.sources.delta_log import DELETES_DIR
 from delta_lake_health_spark.sources.log_replay import LOG_DIR
 
 
@@ -2610,9 +2611,6 @@ def convert_to_delta(
         )
     )
     return commit_mutation(log_replay.Snapshot(table_path), actions)
-
-
-DELETES_DIR = "_deletes"
 
 
 CHANGE_DATA_DIR = "_change_data"

@@ -25,6 +25,7 @@ from delta_lake_health_spark.operators import maintenance
 from delta_lake_health_spark.sources import delta_writer, log_replay
 from delta_lake_health_spark.sources.delta_log import ACTION_SCHEMA, DeltaLog
 from tests import spark_log_oracle
+from tests.conftest import job_ids
 
 DAY_MS = 24 * 3600 * 1000
 STATE = StructType([*ACTION_SCHEMA.fields, StructField("version", LongType())])
@@ -385,26 +386,6 @@ def test_nested_map_values_agree_across_readers(spark, tmp_path):
     assert raw == ckpt == hist == ['{"a":[1,"é"]}']
 
 
-def _job_ids(spark, fn) -> list:
-    """Ids of the Spark jobs ``fn`` launches, read from a job group; a
-    job in a later control group proves the tracker has seen them all."""
-    sc = spark.sparkContext
-    group, control = f"probe-{time.time_ns()}", f"control-{time.time_ns()}"
-    sc.setJobGroup(group, "probe")
-    try:
-        fn()
-        sc.setJobGroup(control, "control")
-        spark.range(3).count()
-        deadline = time.time() + 30
-        while not sc.statusTracker().getJobIdsForGroup(control):
-            assert time.time() < deadline, "control job never reached the tracker"
-            time.sleep(0.1)
-        return list(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-
-
 @pytest.mark.parametrize("shape", sorted(SHAPES))
 def test_log_dataframes_launch_no_spark_job(spark, tmp_path, shape):
     """Every DeltaLog DataFrame over the log is a LocalRelation built by
@@ -425,7 +406,7 @@ def test_log_dataframes_launch_no_spark_job(spark, tmp_path, shape):
     }
     for name, read in reads.items():
         rows = []
-        assert _job_ids(spark, lambda: rows.extend(read().collect())) == [], name
+        assert job_ids(spark, lambda: rows.extend(read().collect())) == [], name
         assert rows or name in ("tombstones", "pruned_files"), name
 
 
@@ -442,7 +423,7 @@ def test_report_frames_launch_no_spark_job(spark, tmp_path):
     for fn in (report.file_size_histogram, report.partition_records,
                report.historical_trends):
         rows = []
-        assert _job_ids(spark, lambda: rows.extend(fn(spark, path).collect())) == [], fn
+        assert job_ids(spark, lambda: rows.extend(fn(spark, path).collect())) == [], fn
         assert rows, fn
 
 

@@ -385,6 +385,40 @@ def test_one_listing_per_operation(spark, tmp_path, monkeypatch):
     assert DeltaLog(spark, path).snapshot().count() == 42
 
 
+def test_one_listing_per_lookup_and_partition_report(spark, tmp_path, monkeypatch):
+    """A bloom point lookup prunes and scans one snapshot, and the
+    partition report takes its columns and live adds from one."""
+    from delta_lake_health_spark.operators import bloom_index, report
+
+    path = str(tmp_path / "t")
+    delta_writer.write(
+        spark, spark.range(0, 40).selectExpr("id", "id % 4 AS k"), path,
+        partition_by=["k"],
+    )
+    bloom_index.build_bloom_index(spark, path, "id")
+    calls = _count_listings(monkeypatch)
+    got = {
+        "bloom_point_lookup": _listings(calls, lambda: bloom_index.bloom_point_lookup(
+            spark, path, "id", 7).count()),
+        "partition_records": _listings(
+            calls, lambda: report.partition_records(spark, path).collect()),
+    }
+    assert got == {"bloom_point_lookup": 1, "partition_records": 1}
+
+
+def test_dv_aware_scan_builds_without_a_spark_job(spark, tmp_path):
+    """Deletion-vector sidecars are read with their declared schema, so
+    building a DV-aware scan infers nothing."""
+    from tests.conftest import job_ids
+
+    path = str(tmp_path / "t")
+    _four_file_table(spark, path)
+    delta_writer.delete_with_dv(spark, path, "id = 7")
+    box = []
+    assert job_ids(spark, lambda: box.append(DeltaLog(spark, path).snapshot())) == []
+    assert box[0].count() == 39
+
+
 def test_row_tracked_commit_lists_for_its_high_water_mark(
     spark, tmp_path, monkeypatch
 ):

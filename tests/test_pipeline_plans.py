@@ -3,8 +3,10 @@
 from __future__ import annotations
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 
-from tests.conftest import SF_ORACLE
+from tests.conftest import SF_ORACLE, job_ids
 from tests.oracle_check import compare
 
 
@@ -128,3 +130,58 @@ def test_propagate_min_labels_non_numeric_ids(spark):
     got = {r.doc_id: r.cluster for r in propagate_min_labels(edges).collect()}
     assert got == {"a": "a", "b": "a", "c": "a", "d": "a",
                    "x": "x", "y": "x", "z": "z"}
+
+
+_long_pairs = st.lists(st.tuples(st.integers(0, 15), st.integers(0, 15)), max_size=20)
+_str_ids = st.text(alphabet="abc", min_size=1, max_size=3)
+_str_pairs = st.lists(st.tuples(_str_ids, _str_ids), max_size=20)
+
+
+@settings(deadline=None, max_examples=12,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(st.one_of(_long_pairs.map(lambda p: ("long", p)),
+                 _str_pairs.map(lambda p: ("string", p))))
+def test_driver_union_find_matches_propagation(spark, typed_pairs):
+    """The driver-side union-find labels every node of a random edge
+    list (self-edges, long or string ids) with the same component min as
+    the distributed min-label propagation."""
+    from pyspark.sql import functions as F
+
+    from delta_lake_health_spark.plans.dedup import min_labels, propagate_min_labels
+
+    kind, pairs = typed_pairs
+    df = spark.createDataFrame(pairs, f"doc_a {kind}, doc_b {kind}")
+    edges = df.unionByName(
+        df.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
+    )
+    want = {r.doc_id: r.cluster for r in propagate_min_labels(edges).collect()}
+    assert min_labels([a for a, _ in pairs], [b for _, b in pairs]) == want
+
+
+@pytest.mark.parametrize("mod,name,warns", [
+    ("text", "text_quality_lr_train", "text_quality_lr_train"),
+    ("dedup", "dedup_clusters", "cluster_labels"),
+])
+def test_driver_state_fallback_returns_same_rows(spark, monkeypatch, mod, name, warns):
+    """Past DRIVER_STATE_ROWS a plan warns and keeps its distributed
+    loop, which returns the rows the driver path returns."""
+    from delta_lake_health_spark import plans
+
+    fn = _mod(mod).QUERIES[name]
+    driver = sorted(tuple(r) for r in fn(spark, SF_ORACLE).collect())
+    monkeypatch.setattr(plans, "DRIVER_STATE_ROWS", 0)
+    with pytest.warns(UserWarning, match=warns):
+        df = fn(spark, SF_ORACLE)
+    assert sorted(tuple(r) for r in df.collect()) == driver
+
+
+@pytest.mark.parametrize("mod,name,most", [
+    ("text", "text_quality_lr_train", 2),
+    ("dedup", "dedup_clusters", 6),
+])
+def test_driver_state_plans_build_in_few_jobs(spark, mod, name, most):
+    """LR training builds in one grouping pass, and the duplicate
+    clusters in the candidate pipeline plus one collect: no Spark job
+    per gradient or propagation round."""
+    fn = _mod(mod).QUERIES[name]
+    assert len(job_ids(spark, lambda: fn(spark, SF_ORACLE))) <= most
