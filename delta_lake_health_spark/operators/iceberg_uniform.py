@@ -449,12 +449,12 @@ def generate_iceberg_metadata(spark, table_path: str) -> dict:
     "skipped"}``. Metadata-scale only: one pass over the live add
     actions (driver-side |files| rows, the same class as checkpoint
     writes), no data files read or copied — the manifests point at the
-    Delta parquet in place."""
+    Delta parquet in place. The version, live files, deletion vectors
+    and metadata all come from one snapshot of the log."""
     from delta_lake_health_spark.sources import log_replay
-    from delta_lake_health_spark.sources.delta_log import DeltaLog
 
-    log = DeltaLog(spark, table_path)
-    version = int(log.version())
+    snap = log_replay.table_snapshot(table_path)
+    version = snap.version()
     prior = current_export_version(table_path)
     meta_dir = _meta_dir(table_path)
     if prior == version:
@@ -483,13 +483,11 @@ def generate_iceberg_metadata(spark, table_path: str) -> dict:
     # snapshot exports as Iceberg FORMAT-VERSION 2 with position-delete
     # files (D77); a DV-free one stays v1 (the minimal version the
     # snapshot needs, UniForm-style).
-    has_live_dvs = bool(log_replay.Snapshot(log.table_path).live_dv_paths())
-    meta = log.metadata()
+    has_live_dvs = bool(snap.live_dv_paths())
+    meta = snap.metadata()
     if any(
-        logical != physical
-        for logical, physical in log.column_mapping(
-            meta.get("schema")
-        ).items()
+        log_replay.physical_name(f) != f["name"]
+        for f in (meta.get("schema") or {}).get("fields", [])
     ):
         # column mapping is metadata-only: the parquet keeps PHYSICAL
         # names while the schema shows logical ones; an Iceberg v1
@@ -526,7 +524,7 @@ def generate_iceberg_metadata(spark, table_path: str) -> dict:
         for i, c in enumerate(part_cols)
     ]
 
-    live = log.live_add_actions()
+    live = snap.live_add_actions()
     snapshot_id = version + 1  # deterministic, monotone per export
     os.makedirs(meta_dir, exist_ok=True)
     import hashlib
@@ -625,7 +623,7 @@ def generate_iceberg_metadata(spark, table_path: str) -> dict:
     if v2:
         delete_entries = _write_position_deletes(
             spark,
-            log,
+            snap,
             table_path,
             meta_dir,
             snapshot_id,
@@ -767,7 +765,7 @@ def generate_iceberg_metadata(spark, table_path: str) -> dict:
 
 def _write_position_deletes(
     spark,
-    log,
+    snap,
     table_path: str,
     meta_dir: str,
     snapshot_id: int,
@@ -793,7 +791,9 @@ def _write_position_deletes(
 
     from pyspark.sql import functions as F
 
-    dv = log.deletion_vectors()
+    from delta_lake_health_spark.sources.delta_log import read_deletion_vectors
+
+    dv = read_deletion_vectors(spark, table_path, snap.deletion_vector_paths())
     pk_of = lambda a: json.dumps(  # noqa: E731
         {
             c: (a.get("partitionValues") or {}).get(c)

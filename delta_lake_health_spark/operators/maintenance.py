@@ -24,7 +24,6 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from delta_lake_health_spark.sources import delta_log, delta_writer, log_replay
-from delta_lake_health_spark.sources.delta_log import DeltaLog
 
 TARGET_FILE_SIZE = 128 * 1024 * 1024
 
@@ -835,12 +834,7 @@ def reorg_purge(spark: SparkSession, table_path: str) -> dict:
     snap = delta_writer._base_snapshot(spark, table_path)
     meta = snap.metadata()
     schema = meta.get("schema") or {}
-    physical = {
-        (f.get("metadata") or {}).get(
-            "delta.columnMapping.physicalName", f["name"]
-        )
-        for f in schema.get("fields", [])
-    }
+    physical = {log_replay.physical_name(f) for f in schema.get("fields", [])}
     keep = physical | set(meta["partition_columns"])
     live_rel = [a["path"] for a in snap._live_adds()]
 
@@ -889,9 +883,9 @@ def reorg_purge(spark: SparkSession, table_path: str) -> dict:
 
 def restore_to_timestamp(spark: SparkSession, table_path: str, ts) -> dict:
     """RESTORE TABLE ... TO TIMESTAMP AS OF: resolve the timestamp to
-    the newest commit at-or-before it with the same adjusted-clock rules
-    as read-side time travel (``DeltaLog.version_at_timestamp``), then
+    the newest commit at-or-before it with the rule read-side time
+    travel uses (``log_replay.Snapshot.version_at_or_before``), then
     delegate to :func:`restore`. Accepts whatever the read path accepts
-    (datetime / ISO string / epoch millis)."""
-    log = DeltaLog(spark, table_path)
-    return restore(spark, table_path, log.version_at_timestamp(ts))
+    (``log_replay.to_millis``: epoch millis, ISO string, datetime)."""
+    snap = log_replay.table_snapshot(table_path)
+    return restore(spark, table_path, snap.version_at_or_before(ts))

@@ -35,13 +35,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from delta_lake_health_spark.sources import delta_writer
+from delta_lake_health_spark.sources import delta_writer, log_replay
 from delta_lake_health_spark.sources.cdf import (
     CHANGE_TYPE,
+    _row_changes,
     changed_actions,
-    row_changes,
 )
-from delta_lake_health_spark.sources.delta_log import DeltaLog
+from delta_lake_health_spark.sources.delta_log import read_files
 
 MV_APP_ID = "mv-sync"
 
@@ -60,10 +60,11 @@ def create_mv(
     sum_cols: list[str],
 ) -> int:
     """Full compute of the grouped count/sum MV at the source's current
-    version; returns that synced version."""
-    src = DeltaLog(spark, source_path)
+    version; returns that synced version. The version recorded and the
+    files aggregated come from one source snapshot."""
+    src = log_replay.table_snapshot(source_path)
     synced = src.version()
-    full = src.snapshot().groupBy(*keys).agg(*_mv_plan(keys, sum_cols))
+    full = read_files(spark, src).groupBy(*keys).agg(*_mv_plan(keys, sum_cols))
     delta_writer.write(
         spark,
         full,
@@ -87,10 +88,13 @@ def refresh_mv(
     Returns metrics: ``{"from_version", "to_version", "files_read",
     "groups_touched", "refreshed"}`` — ``files_read`` is the exact set of
     source data files the refresh planned to read, which a test can
-    assert equals the touched files only (the incrementality proof)."""
-    src = DeltaLog(spark, source_path)
-    mv_log = DeltaLog(spark, mv_path)
-    last = mv_log.last_txn_version(MV_APP_ID)
+    assert equals the touched files only (the incrementality proof).
+
+    One source snapshot gives the version range, ``files_read`` and the
+    feed; one MV snapshot gives the synced version and the old state."""
+    src = log_replay.table_snapshot(source_path)
+    mv = log_replay.table_snapshot(mv_path)
+    last = mv.txn_version(MV_APP_ID)
     if last is None:
         raise ValueError(f"{mv_path} is not an MV created by create_mv")
     cur = src.version()
@@ -125,13 +129,13 @@ def refresh_mv(
         F.sum(sign * F.col(c)).alias(f"d_{c}") for c in sum_cols
     ]
     deltas = (
-        row_changes(spark, source_path, last + 1, cur)
+        _row_changes(spark, src, last + 1, cur)
         .groupBy(*keys)
         .agg(*delta_aggs)
     )
     groups_touched = deltas.count()
 
-    old = mv_log.snapshot()
+    old = read_files(spark, mv)
     merged = old.join(deltas, keys, "full_outer").select(
         *keys,
         (F.coalesce(F.col("n_rows"), F.lit(0)) + F.coalesce(F.col("d_n"), F.lit(0))).alias(
@@ -166,4 +170,4 @@ def refresh_mv(
 
 
 def read_mv(spark: SparkSession, mv_path: str) -> DataFrame:
-    return DeltaLog(spark, mv_path).snapshot()
+    return read_files(spark, log_replay.table_snapshot(mv_path))

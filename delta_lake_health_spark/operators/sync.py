@@ -35,16 +35,15 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from delta_lake_health_spark.sources import delta_writer, log_replay
-from delta_lake_health_spark.sources.cdf import table_changes
-from delta_lake_health_spark.sources.delta_log import DeltaLog
+from delta_lake_health_spark.sources.cdf import _table_changes
+from delta_lake_health_spark.sources.delta_log import read_files
 
 SYNC_DOMAIN = "delta.cdcSync"
 
 
-def _last_synced(spark: SparkSession, dst_path: str, src_key: str) -> int | None:
-    if delta_writer.current_version(dst_path) < 0:
-        return None
-    cfg = DeltaLog(spark, dst_path).domain_metadata(SYNC_DOMAIN) or {}
+def _last_synced(dst_path: str, src_key: str) -> int | None:
+    # a missing target is an empty snapshot: no domain, never synced
+    cfg = log_replay.Snapshot(dst_path).domain_metadata(SYNC_DOMAIN) or {}
     v = cfg.get(src_key)
     return int(v) if v is not None else None
 
@@ -102,20 +101,22 @@ def apply_changes(
     """One sync cycle; returns
     ``{"fromVersion", "toVersion", "numUpserts", "numDeletes",
     "seeded"}``. The first call seeds the target with the source
-    snapshot; later calls apply only the new commits' net changes."""
+    snapshot; later calls apply only the new commits' net changes. The
+    synced version, the seed and the feed come from one source
+    snapshot."""
     src_key = os.path.abspath(src_path)
-    src_log = DeltaLog(spark, src_path)
-    src_version = src_log.version()
-    last = _last_synced(spark, dst_path, src_key)
+    src = log_replay.table_snapshot(src_key)
+    src_version = src.version()
+    last = _last_synced(dst_path, src_key)
 
     if last is None:
-        snap = src_log.snapshot()
-        delta_writer.write(spark, snap, dst_path)
+        seed = read_files(spark, src)
+        delta_writer.write(spark, seed, dst_path)
         _record_synced(spark, dst_path, src_key, src_version)
         return {
             "fromVersion": 0,
             "toVersion": src_version,
-            "numUpserts": snap.count(),
+            "numUpserts": seed.count(),
             "numDeletes": 0,
             "seeded": True,
         }
@@ -128,7 +129,7 @@ def apply_changes(
             "seeded": False,
         }
 
-    changes = table_changes(spark, src_path, last + 1, src_version)
+    changes = _table_changes(spark, src, last + 1, src_version)
     applied = apply_net_changes(spark, dst_path, changes, key_cols)
     _record_synced(spark, dst_path, src_key, src_version)
     return {

@@ -479,13 +479,13 @@ class DeltaLog:
 
     @staticmethod
     def column_mapping(schema: dict | None) -> dict[str, str]:
-        """{logical name: physical name} for fields carrying the Delta
-        column-mapping key ``delta.columnMapping.physicalName``. Empty for
-        never-renamed tables (physical == logical)."""
+        """{logical name: physical name} (``log_replay.physical_name``)
+        for the fields whose two names differ. Empty for never-renamed
+        tables (physical == logical)."""
         out: dict[str, str] = {}
         for f in (schema or {}).get("fields", []):
-            p = (f.get("metadata") or {}).get("delta.columnMapping.physicalName")
-            if p and p != f["name"]:
+            p = log_replay.physical_name(f)
+            if p != f["name"]:
                 out[f["name"]] = p
         return out
 
@@ -494,11 +494,13 @@ class DeltaLog:
         """The schema as written in data files: field names replaced by
         their physical names (RENAME COLUMN is metadata-only, so files —
         old and new — always carry physical names)."""
-        fields = []
-        for f in schema.get("fields", []):
-            p = (f.get("metadata") or {}).get("delta.columnMapping.physicalName")
-            fields.append({**f, "name": p} if p else f)
-        return {"type": "struct", "fields": fields}
+        return {
+            "type": "struct",
+            "fields": [
+                {**f, "name": log_replay.physical_name(f)}
+                for f in schema.get("fields", [])
+            ],
+        }
 
     def protocol(self) -> dict:
         """Latest protocol action: {minReaderVersion, minWriterVersion,
@@ -629,44 +631,19 @@ class DeltaLog:
         either way."""
         return log_replay.Snapshot(self.table_path).commit_timestamps()
 
-    @staticmethod
-    def _to_millis(ts) -> int:
-        import datetime as _dt
-
-        if isinstance(ts, (int, float)):
-            return int(ts)
-        if isinstance(ts, str):
-            ts = _dt.datetime.fromisoformat(ts)
-        if isinstance(ts, _dt.datetime):
-            if ts.tzinfo is None:
-                ts = ts.replace(tzinfo=_dt.timezone.utc)
-            return int(ts.timestamp() * 1000)
-        raise TypeError(f"unsupported timestamp {ts!r}")
-
     def version_at_timestamp(self, ts) -> int:
         """Latest version committed at or before ``ts`` (epoch millis,
-        ISO string, or datetime) — Delta's ``timestampAsOf``. Bounded by
+        digit string, ISO date/datetime string, or datetime) — Delta's
+        ``timestampAsOf`` (``Snapshot.version_at_or_before``). Bounded by
         the retained log window after ``cleanup_log``, like Delta's
         retention-bounded timestamp travel."""
-        return self._version_at(log_replay.Snapshot(self.table_path), ts)
-
-    def _version_at(self, snap: log_replay.Snapshot, ts) -> int:
-        target = self._to_millis(ts)
-        pairs = snap.commit_timestamps()
-        candidates = [v for v, t in pairs if t <= target]
-        if not candidates:
-            lo = pairs[0][1] if pairs else None
-            raise ValueError(
-                f"no retained commit at or before {target} "
-                f"(earliest retained commit timestamp: {lo})"
-            )
-        return max(candidates)
+        return log_replay.Snapshot(self.table_path).version_at_or_before(ts)
 
     def snapshot_at_timestamp(self, ts) -> DataFrame:
         """``timestampAsOf`` read: resolve the version, then time-travel
         (both on one snapshot)."""
         snap = log_replay.Snapshot(self.table_path)
-        return read_files(self.spark, snap, as_of=self._version_at(snap, ts))
+        return read_files(self.spark, snap, as_of=snap.version_at_or_before(ts))
 
     def snapshot(self, as_of: int | None = None) -> DataFrame:
         """The table's data as a DataFrame — reads ONLY the live files.

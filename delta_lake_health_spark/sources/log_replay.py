@@ -31,6 +31,7 @@ it from a Python worker.
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
 import time
@@ -117,6 +118,31 @@ def info_timestamp(commit_info: dict) -> int | None:
     if ts is None:  # a foreign writer may emit null
         ts = commit_info.get("timestamp")
     return ts
+
+
+def to_millis(ts) -> int:
+    """Epoch milliseconds of a timestamp given as int/float ms, a digit
+    string (ms), an ISO date or datetime string, or a datetime; a
+    naive datetime (or ISO string without offset) is read as UTC."""
+    if isinstance(ts, (int, float)):
+        return int(ts)
+    if isinstance(ts, str):
+        if ts.strip().isdigit():
+            return int(ts)
+        ts = datetime.datetime.fromisoformat(ts.strip())
+    if isinstance(ts, datetime.datetime):
+        if ts.tzinfo is None:
+            ts = ts.replace(tzinfo=datetime.timezone.utc)
+        return int(ts.timestamp() * 1000)
+    raise TypeError(f"unsupported timestamp {ts!r}")
+
+
+def physical_name(field: dict) -> str:
+    """The name a schema field's column carries in data files: its
+    column-mapping ``delta.columnMapping.physicalName``, else its own
+    name (RENAME COLUMN is metadata-only)."""
+    meta = field.get("metadata") or {}
+    return meta.get("delta.columnMapping.physicalName") or field["name"]
 
 
 def commit_timestamp(table_path: str, version: int) -> int | None:
@@ -678,6 +704,32 @@ class Snapshot:
             return out
 
         return list(self._memo("commit_timestamps", build))
+
+    def version_at_or_before(self, ts) -> int:
+        """Newest retained version committed at or before ``ts``
+        (``to_millis``) on the ``commit_timestamps`` series — Delta's
+        ``timestampAsOf``. Raises when every retained commit is newer:
+        after log cleanup the window is the retained log."""
+        target = to_millis(ts)
+        pairs = self.commit_timestamps()
+        upto = [v for v, t in pairs if t <= target]
+        if not upto:
+            lo = pairs[0][1] if pairs else None
+            raise ValueError(
+                f"no retained commit at or before {target} "
+                f"(earliest retained commit timestamp: {lo})"
+            )
+        return upto[-1]
+
+    def version_at_or_after(self, ts) -> int:
+        """Earliest retained version committed at or after ``ts`` on the
+        same series; one past the head when every commit predates it
+        (a feed or stream that starts with the next commit)."""
+        target = to_millis(ts)
+        return next(
+            (v for v, t in self.commit_timestamps() if t >= target),
+            self.version() + 1,
+        )
 
     def commit_infos(self) -> dict[int, dict]:
         """{version: commitInfo} from the checkpoint's rows plus every

@@ -25,8 +25,9 @@ log through ``sources/log_replay.py`` (stdlib + pyarrow), the executor
 half reads parquet with pyarrow and yields Arrow record batches (zero
 row-at-a-time Python). Hive-style partition directory values are
 re-attached and cast from the path, and column-mapped tables
-(RENAME/DROP) are decoded physical->logical with the same mapping rules
-as ``DeltaLog.column_mapping``.
+(RENAME/DROP) are decoded physical->logical with the one mapping rule,
+``log_replay.physical_name``. ``startingTimestamp`` resolves through
+``Snapshot.version_at_or_after``, the rule ``table_changes`` uses.
 
 The reference (alvaromoureupm/delta-lake-health) is batch-only over
 delta-rs; this is the streaming ingest path its tables would need.
@@ -48,36 +49,6 @@ from pyspark.sql.types import StructType
 from delta_lake_health_spark.sources import log_replay
 
 SOURCE_NAME = "delta_tail"
-
-
-def _physical_name(fld: dict) -> str:
-    meta = fld.get("metadata") or {}
-    return meta.get("delta.columnMapping.physicalName", fld["name"])
-
-
-def _parse_ts_ms(s: str) -> int:
-    """Epoch-ms integer, or an ISO 'YYYY-MM-DD[ HH:MM:SS]' string read
-    as UTC (matching the engine's UTC session convention)."""
-    if s.isdigit():
-        return int(s)
-    from datetime import datetime, timezone
-
-    fmt = "%Y-%m-%d %H:%M:%S" if " " in s or "T" in s else "%Y-%m-%d"
-    dt = datetime.strptime(s.replace("T", " "), fmt)
-    return int(dt.replace(tzinfo=timezone.utc).timestamp() * 1000)
-
-
-def _version_at_or_after(table_path: str, ts_ms: int) -> int:
-    """Earliest retained version whose ADJUSTED commit timestamp >=
-    ts_ms (``DeltaLog.commit_timestamps``, so this surface and
-    ``table_changes`` resolve a timestamp to the same version); one past
-    the head when every commit predates it (an empty tail — the stream
-    starts with the NEXT write)."""
-    pairs = log_replay.Snapshot(table_path).commit_timestamps()
-    return next(
-        (v for v, t in pairs if t >= ts_ms),
-        pairs[-1][0] + 1 if pairs else 0,
-    )
 
 
 @dataclass
@@ -113,16 +84,18 @@ class DeltaTailStreamReader(DataSourceStreamReader):
         # startingTimestamp (Delta's option): resolve to the earliest
         # commit AT or AFTER the timestamp (epoch ms or ISO date[time]),
         # using inCommitTimestamp when present (the same authority as
-        # timestampAsOf). Mutually exclusive with startingVersion.
+        # timestampAsOf); one past the head when every commit predates
+        # it (the stream starts with the NEXT write). Mutually exclusive
+        # with startingVersion.
         st = options.get("startingtimestamp")
         if st is not None:
             if "startingversion" in options:
                 raise ValueError(
                     "delta_tail: set startingVersion OR startingTimestamp"
                 )
-            self.starting_version = _version_at_or_after(
-                self.table_path, _parse_ts_ms(str(st))
-            )
+            self.starting_version = log_replay.Snapshot(
+                self.table_path
+            ).version_at_or_after(str(st))
         # admission control at the source's natural offset granularity —
         # commit versions: bounds how much backlog one micro-batch
         # admits, so a stream restarted after downtime drains in paced
@@ -174,14 +147,11 @@ class DeltaTailStreamReader(DataSourceStreamReader):
         self._floor: int | None = None
         self.schema_struct = schema
 
-    def _head_version(self) -> int:
-        """Newest table version visible to the planner: the JSON head,
-        or the checkpoint version when cleanup left no newer JSONs."""
-        return log_replay.Snapshot(self.table_path).version()
-
     def initialOffset(self) -> dict:
         if self.bootstrap:
-            boot = self._head_version()
+            # the head: the newest JSON, or the checkpoint when cleanup
+            # left no newer JSONs
+            boot = log_replay.Snapshot(self.table_path).version()
             # the engine may have called latestOffset() FIRST and will
             # use its result as the first batch's end: snapshotting past
             # that end would invert the offsets and make the next batch
@@ -198,10 +168,10 @@ class DeltaTailStreamReader(DataSourceStreamReader):
             self._floor = self.starting_version - 1
         return {"version": self.starting_version - 1}
 
-    def _bytes_capped(self, floor: int, newest: int) -> int:
-        """Walk versions (floor, newest] accumulating add-file bytes;
-        stop once the budget is exceeded (always admitting >= 1 version
-        so the stream can't stall)."""
+    def _capped(self, floor: int, newest: int, budget: int, weight) -> int:
+        """Walk versions (floor, newest] summing ``weight(add)`` over the
+        dataChange add actions; stop once the sum reaches ``budget``
+        (always admitting >= 1 version so the stream can't stall)."""
         admitted, total = floor, 0
         for v in range(floor + 1, newest + 1):
             try:
@@ -209,49 +179,32 @@ class DeltaTailStreamReader(DataSourceStreamReader):
             except FileNotFoundError:
                 return newest  # cleaned-up gap: let partitions() report it
             total += sum(
-                int(a["add"].get("size") or 0)
+                weight(a["add"])
                 for a in acts
                 if "add" in a and a["add"].get("dataChange")
             )
             admitted = v
-            if total >= self.max_bytes:
-                break
-        return admitted
-
-    def _files_capped(self, floor: int, newest: int) -> int:
-        """Walk versions (floor, newest] accumulating dataChange
-        add-file counts; stop once the budget is reached (always
-        admitting >= 1 version so the stream can't stall)."""
-        admitted, total = floor, 0
-        for v in range(floor + 1, newest + 1):
-            try:
-                acts = log_replay.read_commit(self.table_path, v)
-            except FileNotFoundError:
-                return newest  # cleaned-up gap: let partitions() report it
-            total += sum(
-                1
-                for a in acts
-                if "add" in a and a["add"].get("dataChange")
-            )
-            admitted = v
-            if total >= self.max_files:
+            if total >= budget:
                 break
         return admitted
 
     def latestOffset(self) -> dict:
-        vs = log_replay.commit_versions(self.table_path)
-        newest = vs[-1] if vs else self.starting_version - 1
+        snap = log_replay.Snapshot(self.table_path)
+        newest = snap.versions[-1] if snap.versions else self.starting_version - 1
         if self.bootstrap:
-            newest = max(newest, self._head_version())
+            newest = max(newest, snap.version())
         if (
             self.max_versions or self.max_bytes or self.max_files
         ) and self._floor is not None:
             if self.max_versions:
                 newest = min(newest, self._floor + self.max_versions)
-            if self.max_bytes and newest > self._floor:
-                newest = min(newest, self._bytes_capped(self._floor, newest))
-            if self.max_files and newest > self._floor:
-                newest = min(newest, self._files_capped(self._floor, newest))
+            # byte budget weighs each add by its size, file budget by 1
+            for budget, weight in (
+                (self.max_bytes, lambda add: int(add.get("size") or 0)),
+                (self.max_files, lambda add: 1),
+            ):
+                if budget and newest > self._floor:
+                    newest = self._capped(self._floor, newest, budget, weight)
             newest = max(newest, self._floor)
             self._floor = newest
         out = {"version": newest}
@@ -275,7 +228,7 @@ class DeltaTailStreamReader(DataSourceStreamReader):
         snap = log_replay.Snapshot(self.table_path)
         schema = snap.metadata().get("schema") or {"fields": []}
         fields = [
-            (f["name"], _physical_name(f), json.dumps(f["type"]))
+            (f["name"], log_replay.physical_name(f), json.dumps(f["type"]))
             for f in schema["fields"]
         ]
         parts: list[DeltaFilePartition] = []
@@ -308,11 +261,10 @@ class DeltaTailStreamReader(DataSourceStreamReader):
             try:
                 acts = log_replay.read_commit(self.table_path, v)
             except FileNotFoundError:
-                retained = log_replay.commit_versions(self.table_path)
                 raise RuntimeError(
                     f"delta_tail: commit version {v} has been cleaned up "
                     "(log retention); earliest retained version is "
-                    f"{retained[0] if retained else 'none'} — set "
+                    f"{snap.versions[0] if snap.versions else 'none'} — set "
                     "startingVersion there or bootstrap from a snapshot"
                 ) from None
             cdc_rels = [

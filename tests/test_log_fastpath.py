@@ -8,6 +8,7 @@ checkpoint."""
 
 from __future__ import annotations
 
+import datetime
 import glob
 import json
 import os
@@ -305,6 +306,24 @@ def _listings(calls, fn) -> int:
     return len(calls)
 
 
+def _commit_after_first_listing(monkeypatch, path, commit) -> list:
+    """From here on, run ``commit`` right after the first listing of
+    ``path``'s log (the commit's own listings pass through); the list
+    returned is non-empty once it ran."""
+    orig = log_replay.commit_versions
+    fired = []
+
+    def listing(table_path):
+        out = orig(table_path)
+        if not fired and os.path.abspath(table_path) == os.path.abspath(path):
+            fired.append(True)
+            commit()
+        return out
+
+    monkeypatch.setattr(log_replay, "commit_versions", listing)
+    return fired
+
+
 def test_read_sees_one_snapshot_while_a_commit_lands(spark, tmp_path, monkeypatch):
     """A read is a scan of ONE snapshot: a schema-replacing overwrite
     committed right after the read lists the log changes nothing it
@@ -314,22 +333,14 @@ def test_read_sees_one_snapshot_while_a_commit_lands(spark, tmp_path, monkeypatc
     delta_writer.write(
         spark, spark.range(0, 5).selectExpr("id", "id * 10 AS k"), path
     )
-    orig = log_replay.commit_versions
-    fired = []
-
-    def list_then_overwrite(table_path):
-        out = orig(table_path)
-        if not fired:  # the overwrite's own listings pass through
-            fired.append(True)
-            delta_writer.write(
-                spark,
-                spark.range(0, 5).selectExpr("id", "CAST(id AS STRING) AS s"),
-                path,
-                mode="overwrite",
-            )
-        return out
-
-    monkeypatch.setattr(log_replay, "commit_versions", list_then_overwrite)
+    fired = _commit_after_first_listing(
+        monkeypatch, path, lambda: delta_writer.write(
+            spark,
+            spark.range(0, 5).selectExpr("id", "CAST(id AS STRING) AS s"),
+            path,
+            mode="overwrite",
+        ),
+    )
     df = DeltaLog(spark, path).snapshot()
     rows = sorted(tuple(r) for r in df.collect())
     monkeypatch.undo()
@@ -434,3 +445,172 @@ def test_row_tracked_commit_lists_for_its_high_water_mark(
     assert n == 2
     ids = [r._row_id for r in DeltaLog(spark, path).row_ids().collect()]
     assert len(ids) == 40 and None not in ids and len(set(ids)) == 40
+
+
+def _change_feed_table(spark, path):
+    """Four commits on a partitioned table: a write, an append, one
+    deletion-vector delete and one UPDATE."""
+    delta_writer.write(
+        spark, spark.range(0, 40).selectExpr("id", "id % 4 AS k"), path,
+        partition_by=["k"],
+    )
+    delta_writer.write(spark, spark.range(40, 44).selectExpr("id", "id % 4 AS k"), path)
+    delta_writer.delete_with_dv(spark, path, "id = 7")
+    delta_writer.update(spark, path, "id = 5", {"id": "id + 100"})
+    assert delta_writer.current_version(path) == 3
+
+
+def test_one_listing_per_change_consumer(spark, tmp_path, monkeypatch):
+    """Every change consumer reads one snapshot of its source: the feed,
+    the MV build and refresh, a CDC sync cycle and an Iceberg export
+    each list the source's ``_delta_log`` once; a refresh lists the MV
+    twice (its read, then its overwrite's base)."""
+    import collections
+
+    from delta_lake_health_spark.operators import iceberg_uniform, mv, sync
+    from delta_lake_health_spark.sources import cdf
+
+    src, mv_path, dst = (str(tmp_path / n) for n in ("src", "mv", "dst"))
+    _change_feed_table(spark, src)
+    calls = _count_listings(monkeypatch)
+
+    def by_table(fn) -> collections.Counter:
+        calls.clear()
+        fn()
+        return collections.Counter(os.path.basename(os.path.abspath(p)) for p in calls)
+
+    got = {
+        "row_changes": by_table(lambda: cdf.row_changes(spark, src).collect()),
+        "table_changes": by_table(lambda: cdf.table_changes(spark, src).collect()),
+        "create_mv": by_table(lambda: mv.create_mv(spark, src, mv_path, ["k"], ["id"])),
+        "apply_changes_seed": by_table(lambda: sync.apply_changes(spark, src, dst, ["id"])),
+    }
+    delta_writer.write(spark, spark.range(44, 48).selectExpr("id", "id % 4 AS k"), src)
+    delta_writer.delete_with_dv(spark, src, "id = 9")
+    got.update({
+        "refresh_mv": by_table(lambda: mv.refresh_mv(spark, src, mv_path, ["k"], ["id"])),
+        "apply_changes_incremental": by_table(
+            lambda: sync.apply_changes(spark, src, dst, ["id"])),
+        "generate_iceberg_metadata": by_table(
+            lambda: iceberg_uniform.generate_iceberg_metadata(spark, src)),
+    })
+    assert {name: c["src"] for name, c in got.items()} == dict.fromkeys(got, 1)
+    assert got["refresh_mv"]["mv"] == 2
+
+
+def test_mv_build_sees_one_snapshot_while_a_commit_lands(spark, tmp_path, monkeypatch):
+    """``create_mv`` records the version of the files it aggregates: an
+    append landing right after its source listing is folded once, by
+    the next refresh, never twice."""
+    from delta_lake_health_spark.operators import mv
+
+    src, mv_path = str(tmp_path / "src"), str(tmp_path / "mv")
+    delta_writer.write(spark, spark.range(0, 40).selectExpr("id", "id % 4 AS k"), src)
+    fired = _commit_after_first_listing(
+        monkeypatch, src, lambda: delta_writer.write(
+            spark, spark.range(40, 50).selectExpr("id", "id % 4 AS k"), src),
+    )
+    mv.create_mv(spark, src, mv_path, ["k"], ["id"])
+    monkeypatch.undo()
+    assert fired
+    mv.refresh_mv(spark, src, mv_path, ["k"], ["id"])
+    total = mv.read_mv(spark, mv_path).agg(F.sum("n_rows")).first()[0]
+    assert total == DeltaLog(spark, src).snapshot().count() == 50
+
+
+def test_iceberg_export_sees_one_snapshot_while_a_commit_lands(
+    spark, tmp_path, monkeypatch
+):
+    """An Iceberg export labelled ``delta_version`` v holds exactly v's
+    live files, also when an append lands right after its listing."""
+    from delta_lake_health_spark.operators import iceberg_uniform
+
+    path = str(tmp_path / "t")
+    _four_file_table(spark, path)
+    fired = _commit_after_first_listing(
+        monkeypatch, path, lambda: delta_writer.write(
+            spark,
+            spark.range(40, 80).selectExpr("id", "id % 4 AS k").repartition(4),
+            path,
+        ),
+    )
+    m = iceberg_uniform.generate_iceberg_metadata(spark, path)
+    monkeypatch.undo()
+    assert fired and delta_writer.current_version(path) == 1
+    got = {f["file_path"] for f in iceberg_uniform.read_iceberg_file_set(path)}
+    want = {
+        os.path.join(path, a["path"])
+        for a in log_replay.Snapshot(path).live_add_actions(m["delta_version"])
+    }
+    assert got == want
+
+
+def test_table_changes_runs_no_more_jobs_than_row_changes(spark, tmp_path):
+    """The commit timestamps are one map literal on the feed's plan, not
+    a relation to broadcast, so ``table_changes`` adds no Spark job to
+    ``row_changes``."""
+    from delta_lake_health_spark.sources import cdf
+    from tests.conftest import job_ids
+
+    path = str(tmp_path / "t")
+    _change_feed_table(spark, path)
+    rows = len(job_ids(spark, lambda: cdf.row_changes(spark, path, 1, 3).collect()))
+    table = len(job_ids(spark, lambda: cdf.table_changes(spark, path, 1, 3).collect()))
+    assert table <= rows
+
+
+def _restamp(path: str, version: int, ms: int) -> None:
+    """Rewrite commit ``version``'s commitInfo timestamps to ``ms``."""
+    p = log_replay.commit_path(path, version)
+    with open(p) as fh:
+        actions = [json.loads(line) for line in fh if line.strip()]
+    for a in actions:
+        if a.get("commitInfo") is not None:
+            a["commitInfo"]["timestamp"] = ms
+            a["commitInfo"]["inCommitTimestamp"] = ms
+    with open(p, "w") as fh:
+        fh.write("".join(json.dumps(a) + "\n" for a in actions))
+
+
+_DAY_MS = 86_400_000
+_JAN_1_2024_MS = 1_704_067_200_000  # v0; v1 at Jan 2 12:00, v2 at Jan 3
+
+
+@pytest.mark.parametrize(
+    "ts, after, before",
+    [
+        (_JAN_1_2024_MS + _DAY_MS + _DAY_MS // 2, 1, 1),
+        (str(_JAN_1_2024_MS + _DAY_MS + _DAY_MS // 2), 1, 1),
+        ("2024-01-02", 1, 0),
+        ("2024-01-02T06:00:00", 1, 0),
+        (datetime.datetime(2024, 1, 2, 18), 2, 1),
+    ],
+    ids=["epoch_ms", "digit_string", "iso_date", "iso_datetime", "naive_datetime"],
+)
+def test_one_timestamp_rule(spark, tmp_path, ts, after, before):
+    """The stream's ``startingTimestamp``, both ends of ``table_changes``
+    and ``timestampAsOf`` resolve a timestamp with the two ``Snapshot``
+    methods, for every accepted input form (naive means UTC)."""
+    from delta_lake_health_spark.sources import cdf
+    from delta_lake_health_spark.streaming.delta_source import DeltaTailStreamReader
+
+    path = str(tmp_path / "t")
+    for v in range(3):
+        delta_writer.write(spark, spark.range(v * 10, v * 10 + 10), path)
+    for v, ms in enumerate((0, _DAY_MS + _DAY_MS // 2, 2 * _DAY_MS)):
+        _restamp(path, v, _JAN_1_2024_MS + ms)
+    snap = log_replay.Snapshot(path)
+    assert (snap.version_at_or_after(ts), snap.version_at_or_before(ts)) == (after, before)
+
+    stream = DeltaTailStreamReader(None, {"path": path, "startingtimestamp": str(ts)})
+    feed_from = cdf.table_changes(spark, path, starting_timestamp=ts)
+    feed_to = cdf.table_changes(spark, path, ending_timestamp=ts)
+    assert {
+        "stream start": stream.starting_version,
+        "table_changes start": feed_from.agg(F.min("_commit_version")).first()[0],
+        "table_changes end": feed_to.agg(F.max("_commit_version")).first()[0],
+        "timestampAsOf": DeltaLog(spark, path).version_at_timestamp(ts),
+    } == {
+        "stream start": after, "table_changes start": after,
+        "table_changes end": before, "timestampAsOf": before,
+    }
